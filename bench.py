@@ -300,7 +300,7 @@ def compact_line(
         )
     )
     # shed order: fastest UNprotected first; protected names only once
-    # every unprotected query is gone (the rotation guarantee)
+    # every unprotected query is gone
     shed_queue = sorted(times, key=lambda k: (k in protect, times[k]))
     compact["queries"] = kept
     compact["sp"] = sp_for(kept)

@@ -27,13 +27,23 @@ def test_decode_stub_deterministic():
 
 def test_decode_real_without_pillow_names_the_dependency():
     """Where Pillow is absent the error must name the optional dep (not
-    a bare executor-side ImportError); where present, decode_real is the
-    real decoder and the skip-gated test below covers it."""
+    a bare executor-side ImportError) for every payload outside the
+    dependency-free set — including the magic bytes of GIF and WebP;
+    where present, decode_real is the real decoder and the skip-gated
+    test below covers it."""
     try:
         import PIL  # noqa: F401
     except ImportError:
-        with pytest.raises(NotImplementedError, match="pillow"):
-            M.decode_real(b"x")
+        payloads = [
+            b"x",
+            b"GIF89a" + bytes(16),
+            b"RIFF\x10\x00\x00\x00WEBPVP8L" + bytes(16),
+        ]
+        for payload in payloads:
+            with pytest.raises(NotImplementedError, match="pillow"):
+                M.decode_real(payload)
+            with pytest.raises(NotImplementedError, match="pillow"):
+                M.phash_real(payload)
     else:
         pytest.skip("Pillow installed — covered by the real-decode test")
 
@@ -581,9 +591,9 @@ def test_png_dispatch_error_contract():
     """Review r14 contract, r15-late state: EVERY legal PNG depth and
     color type decodes hermetically, so the PNG entry has no
     valid-but-unsupported class left (the NotImplementedError-naming-
-    pillow contract is exercised by the JPEG/WebP/TIFF suites on their
-    remaining gated subsets); malformed payloads stay ValueError
-    through the dispatch."""
+    pillow contract for other formats is exercised by
+    test_decode_real_without_pillow_names_the_dependency); malformed
+    payloads stay ValueError through the dispatch."""
     import sys
 
     import numpy as np

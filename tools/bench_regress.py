@@ -267,9 +267,9 @@ def main() -> int:
     # a same-code r13 pair produced 12 cal-adjusted flags this way —
     # the single start-of-run cal under-corrects non-uniform drift), so
     # per-query flags from such a pair carry an explicit instability
-    # marker for the round_start adjudication instead of demanding a
-    # standalone re-time each. Flags still gate the exit code — the
-    # marker informs the adjudication, it does not auto-dismiss.
+    # marker instead of demanding a standalone re-time each. Flags
+    # still gate the exit code — the marker informs whoever reads the
+    # flags, it does not auto-dismiss.
     unstable = []
     for label, art in (("old", old), ("new", new)):
         c0 = art.get("cal")

@@ -11,8 +11,7 @@ Usage:
   #      python tools/plan_dump.py 16 after /root/testdata/sf0.1 doc_chunking
 
 Streaming-family queries execute their micro-batch loop while the
-DataFrame is built (same caveat as tools/plan_digest.py); their dump
-covers the returned results relation.
+DataFrame is built; their dump covers the returned results relation.
 """
 
 from __future__ import annotations

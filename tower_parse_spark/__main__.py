@@ -60,9 +60,9 @@ def build_parser() -> argparse.ArgumentParser:
         "--phash-dedup",
         metavar="DIR",
         help="stream-dedup a perceptual-hash spool directory (jsonl "
-        'rows {"doc_id": long, "phash": long} from with_phash / '
-        "with_audio_features / frame_sample_real) against a growing "
-        "Hamming-banded index under --out",
+        'rows {"doc_id": long, "phash": long} from with_phash, '
+        "stub or phash_real for PPM/PNG/JPEG/TIFF/BMP) against a "
+        "growing Hamming-banded index under --out",
     )
     mode.add_argument(
         "--compact-index",
@@ -159,10 +159,9 @@ def start_phash_dedup(
 ):
     """Start the streaming perceptual near-dup query for the
     --phash-dedup mode (split out so tests can drive it with
-    processAllAvailable). The spool rows carry hashes produced
-    upstream — images (``with_phash(..., hasher=phash_real)``), audio
-    (``with_audio_features``) and animation frames share one 32-bit
-    space, so ONE spool dedups a mixed corpus. Sinks under *out*:
+    processAllAvailable). The spool rows carry 32-bit hashes produced
+    upstream by ``with_phash`` (the stub hasher, or ``phash_real`` for
+    PPM/PNG/JPEG/TIFF/BMP images). Sinks under *out*:
     verdicts/ index/ checkpoint/ — the same exactly-once ``batch=N``
     layout every streaming sink here uses."""
     from tower_parse_spark.streaming.phash_index import stream_phash_dedup

@@ -26,7 +26,7 @@ Spark-first re-expression — all plan-time, zero Python per row:
 
 At 100 TB this stays a single scan + project: no shuffle, no UDF. The hot
 path (:func:`extract_lines`) dispatches per branch on capture-group
-count, from 10M-row measurements (tools/scale_smoke.py):
+count, from 10M-row measurements (SCALE.md, "Ingest"):
 
 - **narrow branches (< 8 groups)**: one ``regexp_extract`` per variable —
   a packed parse's fixed cost (regexp_replace + split + array reads) is
@@ -122,7 +122,7 @@ def matches_any_branch(profile: DeviceProfile, line_col: str = "line") -> Column
 
 #: Branches with at least this many capture groups use the packed
 #: one-pass parse; below it, per-variable regexp_extract is cheaper
-#: (measured break-even ~7 groups at 10M rows, tools/scale_smoke.py).
+#: (measured break-even ~7 groups at 10M rows, SCALE.md "Ingest").
 PACKED_MIN_GROUPS = 8
 
 # Packing delimiters for the one-pass parse. Outside every device wire

@@ -92,7 +92,7 @@ PART_GATE_MAX_FP = 0.5
 #: 0.79x). Between MAX_GATE_BITS capacity and this floor the probe runs
 #: UNGATED (exact, just unpruned) while the sidecar keeps accumulating
 #: per-epoch deltas, so crossing the floor engages an already-covering
-#: gate with no rebuild. Floor pinned by tools/part_gate_smoke.py at
+#: gate with no rebuild. Floor pinned by interleaved A/Bs at
 #: 10/20/30M on a quiet machine (SCALE.md r14), then LOWERED to 15M in
 #: r15 (VERDICT r14 #5): two quiet 15M A/Bs (1.08x best-of-3, 1.24x
 #: best-of-4 with every interleaved pair favoring the gate) agree with

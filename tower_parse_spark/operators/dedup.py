@@ -670,7 +670,7 @@ def passage_dedup(
     redistributes all downstream work, so guarding only parallelizes
     the tokenize+explode map at the cost of round-robin-shuffling full
     document text first. Interleaved best-of-4 at sf0.1
-    (tools/retime_guard.py, r11): guard-on 1.37 s vs guard-off 1.32 s
+    (SCALE.md, r11 start): guard-on 1.37 s vs guard-off 1.32 s
     (1.04x) — neutral here, and the sibling boilerplate front measured
     a real 1.24x guard cost, so both passage fronts skip it. At real
     scale the guard was a no-op either way.
@@ -769,7 +769,7 @@ def boilerplate_removal(
     keyed aggregate that already redistributes the work, so the guard's
     round-robin shuffle of full document text bought nothing and
     measurably cost: interleaved best-of-4 at sf0.1
-    (tools/retime_guard.py, r11) guard-on 1.71 s vs guard-off 1.38 s
+    (SCALE.md, r11 start) guard-on 1.71 s vs guard-off 1.38 s
     (1.24x, consistent across runs) — the exact regression
     bench_regress flagged on the r9->r10 driver artifacts (1.45x raw /
     1.30 cal-adj). The guard stays on the map-dominant fronts where it

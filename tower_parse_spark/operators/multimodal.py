@@ -6,11 +6,13 @@ metadata struct; run decode / feature-extraction / resize / frame-sample
 as Arrow-batched Pandas functions over ``mapInPandas`` so each task
 processes whole record batches without JVM<->Python per-row cost.
 
-The decode step itself is STUBBED here (no image/audio libs in this
-container): ``decode_stub`` derives deterministic fake metadata from the
-bytes, and ``decode_real`` raises NotImplementedError with the intended
-signature. The Spark-side plumbing — schema, batch iteration, partition
-behavior — is real and oracle-checked (queries/llm.py::multimodal_decode).
+The registry queries use the STUBBED decode: ``decode_stub`` derives
+deterministic fake metadata from the bytes. ``decode_real`` decodes P6
+PPM and PNG with numpy + stdlib and hands every other format to the
+optional Pillow dependency; where Pillow is absent, JPEG, TIFF, BMP and
+ICO fall back to numpy + stdlib decoders. The Spark-side plumbing —
+schema, batch iteration, partition behavior — is real and
+oracle-checked (queries/llm.py::multimodal_decode).
 """
 
 from __future__ import annotations
@@ -120,10 +122,8 @@ class UnsupportedPngError(ValueError):
     """A VALID PNG using features the hermetic decoder omits — since
     r15-late every legal depth (1/2/4/8/16) and color type decodes, so
     only not-yet-assigned color-type values land here. Distinct from
-    plain ValueError (malformed payload) so the Pillow-gated dispatch
-    can name the optional dependency as the remedy for exactly the
-    payloads Pillow WOULD decode — environment-independent behavior
-    per payload class (review r14)."""
+    plain ValueError (malformed payload) so callers can tell a valid
+    but undecodable PNG from a corrupt one."""
 
 
 #: Adam7 pass grid: (x origin, y origin, x step, y step) per pass
@@ -338,143 +338,6 @@ def _parse_png(payload: bytes):
     return w, h, np.ascontiguousarray(rgb)
 
 
-def _hermetic_formats():
-    """The no-Pillow format registry: sniffed name -> (metadata fn,
-    pixels fn, coverage note, valid-but-unsupported error class). Lazy
-    so importing multimodal never pays the per-format decoder imports;
-    metadata fns are header-only by contract (a megapixel image's
-    dimensions must not pay the full pixel decode)."""
-    from tower_parse_spark.operators import (
-        bmp,
-        gif,
-        rasters,
-        tiff,
-        webp,
-    )
-    from tower_parse_spark.operators.jpeg import (
-        UnsupportedJpegError,
-        _parse_jpeg,
-    )
-
-    return {
-        "png": (decode_png, lambda p: _parse_png(p)[2],
-                "8/16-bit PNGs (incl. Adam7 interlace)",
-                UnsupportedPngError),
-        "jpeg": (decode_jpeg, lambda p: _parse_jpeg(p)[2],
-                 "sequential + progressive huffman JPEG",
-                 UnsupportedJpegError),
-        "gif": (gif.decode_gif_meta, lambda p: gif._parse_gif(p)[2],
-                "GIF87a/GIF89a stills", ()),
-        "bmp": (bmp.decode_bmp_meta, lambda p: bmp._parse_bmp(p)[2],
-                "8/16/24/32-bit BI_RGB/BITFIELDS + RLE8 BMP",
-                bmp.UnsupportedBmpError),
-        "webp": (webp.decode_webp_meta,
-                 lambda p: webp._parse_webp(p)[2],
-                 "lossless (VP8L) WebP", webp.UnsupportedWebpError),
-        "tiff": (tiff.decode_tiff_meta,
-                 lambda p: tiff._parse_tiff(p)[2],
-                 "baseline TIFF (none/PackBits/LZW strips)",
-                 tiff.UnsupportedTiffError),
-        "pnm": (rasters.decode_pnm_meta,
-                lambda p: rasters._parse_pnm(p)[2],
-                "netpbm P1-P5", rasters.UnsupportedRasterError),
-        "ras": (rasters.decode_sun_meta,
-                lambda p: rasters._parse_sun(p)[2],
-                "Sun rasterfiles (standard/RGB/RLE)",
-                rasters.UnsupportedRasterError),
-        "sgi": (rasters.decode_sgi_meta,
-                lambda p: rasters._parse_sgi(p)[2],
-                "8-bit SGI images (verbatim/RLE)",
-                rasters.UnsupportedRasterError),
-        "xbm": (rasters.decode_xbm_meta,
-                lambda p: rasters._parse_xbm(p)[2],
-                "X11 XBM", rasters.UnsupportedRasterError),
-        "ico": (bmp.decode_ico_meta, lambda p: bmp._parse_ico(p)[2],
-                "Windows ICO/CUR (best entry)",
-                bmp.UnsupportedBmpError),
-    }
-
-
-def _sniff_format(payload: bytes):
-    """Magic-byte sniff shared by every hermetic dispatch site."""
-    if payload.startswith(_PNG_SIG):
-        return "png"
-    if payload.startswith(b"\xff\xd8"):
-        return "jpeg"
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif"
-    if payload.startswith(b"BM"):
-        return "bmp"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return "webp"
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        return "tiff"
-    if (payload[:1] == b"P" and payload[1:2] in b"12345"
-            and (payload[2:3].isspace() or payload[2:3] == b"#")):
-        return "pnm"
-    if payload[:4] == b"\x59\xa6\x6a\x95":
-        return "ras"
-    if payload[:2] == b"\x01\xda":
-        return "sgi"
-    if payload.lstrip()[:7] == b"#define":
-        return "xbm"
-    if (payload[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00")
-            and len(payload) >= 6 and payload[4:6] != b"\x00\x00"):
-        return "ico"
-    return None
-
-
-def _hermetic_fallback(caller, payload, import_exc, want="meta"):
-    """The shared no-Pillow dispatch (review r14 — one code path, not
-    2 x N-formats, for the sniff and the
-    Unsupported->NotImplementedError conversion): route sniffed
-    payloads to the hermetic decoders (``want`` picks the header-only
-    metadata path or the full pixel decode); convert their
-    valid-but-unsupported errors into NotImplementedError naming the
-    pillow remedy (the same error class an un-sniffed format gets,
-    instead of an environment-dependent ValueError); malformed
-    payloads keep raising ValueError."""
-    name = _sniff_format(payload)
-    if name is None:
-        raise NotImplementedError(
-            f"{caller} needs the optional 'pillow' dependency for "
-            "formats beyond the hermetic set (PPM/PNG/JPEG/GIF/BMP/"
-            "WebP/TIFF/netpbm/RAS/SGI/XBM) (pip install pillow); "
-            "the stub path is the hermetic default"
-        ) from import_exc
-    meta_fn, pixels_fn, coverage, exc_cls = _hermetic_formats()[name]
-    try:
-        return meta_fn(payload) if want == "meta" else pixels_fn(payload)
-    except exc_cls as sub:
-        raise NotImplementedError(
-            f"{caller}: {sub} — the hermetic decoder covers {coverage}; "
-            "install the optional 'pillow' dependency for the rest"
-        ) from sub
-
-
-def decode_jpeg(payload: bytes) -> dict:
-    """REAL metadata decode of a JPEG with NO optional
-    dependency (operators/jpeg.py — ITU-T T.81), same contract as
-    :func:`decode_stub` / :func:`decode_real` (r14; with PPM and PNG
-    this closes the hermetic-decode gap for the three dominant
-    interchange formats — since r15 progressive decodes hermetically
-    too, so Pillow gates only arithmetic-coded/lossless/hierarchical
-    JPEG, WebP and rarer formats). Dimensions come from the SOF header
-    walk alone — metadata for a megapixel image must not pay the full
-    per-symbol entropy decode (that runs only where pixels are needed:
-    :func:`phash_real` via ``jpeg._parse_jpeg``); like every header
-    decoder, this validates the header, not the scan data."""
-    from tower_parse_spark.operators.jpeg import parse_dimensions
-
-    width, height = parse_dimensions(payload)
-    return {
-        "n_bytes": len(payload),
-        "width": width,
-        "height": height,
-        "format": "jpeg",
-    }
-
-
 def decode_png(payload: bytes) -> dict:
     """REAL decode of a PNG payload with NO optional dependency
     (:func:`_parse_png` — stdlib zlib + numpy), same contract as
@@ -491,32 +354,84 @@ def decode_png(payload: bytes) -> dict:
     }
 
 
+def decode_jpeg(payload: bytes) -> dict:
+    """REAL metadata decode of a JPEG with NO optional dependency
+    (operators/jpeg.py — ITU-T T.81), same contract as
+    :func:`decode_stub` / :func:`decode_real`. Dimensions come from the
+    SOF header walk alone — metadata for a megapixel image must not pay
+    the full per-symbol entropy decode (that runs only where pixels are
+    needed: :func:`phash_real` via ``jpeg._parse_jpeg``); like every
+    header decoder, this validates the header, not the scan data."""
+    from tower_parse_spark.operators.jpeg import parse_dimensions
+
+    width, height = parse_dimensions(payload)
+    return {
+        "n_bytes": len(payload),
+        "width": width,
+        "height": height,
+        "format": "jpeg",
+    }
+
+
+def _without_pillow(caller: str, payload: bytes, want: str, import_exc):
+    """The decode of JPEG, TIFF, BMP and ICO payloads where Pillow is
+    absent (operators/jpeg.py, tiff.py, bmp.py — numpy + stdlib):
+    header-only metadata for ``want="meta"``, RGB pixels otherwise.
+    Any other format, and any valid variant those decoders omit, raises
+    NotImplementedError naming the optional dependency (instead of a
+    bare executor-side ImportError); malformed payloads raise
+    ValueError."""
+    from tower_parse_spark.operators import bmp, jpeg, tiff
+
+    if payload.startswith(b"\xff\xd8"):
+        meta, parse, unsupported = (
+            decode_jpeg, jpeg._parse_jpeg, jpeg.UnsupportedJpegError)
+    elif payload.startswith(b"BM"):
+        meta, parse, unsupported = (
+            bmp.decode_bmp_meta, bmp._parse_bmp, bmp.UnsupportedBmpError)
+    elif payload[:4] in (b"II*\x00", b"MM\x00*"):
+        meta, parse, unsupported = (
+            tiff.decode_tiff_meta, tiff._parse_tiff,
+            tiff.UnsupportedTiffError)
+    elif (payload[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00")
+            and len(payload) >= 6 and payload[4:6] != b"\x00\x00"):
+        meta, parse, unsupported = (
+            bmp.decode_ico_meta, bmp._parse_ico, bmp.UnsupportedBmpError)
+    else:
+        raise NotImplementedError(
+            f"{caller} needs the optional 'pillow' dependency for "
+            "formats other than P6 PPM, PNG, JPEG, TIFF, BMP and ICO "
+            "(pip install pillow); the stub path is the "
+            "dependency-free default"
+        ) from import_exc
+    try:
+        return meta(payload) if want == "meta" else parse(payload)[2]
+    except unsupported as exc:
+        raise NotImplementedError(
+            f"{caller}: {exc}; install the optional 'pillow' dependency "
+            "for this variant"
+        ) from exc
+
+
 def decode_real(payload: bytes) -> dict:
     """Real image decode behind the same contract as
-    :func:`decode_stub` (n_bytes / width / height / format). P6 PPM,
-    PNG, JPEG, GIF, BMP, lossless-WebP and baseline-TIFF payloads
-    decode with NO optional dependency
-    (:func:`decode_ppm` / the :func:`_hermetic_formats` registry —
-    numpy + stdlib, real pixels), as do the legacy rasters (netpbm
-    P1-P5, Sun RAS, SGI, XBM — operators/rasters.py), so the real
-    path runs hermetically in
-    this container for eleven interchange formats; anything
-    else (lossy-VP8 WebP, tiled TIFF, ...) routes through Pillow, whose
-    import is
-    gated: where it is absent the error names the dependency instead
-    of failing mid-executor with a bare ImportError. When Pillow IS
-    installed it takes the decode for everything but PPM (it is
-    faster); pixels — and therefore hashes, via the shared
-    :func:`_dhash_rgb` kernel — are identical either way (fake-Pillow
-    and round-trip tests pin this)."""
+    :func:`decode_stub` (n_bytes / width / height / format). P6 PPM
+    and PNG payloads decode with NO optional dependency
+    (:func:`decode_ppm` / :func:`decode_png` — numpy + stdlib, real
+    pixels); every other format goes through Pillow, whose import is
+    gated: where it is absent, JPEG, TIFF, BMP and ICO take the
+    dependency-free decoders (:func:`_without_pillow`) and anything
+    else raises an error naming the dependency."""
     import io
 
     if payload.startswith(b"P6"):
         return decode_ppm(payload)
+    if payload.startswith(_PNG_SIG):
+        return decode_png(payload)
     try:
         from PIL import Image
     except ImportError as exc:
-        return _hermetic_fallback("decode_real", payload, exc)
+        return _without_pillow("decode_real", payload, "meta", exc)
     with Image.open(io.BytesIO(payload)) as im:
         return {
             "n_bytes": len(payload),
@@ -631,46 +546,6 @@ def frame_sample_stub(payload: bytes, n_frames: int = 3) -> list[int]:
     return [(n * k) // n_frames for k in range(n_frames)]
 
 
-def frame_sample_real(payload: bytes, n_frames: int = 3) -> list[int]:
-    """REAL frame sampling for the one animation container this engine
-    decodes hermetically (animated GIF — the video stand-in, exactly
-    how PPM stood in for images in r13): decode the composited frames
-    (:func:`gif._parse_gif_frames` — transparency + disposal honored),
-    pick *n_frames* evenly across the timeline, and return each
-    sampled frame's :func:`_dhash_rgb`. The result is a per-payload
-    array of 32-bit perceptual hashes — band any element with
-    :func:`phash_near_dup_pairs` and two re-encodes of the same clip
-    pair up even when their byte streams differ entirely. Static
-    payloads of any hermetic format are a 1-frame animation (the
-    sample repeats their single dHash), so the schema is uniform
-    across a mixed corpus. Frame count is capped (256) like every
-    bounded-work rule here."""
-    from tower_parse_spark.operators.gif import _parse_gif_frames
-
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        _w, _h, frames, _delays = _parse_gif_frames(payload)
-    elif payload.startswith(b"P6"):
-        frames = [_parse_ppm(payload)[2]]
-    else:
-        try:
-            from PIL import Image  # noqa: F401
-        except ImportError as exc:
-            frames = [
-                _hermetic_fallback("frame_sample_real", payload, exc,
-                                   want="pixels")
-            ]
-        else:
-            import io
-
-            import numpy as np
-
-            with Image.open(io.BytesIO(payload)) as im:
-                frames = [np.asarray(im.convert("RGB"))]
-    k = len(frames)
-    picks = [min((k * j) // n_frames, k - 1) for j in range(n_frames)]
-    return [_dhash_rgb(frames[i]) for i in picks]
-
-
 def pipeline_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: decode -> resize(32x32) -> features -> frames
     in ONE Python pass per Arrow batch (no per-stage JVM round trip)."""
@@ -716,7 +591,8 @@ def process_payloads(df_with_payload: DataFrame) -> DataFrame:
 #: band width must grow with n or buckets saturate into a candidate
 #: blowup (256 slot values hold ~n/256 docs each at 8 bits) — the
 #: 100 TB deployment is 64-bit hashes with 16-bit bands (65k slot
-#: values per band), exercised by tools/scale_smoke.py at 2M payloads.
+#: values per band), measured at 500k payloads (SCALE.md, "Measured
+#: headroom").
 PHASH_BITS = 32
 PHASH_BANDS = 4
 PHASH_BAND_BITS = PHASH_BITS // PHASH_BANDS
@@ -793,30 +669,29 @@ def phash_real(payload: bytes) -> int:
     """Real 32-bit dHash (Krawetz's difference hash, public
     methodology): decode to RGB pixels, then the shared
     :func:`_dhash_rgb` kernel (luma, 9x4 block-mean resize, left>right
-    bits). P6 PPM, PNG, JPEG, GIF, BMP, lossless-WebP and
-    baseline-TIFF payloads decode with NO optional dependency
-    (:func:`phash_ppm`, the
-    :func:`_hermetic_formats` registry); other formats decode via
-    Pillow with the same gated import as :func:`decode_real` — and in
-    every case the RESIZE KERNEL is the
-    numpy one on BOTH paths (Pillow only decodes; it never resizes), so
-    the same pixel content in a PPM and a PNG hashes to the same bits
-    and cross-format near-dup banding cannot miss pairs on a kernel
-    mismatch (ADVICE r13; previously the Pillow branch used Pillow's
-    own bicubic resize). Exercised under importorskip where Pillow
-    exists, and against a fake in-process Pillow everywhere."""
+    bits). P6 PPM and PNG payloads decode with NO optional dependency
+    (:func:`phash_ppm`, :func:`_parse_png`); other formats decode via
+    Pillow with the same gated import and the same dependency-free
+    JPEG/TIFF/BMP/ICO fallback as :func:`decode_real` — and in
+    every case the RESIZE KERNEL is the numpy one (Pillow only
+    decodes; it never resizes), so the same pixel content in any
+    container hashes to the same bits and cross-format near-dup
+    banding cannot miss pairs on a kernel mismatch. Exercised under
+    importorskip where Pillow exists, and against a fake in-process
+    Pillow everywhere."""
     import io
+
+    import numpy as np
 
     if payload.startswith(b"P6"):
         return phash_ppm(payload)
+    if payload.startswith(_PNG_SIG):
+        return _dhash_rgb(_parse_png(payload)[2])
     try:
         from PIL import Image
     except ImportError as exc:
         return _dhash_rgb(
-            _hermetic_fallback("phash_real", payload, exc, want="pixels")
-        )
-    import numpy as np
-
+            _without_pillow("phash_real", payload, "pixels", exc))
     with Image.open(io.BytesIO(payload)) as im:
         return _dhash_rgb(np.asarray(im.convert("RGB")))
 
@@ -914,9 +789,9 @@ def phash_near_dup_pairs(
     saturates past ~100k docs (256 slot values) into a quadratic
     candidate blowup. The default 32/4 matches the oracle fixture; the
     corpus-scale configuration is bits=64, bands=4 (16-bit slots, 65k
-    values — measured in tools/scale_smoke.py at 2M payloads). Negative
-    longs (bit 63 set) band and score correctly: shift+mask and
-    bit_count(xor) are sign-agnostic on both engines.
+    values — measured at 500k payloads, SCALE.md "Measured headroom").
+    Negative longs (bit 63 set) band and score correctly: shift+mask
+    and bit_count(xor) are sign-agnostic on both engines.
 
     The phash relation comes out of a Python (Arrow) stage, so it is
     localCheckpointed before the two join legs — without the barrier

@@ -290,7 +290,7 @@ def doc_subword_counts(
     # guard here parallelizes only tokenize+explode at the cost of
     # round-robin-shuffling full text first. Same plan shape as the
     # passage fronts, where the guard measured neutral-to-1.24x SLOWER
-    # (tools/retime_guard.py, r11); this site is bench-invisible (the
+    # (SCALE.md, r11 start); this site is bench-invisible (the
     # driver query builds its plan inline), so the decision follows
     # that measurement's plan-shape rule.
     exploded = df.select(
@@ -352,7 +352,7 @@ def token_subword_arrays(
     post-shuffle, already parallel — so the guard would shuffle the
     full token arrays just to parallelize posexplode; same
     shuffle-dominant shape the passage-front A/B measured as
-    neutral-to-1.24x slower (tools/retime_guard.py, r11)."""
+    neutral-to-1.24x slower (SCALE.md, r11 start)."""
     exploded = df.select(
         F.col(id_col),
         F.posexplode_outer(F.col(toks_col)).alias("_pos", "_tok"),

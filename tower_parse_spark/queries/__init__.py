@@ -24,86 +24,6 @@ class Query:
     doc: str = ""
 
 
-# The driver checks exactly the first 50 registry entries (observed cap:
-# CORRECTNESS_r01..r09.json each have 50 rows cut in registry order).
-# Queries listed here rotate to the registry tail.
-#
-# Round-16 rotation (VERDICT r15 #1): wholesale window/tail alternation,
-# same mechanics as r8..r15 — the 50 r14-green tail queries re-enter the
-# window (their latest driver-green is r14 and would go stale after the
-# r16 run otherwise; tools/rotation_check.py --next-round 16 at r15
-# close listed exactly those 50 as stale_after_run), and the 50
-# r15-green window queries (the CORRECTNESS_r15.json keys, below, in
-# driver order) defer to the tail. At the 100-entry ceiling with a
-# 50-slot window the two-round invariant admits no slack, so the
-# alternation is forced wholesale; deferred entries rely on their pytest
-# suites plus the full-registry CORRECTNESS_LOCAL check for the off
-# round. 100 remains the registry's HARD CEILING (COVERAGE.md late-r7
-# amendment): additions must retire or merge an entry.
-#
-# MECHANIZED as of r15 (VERDICT r14 #2): this list is no longer a
-# trusted hand-edit. tools/round_start.py verifies it char-exact
-# against the latest CORRECTNESS_r*.json key order (the alternation is
-# a fully determined function of that file) and `round_start.py
-# --emit-defer` prints the expected block to paste; a mis-rotation is
-# caught at round START, not at close. The plan-drift rule stays
-# mechanical too: tools/rotation_check.py --plan-drift compares each
-# deferred query's normalized optimized-plan digest against the
-# committed PLAN_DIGESTS.json and goes red on drift.
-_DEFER_TO_TAIL = [
-    'q5_local_supplier',
-    'running_revenue_by_nation',
-    'customers_without_urgent_orders',
-    'part_supplier_overlap',
-    'orders_with_returns',
-    'customer_order_distribution',
-    'part_string_functions',
-    'orders_date_functions',
-    'lineitem_math_functions',
-    'min_cost_parts',
-    'top_return_customers',
-    'promo_revenue_pct',
-    'disjunctive_filter_revenue',
-    'revenue_cube',
-    'part_measures_unpivot',
-    'nation_volume_shipping',
-    'market_share_by_year',
-    'top_revenue_supplier',
-    'big_basket_orders',
-    'q6_forecast_revenue',
-    'q9_product_profit',
-    'q17_small_quantity_revenue',
-    'ingest_pack_scalable',
-    'ingest_echo',
-    'dedup_passages',
-    'boilerplate_removal',
-    'incremental_exact_dedup',
-    'incremental_minhash_dedup',
-    'dedup_simhash',
-    'dedup_ngram_jaccard',
-    'ann_ivfpq_topk',
-    'embedding_cluster_stats',
-    'text_langid',
-    'token_count_bpe',
-    'text_fingerprint',
-    'multimodal_pipeline',
-    'decontaminate_fuzzy',
-    'split_leakage_check',
-    'text_pii_redact',
-    'sequence_packing',
-    'streaming_pack_carry',
-    'streaming_late_data',
-    'events_time_rollup',
-    'events_sliding_window',
-    'events_sessionize',
-    'events_asof_order',
-    'events_order_range_join',
-    'events_json_props',
-    'events_value_distribution',
-    'quality_classifier',
-]
-
-
 def registry() -> dict[str, Query]:
     """Assemble the full query registry from all modules (import-light)."""
     from tower_parse_spark.queries import (
@@ -134,9 +54,4 @@ def registry() -> dict[str, Query]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(mod.QUERIES)
-    missing = [n for n in _DEFER_TO_TAIL if n not in out]
-    if missing:
-        raise ValueError(f"unknown deferred query names: {missing}")
-    deferred = {n: out.pop(n) for n in _DEFER_TO_TAIL}
-    out.update(deferred)
     return out

@@ -1,17 +1,16 @@
-"""Streaming perceptual-hash near-dup: the image/audio twin of the
-text loop in streaming/neardup.py.
+"""Streaming perceptual-hash near-dup: the image twin of the text
+loop in streaming/neardup.py.
 
-Completes the cross-modal story: the batch side already hashes images
-(``multimodal.phash_real`` — eleven hermetic formats), audio
-(``wav.audio_fingerprint`` — WAV/AU/AIFF) and animation frames
-(``multimodal.frame_sample_real``) into the SAME 32-bit ``phash``
-space and pairs them with one Hamming-band operator
-(``multimodal.phash_near_dup_pairs``). This module runs that operator
-INCREMENTALLY: a stream of (id, phash) rows probes a banded history
-index per epoch, emits verdicts, and indexes the survivors — so a
-streaming image/audio ingest deduplicates against everything ever
-seen without re-scanning history, exactly the contract the minhash
-text loop provides.
+The batch side hashes payloads with ``multimodal.with_phash`` (the
+stub hash, or ``phash_real`` for PPM/PNG/JPEG/TIFF/BMP and
+Pillow-decoded formats)
+into a 32-bit ``phash`` space and pairs them with one Hamming-band
+operator (``multimodal.phash_near_dup_pairs``). This module runs that
+operator INCREMENTALLY: a stream of (id, phash) rows probes a banded
+history index per epoch, emits verdicts, and indexes the survivors —
+so a streaming image ingest deduplicates against everything ever seen
+without re-scanning history, exactly the contract the minhash text
+loop provides.
 
 Same 100 TB posture as the text loop, same machinery where the
 machinery is generic:
@@ -205,10 +204,8 @@ def stream_phash_dedup(
 ):
     """Start the streaming perceptual near-dup query over *stream_df*
     (columns *id_col*, *phash_col* — produce the hash upstream with
-    ``with_phash(..., hasher=phash_real)`` for images or
-    ``with_audio_features`` for audio; both emit the same 32-bit
-    space, so ONE index deduplicates a mixed stream). Returns the
-    StreamingQuery (caller stops it)."""
+    ``with_phash``: the stub hasher, or ``hasher=phash_real`` for
+    PPM/PNG/JPEG/TIFF/BMP images). Returns the StreamingQuery (caller stops it)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         process_phash_epoch(
