@@ -28,9 +28,10 @@ def test_decode_stub_deterministic():
 def test_decode_real_without_pillow_names_the_dependency():
     """Where Pillow is absent the error must name the optional dep (not
     a bare executor-side ImportError) for every payload outside the
-    dependency-free set — including the magic bytes of GIF and WebP;
-    where present, decode_real is the real decoder and the skip-gated
-    test below covers it."""
+    dependency-free set (P6 PPM and PNG) — including the magic bytes of
+    GIF, WebP, JPEG, BMP, TIFF (both byte orders) and ICO; where
+    present, decode_real is the real decoder and the skip-gated test
+    below covers it."""
     try:
         import PIL  # noqa: F401
     except ImportError:
@@ -38,6 +39,11 @@ def test_decode_real_without_pillow_names_the_dependency():
             b"x",
             b"GIF89a" + bytes(16),
             b"RIFF\x10\x00\x00\x00WEBPVP8L" + bytes(16),
+            b"\xff\xd8" + bytes(16),
+            b"BM" + bytes(16),
+            b"II*\x00" + bytes(16),
+            b"MM\x00*" + bytes(16),
+            b"\x00\x00\x01\x00\x01\x00" + bytes(16),
         ]
         for payload in payloads:
             with pytest.raises(NotImplementedError, match="pillow"):

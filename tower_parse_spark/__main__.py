@@ -61,7 +61,8 @@ def build_parser() -> argparse.ArgumentParser:
         metavar="DIR",
         help="stream-dedup a perceptual-hash spool directory (jsonl "
         'rows {"doc_id": long, "phash": long} from with_phash, '
-        "stub or phash_real for PPM/PNG/JPEG/TIFF/BMP) against a "
+        "stub or phash_real: P6 PPM and PNG without dependencies, "
+        "anything else through Pillow) against a "
         "growing Hamming-banded index under --out",
     )
     mode.add_argument(
@@ -160,8 +161,9 @@ def start_phash_dedup(
     """Start the streaming perceptual near-dup query for the
     --phash-dedup mode (split out so tests can drive it with
     processAllAvailable). The spool rows carry 32-bit hashes produced
-    upstream by ``with_phash`` (the stub hasher, or ``phash_real`` for
-    PPM/PNG/JPEG/TIFF/BMP images). Sinks under *out*:
+    upstream by ``with_phash`` (the stub hasher, or ``phash_real``,
+    which decodes P6 PPM and PNG without dependencies and needs Pillow
+    for anything else). Sinks under *out*:
     verdicts/ index/ checkpoint/ — the same exactly-once ``batch=N``
     layout every streaming sink here uses."""
     from tower_parse_spark.streaming.phash_index import stream_phash_dedup

@@ -2,7 +2,6 @@
 
 from tower_parse_spark.functions.extraction import (  # noqa: F401
     extract_lines,
-    extraction_columns,
     packed_parts,
     unnamed_pattern,
 )

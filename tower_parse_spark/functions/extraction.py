@@ -37,9 +37,6 @@ count, from 10M-row measurements (SCALE.md, "Ingest"):
   measured 2.2x faster at 16 groups, more at the reference's widest
   schema (27 groups, configs/readport_4004_KLDPIO.conf:17). This is the
   reference's single ``match`` per line (readport.py:345), re-expressed.
-
-:func:`extraction_columns` remains the composable per-column form for
-callers that need standalone Columns.
 """
 
 from __future__ import annotations
@@ -74,40 +71,6 @@ def _extract_one(line: Column, branch: str, var: str, sentinel: str) -> Column:
     # (regexp_extract returns '' in either case); the sentinel covers the
     # device's explicit missing-value marker (readport.py:348-351).
     return F.nullif(F.nullif(raw, F.lit("")), F.lit(sentinel))
-
-
-def extraction_columns(
-    profile: DeviceProfile, line_col: str = "line"
-) -> dict[str, Column]:
-    """Typed extraction expressions for every profile variable.
-
-    Multi-branch profiles coalesce per-variable across branches — first
-    matching branch wins, mirroring leftmost-alternation semantics of the
-    reference's unified pattern (tests/test_parser.py:75-100).
-    Casts: every variable -> double (readport.py:324-325); the group key ->
-    its declared int/double/string (readport.py:169, 326). A cast failure
-    yields NULL (Spark semantics) and is surfaced through ``_corrupt``
-    routing by ``extract_lines``.
-    """
-    line = F.col(line_col)
-    out: dict[str, Column] = {}
-    for var in profile.variables:
-        branches = [
-            _extract_one(line, b, var, profile.sentinel)
-            for b in profile.regex
-            if var in group_indices(b)
-        ]
-        expr = branches[0] if len(branches) == 1 else F.coalesce(*branches)
-        # try_cast, not cast: under ANSI mode (Spark 4 default) a plain cast
-        # on a malformed capture kills the whole job; the reference treats
-        # cast failure as a record-level error (readport.py:353-364) and the
-        # engine's documented divergence maps that to NULL (SURVEY.md §7.4).
-        if profile.group is not None and var == profile.group.var:
-            expr = expr.try_cast(profile.group.spark_type)
-        else:
-            expr = expr.try_cast("double")
-        out[var] = expr.alias(var)
-    return out
 
 
 def matches_any_branch(profile: DeviceProfile, line_col: str = "line") -> Column:
@@ -220,6 +183,9 @@ def extract_lines(
                     )
                 )
         expr = per_branch[0] if len(per_branch) == 1 else F.coalesce(*per_branch)
+        # try_cast, not cast: under ANSI mode a plain cast on a malformed
+        # capture kills the whole job; a cast failure is NULL instead
+        # (readport.py:353-364, SURVEY.md §7.4)
         if profile.group is not None and var == profile.group.var:
             expr = expr.try_cast(profile.group.spark_type)
         else:

@@ -9,8 +9,7 @@ processes whole record batches without JVM<->Python per-row cost.
 The registry queries use the STUBBED decode: ``decode_stub`` derives
 deterministic fake metadata from the bytes. ``decode_real`` decodes P6
 PPM and PNG with numpy + stdlib and hands every other format to the
-optional Pillow dependency; where Pillow is absent, JPEG, TIFF, BMP and
-ICO fall back to numpy + stdlib decoders. The Spark-side plumbing —
+optional Pillow dependency. The Spark-side plumbing —
 schema, batch iteration, partition behavior — is real and
 oracle-checked (queries/llm.py::multimodal_decode).
 """
@@ -354,63 +353,19 @@ def decode_png(payload: bytes) -> dict:
     }
 
 
-def decode_jpeg(payload: bytes) -> dict:
-    """REAL metadata decode of a JPEG with NO optional dependency
-    (operators/jpeg.py — ITU-T T.81), same contract as
-    :func:`decode_stub` / :func:`decode_real`. Dimensions come from the
-    SOF header walk alone — metadata for a megapixel image must not pay
-    the full per-symbol entropy decode (that runs only where pixels are
-    needed: :func:`phash_real` via ``jpeg._parse_jpeg``); like every
-    header decoder, this validates the header, not the scan data."""
-    from tower_parse_spark.operators.jpeg import parse_dimensions
-
-    width, height = parse_dimensions(payload)
-    return {
-        "n_bytes": len(payload),
-        "width": width,
-        "height": height,
-        "format": "jpeg",
-    }
-
-
-def _without_pillow(caller: str, payload: bytes, want: str, import_exc):
-    """The decode of JPEG, TIFF, BMP and ICO payloads where Pillow is
-    absent (operators/jpeg.py, tiff.py, bmp.py — numpy + stdlib):
-    header-only metadata for ``want="meta"``, RGB pixels otherwise.
-    Any other format, and any valid variant those decoders omit, raises
-    NotImplementedError naming the optional dependency (instead of a
-    bare executor-side ImportError); malformed payloads raise
-    ValueError."""
-    from tower_parse_spark.operators import bmp, jpeg, tiff
-
-    if payload.startswith(b"\xff\xd8"):
-        meta, parse, unsupported = (
-            decode_jpeg, jpeg._parse_jpeg, jpeg.UnsupportedJpegError)
-    elif payload.startswith(b"BM"):
-        meta, parse, unsupported = (
-            bmp.decode_bmp_meta, bmp._parse_bmp, bmp.UnsupportedBmpError)
-    elif payload[:4] in (b"II*\x00", b"MM\x00*"):
-        meta, parse, unsupported = (
-            tiff.decode_tiff_meta, tiff._parse_tiff,
-            tiff.UnsupportedTiffError)
-    elif (payload[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00")
-            and len(payload) >= 6 and payload[4:6] != b"\x00\x00"):
-        meta, parse, unsupported = (
-            bmp.decode_ico_meta, bmp._parse_ico, bmp.UnsupportedBmpError)
-    else:
+def _pillow_image(caller: str):
+    """``PIL.Image`` for the formats without a dependency-free decoder.
+    Where Pillow is absent, raise NotImplementedError naming the
+    optional dependency instead of a bare executor-side ImportError."""
+    try:
+        from PIL import Image
+    except ImportError as exc:
         raise NotImplementedError(
             f"{caller} needs the optional 'pillow' dependency for "
-            "formats other than P6 PPM, PNG, JPEG, TIFF, BMP and ICO "
-            "(pip install pillow); the stub path is the "
-            "dependency-free default"
-        ) from import_exc
-    try:
-        return meta(payload) if want == "meta" else parse(payload)[2]
-    except unsupported as exc:
-        raise NotImplementedError(
-            f"{caller}: {exc}; install the optional 'pillow' dependency "
-            "for this variant"
+            "formats other than P6 PPM and PNG (pip install pillow); "
+            "the stub path is the dependency-free default"
         ) from exc
+    return Image
 
 
 def decode_real(payload: bytes) -> dict:
@@ -418,20 +373,16 @@ def decode_real(payload: bytes) -> dict:
     :func:`decode_stub` (n_bytes / width / height / format). P6 PPM
     and PNG payloads decode with NO optional dependency
     (:func:`decode_ppm` / :func:`decode_png` — numpy + stdlib, real
-    pixels); every other format goes through Pillow, whose import is
-    gated: where it is absent, JPEG, TIFF, BMP and ICO take the
-    dependency-free decoders (:func:`_without_pillow`) and anything
-    else raises an error naming the dependency."""
+    pixels); every other format needs Pillow, whose import is gated:
+    where it is absent, the call raises NotImplementedError naming
+    the dependency."""
     import io
 
     if payload.startswith(b"P6"):
         return decode_ppm(payload)
     if payload.startswith(_PNG_SIG):
         return decode_png(payload)
-    try:
-        from PIL import Image
-    except ImportError as exc:
-        return _without_pillow("decode_real", payload, "meta", exc)
+    Image = _pillow_image("decode_real")
     with Image.open(io.BytesIO(payload)) as im:
         return {
             "n_bytes": len(payload),
@@ -670,10 +621,9 @@ def phash_real(payload: bytes) -> int:
     methodology): decode to RGB pixels, then the shared
     :func:`_dhash_rgb` kernel (luma, 9x4 block-mean resize, left>right
     bits). P6 PPM and PNG payloads decode with NO optional dependency
-    (:func:`phash_ppm`, :func:`_parse_png`); other formats decode via
-    Pillow with the same gated import and the same dependency-free
-    JPEG/TIFF/BMP/ICO fallback as :func:`decode_real` — and in
-    every case the RESIZE KERNEL is the numpy one (Pillow only
+    (:func:`phash_ppm`, :func:`_parse_png`); every other format needs
+    Pillow, behind the same gated import as :func:`decode_real` — and
+    in every case the RESIZE KERNEL is the numpy one (Pillow only
     decodes; it never resizes), so the same pixel content in any
     container hashes to the same bits and cross-format near-dup
     banding cannot miss pairs on a kernel mismatch. Exercised under
@@ -687,11 +637,7 @@ def phash_real(payload: bytes) -> int:
         return phash_ppm(payload)
     if payload.startswith(_PNG_SIG):
         return _dhash_rgb(_parse_png(payload)[2])
-    try:
-        from PIL import Image
-    except ImportError as exc:
-        return _dhash_rgb(
-            _without_pillow("phash_real", payload, "pixels", exc))
+    Image = _pillow_image("phash_real")
     with Image.open(io.BytesIO(payload)) as im:
         return _dhash_rgb(np.asarray(im.convert("RGB")))
 

@@ -155,37 +155,6 @@ def pack_sequences(
     return sized.select(*cols)
 
 
-def sql_pack_sequences(
-    docs_rel: str,
-    toks_sql: str,
-    id_col: str = "doc_id",
-    seq_tokens: int = SEQ_TOKENS,
-    shards: int = N_SHARDS,
-) -> str:
-    """DuckDB twin of :func:`pack_sequences` over *docs_rel* (ends with a
-    ``packed`` relation; compose with a final SELECT)."""
-    return f"""sized AS (
-  SELECT {id_col},
-         {sql_hash_bucket(id_col, PACK_SALT)} % {shards} AS shard,
-         CAST(len({toks_sql}) AS BIGINT) AS n_tokens
-  FROM {docs_rel}
-), nz AS (
-  SELECT * FROM sized WHERE n_tokens > 0
-), packed AS (
-  SELECT {id_col}, shard, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY shard ORDER BY {id_col}
-                             ROWS UNBOUNDED PRECEDING) - n_tokens
-           AS start_off,
-         (sum(n_tokens) OVER (PARTITION BY shard ORDER BY {id_col}
-                              ROWS UNBOUNDED PRECEDING) - n_tokens)
-           // {seq_tokens} AS first_seq,
-         (sum(n_tokens) OVER (PARTITION BY shard ORDER BY {id_col}
-                              ROWS UNBOUNDED PRECEDING) - 1)
-           // {seq_tokens} AS last_seq
-  FROM nz
-)"""
-
-
 def sql_pack_sequences_subword(
     docs_rel: str,
     toks_sql: str,

@@ -2,10 +2,10 @@
 loop in streaming/neardup.py.
 
 The batch side hashes payloads with ``multimodal.with_phash`` (the
-stub hash, or ``phash_real`` for PPM/PNG/JPEG/TIFF/BMP and
-Pillow-decoded formats)
-into a 32-bit ``phash`` space and pairs them with one Hamming-band
-operator (``multimodal.phash_near_dup_pairs``). This module runs that
+stub hash, or ``phash_real``, which decodes P6 PPM and PNG without
+dependencies and needs Pillow for anything else) into a 32-bit
+``phash`` space and pairs them with one Hamming-band operator
+(``multimodal.phash_near_dup_pairs``). This module runs that
 operator INCREMENTALLY: a stream of (id, phash) rows probes a banded
 history index per epoch, emits verdicts, and indexes the survivors —
 so a streaming image ingest deduplicates against everything ever seen
@@ -204,8 +204,9 @@ def stream_phash_dedup(
 ):
     """Start the streaming perceptual near-dup query over *stream_df*
     (columns *id_col*, *phash_col* — produce the hash upstream with
-    ``with_phash``: the stub hasher, or ``hasher=phash_real`` for
-    PPM/PNG/JPEG/TIFF/BMP images). Returns the StreamingQuery (caller stops it)."""
+    ``with_phash``: the stub hasher, or ``hasher=phash_real``, which
+    decodes P6 PPM and PNG without dependencies and needs Pillow for
+    anything else). Returns the StreamingQuery (caller stops it)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         process_phash_epoch(

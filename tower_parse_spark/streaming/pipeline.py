@@ -32,16 +32,18 @@ def parse_stream(lines: DataFrame, profile: DeviceProfile) -> DataFrame:
     return extract_lines(lines, profile)
 
 
+def group_column(profile: DeviceProfile) -> str:
+    """The pack key column: the profile's group variable, or the constant
+    ``_g`` of a degenerate single-group stream (the reference's
+    group=None buffer, readport.py:256-271)."""
+    return profile.group.var if profile.group else "_g"
+
+
 def packed_stream(lines: DataFrame, profile: DeviceProfile) -> DataFrame:
     parsed = parse_stream(lines, profile)
-    group = profile.group.var if profile.group else None
-    if group is None:
-        # degenerate single-group stream: constant key (the reference's
-        # group=None buffer, readport.py:256-271)
-        from pyspark.sql import functions as F
-
-        parsed = parsed.withColumn("_g", F.lit(0))
-        group = "_g"
+    group = group_column(profile)
+    if profile.group is None:
+        parsed = parsed.withColumn(group, F.lit(0))
     return stream_pack(parsed, profile.pack_length, group)
 
 
@@ -181,13 +183,11 @@ def run_ingest(
         attach_metrics(
             spark, emit=lambda rec: print(f"[heartbeat] {rec}", file=sys.stderr)
         )
-    packed = packed_stream(lines, profile)
-    group = profile.group.var if profile.group else "_g"
     return write_packs(
-        packed,
+        packed_stream(lines, profile),
         out_dir=os.path.join(base_dir, "data"),
         checkpoint_dir=os.path.join(base_dir, "checkpoint"),
-        group_col=group,
+        group_col=group_column(profile),
         query_name=f"ingest_{profile.name}",
         trigger=trigger,
     )
@@ -210,8 +210,6 @@ def event_time_stats(
     ``time`` is epoch-seconds double in the parse schema (reference
     parity); it converts to a proper timestamp here for watermarking.
     """
-    from pyspark.sql import functions as F
-
     vals = value_cols or []
     aggs = [F.count(F.lit(1)).alias("n_rows")] + [
         F.round(F.sum(c), 4).alias(f"sum_{c}") for c in vals
