@@ -1,762 +1,87 @@
-"""The bench driver-contract line (bench.py::compact_line).
+"""bench.py's output contract: one JSON line on stdout.
 
-The driver's stdout tail keeps ~2 kB and parses the FINAL line; round 5
-lost its external perf artifact when the line overflowed. These tests
-pin the budget against registry growth: at 100+ queries the line must
-truncate to the slowest-N form, stay parseable, keep the exact total,
-and carry the queries_truncated marker (VERDICT r6 item 7). Since r8 the
-line also carries ``sp`` — per-query spread as an integer-percent array
-aligned with the queries key order (VERDICT r7 item 2) — which must stay
-aligned through every degradation rung. No Spark session involved.
+The reader of that line keeps only the last ~2 kB of stdout and parses
+the final line, so the line must fit that tail with every headline query
+in it. These tests run ``bench.main()`` on canned queries and a fake
+clock; no Spark session is started.
 """
 
 from __future__ import annotations
 
 import json
+import types
 
 import bench
 
-
-def _times(n: int) -> dict[str, float]:
-    # realistic name lengths (the registry averages ~20 chars) and a
-    # spread of magnitudes so the slowest-40 cut is meaningful
-    return {
-        f"synthetic_query_name_number_{i:03d}": round(0.123 + i * 0.37, 3)
-        for i in range(n)
-    }
+CONTRACT_KEYS = {"metric", "value", "unit", "queries", "sf"}
 
 
-def _spreads(times: dict[str, float]) -> dict[str, float]:
-    # realistic two-digit spreads (r7 driver noise median was 27.1%)
-    return {k: 7.0 + (i * 13) % 60 for i, k in enumerate(times)}
-
-
-def test_small_registry_line_is_complete_and_parseable():
-    times = _times(40)
-    sp = _spreads(times)
-    line = bench.compact_line(times, sum(times.values()), 0.1, sp)
-    assert len(line) <= bench.COMPACT_LINE_BUDGET
-    parsed = json.loads(line)
-    assert parsed["queries"] == times
-    assert "queries_truncated" not in parsed
-    assert parsed["metric"] == "headline_queries_total"
-    # sp aligns with the queries key order, integer percents
-    assert parsed["sp"] == [int(round(sp[k])) for k in parsed["queries"]]
-
-
-def test_oversize_registry_truncates_within_budget():
-    times = _times(120)
-    sp = _spreads(times)
-    total = round(sum(times.values()), 3)
-    line = bench.compact_line(times, total, 0.1, sp)
-    assert len(line) <= bench.COMPACT_LINE_BUDGET
-    parsed = json.loads(line)
-    # graceful degradation: marker counts exactly the shed queries, and
-    # only the FASTEST were shed — every kept timing >= every dropped one
-    assert parsed["queries_truncated"] == 120 - len(parsed["queries"])
-    assert len(parsed["queries"]) >= 30
-    # total stays the FULL total, not the kept subset's
-    assert parsed["value"] == total
-    kept_min = min(parsed["queries"].values())
-    dropped_max = max(
-        round(v, 2) for k, v in times.items() if k not in parsed["queries"]
-    )
-    assert kept_min >= dropped_max
-    # spread stays aligned with the SURVIVING queries
-    assert parsed["sp"] == [int(round(sp[k])) for k in parsed["queries"]]
-
-
-def test_moderate_overflow_keeps_every_query_at_2dp():
-    """Just past the budget, the 2-decimal re-round must absorb the
-    overflow WITHOUT dropping any query (the graduated-degradation
-    rung). The band is narrower with sp on board, so the case pins it
-    exactly: 62 queries x 19-char names, zero spreads."""
-    times = {f"realistic_name_{i:04d}": 3.141 for i in range(62)}
-    full_3dp = len(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": 207.3,
-                "unit": "sec",
-                "queries": times,
-                "sp": [0] * len(times),
-                "sf": 0.1,
-            },
-            separators=(",", ":"),
-        )
-    )
-    assert full_3dp > bench.COMPACT_LINE_BUDGET  # the case under test
-    line = bench.compact_line(times, 207.306, 0.1, {})
-    parsed = json.loads(line)
-    assert len(line) <= bench.COMPACT_LINE_BUDGET
-    assert "queries_truncated" not in parsed
-    assert len(parsed["queries"]) == 62
-    assert all(v == 3.14 for v in parsed["queries"].values())
-    assert parsed["sp"] == [0] * 62
-
-
-def test_current_headline_set_sheds_only_subsecond_queries():
-    """The real headline list at realistic timings and spreads may need
-    the degraded form, but it must never shed a query slow enough to be
-    perf evidence: everything past 0.6 s stays on the line. (At the
-    ~27% driver noise floor a sub-0.6 s delta is inside run-to-run
-    scatter — the shed set is below/near bench_regress's MIN_BASE_SEC
-    gate; at 69 headline queries 8 such sub-0.6 s entries shed.)"""
-    # realistic sf0.1 shape: most queries ~0.3-1.5 s, a slow tail
-    times = {
-        name: round(0.25 + (i * 37 % 100) / 40.0, 3)
-        for i, name in enumerate(bench.HEADLINE)
-    }
-    sp = {name: 27.0 for name in times}
-    line = bench.compact_line(times, sum(times.values()), 0.1, sp)
-    parsed = json.loads(line)
-    assert len(line) <= bench.COMPACT_LINE_BUDGET
-    kept = parsed["queries"]
-    shed = [k for k in times if k not in kept]
-    assert len(shed) <= 12, shed
-    assert all(times[k] <= 0.6 for k in shed), shed
-    assert parsed["sp"] == [27] * len(kept)
-
-
-def test_compact_line_without_spread_still_emits_sp():
-    # omitted spread dict (a caller that only has timings) degrades to
-    # zeros, never to a missing/misaligned field
-    times = _times(10)
-    parsed = json.loads(bench.compact_line(times, 1.0, 0.01))
-    assert parsed["sp"] == [0] * 10
-
-
-def test_bench_regress_reconstructs_spread_from_sp(tmp_path):
-    """End-to-end through tools/bench_regress.py: two driver-style
-    artifacts whose final compact line carries sp must gate on the
-    reconstructed per-query spread — a delta inside the measured spread
-    is NOT a regression even past the 1.3x structural bar, and a delta
-    outside it IS."""
-    import subprocess
-    import sys
-
-    def artifact(path, noisy_sec, quiet_sec, noisy_sp):
-        times = {"noisy_query_name_x": noisy_sec, "quiet_query_name_y": quiet_sec}
-        sp = {"noisy_query_name_x": noisy_sp, "quiet_query_name_y": 2.0}
-        line = bench.compact_line(times, sum(times.values()), 0.1, sp)
-        # driver shape: wraps the parsed final line
-        path.write_text(json.dumps({"n": 8, "parsed": json.loads(line)}))
-
-    old, new = tmp_path / "old.json", tmp_path / "new.json"
-    artifact(old, 1.0, 1.0, 60.0)
-    # noisy query 1.5x slower but within its 60% spread -> not flagged;
-    # quiet query 1.5x slower with 2% spread -> flagged
-    artifact(new, 1.5, 1.5, 60.0)
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    flagged = {r["query"] for r in out["regressions"]}
-    assert flagged == {"quiet_query_name_y"}, out
-    assert proc.returncode == 1
-
-
-def test_driver_tail_capture_end_to_end():
-    """The actual driver contract: it keeps the LAST ~2000 bytes of
-    bench.py stdout and json-parses the FINAL line. Simulate the whole
-    two-line output at the real headline size and prove the final line
-    survives the tail cut intact, with sp on board."""
-    times = {
-        name: round(0.25 + (i * 37 % 100) / 40.0, 3)
-        for i, name in enumerate(bench.HEADLINE)
-    }
-    sp = {name: float((i * 13) % 60) for i, name in enumerate(times)}
-    runs = {k: [v, round(v * 1.27, 3)] for k, v in times.items()}
-    enriched = json.dumps(
-        {
-            "detail": "runs_and_spread",
-            "queries": times,
-            "runs": runs,
-            "spread_pct": sp,
-            "noise_median_pct": 27.0,
-        }
-    )
-    compact = bench.compact_line(times, sum(times.values()), 0.1, sp)
-    stdout = enriched + "\n" + compact + "\n"
-    tail = stdout[-2000:]
-    final = tail.strip().splitlines()[-1]
-    parsed = json.loads(final)  # must be whole inside the tail
-    assert parsed["metric"] == "headline_queries_total"
-    assert len(parsed["sp"]) == len(parsed["queries"])
-    # and the regress tool's reconstruction sees per-query spread
-    recon = dict(zip(parsed["queries"], parsed["sp"]))
-    assert all(recon[k] == int(round(sp[k])) for k in parsed["queries"])
-
-
-def test_compact_line_carries_cal_within_budget():
-    """The machine-speed scalar rides the compact line, survives the
-    truncation path, and never pushes the line past the tail budget."""
-    times = _times(10)
-    parsed = json.loads(bench.compact_line(times, 1.0, 0.01, None, 1.234))
-    assert parsed["cal"] == 1.234
-    # oversize registry: cal survives truncation, budget holds
-    big = _times(300)
-    line = bench.compact_line(big, 1.0, 0.01, None, 1.234)
-    assert len(line) <= bench.COMPACT_LINE_BUDGET
-    parsed = json.loads(line)
-    assert parsed["cal"] == 1.234
-    assert parsed["queries_truncated"] > 0
-    # omitted cal (probe failed) -> key absent, old shape exactly
-    assert "cal" not in json.loads(bench.compact_line(times, 1.0, 0.01))
-
-
-def test_bench_regress_cal_cancels_uniform_drift(tmp_path):
-    """With cal on both artifacts, a uniform machine-level shift (every
-    query AND the probe 1.5x) is not flagged; a real single-query
-    regression (probe unmoved) still is; and artifacts without cal
-    behave exactly as before (the same shift flags)."""
-    import subprocess
-    import sys
-
-    def artifact(path, a_sec, b_sec, cal=None):
-        times = {"query_aaaa": a_sec, "query_bbbb": b_sec}
-        sp = {k: 2.0 for k in times}
-        line = bench.compact_line(times, sum(times.values()), 0.1, sp, cal)
-        path.write_text(json.dumps({"n": 8, "parsed": json.loads(line)}))
-
-    def run(old, new):
-        proc = subprocess.run(
-            [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        return json.loads(proc.stdout.strip().splitlines()[-1]), proc.returncode
-
-    old, new = tmp_path / "o.json", tmp_path / "n.json"
-    # uniform 1.5x drift, probe moved with it -> cancelled
-    artifact(old, 1.0, 1.0, cal=1.0)
-    artifact(new, 1.5, 1.5, cal=1.5)
-    out, rc = run(old, new)
-    assert out["regressions"] == [] and rc == 0
-    assert out["cal_ratio"] == 1.5
-    assert out["total_ratio"] == 1.5 and out["total_ratio_cal_adj"] == 1.0
-    # real regression: one query 2x, probe unmoved -> flagged, with the
-    # adjusted ratio reported
-    artifact(new, 2.0, 1.0, cal=1.0)
-    out, rc = run(old, new)
-    assert [r["query"] for r in out["regressions"]] == ["query_aaaa"]
-    assert out["regressions"][0]["ratio_cal_adj"] == 2.0
-    assert rc == 1
-    # no cal on the old side -> legacy behavior (uniform shift flags)
-    artifact(old, 1.0, 1.0)
-    artifact(new, 1.5, 1.5, cal=1.5)
-    out, rc = run(old, new)
-    assert {r["query"] for r in out["regressions"]} == {
-        "query_aaaa", "query_bbbb"
-    }
-    assert "cal_ratio" not in out and rc == 1
-    # symmetric: uniform 1.5x SPEEDUP with the probe moved -> not
-    # counted as improvements either
-    artifact(old, 1.5, 1.5, cal=1.5)
-    artifact(new, 1.0, 1.0, cal=1.0)
-    out, rc = run(old, new)
-    assert out["improvements"] == [] and rc == 0
-
-
-def test_bench_regress_reports_masked_adjusted_only_deltas(tmp_path):
-    """ADVICE r9 (medium): when the machine got FASTER between artifacts
-    (cal_ratio < 1), a genuine regression's raw ratio is deflated — the
-    docstring example is a 1.5x regression on a 2x-faster machine (raw
-    0.75, adjusted 1.5). The both-gates rule must not silently pass it:
-    such deltas land in masked_regressions and force a non-zero exit.
-    Symmetric adjusted-only improvements are reported (but don't fail)."""
-    import subprocess
-    import sys
-
-    def artifact(path, a_sec, b_sec, cal):
-        times = {"query_aaaa": a_sec, "query_bbbb": b_sec}
-        sp = {k: 2.0 for k in times}
-        line = bench.compact_line(times, sum(times.values()), 0.1, sp, cal)
-        path.write_text(json.dumps({"n": 8, "parsed": json.loads(line)}))
-
-    def run(old, new):
-        proc = subprocess.run(
-            [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        return json.loads(proc.stdout.strip().splitlines()[-1]), proc.returncode
-
-    old, new = tmp_path / "o.json", tmp_path / "n.json"
-    # 2x-faster machine; query_aaaa regressed 1.5x in machine terms
-    # (raw 0.75 < bar), query_bbbb sped up with the machine (raw 0.5,
-    # adjusted 1.0 — neither flagged nor an improvement)
-    artifact(old, 1.0, 1.0, cal=2.0)
-    artifact(new, 0.75, 0.5, cal=1.0)
-    out, rc = run(old, new)
-    assert out["regressions"] == []
-    assert [r["query"] for r in out["masked_regressions"]] == ["query_aaaa"]
-    assert out["masked_regressions"][0]["ratio_cal_adj"] == 1.5
-    assert rc == 1, out
-    # symmetric: machine got SLOWER (cal 1 -> 2); query_aaaa held its
-    # wall time (a machine-relative improvement masked by the raw gate),
-    # query_bbbb improved outright on both gates; exit stays 0
-    artifact(old, 1.0, 1.0, cal=1.0)
-    artifact(new, 1.0, 0.5, cal=2.0)
-    out, rc = run(old, new)
-    assert out["regressions"] == [] and out["masked_regressions"] == []
-    assert [r["query"] for r in out["improvements"]] == ["query_bbbb"]
-    assert [r["query"] for r in out["masked_improvements"]] == ["query_aaaa"]
-    assert rc == 0, out
-
-
-def test_truncation_protect_rotates_the_shed_set():
-    """VERDICT r10 #5: names in ``protect`` are shed only after every
-    unprotected query — two simulated rounds where round 2 protects
-    round 1's shed set produce DISJOINT truncated sets, so every query
-    gets a driver artifact timing at least every other round."""
-    times = _times(60)  # sheds < half, like the real 8-of-69 registry
-    sp = _spreads(times)
-    total = round(sum(times.values()), 3)
-    r1 = json.loads(bench.compact_line(times, total, 0.1, sp))
-    shed_r1 = set(times) - set(r1["queries"])
-    assert shed_r1 and len(shed_r1) < len(times) / 2
-    r2 = json.loads(
-        bench.compact_line(times, total, 0.1, sp, protect=shed_r1)
-    )
-    shed_r2 = set(times) - set(r2["queries"])
-    assert shed_r1 & shed_r2 == set(), shed_r1 & shed_r2
-    assert shed_r1 <= set(r2["queries"])  # protected all survived
-    assert len(bench.compact_line(times, total, 0.1, sp, protect=shed_r1)) \
-        <= bench.COMPACT_LINE_BUDGET
-    # sp stays aligned with the kept key order
-    assert r2["sp"] == [int(round(sp[k])) for k in r2["queries"]]
-
-
-def test_prev_truncated_reads_latest_artifact(tmp_path, monkeypatch):
-    """prev_truncated: measured-but-absent HEADLINE names from the
-    newest BENCH_r*.json; empty when nothing was truncated or no
-    artifact; non-headline (--all sweep tail) names never protected."""
-    a, b, c = bench.HEADLINE[:3]
-    times = {a: 0.1, b: 0.2, c: 3.0, "tail_only_query": 0.1}
-    monkeypatch.setattr(
-        bench.os.path, "dirname", lambda p: str(tmp_path)
-    )
-    assert bench.prev_truncated(times) == set()  # no artifact yet
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps(
-        {"parsed": {"queries": {a: 0.1, b: 0.2, c: 3.0}}}
-    ))
-    assert bench.prev_truncated(times) == set()  # nothing truncated
-    (tmp_path / "BENCH_r10.json").write_text(json.dumps(
-        {"parsed": {"queries": {c: 3.0}, "queries_truncated": 2}}
-    ))
-    # latest artifact wins; the non-headline name is never protected
-    assert bench.prev_truncated(times) == {a, b}
-    (tmp_path / "BENCH_r11.json").write_text("not json")
-    assert bench.prev_truncated(times) == set()  # unparseable -> r10 behavior
-
-
-def test_bench_regress_reports_within_run_drift(tmp_path):
-    """r13: an artifact whose end-of-run cal re-probe (cal2) diverges
-    >15% from its start-of-run cal is marked machine_unstable in the
-    comparison output — the witness for reclaim-stall runs whose
-    per-query flags are drift, not plan changes. Stable pairs carry no
-    marker, and the marker never auto-dismisses flags (exit code
-    unchanged)."""
-    import subprocess
-    import sys
-
-    def artifact(path, sec, cal, cal2):
-        times = {"some_query_name_x": sec}
-        line = bench.compact_line(
-            times, sec, 0.1, {"some_query_name_x": 2.0}, cal, cal_end=cal2
-        )
-        path.write_text(json.dumps({"n": 8, "parsed": json.loads(line)}))
-
-    old, new = tmp_path / "old.json", tmp_path / "new.json"
-    artifact(old, 1.0, 0.80, 0.81)   # stable run
-    artifact(new, 1.6, 0.80, 0.99)   # 24% within-run drift + a flag
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert [u["artifact"] for u in out["machine_unstable"]] == ["new"]
-    assert out["machine_unstable"][0]["drift_pct"] > 15
-    assert proc.returncode == 1  # the marker informs, it does not waive
-    # stable pair: no marker
-    artifact(new, 1.0, 0.80, 0.84)
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert "machine_unstable" not in out
-    assert proc.returncode == 0
-
-
-def _fake_suite(sec_by_name, cal, cal_end):
-    return {
-        "times": dict(sec_by_name),
-        "runs": {k: [v, v] for k, v in sec_by_name.items()},
-        "spread_pct": {k: 2.0 for k in sec_by_name},
-        "errors": {},
-        "cal": cal,
-        "cal_end": cal_end,
-    }
-
-
-def _run_main(monkeypatch, capsys, suites, argv=("bench.py",)):
-    """Drive bench.main() with run_suite canned (no Spark): returns the
-    (enriched, compact) parsed output lines and how many suite passes
-    ran."""
+def _canned(durations):
+    """A query callable whose n-th build takes durations[n] seconds (the
+    last one repeats); it returns the duration for ``materialize``."""
     calls = []
 
-    def fake_run_suite(spark, qs, names, sf_dir):
-        calls.append(1)
-        return suites[len(calls) - 1]
+    def query(spark, sf_dir):
+        calls.append(sf_dir)
+        return durations[min(len(calls), len(durations)) - 1]
 
-    class _DummySpark:  # warm-up lambdas raise on attribute access; caught
-        pass
+    return query
 
-    monkeypatch.setattr(bench, "run_suite", fake_run_suite)
-    # main() imports get_spark lazily (bench stays pyspark-free at
-    # module level) — patch it at its source module
-    monkeypatch.setattr(
-        "tower_parse_spark.session.get_spark", lambda name: _DummySpark()
-    )
-    monkeypatch.setattr("sys.argv", list(argv))
+
+def _run_main(monkeypatch, capsys, queries, sf_dir="/data/sf0.1"):
+    # a fake clock: materializing a canned query advances it
+    clock = types.SimpleNamespace(now=0.0)
+
+    def materialize(seconds):
+        clock.now += seconds
+
+    fake_time = types.SimpleNamespace(monotonic=lambda: clock.now)
+    monkeypatch.setattr(bench, "time", fake_time)
+    monkeypatch.setattr(bench, "materialize", materialize)
+    monkeypatch.setattr("tower_parse_spark.session.get_spark", lambda name: None)
+    monkeypatch.setattr("__spark_entry__.queries", lambda: queries)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     assert bench.main() == 0
-    lines = [
-        json.loads(ln)
-        for ln in capsys.readouterr().out.strip().splitlines()
-        if ln.startswith("{")
-    ]
-    return lines[0], lines[-1], len(calls)
+    return capsys.readouterr()
 
 
-def test_drift_retry_reruns_and_emits_better_witnessed_run(monkeypatch, capsys):
-    """r14 (VERDICT r13 #2): when the end-of-run cal re-probe shows
-    >15% within-run drift, the whole headline loop re-runs once and the
-    better-witnessed attempt becomes the artifact — with an explicit
-    retry marker (compact: rtd; enriched: retry{...}) recording the
-    discard, so bench_regress adjudicates from the record."""
-    drifty = _fake_suite({"q1_pricing_summary": 9.0}, 1.159, 0.727)  # -37.3%
-    quiet = _fake_suite({"q1_pricing_summary": 6.5}, 0.830, 0.856)   # +3.1%
-    enriched, compact, n_calls = _run_main(monkeypatch, capsys, [drifty, quiet])
-    assert n_calls == 2
-    assert compact["queries"]["q1_pricing_summary"] == 6.5  # retry kept
-    assert compact["cal"] == 0.830 and compact["cal2"] == 0.856
-    assert compact["rtd"] == -37  # the DISCARDED run's drift, on record
-    assert enriched["retry"]["kept"] == "retry"
-    assert enriched["retry"]["discarded_cal"] == 1.159
-    assert enriched["retry"]["discarded_total"] == 9.0
+def test_full_headline_at_99_9s_fits_the_stdout_tail(monkeypatch, capsys):
+    queries = {name: _canned([99.9]) for name in bench.HEADLINE}
+    out = _run_main(monkeypatch, capsys, queries).out
+    line = out.splitlines()[-1]
+    assert len(line.encode()) <= 1900
+    tail_line = out[-2000:].strip().splitlines()[-1]
+    parsed = json.loads(tail_line)
+    assert set(parsed) == CONTRACT_KEYS
+    assert list(parsed["queries"]) == bench.HEADLINE
+    assert len(parsed["queries"]) == 69
 
 
-def test_drift_retry_keeps_first_when_retry_is_worse(monkeypatch, capsys):
-    """The retry is only kept when it is BETTER witnessed; a retry that
-    drifted harder is the one discarded."""
-    first = _fake_suite({"q1_pricing_summary": 7.0}, 1.0, 1.2)    # +20%
-    worse = _fake_suite({"q1_pricing_summary": 6.0}, 1.0, 1.5)    # +50%
-    enriched, compact, n_calls = _run_main(monkeypatch, capsys, [first, worse])
-    assert n_calls == 2
-    assert compact["queries"]["q1_pricing_summary"] == 7.0  # first kept
-    assert compact["rtd"] == 50
-    assert enriched["retry"]["kept"] == "first"
-    assert enriched["retry"]["discarded_cal2"] == 1.5
+def test_one_line_best_of_two_and_a_raising_query_left_out(monkeypatch, capsys):
+    def broken(spark, sf_dir):
+        raise RuntimeError("canned failure")
+
+    queries = {name: _canned([0.5]) for name in bench.HEADLINE}
+    queries["q3_shipping_priority"] = _canned([3.0, 2.04])
+    queries["dedup_exact"] = broken
+    captured = _run_main(monkeypatch, capsys, queries)
+
+    lines = captured.out.splitlines()
+    assert len(lines) == 1
+    parsed = json.loads(lines[0])
+    assert set(parsed) == CONTRACT_KEYS
+    assert parsed["metric"] == "headline_queries_total"
+    assert parsed["unit"] == "sec"
+    assert "dedup_exact" not in parsed["queries"]
+    assert len(parsed["queries"]) == len(bench.HEADLINE) - 1
+    assert parsed["queries"]["q3_shipping_priority"] == 2.0
+    assert parsed["value"] == round(sum(parsed["queries"].values()), 1)
+    assert "dedup_exact" in captured.err
+    assert "Traceback" in captured.err
+    assert "canned failure" in captured.err
 
 
-def test_stable_run_never_retries_and_no_retry_flag_suppresses(
-    monkeypatch, capsys
-):
-    stable = _fake_suite({"q1_pricing_summary": 7.0}, 1.0, 1.05)
-    _, compact, n_calls = _run_main(monkeypatch, capsys, [stable])
-    assert n_calls == 1 and "rtd" not in compact
-    drifty = _fake_suite({"q1_pricing_summary": 7.0}, 1.0, 1.6)
-    _, compact, n_calls = _run_main(
-        monkeypatch, capsys, [drifty], argv=("bench.py", "--no-retry")
-    )
-    assert n_calls == 1 and "rtd" not in compact
-    assert compact["cal2"] == 1.6  # the witness still goes on record
-
-
-def test_bench_regress_notes_sample_asymmetry_and_retries(tmp_path):
-    """ADVICE r13 (low): cross-era comparisons (best-of-2 artifacts vs
-    best-of-3-for-fast-queries artifacts, identified by the cal2
-    witness) note exactly the sub-FAST_QUERY_SEC queries whose min is
-    stochastically biased; same-era pairs carry no note. rtd markers
-    surface as drift_retries."""
-    import subprocess
-    import sys
-
-    def artifact(path, parsed_extra):
-        parsed = {
-            "metric": "headline_queries_total",
-            "value": 2.0,
-            "unit": "sec",
-            "queries": {"fast_query_q": 0.8, "slow_query_q": 8.0},
-            "sp": [2, 2],
-            "sf": 0.1,
-            "cal": 0.8,
-        }
-        parsed.update(parsed_extra)
-        path.write_text(json.dumps({"n": 8, "parsed": parsed}))
-
-    old, new = tmp_path / "old.json", tmp_path / "new.json"
-    artifact(old, {})                      # best-of-2 era (no cal2)
-    artifact(new, {"cal2": 0.82, "rtd": -37})  # best-of-3 era, retried
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["sample_asymmetry"] == ["fast_query_q"]  # not the slow one
-    assert out["drift_retries"] == [
-        {"artifact": "new", "discarded_drift_pct": -37}
-    ]
-    assert proc.returncode == 0
-    # same-era pair: no asymmetry note
-    artifact(old, {"cal2": 0.79})
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert "sample_asymmetry" not in out
-
-
-def test_spread_triggered_third_sample(monkeypatch):
-    """r14: a noisy best-of-2 pair (spread > SPREAD_RESAMPLE_PCT) takes
-    a third sample at ANY time scale — the under-measured-band hole the
-    fast-only rule left (the r14 close's 1.31x flag on a 74%-band
-    query that recorded a 15.9% two-sample spread). Quiet slow queries
-    stay at two samples; fast queries keep their r13 rule."""
-    ticks = iter(
-        [0, 2.0, 10, 12.8, 20, 22.1,    # noisy slow: 2.0/2.8 -> +2.1
-         30, 33.0, 40, 43.2,            # quiet slow: 3.0/3.2, no 3rd
-         50, 51.0, 60, 61.1, 70, 70.9]  # fast: 1.0/1.1 -> +0.9
-    )
-    monkeypatch.setattr(bench.time, "monotonic", lambda: next(ticks))
-    monkeypatch.setattr(bench, "materialize", lambda df: None)
-    monkeypatch.setattr(bench, "calibrate", lambda spark: 1.0)
-    qs = {n: (lambda spark, sf: None) for n in ("noisy", "quiet", "fast")}
-    suite = bench.run_suite(object(), qs, ["noisy", "quiet", "fast"], "sf")
-    assert [len(suite["runs"][n]) for n in ("noisy", "quiet", "fast")] == [3, 2, 3]
-    assert suite["times"] == {"noisy": 2.0, "quiet": 3.0, "fast": 0.9}
-    # the recorded spread grew toward the true band (>= the trigger)
-    assert suite["spread_pct"]["noisy"] >= 40.0
-
-
-def test_bv_marker_and_cross_era_inference(tmp_path):
-    """The compact line carries bv=2, and bench_regress infers sample
-    counts per era: on a bv>=2 artifact a slow query with sp > 15 is
-    best-of-3; on a cal2-only (r13) artifact the same query is
-    best-of-2 — so a bv2-vs-r13 pair notes it, and a bv2-vs-bv2 pair
-    does not."""
-    import subprocess
-    import sys
-
-    line = bench.compact_line({"x_q": 2.0}, 2.0, 0.1, {"x_q": 40.0}, 0.8)
-    assert json.loads(line)["bv"] == bench.BENCH_VERSION >= 2
-
-    def artifact(path, extra, sp):
-        parsed = {
-            "metric": "headline_queries_total", "value": 10.0,
-            "unit": "sec",
-            "queries": {"noisy_slow_q": 2.0, "quiet_slow_q": 8.0},
-            "sp": sp, "sf": 0.1, "cal": 0.8,
-        }
-        parsed.update(extra)
-        path.write_text(json.dumps({"n": 8, "parsed": parsed}))
-
-    old, new = tmp_path / "old.json", tmp_path / "new.json"
-    artifact(old, {"cal2": 0.81}, [40, 5])            # r13 era
-    artifact(new, {"cal2": 0.82, "bv": 2}, [40, 5])   # r14 era
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["sample_asymmetry"] == ["noisy_slow_q"]  # not the quiet one
-    artifact(old, {"cal2": 0.81, "bv": 2}, [40, 5])   # same era
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    assert "sample_asymmetry" not in json.loads(
-        proc.stdout.strip().splitlines()[-1]
-    )
-
-
-def _regress(old_path, new_path):
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old_path), str(new_path)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    return json.loads(proc.stdout.strip().splitlines()[-1])
-
-
-def test_superseded_sidecar_totals_only(tmp_path):
-    """VERDICT r14 #4: a totals-only .superseded.json fixes the headline
-    comparison (total_ratio_quiet from the quiet totals) while per-query
-    values stay raw under the machine_unstable marker — and the output
-    says so."""
-    def artifact(path, value, cal, cal2):
-        path.write_text(json.dumps({"n": 8, "parsed": {
-            "metric": "headline_queries_total", "value": value,
-            "unit": "sec", "queries": {"a_q": value}, "sp": [5],
-            "sf": 0.1, "cal": cal, "cal2": cal2, "bv": 2,
-        }}))
-
-    old, new = tmp_path / "BENCH_r88.json", tmp_path / "BENCH_r89.json"
-    artifact(old, 90.0, 1.2, 0.7)   # contaminated: -42% within-run drift
-    artifact(new, 64.0, 0.8, 0.81)
-    (tmp_path / "BENCH_r88.superseded.json").write_text(json.dumps(
-        {"reason": "machine_unstable r88", "quiet_total": 65.0,
-         "quiet_cal": 0.82}
-    ))
-    out = _regress(old, new)
-    (note,) = out["superseded"]
-    assert note["artifact"] == "old"
-    assert note["raw_total"] == 90.0 and note["quiet_total"] == 65.0
-    assert note["per_query_replaced"] is False
-    assert out["total_ratio_quiet"] == round(64.0 / 65.0, 3)
-    # raw per-query comparison unchanged; instability still on record
-    assert out["total_ratio"] == round(64.0 / 90.0, 3)
-    assert out["machine_unstable"][0]["artifact"] == "old"
-    assert "contaminated" in out["note"]
-
-
-def test_superseded_sidecar_with_per_query_record(tmp_path):
-    """A sidecar that preserved the quiet run's per-query values replaces
-    the contaminated measurements wholesale — ratios, cal gating and the
-    drift witness all come from the quiet record (no stale cal2 left
-    behind to pair with the quiet cal)."""
-    def artifact(path, value, qtime, cal, cal2):
-        path.write_text(json.dumps({"n": 8, "parsed": {
-            "metric": "headline_queries_total", "value": value,
-            "unit": "sec", "queries": {"a_q": qtime}, "sp": [5],
-            "sf": 0.1, "cal": cal, "cal2": cal2, "bv": 2,
-        }}))
-
-    old, new = tmp_path / "BENCH_r88.json", tmp_path / "BENCH_r89.json"
-    artifact(old, 90.0, 9.0, 1.2, 0.7)
-    artifact(new, 6.2, 6.2, 0.8, 0.81)
-    (tmp_path / "BENCH_r88.superseded.json").write_text(json.dumps({
-        "reason": "machine_unstable r88", "quiet_total": 6.0,
-        "quiet_cal": 0.82,
-        "queries": {"a_q": 6.0}, "spread_pct": {"a_q": 4.0},
-    }))
-    out = _regress(old, new)
-    assert out["superseded"][0]["per_query_replaced"] is True
-    # 6.2 vs quiet 6.0 (not vs contaminated 9.0): inside the noise bar
-    assert out["total_ratio"] == round(6.2 / 6.0, 3)
-    assert out["regressions"] == [] and out["improvements"] == []
-    # the contaminated cal/cal2 pair is gone -> no machine_unstable
-    assert "machine_unstable" not in out
-    assert "replaced from the quiet record" in out["note"]
-
-
-def test_regress_inference_rounds_enriched_float_spread(tmp_path):
-    """ADVICE r14: bench.py's trigger compares the INT-ROUNDED spread,
-    so an enriched artifact's float spread_pct in (15.0, 15.5) belongs
-    to a best-of-2 query — bench_regress must round before comparing or
-    it misclassifies the pair as asymmetric against a compact artifact
-    that (correctly) recorded sp=15 for the same measurement."""
-    import subprocess
-    import sys
-
-    base = {
-        "metric": "headline_queries_total", "value": 10.0, "unit": "sec",
-        "queries": {"edge_q": 2.0}, "sf": 0.1, "cal": 0.8,
-        "cal2": 0.81, "bv": 2,
-    }
-    old, new = tmp_path / "old.json", tmp_path / "new.json"
-    old.write_text(json.dumps({"n": 8, "parsed": {**base, "sp": [15]}}))
-    new.write_text(json.dumps(
-        {"n": 8, "parsed": {**base, "spread_pct": {"edge_q": 15.2}}}
-    ))
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert "sample_asymmetry" not in out
-    # a spread that DID trigger (rounds past 15) still notes asymmetry
-    new.write_text(json.dumps(
-        {"n": 8, "parsed": {**base, "spread_pct": {"edge_q": 15.6}}}
-    ))
-    proc = subprocess.run(
-        [sys.executable, "tools/bench_regress.py", str(old), str(new)],
-        capture_output=True, text=True, cwd="/root/repo",
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["sample_asymmetry"] == ["edge_q"]
-
-
-def test_spread_trigger_matches_recorded_rounding(monkeypatch):
-    """Review r14: the trigger fires on the INT-ROUNDED spread so the
-    compact artifact's integer sp remains an exact sample-count
-    witness — a 15.2% pair (records sp=15) must NOT take a third
-    sample, a 15.6% pair (records sp>=16) must."""
-    ticks = iter(
-        [0, 2.0, 10, 12.304,              # spread 15.2% -> no 3rd
-         20, 22.0, 30, 33.12, 40, 42.2]   # spread 15.6% -> 3rd
-    )
-    monkeypatch.setattr(bench.time, "monotonic", lambda: next(ticks))
-    monkeypatch.setattr(bench, "materialize", lambda df: None)
-    monkeypatch.setattr(bench, "calibrate", lambda spark: 1.0)
-    qs = {n: (lambda spark, sf: None) for n in ("edge_lo", "edge_hi")}
-    suite = bench.run_suite(object(), qs, ["edge_lo", "edge_hi"], "sf")
-    assert [len(suite["runs"][n]) for n in ("edge_lo", "edge_hi")] == [2, 3]
-
-
-def test_rtd_none_when_discarded_drift_unmeasurable(monkeypatch, capsys):
-    """Review r14: a retry whose cal probe failed has unknowable drift;
-    the marker must record null, not a false 'discarded a 0%-drift
-    run'."""
-    drifty = _fake_suite({"q1_pricing_summary": 7.0}, 1.0, 1.6)   # +60%
-    broken = _fake_suite({"q1_pricing_summary": 6.0}, 1.0, None)  # no cal2
-    enriched, compact, n_calls = _run_main(monkeypatch, capsys, [drifty, broken])
-    assert n_calls == 2
-    # unmeasurable retry is the one discarded; its drift goes on record
-    # as null, and the kept run is the measured (if drifty) first pass
-    assert compact["queries"]["q1_pricing_summary"] == 7.0
-    assert compact["rtd"] is None
-    assert enriched["retry"]["discarded_drift_pct"] is None
-
-
-def test_suite_noise_witness_fires_above_median_spread_bar(tmp_path):
-    """VERDICT r15 #3: a run whose MEDIAN per-query spread exceeds
-    SUITE_NOISE_PCT is flagged noise-suspect even when its within-run
-    cal drift stays under the machine_unstable bar (the BENCH_r15 blind
-    spot: 36.1% median spread, -10.4% drift, 6 phantom raw flags). The
-    witness is derived from the compact artifact's sp array when the
-    enriched noise_median_pct is absent; a quiet artifact stays
-    unflagged."""
-    def artifact(path, sp, cal=0.8, cal2=0.82):
-        path.write_text(json.dumps({"n": 8, "parsed": {
-            "metric": "headline_queries_total", "value": 60.0,
-            "unit": "sec",
-            "queries": {f"q{i}": 1.0 for i in range(len(sp))},
-            "sp": sp, "sf": 0.1, "cal": cal, "cal2": cal2, "bv": 2,
-        }}))
-
-    old, new = tmp_path / "BENCH_r88.json", tmp_path / "BENCH_r89.json"
-    artifact(old, [5, 8, 10, 12, 6])           # quiet: median 8
-    artifact(new, [40, 31, 35, 28, 45])        # noisy: median 35, no drift
-    out = _regress(old, new)
-    (note,) = out["suite_noise"]
-    assert note["artifact"] == "new"
-    assert note["noise_median_pct"] == 35.0
-    assert "machine_unstable" not in out   # sub-15% drift: the blind spot
-
-    # enriched-field form takes precedence over sp derivation
-    enriched = tmp_path / "BENCH_r90.json"
-    enriched.write_text(json.dumps({"parsed": {
-        "metric": "headline_queries_total", "value": 60.0, "unit": "sec",
-        "queries": {"q0": 1.0}, "sp": [1], "sf": 0.1,
-        "noise_median_pct": 36.1, "cal": 0.9, "cal2": 0.91, "bv": 2,
-    }}))
-    out2 = _regress(old, enriched)
-    (note2,) = out2["suite_noise"]
-    assert note2["noise_median_pct"] == 36.1
+def test_sf_is_parsed_from_the_data_dir(monkeypatch, capsys):
+    queries = {name: _canned([0.1]) for name in bench.HEADLINE}
+    out = _run_main(monkeypatch, capsys, queries, sf_dir="/data/tpch/sf0.01")
+    assert json.loads(out.out)["sf"] == 0.01

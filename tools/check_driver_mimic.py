@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Strict pandas-level mimic of the driver's t2 correctness gate.
 
-The driver (see CORRECTNESS_r01.json error trace) canonicalizes results
+The driver (see its r1 artifacts, HISTORY.md) canonicalizes results
 as *pandas DataFrames*: Spark via ``toPandas()``-style conversion, DuckDB
 via ``.df()``, then sorts columns by name, ``sort_values`` over all
 columns, and value-hashes.  That pipeline is dtype-sensitive in ways the

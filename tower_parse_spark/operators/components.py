@@ -45,8 +45,8 @@ Physical shape (r17, guide §2.4/§3.1 — VERDICT r16 #1):
   partitions, and ``persist()``-ed: the cached relation's hash(b)
   partitioning and [b ASC] ordering satisfy the join's edge-side
   requirements, so each round exchanges only the labels relation
-  (plans/r17/cc_round_join_persist_after.txt: no Exchange, no Sort
-  above the InMemoryTableScan). The dedup of the symmetrized list
+  (verified in the r17 plan: no Exchange, no Sort above the
+  InMemoryTableScan). The dedup of the symmetrized list
   clusters on hash(b) alone (legal: b is a subset of the (a, b)
   grouping key) and the fused round-0 aggregation groups by ``b`` —
   by symmetry of the edge set literally the same relation as

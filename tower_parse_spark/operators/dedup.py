@@ -770,9 +770,9 @@ def boilerplate_removal(
     round-robin shuffle of full document text bought nothing and
     measurably cost: interleaved best-of-4 at sf0.1
     (SCALE.md, r11 start) guard-on 1.71 s vs guard-off 1.38 s
-    (1.24x, consistent across runs) — the exact regression
-    bench_regress flagged on the r9->r10 driver artifacts (1.45x raw /
-    1.30 cal-adj). The guard stays on the map-dominant fronts where it
+    (1.24x, consistent across runs) — the exact regression seen in
+    the r9->r10 driver artifacts (HISTORY.md; 1.45x raw / 1.30
+    cal-adj). The guard stays on the map-dominant fronts where it
     measured 1.6-4x wins (langid/embedding/perplexity scoring,
     fingerprint folds).
     """
