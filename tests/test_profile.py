@@ -1,9 +1,10 @@
 """Job-spec ("device profile") validation — the analyzer layer.
 
 Mirrors the reference's tests/test_config.py matrix: regex compile errors,
-unnamed groups, reserved ``time``, group_by parsing/type/membership, INI
-loading. All failures must raise ConfigurationError at plan time, never at
-runtime (readport.py:587-620, 211-230 semantics).
+unnamed groups, reserved ``time`` (and packer columns), group_by
+parsing/type/membership, INI loading. All failures must raise
+ConfigurationError at plan time, never at runtime (readport.py:587-620,
+211-230 semantics).
 """
 
 from __future__ import annotations
@@ -34,6 +35,12 @@ def test_variables_in_pattern_order():
         [r"^(?P<time>\d+)$"],  # reserved name
         [r"^(?P<a>\d+)(?P<a"],  # invalid regex
         [OK, r"^(?P<level>\d+)$"],  # branch schema mismatch
+        # the packer's columns: an ungrouped stream's _g key would
+        # overwrite the variable, pack_id/pack_seq collide with the
+        # columns every pack row gains
+        pytest.param([r"^(?P<_g>\d+)$"], id="reserved-_g"),
+        pytest.param([r"^(?P<pack_id>\d+)$"], id="reserved-pack_id"),
+        pytest.param([r"^(?P<pack_seq>\d+)$"], id="reserved-pack_seq"),
     ],
 )
 def test_bad_regexes_rejected(branches):

@@ -205,6 +205,127 @@ def test_exactly_once_across_kill_restart(spark, tmp_path):
     )
 
 
+UNGROUPED = DeviceProfile(name="probe", regex=PROBE.regex, pack_length=4)
+
+
+def state_partitions(ckpt) -> list[str]:
+    """The state-store partition directories of the checkpoint's one
+    stateful operator."""
+    parts = (ckpt / "state" / "0").iterdir()
+    return sorted(p.name for p in parts if p.name.isdigit())
+
+
+def offset_log_partitions(ckpt) -> str:
+    """``spark.sql.shuffle.partitions`` as the offset log recorded it
+    when the query first started (line 2 of a batch's offsets file is
+    its metadata JSON)."""
+    import json
+
+    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    return meta["conf"]["spark.sql.shuffle.partitions"]
+
+
+def test_single_group_stream_starts_on_one_state_partition(spark, tmp_path):
+    """An ungrouped profile's pack stream (key ``_g``) starts with one
+    state partition and records it in its offset log; a grouped one
+    records the session's count. Neither call changes the session."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    lines = [probe_line(1 + i % 2, float(i), i) for i in range(8)]
+    src = write_line_files(tmp_path, [lines])
+    grouped = DeviceProfile(
+        name="probe", regex=PROBE.regex, group=GroupSpec("level", "int"),
+        pack_length=4,
+    )
+    for profile, want in ((UNGROUPED, "1"), (grouped, before)):
+        base = tmp_path / profile.name / P.group_column(profile)
+        q = P.run_ingest(
+            spark, profile, SRC.file_lines(spark, src), str(base),
+            trigger={"availableNow": True},
+        )
+        q.awaitTermination(60)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        assert offset_log_partitions(base / "checkpoint") == want
+        assert len(state_partitions(base / "checkpoint")) == int(want)
+        assert spark.read.parquet(str(base / "data")).count() == 8
+
+
+def test_single_group_restart_keeps_checkpoint_partitions(spark, tmp_path):
+    """A ``_g`` checkpoint created with 4 state partitions (started
+    without ``write_packs``' single-partition scope) resumes through
+    ``write_packs`` with 4, and every row lands in exactly one full
+    pack."""
+    from tower_parse_spark.session import scoped_shuffle_partitions
+
+    src = write_line_files(
+        tmp_path, [[probe_line(1, float(i), i) for i in range(3 * b, 3 * b + 3)]
+                   for b in range(2)]
+    )
+    data_dir = str(tmp_path / "out" / "data")
+    ckpt = tmp_path / "out" / "checkpoint"
+    packed = P.packed_stream(
+        SRC.file_lines(spark, src, max_files_per_trigger=1), UNGROUPED
+    )
+    with scoped_shuffle_partitions(spark, 4):
+        q = (
+            packed.writeStream.foreachBatch(
+                P.make_epoch_writer(data_dir, P.SINGLE_GROUP)
+            )
+            .option("checkpointLocation", str(ckpt))
+            .outputMode("append")
+            .start()
+        )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert state_partitions(ckpt) == ["0", "1", "2", "3"]
+
+    for b in range(2, 4):
+        (tmp_path / "in" / f"b{b}.txt").write_text(
+            "\n".join(probe_line(1, float(i), i) for i in range(3 * b, 3 * b + 3))
+            + "\n"
+        )
+    q2 = P.write_packs(
+        P.packed_stream(
+            SRC.file_lines(spark, src, max_files_per_trigger=1), UNGROUPED
+        ),
+        out_dir=data_dir,
+        checkpoint_dir=str(ckpt),
+        group_col=P.SINGLE_GROUP,
+    )
+    try:
+        q2.processAllAvailable()
+    finally:
+        q2.stop()
+    assert offset_log_partitions(ckpt) == "4"
+    assert state_partitions(ckpt) == ["0", "1", "2", "3"]
+    out = spark.read.parquet(data_dir).collect()
+    by_pack = {}
+    for r in out:
+        by_pack.setdefault(r["pack_id"], []).append(r["id"])
+    assert {k: len(v) for k, v in by_pack.items()} == {0: 4, 1: 4, 2: 4}
+    assert sorted(x for v in by_pack.values() for x in v) == [
+        float(i) for i in range(12)
+    ]
+
+
+def test_single_group_start_failure_restores_session_conf(spark, tmp_path):
+    """``start()`` raising inside ``write_packs``' scope (``foreachBatch``
+    rejects a continuous trigger) leaves the session's shuffle-partition
+    count as it was."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    src = write_line_files(tmp_path, [[probe_line(1, 1.0, 1)]])
+    with pytest.raises(Exception, match="continuous trigger"):
+        P.write_packs(
+            P.packed_stream(SRC.file_lines(spark, src), UNGROUPED),
+            out_dir=str(tmp_path / "data"),
+            checkpoint_dir=str(tmp_path / "checkpoint"),
+            group_col=P.SINGLE_GROUP,
+            trigger={"continuous": "1 second"},
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
 def test_stream_exact_dedup_within_watermark(spark, tmp_path):
     """Streaming dedup: duplicate ids inside and across micro-batches are
     dropped while state stays watermark-bounded."""

@@ -7,7 +7,8 @@ Parity with the reference's config layer (SURVEY.md §2.A13/A25):
   format with stdlib ConfigParser + ExtendedInterpolation and turn it into
   a typed :class:`DeviceProfile` the plan builder consumes;
 - plan-time validation mirrors readport.py:587-620 and 211-230: regex must
-  compile, every capture group must be named, ``time`` is reserved,
+  compile, every capture group must be named, ``time`` is reserved (and
+  so are the packer's own columns ``_g``, ``pack_id`` and ``pack_seq``),
   ``group_by`` must name a captured variable and use a type in
   {int, float, str} with the ``var:type`` spelling.
 
@@ -32,6 +33,12 @@ class ConfigurationError(Exception):
 
 
 RESERVED_TIME = "time"
+#: the constant pack key of a profile without ``group_by``
+#: (``streaming.pipeline.group_column``)
+SINGLE_GROUP = "_g"
+#: the columns the packer adds to every row: a captured variable of the
+#: same name would be overwritten or collide (``streaming.packs``)
+PACKER_COLUMNS = (SINGLE_GROUP, "pack_id", "pack_seq")
 
 #: group_by cast registry — int | float | str only (readport.py:169).
 GROUP_TYPES = {"int": "int", "float": "double", "str": "string"}
@@ -75,10 +82,12 @@ def validate_regex_branches(branches: list[str]) -> list[str]:
     """Compile-and-check each branch; return the unified variable list.
 
     Mirrors ``validate_regex`` (readport.py:587-620): all groups must be
-    named, ``time`` is reserved. Additionally requires every branch of an
-    alternation union to capture the same variable set, so the union has
-    one schema (the property the reference gets from the ``regex`` module's
-    same-name alternation groups, tests/test_parser.py:75-100).
+    named, ``time`` is reserved. The packer's own columns
+    (:data:`PACKER_COLUMNS`) are reserved too. Additionally requires every
+    branch of an alternation union to capture the same variable set, so
+    the union has one schema (the property the reference gets from the
+    ``regex`` module's same-name alternation groups,
+    tests/test_parser.py:75-100).
 
     Returns variables in first-appearance order (deterministic schema).
     """
@@ -102,6 +111,11 @@ def validate_regex_branches(branches: list[str]) -> list[str]:
             raise ConfigurationError(
                 f"'{RESERVED_TIME}' is a reserved variable name (readport.py:613-618)"
             )
+        for name in PACKER_COLUMNS:
+            if name in names:
+                raise ConfigurationError(
+                    f"'{name}' is a reserved variable name (a column the packer adds)"
+                )
         if first is None:
             first = names
             ordered = sorted(pattern.groupindex, key=pattern.groupindex.get)

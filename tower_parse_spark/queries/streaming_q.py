@@ -21,7 +21,6 @@ import shutil
 import tempfile
 import time
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 from tower_parse_spark.functions.rounding import pround, sql_pround
 from tower_parse_spark.queries import Query
 from tower_parse_spark.queries.ingest import PROBE_PROFILE, _probe_lines
+from tower_parse_spark.session import scoped_shuffle_partitions
 from tower_parse_spark.streaming import sources as SRC
 from tower_parse_spark.streaming.packs import stream_pack
 
@@ -42,21 +42,6 @@ N_SPOOL_FILES = 4
 #: State layout never changes results (quantized-integer sums; the
 #: 7-core robustness matrix checks exactly this invariance).
 N_STREAM_STATE_PARTS = 4
-
-
-@contextmanager
-def _scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily set shuffle partitions around a streaming start():
-    the partition count is frozen into the (fresh) checkpoint when the
-    query starts, so restoring the conf afterwards leaves the session
-    untouched for every caller (bench/driver run queries
-    sequentially)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def streaming_pack_carry(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,7 +100,7 @@ def streaming_pack_carry(spark: SparkSession, sf_dir: str) -> DataFrame:
             parsed, PACK_N, "level", order_cols=["time", "event_id"]
         )
         sink = f"stream_packs_{uuid.uuid4().hex[:8]}"
-        with _scoped_shuffle_partitions(spark, N_STREAM_STATE_PARTS):
+        with scoped_shuffle_partitions(spark, N_STREAM_STATE_PARTS):
             q = (
                 packed.writeStream.format("memory")
                 .queryName(sink)
@@ -264,7 +249,7 @@ def streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         sink = f"wm_windows_{uuid.uuid4().hex[:8]}"
-        with _scoped_shuffle_partitions(spark, N_STREAM_STATE_PARTS):
+        with scoped_shuffle_partitions(spark, N_STREAM_STATE_PARTS):
             q = (
                 agg.writeStream.format("memory")
                 .queryName(sink)
@@ -428,7 +413,7 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = src.select(
             sp[0].try_cast("long").alias("doc_id"), sp[1].alias("text")
         )
-        with _scoped_shuffle_partitions(spark, N_STREAM_STATE_PARTS):
+        with scoped_shuffle_partitions(spark, N_STREAM_STATE_PARTS):
             q = ND.stream_minhash_dedup(
                 stream,
                 os.path.join(tmp, "idx"),

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import tempfile
 import weakref
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,6 +80,26 @@ def get_spark(app_name: str = "tower_parse_spark", cpus: str | None = None) -> S
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_shuffle_partitions(spark: SparkSession, n: int):
+    """Set ``spark.sql.shuffle.partitions`` to *n* around a streaming
+    ``start()``, then restore the caller's value. ``start()`` clones the
+    session for the query, and a new query writes the count into its
+    checkpoint's offset log, so its state keeps *n* partitions across
+    restarts (and a checkpoint created with another count resumes with
+    that count).
+
+    Race: the change is to the shared session conf, so for the duration
+    of ``start()`` a batch query planned concurrently on the same session
+    in another thread plans its shuffles with *n* partitions too."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _size_bytes_conf(spark: SparkSession, key: str, default: int) -> int:

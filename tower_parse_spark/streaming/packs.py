@@ -14,9 +14,15 @@ invariant for any stateless operator, so this is ``applyInPandasWithState``:
   readport.py:409-419 acknowledges the loss).
 
 Scale: state size is bounded by pack_length rows x #groups (identical to
-the reference's memory bound, §4.2); groups are hash-distributed across
-executors, so 10^6 devices spread evenly. The remainder is pickled —
-opaque bytes survive any column set without a fixed state schema.
+the reference's memory bound, §4.2). A grouped stream has
+``spark.sql.shuffle.partitions`` state partitions and its groups are
+hash-distributed over them, so 10^6 devices spread evenly. A
+single-group stream (key ``_g``) gets one state partition from
+``pipeline.write_packs``: its one key would leave every other partition
+empty, yet each would still load and commit a state store and hold a
+Python worker every epoch. The cost is that such an epoch's packs are
+written by one task. The remainder is pickled — opaque bytes survive any
+column set without a fixed state schema.
 """
 
 from __future__ import annotations

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tower_parse_spark.functions.extraction import extract_lines
-from tower_parse_spark.plans.profile import DeviceProfile
+from tower_parse_spark.plans.profile import SINGLE_GROUP, DeviceProfile
+from tower_parse_spark.session import scoped_shuffle_partitions
 from tower_parse_spark.streaming.packs import stream_pack
 
 
@@ -34,9 +35,9 @@ def parse_stream(lines: DataFrame, profile: DeviceProfile) -> DataFrame:
 
 def group_column(profile: DeviceProfile) -> str:
     """The pack key column: the profile's group variable, or the constant
-    ``_g`` of a degenerate single-group stream (the reference's
-    group=None buffer, readport.py:256-271)."""
-    return profile.group.var if profile.group else "_g"
+    :data:`SINGLE_GROUP` (``_g``) of a degenerate single-group stream
+    (the reference's group=None buffer, readport.py:256-271)."""
+    return profile.group.var if profile.group else SINGLE_GROUP
 
 
 def packed_stream(lines: DataFrame, profile: DeviceProfile) -> DataFrame:
@@ -99,7 +100,20 @@ def write_packs(
     Delivery: offsets are checkpointed per epoch and the epoch writer
     (:func:`make_epoch_writer`) is idempotent under replay, so the sink
     holds each pack exactly once across any crash/restart — vs the
-    reference's drop-pack-on-failure at-most-once (readport.py:409-419)."""
+    reference's drop-pack-on-failure at-most-once (readport.py:409-419).
+
+    State partitions: a stream keyed by :data:`SINGLE_GROUP` starts on ONE
+    state partition; any other key gets the session's
+    ``spark.sql.shuffle.partitions``. With one key, every other partition
+    is empty, yet each one loads and commits a state store every epoch
+    and holds a Python worker. The count is set only around ``start()``
+    (:func:`~tower_parse_spark.session.scoped_shuffle_partitions`): Spark
+    records it in the new checkpoint's offset log, so a restart keeps it,
+    and a checkpoint created with K partitions resumes with K. Trade-off:
+    the epoch writer's repartition inherits the stream's partition count,
+    so a single-group epoch's packs are written by one task. That is
+    unmeasured for a catch-up epoch that emits many packs; perfbench's
+    ``spool_backlog`` emits at most one pack per epoch."""
 
     writer = (
         packed.writeStream.foreachBatch(make_epoch_writer(out_dir, group_col))
@@ -109,7 +123,10 @@ def write_packs(
     )
     if trigger:
         writer = writer.trigger(**trigger)
-    return writer.start()
+    if group_col != SINGLE_GROUP:
+        return writer.start()
+    with scoped_shuffle_partitions(packed.sparkSession, 1):
+        return writer.start()
 
 
 def echo(lines: DataFrame, query_name: str = "echo") -> StreamingQuery:
