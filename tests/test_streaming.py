@@ -483,7 +483,8 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
 
 def test_metrics_listener_heartbeat(spark, tmp_path):
     """A24: the heartbeat listener records per-batch progress (rows/s,
-    batch duration) for an ingest query wired through run_ingest."""
+    batch duration, the packer's state figures) for an ingest query wired
+    through run_ingest."""
     from tower_parse_spark.streaming.metrics import attach_metrics
 
     emitted = []
@@ -518,6 +519,8 @@ def test_metrics_listener_heartbeat(spark, tmp_path):
     assert any(r["num_input_rows"] == 4 for r in beats)
     assert all(r["batch_duration_ms"] >= 0 for r in beats)
     assert all("rows_per_sec" in r for r in beats)
+    for key in ("packs.update_ms", "packs.commit_ms", "packs.state_rows"):
+        assert all(r[key] >= 0 for r in beats)
     assert emitted == listener.records  # emit hook sees every heartbeat
     assert ("started", "ingest_hb_probe") in listener.events
 

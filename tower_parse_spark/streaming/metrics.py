@@ -25,7 +25,11 @@ class IngestMetricsListener(StreamingQueryListener):
     """Records one heartbeat dict per micro-batch progress event.
 
     Each record: ``{"query": name, "batch_id": n, "timestamp": iso,
-    "num_input_rows": n, "rows_per_sec": float, "batch_duration_ms": int}``.
+    "num_input_rows": n, "rows_per_sec": float, "batch_duration_ms": int,
+    "packs.update_ms": int, "packs.commit_ms": int, "packs.state_rows": int}``.
+    The ``packs.*`` figures (perfbench's layer names) come from the
+    query's first state operator, the packer; they read 0 when the query
+    has none.
     *emit* (optional) is called with each record — hook for a log line,
     a metrics push, or a test probe. Lifecycle events (start/terminate)
     are recorded in ``events`` as ``(kind, query_name)`` tuples.
@@ -41,6 +45,7 @@ class IngestMetricsListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        state = p.stateOperators[0] if p.stateOperators else None
         rec = {
             "query": p.name or str(p.id),
             "batch_id": p.batchId,
@@ -48,6 +53,9 @@ class IngestMetricsListener(StreamingQueryListener):
             "num_input_rows": p.numInputRows,
             "rows_per_sec": p.processedRowsPerSecond,
             "batch_duration_ms": p.batchDuration,
+            "packs.update_ms": state.allUpdatesTimeMs if state else 0,
+            "packs.commit_ms": state.commitTimeMs if state else 0,
+            "packs.state_rows": state.numRowsTotal if state else 0,
         }
         self.records.append(rec)
         if self._emit is not None:
