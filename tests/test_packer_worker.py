@@ -2,7 +2,8 @@
 
 ``make_packer`` nests ``share_zip_directories`` in the packer's closure so
 cloudpickle ships it by value. These tests check that nothing in the
-pickled packer names a ``tower_parse_spark`` module, and drive the helper
+pickled packer, or in the writing packer of ``make_pack_writer``, names a
+``tower_parse_spark`` module, and drive the helper
 on a zip package built in a temp dir: after it is installed, an unchanged
 archive is not re-read on ``importlib.invalidate_caches()`` and all its
 zipimporters share one directory dict, while a rewritten archive is.
@@ -19,7 +20,7 @@ import zipimport
 import pytest
 from pyspark import cloudpickle
 
-from tower_parse_spark.streaming.packs import make_packer
+from tower_parse_spark.streaming.packs import make_pack_writer, make_packer
 
 EAGER = sys.version_info < (3, 13) and not hasattr(
     zipimport.zipimporter, "_get_files"
@@ -66,15 +67,29 @@ def share_zip_directories():
     return cells["share_zip_directories"].cell_contents
 
 
-def test_pickled_packer_names_no_package_module():
-    found = pickled_globals(
-        cloudpickle.dumps(make_packer(4, ["time"], ["time", "x"]))
-    )
+def package_globals(fn) -> list[tuple[str, str]]:
+    found = pickled_globals(cloudpickle.dumps(fn))
     assert found  # the walk sees cloudpickle's own by-reference lookups
-    assert not [
+    return [
         (mod, name) for mod, name in found
         if str(mod).split(".")[0] == "tower_parse_spark"
     ]
+
+
+def test_pickled_packer_names_no_package_module():
+    assert not package_globals(make_packer(4, ["time"], ["time", "x"]))
+
+
+def test_pickled_pack_writer_names_no_package_module():
+    """The writing form's closure (its file and partition-name helpers
+    and the packer it wraps) ships by value too."""
+    import pyarrow as pa
+
+    schema = pa.schema([("time", pa.float64()), ("pack_seq", pa.int64())])
+    writer = make_pack_writer(
+        4, ["time"], ["time", "_g"], "_g", "/tmp/packs", schema
+    )
+    assert not package_globals(writer)
 
 
 PACKAGE = {

@@ -8,6 +8,9 @@
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 import socket
 import threading
 import time
@@ -131,15 +134,59 @@ def test_end_to_end_parquet_sink(spark, tmp_path):
     assert leveldirs == ["level=1", "level=2"]
 
 
-def test_exactly_once_across_kill_restart(spark, tmp_path):
+def crash_after_epoch_write(monkeypatch, epoch: int) -> dict:
+    """Make the next ``write_packs`` call's epoch body raise once, right
+    after epoch *epoch*'s pack files land and before its checkpoint
+    commit — the worst window. ``write_packs`` looks
+    ``make_epoch_writer`` up at call time, so the wrapper is installed
+    there (the traced benchmark wraps it the same way)."""
+    real_factory = P.make_epoch_writer
+    crashed = {"hit": False}
+
+    def factory(out_dir, group_col):
+        real_writer = real_factory(out_dir, group_col)
+
+        def crash_after_write(batch_df, epoch_id):
+            real_writer(batch_df, epoch_id)  # the pack files land...
+            if epoch_id >= epoch and not crashed["hit"]:
+                crashed["hit"] = True
+                # ...then the process dies before the offset/state commit
+                raise RuntimeError("injected crash between sink write and commit")
+
+        return crash_after_write
+
+    monkeypatch.setattr(P, "make_epoch_writer", factory)
+    return crashed
+
+
+def run_until_crash(q, crashed, monkeypatch) -> None:
+    with pytest.raises(Exception, match="injected crash"):
+        q.processAllAvailable()
+        q.awaitTermination(60)
+    assert crashed["hit"] and not q.isActive
+    monkeypatch.undo()
+
+
+def pack_dir_files(data_dir) -> dict[tuple[str, str], list[str]]:
+    """Every entry of every ``<group>=g/pack_id=n`` directory."""
+    return {
+        (g, pid): sorted(os.listdir(os.path.join(data_dir, g, pid)))
+        for g in os.listdir(data_dir)
+        for pid in os.listdir(os.path.join(data_dir, g))
+    }
+
+
+def test_exactly_once_across_kill_restart(spark, tmp_path, monkeypatch):
     """A21 exactly-once proof (VERDICT r3 item 3): kill the stream in the
     worst window — AFTER an epoch's parquet lands, BEFORE its checkpoint
     commits — restart from the same checkpoint, and assert the sink holds
     each pack exactly once. With a plain append sink the replayed epoch
-    would double its packs; make_epoch_writer's dynamic partition
-    overwrite makes the replay rewrite-in-place. The reference DROPS the
+    would double its packs; the packer's deterministic per-pack file name
+    makes the replay rewrite-in-place. The reference DROPS the
     in-flight pack in this crash (readport.py:409-419); here nothing is
     lost and nothing is duplicated."""
+    from tower_parse_spark.streaming.packs import PACK_FILE
+
     batches = [
         [probe_line(1, float(i), i) for i in range(4 * b, 4 * b + 4)]
         for b in range(4)
@@ -152,29 +199,16 @@ def test_exactly_once_across_kill_restart(spark, tmp_path):
         pack_length=4,
     )
 
-    real_writer = P.make_epoch_writer(data_dir, "level")
-    crashed = {"hit": False}
-
-    def crash_after_write(batch_df, epoch_id):
-        real_writer(batch_df, epoch_id)  # sink write lands...
-        if epoch_id >= 1 and not crashed["hit"]:
-            crashed["hit"] = True
-            # ...then the process dies before the offset/state commit
-            raise RuntimeError("injected crash between sink write and commit")
-
-    packed = P.packed_stream(
-        SRC.file_lines(spark, src, max_files_per_trigger=1), profile
+    crashed = crash_after_epoch_write(monkeypatch, 1)
+    q = P.write_packs(
+        P.packed_stream(
+            SRC.file_lines(spark, src, max_files_per_trigger=1), profile
+        ),
+        out_dir=data_dir,
+        checkpoint_dir=ckpt,
+        group_col="level",
     )
-    q = (
-        packed.writeStream.foreachBatch(crash_after_write)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    with pytest.raises(Exception, match="injected crash"):
-        q.processAllAvailable()
-        q.awaitTermination(60)
-    assert crashed["hit"] and not q.isActive
+    run_until_crash(q, crashed, monkeypatch)
     # the crashed epoch's parquet IS on disk — the duplication hazard
     assert spark.read.parquet(data_dir).count() >= 8
 
@@ -203,6 +237,58 @@ def test_exactly_once_across_kill_restart(spark, tmp_path):
     assert sorted(x for v in by_pack.values() for x in v) == sorted(
         float(i) for i in range(16)
     )
+    # one data file per pack directory, and no temp file left anywhere
+    assert pack_dir_files(data_dir) == {
+        ("level=1", f"pack_id={i}"): [PACK_FILE] for i in range(4)
+    }
+    assert len(glob.glob(f"{data_dir}/*/*/*.parquet")) == 4
+
+
+def test_replay_removes_stale_pack_file(spark, tmp_path, monkeypatch):
+    """A pack directory that also holds a data file another writer left
+    (a ``part-00000-<uuid>`` name, as the earlier commit-protocol sink
+    wrote) ends, once its epoch is replayed, with the pack's rows exactly
+    once in one file."""
+    from tower_parse_spark.streaming.packs import PACK_FILE
+
+    src = write_line_files(tmp_path, [
+        [probe_line(1, float(i), i) for i in range(4 * b, 4 * b + 4)]
+        for b in range(2)
+    ])
+    data_dir = tmp_path / "out" / "data"
+    ckpt = str(tmp_path / "out" / "checkpoint")
+
+    def start():
+        return P.write_packs(
+            P.packed_stream(
+                SRC.file_lines(spark, src, max_files_per_trigger=1), PROBE
+            ),
+            out_dir=str(data_dir),
+            checkpoint_dir=ckpt,
+            group_col="level",
+        )
+
+    crashed = crash_after_epoch_write(monkeypatch, 1)
+    run_until_crash(start(), crashed, monkeypatch)
+    pack_dir = data_dir / "level=1" / "pack_id=1"
+    shutil.copy(
+        pack_dir / PACK_FILE,
+        pack_dir / "part-00000-0b5e5a3c-2f4e-4d7a-9b1c-6e2d8f0a1b2c.c000.snappy.parquet",
+    )
+    assert spark.read.parquet(str(data_dir)).count() == 12
+
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert pack_dir_files(str(data_dir)) == {
+        ("level=1", "pack_id=0"): [PACK_FILE],
+        ("level=1", "pack_id=1"): [PACK_FILE],
+    }
+    out = spark.read.parquet(str(data_dir)).collect()
+    assert sorted(r["id"] for r in out) == [float(i) for i in range(8)]
+    assert sorted(r["pack_id"] for r in out) == [0] * 4 + [1] * 4
 
 
 UNGROUPED = DeviceProfile(name="probe", regex=PROBE.regex, pack_length=4)
@@ -255,6 +341,7 @@ def test_single_group_restart_keeps_checkpoint_partitions(spark, tmp_path):
     ``write_packs`` with 4, and every row lands in exactly one full
     pack."""
     from tower_parse_spark.session import scoped_shuffle_partitions
+    from tower_parse_spark.streaming.packs import stream_pack_files
 
     src = write_line_files(
         tmp_path, [[probe_line(1, float(i), i) for i in range(3 * b, 3 * b + 3)]
@@ -267,7 +354,10 @@ def test_single_group_restart_keeps_checkpoint_partitions(spark, tmp_path):
     )
     with scoped_shuffle_partitions(spark, 4):
         q = (
-            packed.writeStream.foreachBatch(
+            stream_pack_files(
+                packed.parsed, packed.pack_length, P.SINGLE_GROUP, data_dir
+            )
+            .writeStream.foreachBatch(
                 P.make_epoch_writer(data_dir, P.SINGLE_GROUP)
             )
             .option("checkpointLocation", str(ckpt))
@@ -483,8 +573,8 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
 
 def test_metrics_listener_heartbeat(spark, tmp_path):
     """A24: the heartbeat listener records per-batch progress (rows/s,
-    batch duration, the packer's state figures) for an ingest query wired
-    through run_ingest."""
+    batch duration, the packer's state figures, the pack files and bytes
+    the sink wrote) for an ingest query wired through run_ingest."""
     from tower_parse_spark.streaming.metrics import attach_metrics
 
     emitted = []
@@ -521,6 +611,12 @@ def test_metrics_listener_heartbeat(spark, tmp_path):
     assert all("rows_per_sec" in r for r in beats)
     for key in ("packs.update_ms", "packs.commit_ms", "packs.state_rows"):
         assert all(r[key] >= 0 for r in beats)
+    files = glob.glob(str(base / "data" / "*" / "*" / "*.parquet"))
+    assert len(files) == 2  # 4 rows of one level in packs of 2
+    assert sum(r["sink.files"] for r in beats) == 2
+    assert sum(r["sink.bytes"] for r in beats) == sum(
+        os.path.getsize(f) for f in files
+    )
     assert emitted == listener.records  # emit hook sees every heartbeat
     assert ("started", "ingest_hb_probe") in listener.events
 

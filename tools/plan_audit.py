@@ -237,8 +237,9 @@ def audit_streaming(spark) -> tuple[list, list]:
       image/audio near-dup twin), the second probing a live banded
       index;
     - ``curation_epoch``: quality gate -> near-dup gate -> three sinks;
-    - ``pack_epoch_writer``: the foreachBatch pack sink body
-      (repartition + dynamic-partition-overwrite write);
+    - ``pack_epoch_writer``: the foreachBatch pack sink body over the
+      packer's one-row-per-pack-written output (the packer writes the
+      files itself; the body only materializes those rows);
     - ``pack_stateful``: the applyInPandasWithState pack operator's own
       streaming plan (explainInternal after a real run — the one family
       whose plan legitimately carries Arrow)."""
@@ -332,13 +333,13 @@ def audit_streaming(spark) -> tuple[list, list]:
         )
     rows.append(_scan_plans("curation_epoch", cap.plans, bad))
 
-    # --- foreachBatch pack sink body ---
-    packed = spark.createDataFrame(
-        [(1, 0, float(i), float(i)) for i in range(8)],
-        "level int, pack_id long, time double, id double",
+    # --- foreachBatch pack sink body (over the packer's per-pack rows) ---
+    written = spark.createDataFrame(
+        [(1, i, 4, 1024) for i in range(8)],
+        "level int, pack_id long, rows long, bytes long",
     )
     with _EpochPlanCapture() as cap:
-        P.make_epoch_writer(f"{work}/packs", "level")(packed, 0)
+        P.make_epoch_writer(f"{work}/packs", "level")(written, 0)
     rows.append(_scan_plans("pack_epoch_writer", cap.plans, bad))
 
     # --- stateful pack operator's streaming plan ---

@@ -8,9 +8,10 @@ re-expresses that dataflow on Structured Streaming:
                    (A1-A5)
 - packs.py       — exact-count packs with remainder carry across
                    micro-batches (A17 streaming form,
-                   applyInPandasWithState)
-- pipeline.py    — parse plan on a stream + checkpointed partitioned
-                   parquet sink + graceful stop (A18-A22)
+                   applyInPandasWithState); its writing form writes
+                   each pack's parquet file as it is cut
+- pipeline.py    — parse plan on a stream + the checkpointed pack
+                   sink + graceful stop (A18-A22)
 - packstore.py   — read side and maintenance of the pack layout
                    (read_packs, compaction)
 - metrics.py     — StreamingQueryListener heartbeat (A24)

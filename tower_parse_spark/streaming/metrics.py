@@ -26,10 +26,13 @@ class IngestMetricsListener(StreamingQueryListener):
 
     Each record: ``{"query": name, "batch_id": n, "timestamp": iso,
     "num_input_rows": n, "rows_per_sec": float, "batch_duration_ms": int,
-    "packs.update_ms": int, "packs.commit_ms": int, "packs.state_rows": int}``.
+    "packs.update_ms": int, "packs.commit_ms": int, "packs.state_rows": int,
+    "sink.files": int, "sink.bytes": int}``.
     The ``packs.*`` figures (perfbench's layer names) come from the
     query's first state operator, the packer; they read 0 when the query
-    has none.
+    has none. The ``sink.*`` figures are the pack files and bytes the
+    epoch wrote, from the ``sink`` metrics ``write_packs`` observes; they
+    read 0 when the query observes none.
     *emit* (optional) is called with each record — hook for a log line,
     a metrics push, or a test probe. Lifecycle events (start/terminate)
     are recorded in ``events`` as ``(kind, query_name)`` tuples.
@@ -46,6 +49,7 @@ class IngestMetricsListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:
         p = event.progress
         state = p.stateOperators[0] if p.stateOperators else None
+        sink = (p.observedMetrics or {}).get("sink")
         rec = {
             "query": p.name or str(p.id),
             "batch_id": p.batchId,
@@ -56,6 +60,8 @@ class IngestMetricsListener(StreamingQueryListener):
             "packs.update_ms": state.allUpdatesTimeMs if state else 0,
             "packs.commit_ms": state.commitTimeMs if state else 0,
             "packs.state_rows": state.numRowsTotal if state else 0,
+            "sink.files": sink["files"] if sink else 0,
+            "sink.bytes": sink["bytes"] if sink else 0,
         }
         self.records.append(rec)
         if self._emit is not None:

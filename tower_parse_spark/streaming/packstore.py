@@ -74,7 +74,7 @@ def compact_packs(
     Files per group partition = ceil(bytes / target); rows keep their
     (pack_id, pack_seq) columns so pack identity survives compaction.
     Write goes to *dest* (publish-then-swap, never in place — the same
-    atomicity posture as the sink's commit protocol).
+    atomicity posture as the sink's write-then-rename of each pack).
     """
     df = spark.read.parquet(src)
     total_rows = df.count()

@@ -2,8 +2,8 @@
 
 Reference dataflow: socket -> readline -> timestamp -> queue -> extract ->
 buffer -> npz flush. Spark form: line source -> extraction projection
-(same plan as batch, zero code divergence) -> exact-count packs ->
-checkpointed partitioned parquet.
+(same plan as batch, zero code divergence) -> exact-count packs, each
+written as its own parquet file by the task that cuts it.
 
 Upgrades over the reference, by design (SURVEY.md §4.2):
 - checkpoint + WAL => exactly-once file output (the reference drops a full
@@ -16,6 +16,7 @@ Upgrades over the reference, by design (SURVEY.md §4.2):
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,7 +25,7 @@ from pyspark.sql.streaming import StreamingQuery
 from tower_parse_spark.functions.extraction import extract_lines
 from tower_parse_spark.plans.profile import SINGLE_GROUP, DeviceProfile
 from tower_parse_spark.session import scoped_shuffle_partitions
-from tower_parse_spark.streaming.packs import stream_pack
+from tower_parse_spark.streaming.packs import stream_pack_files
 
 
 def parse_stream(lines: DataFrame, profile: DeviceProfile) -> DataFrame:
@@ -40,67 +41,84 @@ def group_column(profile: DeviceProfile) -> str:
     return profile.group.var if profile.group else SINGLE_GROUP
 
 
-def packed_stream(lines: DataFrame, profile: DeviceProfile) -> DataFrame:
+@dataclass(frozen=True)
+class PackedStream:
+    """What :func:`write_packs` needs to build the pack-writing operator:
+    the parsed stream with its key column, the pack length and the key.
+
+    The operator's closure carries the output directory and is pickled
+    when the operator is built, so ``write_packs``, which knows the
+    directory, builds it."""
+
+    parsed: DataFrame
+    pack_length: int
+    group_col: str
+
+
+def packed_stream(lines: DataFrame, profile: DeviceProfile) -> PackedStream:
     parsed = parse_stream(lines, profile)
     group = group_column(profile)
     if profile.group is None:
         parsed = parsed.withColumn(group, F.lit(0))
-    return stream_pack(parsed, profile.pack_length, group)
+    return PackedStream(parsed, profile.pack_length, group)
 
 
 def make_epoch_writer(out_dir: str, group_col: str):
-    """The idempotent per-epoch pack writer ``write_packs`` installs.
+    """The per-epoch body ``write_packs`` installs under ``foreachBatch``.
 
-    Dynamic partition overwrite keyed by (group, pack_id): a pack is
-    emitted by ``stream_pack`` in exactly ONE epoch (only completed packs
-    leave the state store; the tail rides in state), so an epoch owns a
-    fixed set of (group, pack_id) partitions. A replayed epoch — crash
-    after the parquet write but before the checkpoint commit — recomputes
-    the same packs from the same offsets + pre-epoch state version and
-    OVERWRITES exactly its own partition dirs, leaving every other pack
-    untouched. Replay is therefore a no-op, which upgrades at-least-once
-    append to an exactly-once end state
+    The packer writes every pack file itself (``streaming/packs.py``), so
+    the epoch only has to run it: the body materializes the epoch's
+    ``(group, pack_id, rows, bytes)`` rows through the noop sink, one job
+    with no shuffle and no commit protocol. *out_dir* and *group_col*
+    name the sink the packer writes; the body does not need them, but
+    the signature stays so a caller can wrap the body per sink (the
+    traced benchmark times it; the tests inject a crash after it).
+
+    Exactly-once: a crash after the files land but before the checkpoint
+    commit replays the epoch from the same offsets and the same
+    pre-epoch state version, which cuts the same packs and rewrites the
+    same file names, so the sink ends with each pack once
     (`tests/test_streaming.py::test_exactly_once_across_kill_restart`).
     """
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.repartition(group_col, "pack_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(group_col, "pack_id")
-            .parquet(out_dir)
-        )
+        batch_df.write.format("noop").mode("overwrite").save()
 
     return write_epoch
 
 
 def write_packs(
-    packed: DataFrame,
+    packed: PackedStream,
     out_dir: str,
     checkpoint_dir: str,
     group_col: str,
     query_name: str = "ingest",
     trigger: dict | None = None,
 ) -> StreamingQuery:
-    """Columnar compressed partitioned atomic sink (A18-A20):
-    parquet files partitioned by (group, pack_id) — the key lives in the
-    directory name and is dropped from the data files, exactly the
-    reference's '{group} in filename, popped from vectors' layout
-    (readport.py:398-400).
+    """Columnar compressed partitioned atomic sink (A18-A20): one parquet
+    file per pack, ``<out_dir>/<group_col>=<g>/pack_id=<n>/part-0.parquet``
+    — the key lives in the directory names and is dropped from the data
+    file, exactly the reference's '{group} in filename, popped from
+    vectors' layout (readport.py:398-400), and readable as a Spark
+    partitioned table.
 
-    Written through ``foreachBatch``: partitionBy/repartition directly on
-    the streaming state-op output trips a Spark columnar-transition gap
-    (FlatMapGroupsInPandasWithState emits Arrow batches; the streaming
-    planner feeds them to a row-based shuffle -> ClassCastException), while
-    the batch planner inside foreachBatch inserts ColumnarToRow correctly.
-    The in-batch repartition on (group, pack_id) makes each completed pack
-    exactly one parquet file — the reference's one-npz-per-pack layout.
+    The stateful packer writes each pack in the task that cuts it
+    (``streaming/packs.py``: dot-temp file, rename, other visible data
+    files in the pack directory removed) and emits one row per pack;
+    ``foreachBatch`` runs :func:`make_epoch_writer` (looked up at call
+    time) over those rows. There is no shuffle after the packer and no
+    commit-protocol job.
 
-    Delivery: offsets are checkpointed per epoch and the epoch writer
-    (:func:`make_epoch_writer`) is idempotent under replay, so the sink
-    holds each pack exactly once across any crash/restart — vs the
-    reference's drop-pack-on-failure at-most-once (readport.py:409-419).
+    Delivery: offsets and state are checkpointed per epoch, and a
+    replayed epoch rewrites the same deterministic file names from the
+    same pre-epoch state (:func:`make_epoch_writer`), so the sink holds
+    each pack exactly once across any crash/restart — vs the reference's
+    drop-pack-on-failure at-most-once (readport.py:409-419).
+
+    Observability: the summary rows are observed as ``sink`` (``files``,
+    ``bytes``, ``rows`` per epoch), so every progress event carries what
+    the epoch wrote without an extra job; ``IngestMetricsListener``
+    reports it.
 
     State partitions: a stream keyed by :data:`SINGLE_GROUP` starts on ONE
     state partition; any other key gets the session's
@@ -110,13 +128,24 @@ def write_packs(
     (:func:`~tower_parse_spark.session.scoped_shuffle_partitions`): Spark
     records it in the new checkpoint's offset log, so a restart keeps it,
     and a checkpoint created with K partitions resumes with K. Trade-off:
-    the epoch writer's repartition inherits the stream's partition count,
-    so a single-group epoch's packs are written by one task. That is
-    unmeasured for a catch-up epoch that emits many packs; perfbench's
-    ``spool_backlog`` emits at most one pack per epoch."""
-
+    a single-group epoch's packs are cut and written by that one task,
+    one file after another. That is unmeasured for a catch-up epoch that
+    emits many packs; perfbench's ``spool_backlog`` emits at most one
+    pack per epoch."""
+    if group_col != packed.group_col:
+        raise ValueError(
+            f"group_col {group_col!r} is not the stream's key {packed.group_col!r}"
+        )
+    written = stream_pack_files(
+        packed.parsed, packed.pack_length, group_col, out_dir
+    ).observe(
+        "sink",
+        F.count(F.lit(1)).alias("files"),
+        F.coalesce(F.sum("bytes"), F.lit(0)).alias("bytes"),
+        F.coalesce(F.sum("rows"), F.lit(0)).alias("rows"),
+    )
     writer = (
-        packed.writeStream.foreachBatch(make_epoch_writer(out_dir, group_col))
+        written.writeStream.foreachBatch(make_epoch_writer(out_dir, group_col))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .queryName(query_name)
@@ -125,7 +154,7 @@ def write_packs(
         writer = writer.trigger(**trigger)
     if group_col != SINGLE_GROUP:
         return writer.start()
-    with scoped_shuffle_partitions(packed.sparkSession, 1):
+    with scoped_shuffle_partitions(packed.parsed.sparkSession, 1):
         return writer.start()
 
 
