@@ -17,18 +17,6 @@ from tower_parse_spark.streaming.packs import (
 )
 
 
-@pytest.fixture(autouse=True)
-def _restore_zipimport(monkeypatch):
-    """The packer installs its worker-side ``zipimport`` fix in whatever
-    process runs it, here the test process; put the original
-    ``invalidate_caches`` back after each test, so the fix's own tests
-    (tests/test_packer_worker.py) still start from the eager one."""
-    import zipimport
-
-    cls = zipimport.zipimporter
-    monkeypatch.setattr(cls, "invalidate_caches", cls.invalidate_caches)
-
-
 class FakeState:
     """The three ``GroupState`` members the packer touches."""
 

@@ -1,18 +1,30 @@
-"""The packer's worker-side zip directory fix, without Spark.
+"""The Python worker module (``pyspark_prefork_worker``) and the packer's
+closures.
 
-``make_packer`` nests ``share_zip_directories`` in the packer's closure so
-cloudpickle ships it by value. These tests check that nothing in the
-pickled packer, or in the writing packer of ``make_pack_writer``, names a
-``tower_parse_spark`` module, and drive the helper
-on a zip package built in a temp dir: after it is installed, an unchanged
-archive is not re-read on ``importlib.invalidate_caches()`` and all its
-zipimporters share one directory dict, while a rewritten archive is.
+The packer's closures must not name a ``tower_parse_spark`` module in
+their pickle: a worker's cwd need not be the repo root. The worker
+module's ``share_zip_directories`` is driven on a zip package built in a
+temp dir: after it is installed, an unchanged archive is not re-read on
+``importlib.invalidate_caches()`` and all its zipimporters share one
+directory dict, while a rewritten archive is. Importing the module would
+freeze this process's heap and patch its ``zipimport`` for the rest of
+the run, so these tests compile that one function from the module's
+source. The session's workers are checked from inside a UDF (forked by
+``pyspark.daemon`` from a warm, frozen daemon), and the module run as
+``python -m`` is checked against a local socket, as Spark runs it without
+the daemon.
 """
 
 from __future__ import annotations
 
+import ast
 import importlib
+import json
+import os
 import pickletools
+import socket
+import struct
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -20,7 +32,10 @@ import zipimport
 import pytest
 from pyspark import cloudpickle
 
+from tower_parse_spark.session import PREFORK_DIR
 from tower_parse_spark.streaming.packs import make_pack_writer, make_packer
+
+WORKER_MODULE = "pyspark_prefork_worker"
 
 EAGER = sys.version_info < (3, 13) and not hasattr(
     zipimport.zipimporter, "_get_files"
@@ -62,9 +77,18 @@ def pickled_globals(payload: bytes) -> list[tuple[str, str]]:
 
 
 def share_zip_directories():
-    packer = make_packer(4, ["time"], ["time", "x"])
-    cells = dict(zip(packer.__code__.co_freevars, packer.__closure__))
-    return cells["share_zip_directories"].cell_contents
+    """The worker module's ``share_zip_directories``, compiled from its
+    source without running the module's body."""
+    path = os.path.join(PREFORK_DIR, f"{WORKER_MODULE}.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    [node] = [
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "share_zip_directories"
+    ]
+    namespace: dict = {}
+    exec(compile(ast.Module([node], []), path, "exec"), namespace)
+    return namespace["share_zip_directories"]
 
 
 def package_globals(fn) -> list[tuple[str, str]]:
@@ -198,3 +222,103 @@ def test_gate_leaves_other_interpreters_alone(zip_package, monkeypatch, shape):
     share_zip_directories()()
     assert zipimport.zipimporter.invalidate_caches is before
     assert reads == []
+
+
+def test_session_workers_are_forked_warm(spark):
+    """One pandas UDF reports, from inside its worker, that the daemon
+    imported the worker module before forking: a frozen heap holding
+    pandas and pyarrow's modules, the zip fix installed, and the daemon's
+    command line; and that a pack-file write then imports nothing new
+    from pandas or pyarrow."""
+
+    def report(batches):
+        import gc
+        import sys
+        import zipimport
+
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        for _ in batches:
+            pass
+        # gc.get_objects() lists the collected generations only, so a
+        # module missing from it sits in the frozen, permanent one
+        tracked = {id(o) for o in gc.get_objects()}
+        names = ("pandas", "pyarrow", "pyarrow.parquet")
+        frozen = [
+            n for n in names
+            if n in sys.modules and id(sys.modules[n]) not in tracked
+        ]
+        del tracked
+        cmdline = None
+        if sys.platform.startswith("linux"):
+            with open("/proc/self/cmdline", "rb") as fh:
+                cmdline = fh.read().replace(b"\0", b" ").decode()
+        before = set(sys.modules)
+        table = pa.Table.from_pandas(
+            pd.DataFrame({"x": [1.5, None], "s": ["a", "b"]}),
+            preserve_index=False,
+        )
+        pq.write_table(table, pa.BufferOutputStream())
+        imported = sorted(
+            m for m in set(sys.modules) - before
+            if m.split(".")[0] in ("pandas", "pyarrow")
+        )
+        yield pd.DataFrame({"report": [json.dumps({
+            "freeze_count": gc.get_freeze_count(),
+            "frozen": frozen,
+            "eager": sys.version_info < (3, 13) and not hasattr(
+                zipimport.zipimporter, "_get_files"
+            ),
+            "stat_checked": getattr(
+                zipimport.zipimporter.invalidate_caches, "stat_checked", False
+            ),
+            "cmdline": cmdline,
+            "imported": imported,
+        })]})
+
+    [row] = spark.range(1, numPartitions=1).mapInPandas(
+        report, "report string"
+    ).collect()
+    got = json.loads(row.report)
+    assert got["freeze_count"] > 0
+    assert got["frozen"] == ["pandas", "pyarrow", "pyarrow.parquet"]
+    assert got["stat_checked"] or not got["eager"]
+    if got["cmdline"] is not None:
+        assert f"pyspark.daemon {WORKER_MODULE}" in got["cmdline"]
+    assert got["imported"] == []
+
+
+def test_module_run_as_main_is_the_plain_worker(tmp_path):
+    """``python -m pyspark_prefork_worker``, as Spark starts a worker
+    without the daemon, connects back, authenticates and writes its pid:
+    ``pyspark.worker`` ran as ``__main__``."""
+    secret = "s3cret"
+    with socket.create_server(("127.0.0.1", 0)) as server:
+        server.settimeout(60)
+        env = {
+            **os.environ,
+            "PYTHONPATH": os.pathsep.join(
+                p for p in (PREFORK_DIR, os.environ.get("PYTHONPATH")) if p
+            ),
+            "PYTHON_WORKER_FACTORY_PORT": str(server.getsockname()[1]),
+            "PYTHON_WORKER_FACTORY_SECRET": secret,
+        }
+        proc = subprocess.Popen(
+            [sys.executable, "-m", WORKER_MODULE], env=env, cwd=tmp_path,
+            stdout=subprocess.DEVNULL, stderr=subprocess.PIPE,
+        )
+        try:
+            conn, _ = server.accept()
+            with conn, conn.makefile("rwb") as f:
+                (n,) = struct.unpack("!i", f.read(4))
+                assert f.read(n).decode() == secret
+                f.write(struct.pack("!i", 2) + b"ok")
+                f.flush()
+                (pid,) = struct.unpack("!i", f.read(4))
+            assert pid == proc.pid
+        finally:
+            proc.kill()
+            _, err = proc.communicate(timeout=60)
+    assert b"found in sys.modules" not in err
