@@ -1,15 +1,22 @@
-"""Expression-level Bloom filter + incremental-dedup fast path
+"""Expression-level Bloom filter: the literal and partitioned gates
 (operators/bloom.py)."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from tower_parse_spark.operators import bloom as B
-from tower_parse_spark.operators.dedup import incremental_exact_dedup
 
 BITS, K = 1 << 14, 5  # small geometry keeps the tests quick
+
+
+def gate_lit(words):
+    """The filter words as one folded plan literal, spelled as the
+    near-dup gate spells it (dedup.incremental_minhash_dedup_with_banded)."""
+    return F.from_json(F.lit(json.dumps(list(words))), "array<long>")
 
 
 def _history(spark, n=200):
@@ -20,60 +27,30 @@ def _history(spark, n=200):
 
 def test_no_false_negatives(spark):
     hist = _history(spark)
-    bloom = B.bloom_build(hist, "text_hash", BITS, K)
-    probed = hist.crossJoin(F.broadcast(bloom)).select(
-        B.might_contain(F.col("text_hash"), F.col("bloom"), BITS, K).alias(
-            "hit"
-        )
+    bloom = gate_lit(B.bloom_build_words(hist, "text_hash", BITS, K))
+    probed = hist.select(
+        B.might_contain(F.col("text_hash"), bloom, BITS, K).alias("hit")
     )
-    # every inserted key MUST test positive — the property the dedup
-    # fast path's correctness rests on
+    # every inserted key MUST test positive — the property the gated
+    # probe's correctness rests on
     assert probed.filter(~F.col("hit")).count() == 0
 
 
 def test_false_positive_rate_bounded(spark):
     hist = _history(spark, 200)
-    bloom = B.bloom_build(hist, "text_hash", BITS, K)
+    bloom = gate_lit(B.bloom_build_words(hist, "text_hash", BITS, K))
     novel = spark.range(5000).select(
         F.md5(F.format_string("novel-%d", F.col("id"))).alias("h")
     )
-    fp = (
-        novel.crossJoin(F.broadcast(bloom))
-        .filter(B.might_contain(F.col("h"), F.col("bloom"), BITS, K))
-        .count()
-    )
+    fp = novel.filter(B.might_contain(F.col("h"), bloom, BITS, K)).count()
     # 200 keys in 2^14 bits, k=5 -> theoretical FP ~1e-6; allow slack
     assert fp / 5000 < 0.01, fp
 
 
 def test_filter_is_one_dense_row(spark):
-    rows = B.bloom_build(_history(spark), "text_hash", BITS, K).collect()
-    assert len(rows) == 1
-    arr = rows[0].bloom
+    arr = B.bloom_build_words(_history(spark), "text_hash", BITS, K)
     assert len(arr) == BITS // 64
     assert any(w != 0 for w in arr)
-
-
-def test_dedup_fast_path_verdict_identical(spark):
-    # batch: 30 in-batch dup pairs, 20 history dups, 50 novel
-    batch_rows = (
-        [(i, f"doc {i % 30}") for i in range(60)]  # in-batch dups
-        + [(100 + i, f"hist text {i}") for i in range(20)]  # vs history
-        + [(200 + i, f"fresh text {i}") for i in range(50)]
-    )
-    batch = spark.createDataFrame(batch_rows, "doc_id long, text string")
-    history = spark.createDataFrame(
-        [(f"hist text {i}",) for i in range(20)], "t string"
-    ).select(F.md5(F.col("t")).alias("text_hash"))
-
-    plain = incremental_exact_dedup(batch, history)
-    fast = B.incremental_exact_dedup_bloom(
-        batch, history, n_bits=BITS, n_hashes=K
-    )
-    key = lambda rows: sorted((r.doc_id, r.text_hash) for r in rows)
-    assert key(fast.collect()) == key(plain.collect())
-    # sanity on the shape: 30 in-batch survivors + 50 novel, 0 history dups
-    assert fast.count() == 80
 
 
 def test_bloom_size_for_formula_and_validation():
@@ -104,87 +81,17 @@ def test_auto_sized_fp_within_2x_target(spark, n_keys):
     hist = spark.range(n_keys).select(
         F.md5(F.format_string("k-%d", F.col("id"))).alias("text_hash")
     )
-    bloom = B.bloom_build(hist, "text_hash", bits, B.N_HASHES)
+    bloom = gate_lit(B.bloom_build_words(hist, "text_hash", bits, B.N_HASHES))
     n_probe = 20_000
     hits = (
         spark.range(n_probe)
         .select(F.md5(F.format_string("probe-%d", F.col("id"))).alias("h"))
-        .crossJoin(F.broadcast(bloom))
-        .filter(B.might_contain(F.col("h"), F.col("bloom"), bits, B.N_HASHES))
+        .filter(B.might_contain(F.col("h"), bloom, bits, B.N_HASHES))
         .count()
     )
     # theoretical FP with k=5 at the p=0.01-optimal m is ~1.1%; the
     # 2x bound leaves room for that plus sampling noise (20k probes)
     assert hits / n_probe <= 2 * target, (n_keys, bits, hits)
-
-
-def test_dedup_fast_path_history_count_sizing(spark):
-    """history_count wires bloom_size_for into the dedup fast path;
-    verdicts stay identical to the plain path at the derived size."""
-    batch = spark.createDataFrame(
-        [(i, f"t {i % 40}") for i in range(80)]
-        + [(900 + i, f"hist text {i}") for i in range(10)],
-        "doc_id long, text string",
-    )
-    history = spark.createDataFrame(
-        [(f"hist text {i}",) for i in range(10)], "t string"
-    ).select(F.md5(F.col("t")).alias("text_hash"))
-    fast = B.incremental_exact_dedup_bloom(batch, history, history_count=10)
-    plain = incremental_exact_dedup(batch, history)
-    key = lambda rows: sorted((r.doc_id, r.text_hash) for r in rows)
-    assert key(fast.collect()) == key(plain.collect())
-
-
-def test_null_text_and_empty_history(spark):
-    batch = spark.createDataFrame(
-        [(1, None), (2, "x")], "doc_id long, text string"
-    )
-    empty_hist = spark.createDataFrame([], "text_hash string")
-    out = B.incremental_exact_dedup_bloom(
-        batch, empty_hist, n_bits=BITS, n_hashes=K
-    )
-    plain = incremental_exact_dedup(batch, empty_hist)
-    assert sorted(r.doc_id for r in out.collect()) == sorted(
-        r.doc_id for r in plain.collect()
-    )
-
-
-def test_auto_size_cap_falls_back_ungated(spark, monkeypatch):
-    """VERDICT r10 #3: an auto-sized geometry past MAX_GATE_BITS must
-    NOT build a driver-side bitset — the call degrades to the plain
-    anti-join (identical verdicts, zero bloom work)."""
-    batch = spark.createDataFrame(
-        [(i, f"t {i % 40}") for i in range(80)]
-        + [(900 + i, f"hist text {i}") for i in range(10)],
-        "doc_id long, text string",
-    )
-    history = spark.createDataFrame(
-        [(f"hist text {i}",) for i in range(10)], "t string"
-    ).select(F.md5(F.col("t")).alias("text_hash"))
-    # a 10^9-key history sizes to ~9.6 Gbit — far over the cap
-    assert B.bloom_size_for(10**9, 0.01) > B.MAX_GATE_BITS
-
-    def boom(*a, **k):  # the cap must prevent ANY filter build
-        raise AssertionError("bloom_build_words called past MAX_GATE_BITS")
-
-    monkeypatch.setattr(B, "bloom_build_words", boom)
-    fast = B.incremental_exact_dedup_bloom(batch, history, history_count=10**9)
-    plain = incremental_exact_dedup(batch, history)
-    key = lambda rows: sorted((r.doc_id, r.text_hash) for r in rows)
-    assert key(fast.collect()) == key(plain.collect())
-
-
-def test_explicit_n_bits_bypasses_cap(spark):
-    """An EXPLICIT n_bits is the caller's trade and is respected over
-    the cap (geometry kept small here; only the code path matters)."""
-    batch = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-    history = spark.createDataFrame(
-        [("a",)], "t string"
-    ).select(F.md5(F.col("t")).alias("text_hash"))
-    out = B.incremental_exact_dedup_bloom(
-        batch, history, n_bits=BITS, n_hashes=K, history_count=10**9
-    )
-    assert sorted(r.doc_id for r in out.collect()) == [2]
 
 
 def test_max_gate_bits_geometry_documented():
@@ -195,7 +102,7 @@ def test_max_gate_bits_geometry_documented():
 
 
 def test_bloom_lit_constant_folds_in_optimized_plan(spark):
-    """ADVICE r10: bloom_lit's performance contract is that Catalyst
+    """ADVICE r10: the gate literal's performance contract is that Catalyst
     constant-folds ``from_json(lit(json))`` to ONE array Literal — a
     Spark version that stops folding it would re-parse the JSON per row
     in might_contain (still correct, silently large regression). Pin
@@ -203,7 +110,7 @@ def test_bloom_lit_constant_folds_in_optimized_plan(spark):
     from_json/JsonToStructs node."""
     df = spark.range(5).select(
         B.might_contain(
-            F.md5(F.col("id").cast("string")), B.bloom_lit([1, 2, 3]), 192, 2
+            F.md5(F.col("id").cast("string")), gate_lit([1, 2, 3]), 192, 2
         ).alias("hit")
     )
     plan = df._jdf.queryExecution().optimizedPlan().toString().lower()
@@ -274,7 +181,7 @@ def test_part_gate_filter_matches_literal_gate(spark):
     literal = sorted(
         r["text_hash"]
         for r in batch.filter(
-            B.might_contain(F.col("text_hash"), B.bloom_lit(dense), BITS, K)
+            B.might_contain(F.col("text_hash"), gate_lit(dense), BITS, K)
         ).collect()
     )
     assert joined == literal
@@ -337,40 +244,3 @@ def test_part_gate_geometry_headroom_2e34(spark):
     assert len(kept - present) == 0
 
 
-def test_exact_dedup_part_gate_verdict_identical(spark):
-    """r13: a PREBUILT partitioned filter over the history hashes keeps
-    the exact-dedup fast path gated past MAX_GATE_BITS instead of
-    degrading to the plain anti-join — and the output row set must be
-    exactly the plain path's, across true dups, in-batch dups, and
-    novel rows."""
-    from tower_parse_spark.operators.dedup import incremental_exact_dedup
-
-    hist_docs = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.format_string("history doc %d body", F.col("id")).alias("text"),
-    )
-    history = hist_docs.select(
-        F.md5(F.col("text")).alias("text_hash")
-    ).distinct()
-    words = B.bloom_delta_words(history, "text_hash", BITS, K)
-    batch = spark.createDataFrame(
-        [
-            (1000, "history doc 7 body"),   # true history dup
-            (1001, "brand new document a"),
-            (1002, "brand new document a"), # in-batch dup of 1001
-            (1003, "brand new document b"),
-        ],
-        "doc_id long, text string",
-    )
-    gated = B.incremental_exact_dedup_bloom(
-        batch, history, part_gate=(words, BITS, K)
-    )
-    plain = incremental_exact_dedup(batch, history)
-    key = lambda df: sorted(  # noqa: E731
-        (r["doc_id"], r["text"]) for r in df.collect()
-    )
-    assert key(gated) == key(plain)
-    assert [d for d, _ in key(gated)] == [1001, 1003]
-    # and the plan never held the filter: no from_json literal gate
-    plan = gated._jdf.queryExecution().executedPlan().toString()
-    assert "from_json" not in plan

@@ -258,79 +258,6 @@ def test_training_invariant_under_partitioning(spark):
     assert one == many
 
 
-def test_langid_model_roundtrip_identical_verdicts(spark, tmp_path):
-    """save_langid_model / load_langid_model (r10, VERDICT r9 Next #4):
-    the artifact restores the pinned class order and the loaded model's
-    verdicts are bit-identical — including the quantized margins —
-    through BOTH classify_lang and the text_langid(model_path=...)
-    prebuilt query path."""
-    from tower_parse_spark.queries.llm import langid_model_for, text_langid
-
-    model = CL.train_langid_nb(_langid_labeled(spark))
-    path = str(tmp_path / "lid_model")
-    CL.save_langid_model(model, path)
-    loaded = CL.load_langid_model(spark, path)
-    assert loaded.classes == model.classes
-    assert loaded.n_features == model.n_features
-    held = spark.createDataFrame(
-        [(1, "abab aaba baab"), (2, "zyzy zzzy yzzy"), (3, "")],
-        "doc_id long, text string",
-    )
-    fresh = {
-        (r.doc_id, r.lang_pred, r.nll_margin_q)
-        for r in CL.classify_lang(held, model).collect()
-    }
-    again = {
-        (r.doc_id, r.lang_pred, r.nll_margin_q)
-        for r in CL.classify_lang(held, loaded).collect()
-    }
-    assert fresh == again
-
-    # the full query path: prebuilt == train-in-query, row for row
-    sf = "/root/testdata/sf0.001"
-    qpath = str(tmp_path / "lid_sf0001")
-    CL.save_langid_model(langid_model_for(spark, sf), qpath)
-    trained = [tuple(r) for r in text_langid(spark, sf).collect()]
-    prebuilt = [
-        tuple(r) for r in text_langid(spark, sf, model_path=qpath).collect()
-    ]
-    assert prebuilt == trained
-
-
-def test_langid_model_meta_mismatch_raises(spark, tmp_path):
-    import pytest
-
-    model = CL.train_langid_nb(_langid_labeled(spark))
-    path = str(tmp_path / "lid_model")
-    CL.save_langid_model(model, path)
-    orig = CL.FEATURE_SALT
-    try:
-        CL.FEATURE_SALT = "other"  # a different hash family
-        with pytest.raises(ValueError, match="incompatible"):
-            CL.load_langid_model(spark, path)
-    finally:
-        CL.FEATURE_SALT = orig
-
-
-def test_langid_model_meta_missing_key_raises(spark, tmp_path):
-    """ADVICE r10: an artifact whose meta row LACKS an expected key
-    (older or foreign writer) must fail the compatibility check, not
-    load as if compatible — the absent key is reported."""
-    import pytest
-
-    model = CL.train_langid_nb(_langid_labeled(spark))
-    path = str(tmp_path / "lid_model")
-    CL.save_langid_model(model, path)
-    # rewrite the meta sidecar WITHOUT feature_salt (a foreign writer)
-    row = spark.read.parquet(f"{path}/meta").first()
-    spark.createDataFrame(
-        [(row["kind"], row["n_features"], row["w_scale"], list(row["classes"]))],
-        "kind string, n_features int, w_scale long, classes array<string>",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    with pytest.raises(ValueError, match="feature_salt.*<absent>"):
-        CL.load_langid_model(spark, path)
-
-
 def test_quality_model_meta_missing_key_raises(spark, tmp_path):
     import pytest
 

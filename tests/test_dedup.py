@@ -250,7 +250,7 @@ def test_incremental_exact_dedup(spark):
     assert incremental_exact_dedup(day2, index2).count() == 0
 
 
-def test_incremental_minhash_dedup_round_trip(spark, tmp_path):
+def test_incremental_minhash_dedup_round_trip(spark):
     """build index -> probe a batch (exact copy, reworded copy, novel
     doc) -> append survivors -> a re-probe of a survivor's copy flags.
     History documents are never re-read: the probe runs on the index
@@ -262,8 +262,7 @@ def test_incremental_minhash_dedup_round_trip(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    path = str(tmp_path / "mh_idx")
-    D.build_minhash_index(hist, path)
+    index = D.banded_signatures(hist, hash_fn="fast")
     batch = spark.createDataFrame(
         [
             (10, "the quick brown fox jumps over the lazy dog today"),
@@ -277,7 +276,6 @@ def test_incremental_minhash_dedup_round_trip(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    index = spark.read.parquet(path)
     out = {
         r.doc_id: r
         for r in D.incremental_minhash_dedup(batch, index).collect()
@@ -291,18 +289,16 @@ def test_incremental_minhash_dedup_round_trip(spark, tmp_path):
     assert out[11].in_batch_dup and not out[10].in_batch_dup
     assert not out[12].in_batch_dup and not out[13].in_batch_dup
     survivors = batch.filter(F.col("doc_id") == 12)
-    D.append_minhash_index(survivors, path)
+    index = index.unionByName(D.banded_signatures(survivors, hash_fn="fast"))
     reprobe = spark.createDataFrame(
         [(20, "completely novel words that share nothing at all here")],
         "doc_id long, text string",
     )
-    out2 = D.incremental_minhash_dedup(
-        reprobe, spark.read.parquet(path)
-    ).first()
+    out2 = D.incremental_minhash_dedup(reprobe, index).first()
     assert out2.is_dup and out2.max_est_jaccard == 1.0
 
 
-def test_incremental_minhash_rejects_family_mismatch(spark, tmp_path):
+def test_incremental_minhash_rejects_family_mismatch(spark):
     """A probe with the wrong hash family would silently never collide —
     the index's self-describing hash_fn column makes it raise instead."""
     import pytest as _pytest
@@ -310,36 +306,9 @@ def test_incremental_minhash_rejects_family_mismatch(spark, tmp_path):
     hist = spark.createDataFrame(
         [(1, "one two three four five")], "doc_id long, text string"
     )
-    path = str(tmp_path / "mh_idx_fam")
-    D.build_minhash_index(hist, path, hash_fn="fast")
+    index = D.banded_signatures(hist, hash_fn="fast")
     with _pytest.raises(ValueError, match="hash_fn"):
-        D.incremental_minhash_dedup(
-            hist, spark.read.parquet(path), hash_fn="portable"
-        )
-
-
-def test_append_minhash_index_rejects_family_mismatch(spark, tmp_path):
-    """Appending with a different hash family would create a MIXED index
-    the single-row probe check can't detect — the append path validates
-    against the stored family and raises before writing (ADVICE r6)."""
-    import pytest as _pytest
-
-    hist = spark.createDataFrame(
-        [(1, "one two three four five")], "doc_id long, text string"
-    )
-    path = str(tmp_path / "mh_idx_appfam")
-    D.build_minhash_index(hist, path, hash_fn="fast")
-    more = spark.createDataFrame(
-        [(2, "six seven eight nine ten")], "doc_id long, text string"
-    )
-    with _pytest.raises(ValueError, match="hash_fn"):
-        D.append_minhash_index(more, path, hash_fn="portable")
-    # the matching family still appends; a fresh path needs no check
-    D.append_minhash_index(more, path, hash_fn="fast")
-    assert (
-        spark.read.parquet(path).select("doc_id").distinct().count() == 2
-    )
-    D.append_minhash_index(more, str(tmp_path / "mh_idx_new"))
+        D.incremental_minhash_dedup(hist, index, hash_fn="portable")
 
 
 def test_incremental_minhash_in_batch_copies(spark):

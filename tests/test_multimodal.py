@@ -253,45 +253,6 @@ def test_phash_ppm_tracks_real_gradients():
     assert d <= 2
 
 
-def test_resize_ppm_real_area_downsample():
-    """Real resize: block means of actual pixels, round-tripping as a
-    valid P6 the decoder accepts at the new dimensions. A solid color
-    stays that color; a half-black/half-white image resized to 2x1
-    yields one dark and one bright cell."""
-    solid = _ppm(16, 8, lambda x, y: (100, 150, 200))
-    out = M.resize_ppm(solid, 4, 2)
-    assert M.decode_ppm(out) == {
-        "n_bytes": len(out), "width": 4, "height": 2, "format": "ppm"
-    }
-    _, _, rgb = M._parse_ppm(out)
-    assert rgb.min(axis=(0, 1)).tolist() == [100, 150, 200]
-    assert rgb.max(axis=(0, 1)).tolist() == [100, 150, 200]
-
-    split = _ppm(16, 8, lambda x, y: (0, 0, 0) if x < 8 else (255, 255, 255))
-    _, _, cells = M._parse_ppm(M.resize_ppm(split, 2, 1))
-    assert cells[0, 0].tolist() == [0, 0, 0]
-    assert cells[0, 1].tolist() == [255, 255, 255]
-    # resize composes with the real hash: gradient structure survives
-    grad = _ppm(36, 16, lambda x, y: (x * 7, x * 7, x * 7))
-    assert M.phash_ppm(M.resize_ppm(grad, 18, 8)) == M.phash_ppm(grad) == 0
-
-
-def test_features_ppm_real_pixel_statistics():
-    """Real features move with the pixels: identical images collide,
-    a uniform brightness shift moves the means but not the stds, and a
-    solid image has zero stds."""
-    a = _ppm(12, 12, lambda x, y: (x * 10, y * 10, 60))
-    assert M.features_ppm(a) == M.features_ppm(
-        _ppm(12, 12, lambda x, y: (x * 10, y * 10, 60))
-    )
-    brighter = _ppm(12, 12, lambda x, y: (x * 10 + 40, y * 10 + 40, 100))
-    fa, fb = M.features_ppm(a), M.features_ppm(brighter)
-    assert all(fb[j] > fa[j] for j in range(3))          # means shifted
-    assert all(abs(fb[j] - fa[j]) < 1e-9 for j in range(3, 6))  # stds same
-    solid = M.features_ppm(_ppm(8, 8, lambda x, y: (7, 7, 7)))
-    assert solid[3:] == [0.0, 0.0, 0.0]
-
-
 def test_phash_real_pillow_branch_shares_the_ppm_kernel(monkeypatch):
     """ADVICE r13: the Pillow branch must hash through the SAME resize
     kernel as the PPM branch (_dhash_rgb), so identical pixel content

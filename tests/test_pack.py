@@ -97,60 +97,6 @@ def test_scalable_explicit_num_buckets_1(spark):
     ]
 
 
-def test_scalable_grouped_matches_window_form(spark):
-    """Grouped scalable packs ≡ the per-group window form — the fix for
-    one huge group serializing through a single window task."""
-    rows = [
-        (i, float((i * 13) % 211) + i * 0.001, i % 3 if i % 10 else None)
-        for i in range(600)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, time double, level int"
-    ).repartition(7)
-    a = with_pack_id(df, 25, "level", ["time", "event_id"]).select(
-        "event_id", "pack_id", "pack_seq"
-    )
-    b = with_pack_id_scalable(
-        df,
-        25,
-        order_col="time",
-        tiebreak_col="event_id",
-        num_buckets=5,
-        group_col="level",
-    ).select("event_id", "pack_id", "pack_seq")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_scalable_grouped_no_single_partition(spark):
-    rows = [(i, float(i), 1) for i in range(100)]
-    df = spark.createDataFrame(rows, "event_id long, time double, level int")
-    out = with_pack_id_scalable(
-        df, 7, order_col="time", tiebreak_col="event_id",
-        num_buckets=4, group_col="level",
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-    got = sorted((r["event_id"], r["pack_id"]) for r in out.collect())
-    assert got[:8] == [(i, 0) for i in range(7)] + [(7, 1)]
-
-
-def test_scalable_grouped_offset_map_guard(spark, monkeypatch):
-    """Past MAX_OFFSET_ENTRIES (group x bucket) plan literals the grouped
-    form must fail loudly, directing callers to the window form — not
-    build a driver-OOM-sized create_map (bound shrunk via monkeypatch so
-    the test stays tiny)."""
-    import tower_parse_spark.operators.pack as pack_mod
-
-    monkeypatch.setattr(pack_mod, "MAX_OFFSET_ENTRIES", 3)
-    rows = [(i, float(i), i % 4) for i in range(80)]
-    df = spark.createDataFrame(rows, "event_id long, time double, level int")
-    with pytest.raises(ValueError, match="window .?form|with_pack_id"):
-        with_pack_id_scalable(
-            df, 5, order_col="time", tiebreak_col="event_id",
-            num_buckets=2, group_col="level",
-        )
-
-
 def test_ungrouped_auto_dispatch_no_single_partition_window(spark):
     """Ungrouped with_pack_id must not build a single-partition global
     window: the auto-dispatched plan matches the window form's output and
@@ -199,23 +145,17 @@ def test_global_row_matches_window_rank_asc_and_desc(spark):
 
 
 def test_global_row_total_col(spark):
-    """total_col attaches the total row count as a plan literal
-    (per group in grouped mode) — what exact ntile arithmetic needs."""
+    """total_col attaches the total row count as a plan literal — what
+    exact ntile arithmetic needs."""
     from tower_parse_spark.operators.pack import with_global_row_scalable
 
-    rows = [(i, float(i % 11), i % 3) for i in range(90)]
-    df = spark.createDataFrame(rows, "event_id long, v double, g int")
+    rows = [(i, float(i % 11)) for i in range(90)]
+    df = spark.createDataFrame(rows, "event_id long, v double")
     got = with_global_row_scalable(
         df, "v", tiebreak_col="event_id", num_buckets=4,
         index_col="r", total_col="n",
     )
     assert {x["n"] for x in got.collect()} == {90}
-    grouped = with_global_row_scalable(
-        df, "v", tiebreak_col="event_id", num_buckets=4,
-        group_col="g", index_col="r", total_col="n",
-    )
-    per_g = {(x["g"], x["n"]) for x in grouped.collect()}
-    assert per_g == {(0, 30), (1, 30), (2, 30)}
 
 
 @pytest.mark.parametrize("n_rows,k", [(1, 4), (3, 4), (10, 4), (97, 4), (12, 5), (100, 7)])
@@ -246,35 +186,3 @@ def test_ntile_expr_matches_builtin(spark, n_rows, k):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, ref.collect())
     )
-
-
-def test_global_row_grouped_descending_matches_window(spark):
-    """Grouped + descending together: per-group global index ≡ the
-    per-group window row_number with (v DESC NULLS LAST, id) ordering."""
-    from pyspark.sql import Window as W
-
-    from tower_parse_spark.operators.pack import with_global_row_scalable
-
-    rows = [
-        (i, None if i % 13 == 0 else float((i * 11) % 19), i % 3)
-        for i in range(150)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, v double, g int"
-    ).repartition(5)
-    ref = df.withColumn(
-        "r",
-        F.row_number().over(
-            W.partitionBy("g").orderBy(F.col("v").desc(), "event_id")
-        )
-        - 1,
-    )
-    got = with_global_row_scalable(
-        df, "v", tiebreak_col="event_id", num_buckets=4,
-        group_col="g", index_col="r", descending=True, total_col="n",
-    )
-    assert sorted((x["event_id"], x["r"]) for x in got.collect()) == sorted(
-        (x["event_id"], x["r"]) for x in ref.collect()
-    )
-    per_g = {(x["g"], x["n"]) for x in got.collect()}
-    assert per_g == {(0, 50), (1, 50), (2, 50)}

@@ -193,54 +193,28 @@ def test_residual_adc_recall_floor(spark):
     assert r_resid > r_raw
 
 
-def test_prebuilt_ivfpq_index_matches_inline(spark, tmp_path):
-    """build_ivfpq_index + ivfpq_topk_prebuilt return the exact rows the
-    inline ivfpq_topk computes (residual codes + means sidecar through
-    the parquet round-trip), and the code scan prunes to probed cells."""
-    emb = load_table(spark, SF, "embeddings")
-    probes = _probes(emb)
-    path = str(tmp_path / "ivfpq_idx")
-    PQ.build_ivfpq_index(emb, path, dim=DIM)
-    pre = PQ.ivfpq_topk_prebuilt(spark, path, probes, dim=DIM, k=5)
-    inline = PQ.ivfpq_topk(emb, probes, dim=DIM, k=5)
-    rows = lambda df: sorted(  # noqa: E731
-        (r["probe_id"], r["rank"], r["vec_id"], r["adc_dist"])
-        for r in df.collect()
-    )
-    assert rows(pre) == rows(inline)
-    plan = pre._jdf.queryExecution().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-
-
-def test_prebuilt_ivfpq_drops_degenerate_probes(spark, tmp_path):
-    """A NULL/empty/zero probe must be silently dropped by the prebuilt
-    path exactly as the inline path drops it — not crash the driver-side
-    cell collection (int(None) regression)."""
+def test_ivfpq_drops_degenerate_probes(spark):
+    """A NULL/empty/zero probe is silently dropped (its cell is NULL),
+    and the good probes' rows are exactly those of a run without it."""
     emb = load_table(spark, SF, "embeddings")
     good = _probes(emb)
     bad = spark.createDataFrame(
         [(9001, None), (9002, []), (9003, [0.0] * DIM)],
         "probe_id long, embedding array<double>",
     )
-    probes = good.unionAll(bad)
-    path = str(tmp_path / "ivfpq_degen")
-    PQ.build_ivfpq_index(emb, path, dim=DIM)
-    pre = PQ.ivfpq_topk_prebuilt(spark, path, probes, dim=DIM, k=5)
-    inline = PQ.ivfpq_topk(emb, probes, dim=DIM, k=5)
     rows = lambda df: sorted(  # noqa: E731
         (r["probe_id"], r["rank"], r["vec_id"]) for r in df.collect()
     )
-    got = rows(pre)
-    assert got == rows(inline)
+    got = rows(PQ.ivfpq_topk(emb, good.unionAll(bad), dim=DIM, k=5))
+    assert got == rows(PQ.ivfpq_topk(emb, good, dim=DIM, k=5))
     assert not {p for p, _, _ in got} & {9001, 9002, 9003}
 
 
-def test_append_into_build_time_empty_cell(spark, tmp_path):
-    """Appending vectors whose cell was EMPTY at build time must write
-    real (zero-mean-fallback) codes, report them, and rank them by real
-    ADC distances — the all-NULL-codes / NULLS-FIRST regression."""
-    import os
-
+def test_append_into_build_time_empty_cell(spark):
+    """Encoding vectors against FROZEN means from a build in which their
+    cell was EMPTY must write real (zero-mean-fallback) codes and rank
+    them by real ADC distances — the all-NULL-codes / NULLS-FIRST
+    regression."""
     emb = load_table(spark, SF, "embeddings")
     cents = S.lattice_centroids(DIM)
     enc_all, _ = PQ.encode_ivfpq(emb, DIM, cents)
@@ -252,13 +226,10 @@ def test_append_into_build_time_empty_cell(spark, tmp_path):
     }
     build_half = emb.filter(F.col("vec_id").isin(list(in_top)))
     append_half = emb.filter(~F.col("vec_id").isin(list(in_top)))
-    path = str(tmp_path / "ivfpq_gap")
-    PQ.build_ivfpq_index(build_half, path, dim=DIM)
-    report = PQ.append_ivfpq_index(append_half, path, dim=DIM)
-    assert report["n_appended"] == append_half.count()
-    assert report["n_zero_mean_rows"] == report["n_appended"]
-    got = spark.read.parquet(os.path.join(path, "codes"))
-    # no NULL codes anywhere in the index
+    _, means = PQ.encode_ivfpq(build_half, DIM, cents)
+    got, _ = PQ.encode_ivfpq(append_half, DIM, cents, means=means)
+    assert got.count() == append_half.count()
+    # no NULL codes anywhere
     assert (
         got.filter(
             F.exists(F.col("codes"), lambda c: c.isNull())
@@ -266,97 +237,12 @@ def test_append_into_build_time_empty_cell(spark, tmp_path):
         ).count()
         == 0
     )
-    # probing returns real, NULL-free distances for every probe
-    res = PQ.ivfpq_topk_prebuilt(
-        spark, path, _probes(emb), dim=DIM, k=5, nprobe=len(cents)
+    # probing the frozen means returns real, NULL-free distances
+    probes = PQ.probe_adc_tables(
+        _probes(emb), DIM, cents, nprobe=len(cents), means=means
+    )
+    res = PQ._adc_rank(
+        got, probes, 5, PQ.lattice_codebooks(DIM), "vec_id", "probe_id"
     )
     out = res.collect()
     assert out and all(r["adc_dist"] is not None for r in out)
-
-
-def test_append_ivfpq_index_frozen_means(spark, tmp_path):
-    """Appending encodes against the index's FROZEN mean sidecar: after
-    build(half A) + append(half B), probing returns exactly what an
-    inline run over A∪B with A's means would — verified by asserting
-    the appended codes equal re-encoding B with the sidecar means."""
-    emb = load_table(spark, SF, "embeddings")
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivfpq_inc")
-    PQ.build_ivfpq_index(half_a, path, dim=DIM)
-    report = PQ.append_ivfpq_index(half_b, path, dim=DIM)
-    assert report["n_appended"] == half_b.count()
-    # the index now holds every vector exactly once
-    import os
-    got = spark.read.parquet(os.path.join(path, "codes"))
-    assert got.count() == emb.count()
-    assert got.select("vec_id").distinct().count() == emb.count()
-    # appended codes == encoding B against the sidecar means directly
-    means = spark.read.parquet(os.path.join(path, "means"))
-    cents = S.lattice_centroids(DIM)
-    enc_b, _ = PQ.encode_ivfpq(half_b, DIM, cents, means=means)
-    expect = {
-        r["vec_id"]: (r["cell"], tuple(r["codes"])) for r in enc_b.collect()
-    }
-    b_ids = set(expect)
-    stored = {
-        r["vec_id"]: (int(r["cell"]), tuple(r["codes"]))
-        for r in got.collect()
-        if r["vec_id"] in b_ids
-    }
-    assert stored == {k: (int(c), t) for k, (c, t) in expect.items()}
-
-
-def test_index_meta_sidecar_rejects_mismatched_params(spark, tmp_path):
-    """The index is self-describing (ADVICE r6): probing or appending
-    with flags/quantizers other than the build's raises instead of
-    silently returning plausible-but-wrong neighbors."""
-    emb = load_table(spark, SF, "embeddings").limit(60)
-    path = str(tmp_path / "ivfpq_meta")
-    PQ.build_ivfpq_index(emb, path, dim=DIM)  # normalize/residual True
-    probes = _probes(emb)
-    with pytest.raises(ValueError, match="residual"):
-        PQ.ivfpq_topk_prebuilt(
-            spark, path, probes, dim=DIM, k=5, residual=False
-        )
-    with pytest.raises(ValueError, match="normalize"):
-        PQ.append_ivfpq_index(emb, path, dim=DIM, normalize=False)
-    with pytest.raises(ValueError, match="codebook_fp"):
-        PQ.ivfpq_topk_prebuilt(
-            spark, path, probes, dim=DIM, k=5,
-            codebooks=PQ.lattice_codebooks(DIM, k_codes=8),
-        )
-    # matching parameters still probe
-    assert PQ.ivfpq_topk_prebuilt(spark, path, probes, dim=DIM, k=5).count() > 0
-
-
-def test_index_without_meta_sidecar_still_probes(spark, tmp_path):
-    """Back-compat: a pre-r7 index (no meta dir) skips validation."""
-    import shutil
-
-    emb = load_table(spark, SF, "embeddings").limit(60)
-    path = str(tmp_path / "ivfpq_nometa")
-    PQ.build_ivfpq_index(emb, path, dim=DIM)
-    shutil.rmtree(f"{path}/meta")
-    assert (
-        PQ.ivfpq_topk_prebuilt(spark, path, _probes(emb), dim=DIM, k=5).count()
-        > 0
-    )
-
-
-def test_index_meta_with_absent_key_rejects(spark, tmp_path):
-    """r11 (the classifier-loader ADVICE applied here): a meta sidecar
-    that EXISTS but lacks an expected key (foreign/older writer) fails
-    validation like a mismatch — only a fully absent meta dir is the
-    back-compat skip."""
-    emb = load_table(spark, SF, "embeddings").limit(60)
-    path = str(tmp_path / "ivfpq_absent_key")
-    PQ.build_ivfpq_index(emb, path, dim=DIM)
-    # rewrite meta WITHOUT codebook_fp
-    row = spark.read.parquet(f"{path}/meta").first()
-    keep = [f for f in row.__fields__ if f != "codebook_fp"]
-    spark.createDataFrame([tuple(row[f] for f in keep)], keep).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/meta")
-    with pytest.raises(ValueError, match="codebook_fp.*<absent>"):
-        PQ.ivfpq_topk_prebuilt(spark, path, _probes(emb), dim=DIM, k=5)

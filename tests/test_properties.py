@@ -10,6 +10,8 @@ upgrade the same invariants to randomized coverage:
 
 from __future__ import annotations
 
+import json
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -410,12 +412,10 @@ def test_bloom_never_forgets_an_inserted_key(spark, keys):
 
     bits, k = 1 << 12, 4
     df = spark.createDataFrame([(w,) for w in sorted(keys)], "h string")
-    bloom = B.bloom_build(df, "h", bits, k)
-    misses = (
-        df.crossJoin(F.broadcast(bloom))
-        .filter(~B.might_contain(F.col("h"), F.col("bloom"), bits, k))
-        .count()
+    bloom = F.from_json(
+        F.lit(json.dumps(B.bloom_build_words(df, "h", bits, k))), "array<long>"
     )
+    misses = df.filter(~B.might_contain(F.col("h"), bloom, bits, k)).count()
     assert misses == 0
 
 
@@ -460,7 +460,12 @@ def test_part_gate_join_form_matches_literal_form(spark, indexed, probed):
     literal = sorted(
         (r["h"], r["doc_id"])
         for r in batch.filter(
-            B.might_contain(F.col("h"), B.bloom_lit(dense), bits, k)
+            B.might_contain(
+                F.col("h"),
+                F.from_json(F.lit(json.dumps(dense)), "array<long>"),
+                bits,
+                k,
+            )
         ).collect()
     )
     assert joined == literal

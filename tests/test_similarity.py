@@ -190,60 +190,24 @@ def blob_probes(spark):
     )
 
 
-def test_prebuilt_ivf_index_matches_inline(blob_corpus, blob_probes, spark, tmp_path):
-    """build_ivf_index + ivf_topk_prebuilt return the exact rows the
-    inline ivf_topk computes (same staged scoring through the parquet
-    round-trip), and the probe-side scan prunes to the probed cells."""
-    cents = S.kmeans_centroids(blob_corpus, dim=4, k=3, iters=3)
-    path = str(tmp_path / "ivf_idx")
-    S.build_ivf_index(blob_corpus, path, dim=4, centroids=cents)
-    pre = S.ivf_topk_prebuilt(
-        spark, path, blob_probes, dim=4, k=5, nprobe=1, centroids=cents
-    )
-    inline = S.ivf_topk(
-        blob_corpus, blob_probes, dim=4, k=5, nprobe=1, centroids=cents
-    )
-    assert _topk_rows(pre) == _topk_rows(inline)
-    # partition pruning is real: the scan carries a partition IN-filter
-    plan = pre._jdf.queryExecution().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-
-
-def test_prebuilt_ivf_drops_degenerate_probes(
-    blob_corpus, blob_probes, spark, tmp_path
-):
-    """NULL/empty/zero probes carry NULL cells: the prebuilt path must
-    skip them in the pruning predicate (int(None) regression) and drop
-    them from the output exactly as the inline path does."""
+def test_ivf_drops_degenerate_probes(blob_corpus, blob_probes, spark):
+    """NULL/empty/zero probes carry NULL cells: they are dropped from
+    the output, and the good probes' rows are exactly those of a run
+    without them."""
     bad = spark.createDataFrame(
         [(990, None), (991, []), (992, [0.0] * 4)],
         "probe_id long, embedding array<double>",
     )
-    probes = blob_probes.unionAll(bad)
     cents = S.kmeans_centroids(blob_corpus, dim=4, k=3, iters=3)
-    path = str(tmp_path / "ivf_idx_degen")
-    S.build_ivf_index(blob_corpus, path, dim=4, centroids=cents)
-    pre = S.ivf_topk_prebuilt(
-        spark, path, probes, dim=4, k=5, nprobe=1, centroids=cents
+    got = S.ivf_topk(
+        blob_corpus, blob_probes.unionAll(bad), dim=4, k=5, nprobe=1,
+        centroids=cents,
     )
-    inline = S.ivf_topk(
-        blob_corpus, probes, dim=4, k=5, nprobe=1, centroids=cents
+    clean = S.ivf_topk(
+        blob_corpus, blob_probes, dim=4, k=5, nprobe=1, centroids=cents
     )
-    assert _topk_rows(pre) == _topk_rows(inline)
-    assert not {r["probe_id"] for r in pre.collect()} & {990, 991, 992}
-
-
-def test_prebuilt_lsh_index_matches_inline(blob_corpus, blob_probes, spark, tmp_path):
-    path = str(tmp_path / "lsh_idx")
-    S.build_lsh_index(blob_corpus, path, dim=4, planes=4)
-    for radius in (0, 1, 2):
-        pre = S.lsh_topk_prebuilt(
-            spark, path, blob_probes, dim=4, k=5, planes=4, multiprobe=radius
-        )
-        inline = S.hyperplane_lsh_topk(
-            blob_corpus, blob_probes, dim=4, k=5, planes=4, multiprobe=radius
-        )
-        assert _topk_rows(pre) == _topk_rows(inline)
+    assert _topk_rows(got) == _topk_rows(clean)
+    assert not {r["probe_id"] for r in got.collect()} & {990, 991, 992}
 
 
 def test_nprobe_clamped_to_centroid_count(blob_corpus, blob_probes):
@@ -308,46 +272,3 @@ def test_ann_recall_floors(spark):
     assert r["ivf_np4"] >= 0.9
     # the trained quantizer beats the seedless lattice at equal nprobe
     assert r["ivf_np2"] >= r["ivf_np2_lattice"]
-
-
-def test_append_ivf_index_matches_rebuild(blob_corpus, blob_probes, spark, tmp_path):
-    """Incremental index maintenance (VERDICT r5 item 4): build on half
-    the corpus, append the other half with the FROZEN quantizer —
-    probing the appended index returns exactly the rows a full rebuild
-    returns, and the drift report is quiet for in-distribution data."""
-    cents = S.kmeans_centroids(blob_corpus, dim=4, k=3, iters=3)
-    half_a = blob_corpus.filter(F.col("vec_id") % 2 == 0)
-    half_b = blob_corpus.filter(F.col("vec_id") % 2 == 1)
-
-    inc_path = str(tmp_path / "ivf_inc")
-    S.build_ivf_index(half_a, inc_path, dim=4, centroids=cents)
-    report = S.append_ivf_index(half_b, inc_path, dim=4, centroids=cents)
-    assert report["n_appended"] == half_b.count()
-    assert report["drift_frac"] == 0.0 and not report["advise_retrain"]
-
-    full_path = str(tmp_path / "ivf_full")
-    S.build_ivf_index(blob_corpus, full_path, dim=4, centroids=cents)
-    pre_inc = S.ivf_topk_prebuilt(
-        spark, inc_path, blob_probes, dim=4, k=5, nprobe=1, centroids=cents
-    )
-    pre_full = S.ivf_topk_prebuilt(
-        spark, full_path, blob_probes, dim=4, k=5, nprobe=1, centroids=cents
-    )
-    assert _topk_rows(pre_inc) == _topk_rows(pre_full)
-
-
-def test_append_ivf_index_drift_advises_retrain(blob_corpus, spark, tmp_path):
-    """A batch from a direction no centroid covers (negative orthant —
-    cosine to every blob centroid is ~-1) must push drift_frac past the
-    threshold and advise a retrain."""
-    cents = S.kmeans_centroids(blob_corpus, dim=4, k=3, iters=3)
-    path = str(tmp_path / "ivf_drift")
-    S.build_ivf_index(blob_corpus, path, dim=4, centroids=cents)
-    drifted = spark.createDataFrame(
-        [(1000 + i, [-5.0, -5.0, -5.0, -0.1 * i]) for i in range(10)],
-        "vec_id long, embedding array<double>",
-    )
-    report = S.append_ivf_index(drifted, path, dim=4, centroids=cents)
-    assert report["n_appended"] == 10
-    assert report["drift_frac"] == 1.0
-    assert report["advise_retrain"]

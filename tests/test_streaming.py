@@ -416,36 +416,6 @@ def test_single_group_start_failure_restores_session_conf(spark, tmp_path):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_stream_exact_dedup_within_watermark(spark, tmp_path):
-    """Streaming dedup: duplicate ids inside and across micro-batches are
-    dropped while state stays watermark-bounded."""
-    from tower_parse_spark.streaming.dedup import stream_exact_dedup
-
-    batches = [
-        [probe_line(1, 1.0, 1), probe_line(1, 1.0, 1), probe_line(1, 2.0, 2)],
-        [probe_line(1, 2.0, 2), probe_line(1, 3.0, 3)],  # cross-batch dup
-    ]
-    src = write_line_files(tmp_path, batches)
-    lines = SRC.file_lines(spark, src, max_files_per_trigger=1)
-    deduped = stream_exact_dedup(
-        P.parse_stream(lines, PROBE), ["id"], watermark="10 minutes"
-    )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dd"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT id FROM dedup_mem").collect()
-    ids = sorted(r["id"] for r in rows)
-    assert ids == [1.0, 2.0, 3.0]
-
-
 def test_dead_letter_stream(spark, tmp_path):
     """A12 streaming: corrupt lines land in the quarantine parquet with
     their raw text; clean lines flow to packs — nothing silently drops."""

@@ -89,67 +89,18 @@ def test_relational_counts_match_fold(spark):
     assert rel1 == {w: (len(w) if w else 0) for w in words} | {None: 0}
 
 
-def test_doc_counts_strategies_agree(spark):
-    docs = spark.createDataFrame(
-        [(1, "customer window customer"), (2, None), (3, ""), (4, "a b c")],
-        "doc_id long, text string",
-    )
-    fold = sorted(map(tuple, SW.doc_subword_counts(docs).collect()))
-    join = sorted(
-        map(tuple, SW.doc_subword_counts(docs, strategy="join").collect())
-    )
-    assert fold == join
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="strategy"):
-        SW.doc_subword_counts(docs, strategy="nope")
-
-
-def test_doc_counts_and_null_rows(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "customer window customer"),
-            (2, None),
-            (3, ""),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in SW.doc_subword_counts(docs).collect()}
-    assert rows[1].n_words == 3
-    assert rows[1].n_subwords == 3 + 1 + 3  # cust|om|er twice + window
-    assert abs(rows[1].subwords_per_word - round(7 / 3, 4)) < 1e-9
-    for d in (2, 3):
-        assert rows[d].n_words == 0 and rows[d].n_subwords == 0
-        assert rows[d].subwords_per_word == 0.0
-
-
-def test_subword_vs_whitespace_expansion(spark):
-    """The budget-relevant property: subword counts are >= whitespace
-    counts (every word is at least one piece) and strictly larger on a
-    corpus with multi-piece words — packing to a whitespace budget
-    under-bills the sequence length."""
-    from tower_parse_spark.functions import text as T
-    from tower_parse_spark.session import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = SW.doc_subword_counts(docs)
-    assert out.filter(F.col("n_subwords") < F.col("n_words")).count() == 0
-    agg = out.agg(
-        F.sum("n_subwords").alias("s"), F.sum("n_words").alias("w")
-    ).collect()[0]
-    assert agg.s > agg.w  # the fixture vocabulary splits
-
-
 def test_fold_runs_on_distinct_words_only(spark):
     # the expensive fold must sit ABOVE the distinct aggregate, never in
     # the per-token stream: the executed plan's substring sites appear
     # after HashAggregate(keys=[_tok...]), and the exploded relation
     # carries no fold expressions
+    from tower_parse_spark.functions import text as T
+
     docs = spark.createDataFrame(
         [(1, "customer window")], "doc_id long, text string"
-    )
+    ).select("doc_id", T.tokens(F.col("text")).alias("toks"))
     plan = (
-        SW.doc_subword_counts(docs)
+        SW.token_subword_arrays(docs)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -157,71 +108,6 @@ def test_fold_runs_on_distinct_words_only(spark):
     # one Aggregate on _tok (the distinct) feeds the single projection
     # holding the fold; 'aggregate(sequence' is the fold's fingerprint
     assert plan.count("aggregate(sequence") == 1, plan
-
-
-# --------------------------------------------------------------------------
-# BPE merge training
-# --------------------------------------------------------------------------
-
-
-def test_bpe_train_textbook_example(spark):
-    # Sennrich-style hand-check: {"abab": 2, "ab": 1}
-    # round 1 pair counts: (a,b) = 2*2 + 1 = 5, (b,a) = 1*2 = 2 -> merge (a,b)
-    # round 2: "abab" -> [ab, ab], "ab" -> [ab]; (ab,ab) = 2 -> merge (ab,ab)
-    words = spark.createDataFrame(
-        [("abab", 2), ("ab", 1)], "word string, count long"
-    )
-    merges = SW.bpe_train_merges(words, 2)
-    assert merges == [("a", "b"), ("ab", "ab")]
-
-
-def test_bpe_train_tie_break_deterministic(spark):
-    # (a,b) and (c,d) both appear once -> lexicographic pair wins
-    words = spark.createDataFrame(
-        [("ab", 1), ("cd", 1)], "word string, count long"
-    )
-    assert SW.bpe_train_merges(words, 1) == [("a", "b")]
-
-
-def test_bpe_train_greedy_left_to_right_application(spark):
-    # "aaa" x1: round 1 counts (a,a)=2 -> merge (a,a); application is
-    # greedy left-to-right, so "aaa" -> [aa, a] and round 2's top pair
-    # is (aa, a), never (a, aa)
-    words = spark.createDataFrame([("aaa", 1)], "word string, count long")
-    merges = SW.bpe_train_merges(words, 2)
-    assert merges == [("a", "a"), ("aa", "a")]
-
-
-def test_bpe_train_exhausts_and_stops(spark):
-    # a single 2-char word supports exactly one merge; further rounds
-    # find no pairs and stop early instead of erroring
-    words = spark.createDataFrame([("xy", 3)], "word string, count long")
-    assert SW.bpe_train_merges(words, 5) == [("x", "y")]
-
-
-def test_trained_vocab_reduces_subword_counts(spark):
-    # closing the loop: merges learned from the corpus' own word
-    # frequencies shrink the corpus' subword totals under the
-    # longest-match fold
-    from tower_parse_spark.session import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    freqs = SW.word_frequencies(docs.limit(50))
-    merges = SW.bpe_train_merges(freqs, 8)
-    assert len(merges) == 8
-    vocab = SW.merges_to_vocab(merges)
-    sample = docs.limit(50)
-    base = (
-        SW.doc_subword_counts(sample, vocab=("zzz_nomatch",))
-        .agg(F.sum("n_subwords"))
-        .collect()[0][0]
-    )
-    trained = (
-        SW.doc_subword_counts(sample, vocab=vocab)
-        .agg(F.sum("n_subwords"))
-        .collect()[0][0]
-    )
-    assert trained < base  # learned pieces compress vs char-fallback
 
 
 def test_empty_piece_rejected(spark):

@@ -141,35 +141,3 @@ def test_curate_urls_retains_malformed_rows(spark):
     assert out[3].malformed and not out[3].kept
     assert not out[1].malformed and out[1].kept
     assert out[4].is_url_dup and not out[4].malformed
-
-
-def test_registrable_domain_public_suffix_join(spark):
-    """eTLD+1 via the public-suffix broadcast join: the LONGEST matching
-    suffix wins, a bare public suffix yields NULL, and unknown TLDs
-    (intranet hosts, IPs) yield NULL for malformed-style routing."""
-    hosts = spark.createDataFrame(
-        [
-            ("shop.example.co.uk",),
-            ("example.co.uk",),
-            ("co.uk",),  # IS a public suffix -> NULL
-            ("a.b.example.com",),
-            ("example.com",),
-            ("intranet.local",),  # unknown suffix -> NULL
-            ("uk",),  # bare TLD -> NULL
-        ],
-        "host string",
-    )
-    suffixes = spark.createDataFrame(
-        [("com",), ("uk",), ("co.uk",)], "suffix string"
-    )
-    out = {
-        r["host"]: r["reg_domain"]
-        for r in U.registrable_domain(hosts, suffixes).collect()
-    }
-    assert out["shop.example.co.uk"] == "example.co.uk"
-    assert out["example.co.uk"] == "example.co.uk"
-    assert out["co.uk"] is None
-    assert out["a.b.example.com"] == "example.com"
-    assert out["example.com"] == "example.com"
-    assert out["intranet.local"] is None
-    assert out["uk"] is None

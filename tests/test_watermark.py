@@ -1,17 +1,13 @@
 """Watermarked event-time windows: late data dropped, windows finalized
 exactly once (the capability upgrade over the reference's
-processing-time-only model)."""
+processing-time-only model), and the watermark lag the
+streaming_late_data oracle encodes."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import functions as F
-
-from tower_parse_spark.plans.profile import DeviceProfile
-from tower_parse_spark.streaming.pipeline import event_time_stats
-
-PROF = DeviceProfile(name="wm", regex=[r"^v=(?P<v>\S+)$"])
 
 BASE = 1_700_000_000  # epoch anchor
 
@@ -37,6 +33,21 @@ def parse(spark, src):
     )
 
 
+def windowed_sums(parsed, watermark):
+    """Append-mode one-minute tumbling (count, sum(v)) per window over
+    the epoch-seconds ``time``, rows later than *watermark* dropped."""
+    return (
+        parsed.withColumn("_evt", F.timestamp_seconds(F.col("time")))
+        .withWatermark("_evt", watermark)
+        .groupBy(F.window("_evt", "1 minute").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.round(F.sum("v"), 4).alias("sum_v"),
+        )
+        .select(F.col("w.start").alias("window_start"), "n_rows", "sum_v")
+    )
+
+
 def test_late_rows_dropped_windows_finalized(spark, tmp_path):
     # Watermark updates lag one micro-batch (batch N's filter uses the
     # max event time from batches <= N-2), so the too-late replay of a
@@ -49,10 +60,7 @@ def test_late_rows_dropped_windows_finalized(spark, tmp_path):
         [(BASE + 5, 100.0), (BASE + 1200, 8.0)],  # 100.0 is too late
     ]
     src = write_batches(tmp_path, batches)
-    stats = event_time_stats(
-        parse(spark, src), window="1 minute", watermark="2 minutes",
-        value_cols=["v"],
-    )
+    stats = windowed_sums(parse(spark, src), "2 minutes")
     q = (
         stats.writeStream.format("memory")
         .queryName("wm_mem")
@@ -108,10 +116,7 @@ def test_watermark_lag_model_canary(spark, tmp_path):
         [(BASE + 5, 9.0), (BASE + 1200, 8.0)],  # max = BASE+1200
     ]
     src = write_batches(tmp_path, batches)
-    stats = event_time_stats(
-        parse(spark, src), window="1 minute", watermark=f"{delay} seconds",
-        value_cols=["v"],
-    )
+    stats = windowed_sums(parse(spark, src), f"{delay} seconds")
     q = (
         stats.writeStream.format("memory")
         .queryName("wm_canary")

@@ -17,4 +17,4 @@ in docstrings (``readport.py:NNN``) identify the *behavior* being matched.
 
 __version__ = "0.1.0"
 
-from tower_parse_spark.session import get_spark, load_tables  # noqa: F401
+from tower_parse_spark.session import get_spark  # noqa: F401

@@ -2,10 +2,6 @@
 scale-first (see SCALE.md for the per-family plan audit)."""
 
 from tower_parse_spark.operators.asof import asof_join  # noqa: F401
-from tower_parse_spark.operators.bucketing import (  # noqa: F401
-    colocated_join,
-    write_bucketed,
-)
 from tower_parse_spark.operators.components import (  # noqa: F401
     connected_components,
     dedup_clusters,
@@ -37,12 +33,7 @@ from tower_parse_spark.operators.sampling import (  # noqa: F401
 )
 from tower_parse_spark.operators.similarity import (  # noqa: F401
     brute_force_topk,
-    build_ivf_index,
-    build_lsh_index,
     hyperplane_lsh_topk,
     ivf_topk,
-    ivf_topk_prebuilt,
     kmeans_centroids,
-    lsh_topk_prebuilt,
 )
-from tower_parse_spark.operators.skew import salted_join  # noqa: F401

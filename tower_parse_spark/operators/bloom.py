@@ -1,5 +1,5 @@
-"""Expression-level Bloom filter — the anti-join fast path for
-incremental exact dedup.
+"""Expression-level Bloom filter — the near-dup gate's fast path past
+the band-index anti-join.
 
 Public methodology: Dolma's deduper (Soldaini et al. 2024) and most
 production ingest pipelines gate "have we seen this document before?"
@@ -9,29 +9,28 @@ builds Bloom filters for runtime row-level join filtering, but does not
 expose ``bloom_filter_agg``/``might_contain`` as public routines — so
 this module builds the same structure out of public expressions:
 
-- the filter is ONE ROW holding ``n_bits/64`` longs (128 KiB at the
-  default 2^20 bits) — built by one aggregation over the history keys
-  (explode k probe positions -> bit_or per 64-bit word -> dense array),
-  broadcast to every executor as a single-row cross join (the
-  allowlisted one-row pattern);
+- the literal filter is ``n_bits/64`` longs (128 KiB at the default
+  2^20 bits), built by one aggregation over the history keys (explode k
+  probe positions -> bit_or per 64-bit word -> dense array) and carried
+  in the plan as one folded literal;
+- the partitioned filter (the scale form) is the TOUCHED words as
+  ``(word_idx, word)`` rows, probed by a broadcast join;
 - membership is k bit-tests, pure row-local expressions in the scan.
 
-Correctness contract: a Bloom filter has NO false negatives, so
-``incremental_exact_dedup_bloom`` is verdict-identical to the plain
-anti-join — rows failing ``might_contain`` are DEFINITELY new and skip
-the shuffle entirely; the (few) positives, true or false, still go
-through the exact anti-join. At 100 TB/day ingest with a mostly-novel
-stream, that turns the history-index shuffle from O(batch) into
-O(dups + eps*batch).
+Correctness contract: a Bloom filter has NO false negatives, so a gated
+probe is verdict-identical to the plain anti-join: keys failing
+``might_contain`` are DEFINITELY new and skip the shuffle; the (few)
+positives, true or false, still go through the exact anti-join
+(``dedup.incremental_minhash_dedup_with_banded``'s *band_gate* and
+*part_gate*, fed by ``streaming/neardup.py``'s sidecars).
 
 Sizing: with m bits and n keys, k = 5 hashes gives FP ~ (1-e^(-kn/m))^k;
-the 2^20-bit default stays under 1% FP to ~100k history keys. Size the
-filter at build time from the index count via :func:`bloom_size_for`
-(``incremental_exact_dedup_bloom`` does this when given a history
-count; a production deployment rebuilds the filter on compaction — it
-is a cache of the index, not state). An UNsized filter over an
-oversized history silently degrades to all-positives: still correct
-(the exact check runs), just no shuffle pruning.
+the 2^20-bit default stays under 1% FP to ~100k history keys. The
+streaming gate sizes the filter from the index count via
+:func:`bloom_size_for` (it is a cache of the index, not state). An
+UNsized filter over an oversized history silently degrades to
+all-positives: still correct (the exact check runs), just no shuffle
+pruning.
 
 xxhash64 probes are JVM-side and NOT DuckDB-reproducible, which is fine:
 the filter is an internal pruning structure, invisible in verdicts (the
@@ -197,35 +196,6 @@ def bloom_build_words(
     return dense
 
 
-def bloom_lit(words: list[int]) -> Column:
-    """*words* as ONE plan literal: ``from_json(lit(json))``, which
-    Catalyst constant-folds to a single ArrayData Literal evaluated by
-    reference. NOT ``F.lit(list)`` (a CreateArray tree with one node
-    per element — 118 s to build at 200k words, measured r10), not
-    ``F.lit(numpy)`` (per-element Py4J, 38 s), and never a crossJoined
-    one-row column (UnsafeRow COPIES the array into every joined
-    row)."""
-    import json
-
-    return F.from_json(F.lit(json.dumps(list(words))), "array<long>")
-
-
-def bloom_build(
-    keys: DataFrame,
-    key_col: str,
-    n_bits: int = N_BITS,
-    n_hashes: int = N_HASHES,
-) -> DataFrame:
-    """ONE-ROW DataFrame ``(bloom: array<long>)`` over every (non-NULL)
-    value of *key_col* — :func:`bloom_build_words` re-wrapped for
-    callers that want a relation (tests, ad-hoc inspection). Plan-side
-    consumers should embed :func:`bloom_lit` instead of joining this."""
-    words = bloom_build_words(keys, key_col, n_bits, n_hashes)
-    return keys.sparkSession.createDataFrame(
-        [(words,)], "bloom array<long>"
-    )
-
-
 def might_contain(
     key: Column,
     bloom: Column,
@@ -251,104 +221,6 @@ def might_contain(
         return (F.element_at(bloom, word).bitwiseAND(_bit_mask(pos))) != 0
 
     return F.forall(seeds, test)
-
-
-def incremental_exact_dedup_bloom(
-    new_df: DataFrame,
-    history: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    history_hash_col: str = "text_hash",
-    n_bits: int | None = None,
-    n_hashes: int = N_HASHES,
-    history_count: int | None = None,
-    target_fp: float = 0.01,
-    part_gate: "tuple[DataFrame, int, int] | None" = None,
-) -> DataFrame:
-    """Verdict-identical fast path for
-    :func:`tower_parse_spark.operators.dedup.incremental_exact_dedup`:
-    batch rows whose hash fails the history Bloom filter are DEFINITELY
-    new and bypass the anti-join shuffle; only Bloom positives (true
-    dups + the small FP mass) pay the exact check. No false negatives
-    by construction, so the output row set is exactly the plain path's
-    (pytest-pinned equivalence).
-
-    Geometry: pass *history_count* (callers tracking the index size —
-    e.g. a count persisted at compaction time — already have it) and
-    the filter is sized by :func:`bloom_size_for` at *target_fp*; an
-    explicit *n_bits* overrides. Only when BOTH are absent does the
-    fixed ``N_BITS`` default apply — correct at any history size, but
-    an oversized history degrades the gate to all-positives (no
-    pruning).
-
-    Driver bound (r11): when the AUTO-sized geometry exceeds
-    ``MAX_GATE_BITS`` (history past ~7M keys at the default FP), the
-    gate is skipped entirely and the call degrades to the plain
-    anti-join (:func:`~tower_parse_spark.operators.dedup.
-    incremental_exact_dedup`) — identical output, no driver-side
-    bitset. An explicit *n_bits* bypasses the cap (the caller owns the
-    driver/plan cost).
-
-    *part_gate* (r13, the streaming near-dup gate's scale form applied
-    to the exact path): a PREBUILT partitioned filter over the history
-    hashes as ``(words DataFrame (word_idx, word), n_bits, n_hashes)``
-    — e.g. maintained at compaction time with
-    :func:`bloom_delta_words`, never rebuilt per call and never on the
-    driver. When given, it replaces both the literal gate and the
-    over-cap plain-anti-join fallback: batch keys are pruned by
-    :func:`part_gate_filter` (no false negatives, so verdict-identical
-    — pytest-pinned) and only maybe-present rows pay the exact
-    anti-join. The per-call build sizing logic is deliberately NOT
-    applied to this path: building a partitioned filter per call costs
-    a groupBy shuffle comparable to the anti-join it would save — the
-    partitioned form only pays off persisted (see SCALE.md r13)."""
-    from pyspark.sql import Window as W
-
-    if part_gate is None and n_bits is None:
-        auto_bits = (
-            bloom_size_for(history_count, target_fp)
-            if history_count is not None
-            else N_BITS
-        )
-        if auto_bits > MAX_GATE_BITS:
-            from tower_parse_spark.operators.dedup import (
-                incremental_exact_dedup,
-            )
-
-            return incremental_exact_dedup(
-                new_df, history, id_col, text_col, history_hash_col
-            )
-        n_bits = auto_bits
-    hashed = new_df.withColumn("text_hash", F.md5(F.col(text_col)))
-    w_rank = F.row_number().over(W.partitionBy("text_hash").orderBy(id_col))
-    in_batch = (
-        hashed.withColumn("_rn", w_rank).filter(F.col("_rn") == 1).drop("_rn")
-    )
-    hist = history.select(
-        F.col(history_hash_col).alias("text_hash")
-    ).distinct()
-    if part_gate is not None:
-        p_words, p_bits, p_hashes = part_gate
-        maybe = part_gate_filter(
-            in_batch, "text_hash", p_words, p_bits, p_hashes
-        )
-        definitely_new = in_batch.join(
-            maybe.select("text_hash"), "text_hash", "left_anti"
-        )
-        survivors = maybe.join(hist, "text_hash", "left_anti")
-        return definitely_new.unionByName(survivors)
-    # the filter rides the plan as one folded literal (bloom_lit) — a
-    # crossJoined one-row bloom column would be COPIED into every batch
-    # row by UnsafeRow materialization (r10)
-    words = bloom_build_words(hist, "text_hash", n_bits, n_hashes)
-    gated = in_batch.withColumn(
-        "_maybe",
-        might_contain(F.col("text_hash"), bloom_lit(words), n_bits, n_hashes),
-    )
-    definitely_new = gated.filter(~F.col("_maybe")).drop("_maybe")
-    maybe = gated.filter(F.col("_maybe")).drop("_maybe")
-    survivors = maybe.join(hist, "text_hash", "left_anti")
-    return definitely_new.unionByName(survivors)
 
 
 def bloom_delta_words(

@@ -482,16 +482,15 @@ def classify_lang(
 
 
 # --------------------------------------------------------------------------
-# Model persistence — build once, score many (the pq.py index discipline)
+# Model persistence — train once, score many
 # --------------------------------------------------------------------------
 
 
 def _model_meta(kind: str, n_features: int) -> dict:
     """The hash-machinery parameters a saved model is only valid under:
     a different quantization scale or salt would silently produce
-    plausible-but-wrong verdicts (the IVF-PQ meta rationale,
-    operators/pq.py). n_features is MODEL DATA — restored on load, not
-    validated against the module constant."""
+    plausible-but-wrong verdicts. n_features is MODEL DATA — restored
+    on load, not validated against the module constant."""
     return {
         "kind": kind,
         "n_features": n_features,
@@ -513,28 +512,6 @@ def save_quality_model(model: NBModel, path: str) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
-def save_langid_model(model: MulticlassNB, path: str) -> None:
-    """Persist a trained :class:`MulticlassNB` langid model as a parquet
-    artifact: ``weights/`` + ``consts/`` + a one-row ``meta/`` sidecar
-    that also pins the CLASS LIST (index-aligned with every nlls/priors
-    array — restoring a different order would silently relabel every
-    verdict). Production trains once on the labeled slice and scores
-    every corpus against the artifact (the lm.py / quality-model
-    discipline; VERDICT r9 Next #4 — text_langid's in-query training is
-    the slowest non-streaming sweep entry, and scoring-only is the
-    deployment shape)."""
-    model.weights.write.mode("overwrite").parquet(f"{path}/weights")
-    model.consts.write.mode("overwrite").parquet(f"{path}/consts")
-    spark = model.weights.sparkSession
-    meta = dict(
-        _model_meta("langid_nb", model.n_features),
-        classes=list(model.classes),
-    )
-    spark.createDataFrame([meta]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/meta")
-
-
 def _check_model_meta(row, expected: dict, kind: str, path: str) -> None:
     """Raise unless every expected meta key is present AND equal on the
     saved row. A key ABSENT from the row is a mismatch too (ADVICE r10:
@@ -551,22 +528,6 @@ def _check_model_meta(row, expected: dict, kind: str, path: str) -> None:
             for k, (a, b) in sorted(mismatches.items())
         )
         raise ValueError(f"{kind} model at {path!r} is incompatible: {detail}")
-
-
-def load_langid_model(spark, path: str) -> MulticlassNB:
-    """Load a :func:`save_langid_model` artifact, validating the meta
-    sidecar against this build's hash machinery (mismatch OR absent
-    expected key raises — plausible-but-wrong verdicts otherwise) and
-    restoring the pinned class order."""
-    row = spark.read.parquet(f"{path}/meta").first()
-    expected = _model_meta("langid_nb", row["n_features"])
-    _check_model_meta(row, expected, "langid", path)
-    return MulticlassNB(
-        classes=tuple(row["classes"]),
-        weights=spark.read.parquet(f"{path}/weights"),
-        consts=spark.read.parquet(f"{path}/consts"),
-        n_features=row["n_features"],
-    )
 
 
 def load_quality_model(spark, path: str) -> NBModel:

@@ -259,28 +259,6 @@ def lsh_pairs_from_banded(
     )
 
 
-def build_minhash_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_fn: str = "fast",
-) -> None:
-    """Materialize the corpus's banded-signature INDEX: ``(band_key, id,
-    mh)`` parquet — |docs| × bands rows of ~60 bytes. This is the
-    incremental-near-dup counterpart of the exact-dedup hash index:
-    tomorrow's batch probes these signatures, never the documents
-    (100 TB of history is represented by |history| × bands small rows).
-    No partitionBy: band keys are uniform md5 values, so a batch probes
-    the whole key space anyway — pruning has nothing to prune, and a
-    per-key layout would create |docs|×bands directories. hash_fn
-    defaults to the production "fast" family (index and probes must use
-    the SAME family — it is baked into the stored signatures)."""
-    banded_signatures(df, id_col, text_col, hash_fn=hash_fn).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
 def incremental_minhash_dedup(
     new_df: DataFrame,
     index: DataFrame,
@@ -292,8 +270,8 @@ def incremental_minhash_dedup(
     """NEAR-duplicate dedup of a NEW batch against an indexed corpus —
     the daily-ingest shape for fuzzy dedup (the exact counterpart is
     :func:`incremental_exact_dedup`). *index* is the banded-signature
-    relation (``spark.read.parquet`` of a :func:`build_minhash_index`
-    path).
+    relation: :func:`banded_signatures` rows of the indexed corpus, or
+    a read of the index ``streaming/neardup.py`` maintains.
 
     Scale shape (batch ≪ history): the BATCH's banded signatures are
     broadcast and the index STREAMS through the join — one scan of
@@ -310,15 +288,15 @@ def incremental_minhash_dedup(
       candidates this is per-pair, not transitively closed — chains
       a~b~c keep a, as the pairwise threshold intends).
 
-    Survivors = ``filter(~is_dup & ~in_batch_dup)``; append their banded
-    rows via :func:`append_minhash_index` to advance the state — without
-    the in-batch stage, N copies of new boilerplate in one batch would
-    all survive and be indexed forever.
+    Survivors = ``filter(~is_dup & ~in_batch_dup)``; appending their
+    banded rows advances the state (``streaming/neardup.py`` does, per
+    epoch) — without the in-batch stage, N copies of new boilerplate in
+    one batch would all survive and be indexed forever.
 
     The probe's *hash_fn* must be the family the index was built with —
     it is baked into the stored signatures, so a mismatch would silently
     never collide. The index carries its family in the ``hash_fn``
-    column (written by :func:`build_minhash_index`); this function
+    column (written by :func:`banded_signatures`); this function
     validates it and raises on mismatch.
     """
     verdicts, _ = incremental_minhash_dedup_with_banded(
@@ -494,44 +472,6 @@ def incremental_minhash_dedup_with_banded(
         )
     )
     return verdicts, batch_banded
-
-
-def append_minhash_index(
-    survivors: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_fn: str = "fast",
-) -> None:
-    """Append a deduped batch's banded signatures to the index —
-    existing rows are never rewritten (``mode("append")``), so the index
-    grows by |batch| × bands rows per day and the next batch sees
-    yesterday's survivors.
-
-    The append validates *hash_fn* against the existing index before
-    writing (ADVICE r6): appending with a different family would create
-    a MIXED index whose new rows never collide with probes — and since
-    the probe-side check samples one arbitrary row, a mixed index could
-    still pass it. Guarding the only write path that could mix families
-    keeps every stored index single-family by construction."""
-    from pyspark.errors import AnalysisException
-
-    spark = survivors.sparkSession
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException:
-        existing = None  # first append: nothing to validate against
-    if existing is not None and "hash_fn" in existing.columns:
-        fam_row = existing.select("hash_fn").first()
-        if fam_row is not None and fam_row["hash_fn"] != hash_fn:
-            raise ValueError(
-                f"index was built with hash_fn={fam_row['hash_fn']!r} but "
-                f"the probe uses {hash_fn!r} — band keys would never "
-                "collide; pass the index's family"
-            )
-    banded_signatures(
-        survivors, id_col, text_col, hash_fn=hash_fn
-    ).write.mode("append").parquet(path)
 
 
 def source_minhash_overlap(

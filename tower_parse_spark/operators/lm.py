@@ -168,7 +168,7 @@ def train_bigram_lm(ref: DataFrame, text_col: str = "text") -> BigramLM:
 
 # --------------------------------------------------------------------------
 # Model persistence — train once (offline), score every batch
-# (the classifier.py::save_quality_model / pq.py index discipline)
+# (the classifier.py::save_quality_model discipline)
 # --------------------------------------------------------------------------
 
 #: Tokenizer normalization class — model data's implicit contract: an LM

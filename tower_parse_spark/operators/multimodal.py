@@ -451,45 +451,6 @@ def features_stub(payload: bytes, dim: int = 4) -> list[float]:
     return [float((n * (j + 3)) % 97) / 97.0 for j in range(dim)]
 
 
-def resize_ppm(payload: bytes, target_w: int, target_h: int) -> bytes:
-    """REAL resize of a P6 PPM with numpy only: area (block-mean)
-    downsampling over linspace cell boundaries per channel, re-encoded
-    as a P6 payload — the hermetic twin of PIL resize + re-encode.
-    Upsampling repeats source cells (the degenerate block is the
-    nearest pixel), so any target size is valid."""
-    import numpy as np
-
-    w, h, rgb = _parse_ppm(payload)
-    ys = np.linspace(0, h, target_h + 1).astype(int)
-    xs = np.linspace(0, w, target_w + 1).astype(int)
-    out = np.empty((target_h, target_w, 3), dtype=np.uint8)
-    f = rgb.astype(np.float64)
-    for r in range(target_h):
-        y0, y1 = ys[r], max(ys[r + 1], ys[r] + 1)
-        for c in range(target_w):
-            x0, x1 = xs[c], max(xs[c + 1], xs[c] + 1)
-            out[r, c] = f[y0:y1, x0:x1].mean(axis=(0, 1)).round()
-    header = f"P6\n{target_w} {target_h}\n255\n".encode()
-    return header + out.tobytes()
-
-
-def features_ppm(payload: bytes) -> list[float]:
-    """REAL 6-dim pixel features of a P6 PPM (per-channel mean and
-    standard deviation, each scaled to [0, 1]) — actual image
-    statistics where :func:`features_stub` is byte-length arithmetic.
-    The hermetic stand-in for a learned extractor: enough to make
-    embedding-cosine plumbing behave like real features do (identical
-    images collide, brightness shifts move the means, noise moves the
-    stds)."""
-    import numpy as np
-
-    _, _, rgb = _parse_ppm(payload)
-    f = rgb.reshape(-1, 3).astype(np.float64)
-    means = f.mean(axis=0) / 255.0
-    stds = f.std(axis=0) / 255.0
-    return [round(float(v), 6) for v in (*means, *stds)]
-
-
 def frame_sample_stub(payload: bytes, n_frames: int = 3) -> list[int]:
     """Deterministic fake video frame sampling: n byte offsets spread
     evenly (stands in for ffmpeg keyframe extraction)."""

@@ -78,21 +78,12 @@ def with_pack_id(
     )
 
 
-#: grouped-mode driver-plan bound: the offset create_map holds
-#: groups x buckets literal entries in the PLAN; past ~100k entries the
-#: plan itself becomes driver-memory- and analysis-time-hostile. The
-#: guard turns that misuse into a named error pointing at the window
-#: form (which needs no driver state) instead of a silent driver OOM.
-MAX_OFFSET_ENTRIES = 100_000
-
-
 def with_global_row_scalable(
     df: DataFrame,
     order_col: str,
     tiebreak_col: str | None = None,
     num_buckets: int | None = None,
     reuse: str = "checkpoint",
-    group_col: str | None = None,
     index_col: str = "_grow",
     total_col: str | None = None,
     descending: bool = False,
@@ -106,18 +97,8 @@ def with_global_row_scalable(
     funnels every row through ONE task (Spark prints "Moving all data to
     a single partition"); this computes the identical index
     partition-parallel. With *total_col*, also attaches the total row
-    count (per group when grouped) as a plan literal — rank arithmetic
-    like exact ntile needs it (:func:`ntile_expr`) and pass 2 already
-    has it for free.
-
-    With *group_col*, the same three-pass value-bucketed indexing runs
-    PER GROUP (bounds, counts, and offsets keyed by group) — the fix for
-    a skewed group that would serialize through one window task in
-    :func:`with_pack_id` (the reference's real deployments have a
-    handful of `level` groups carrying 20 Hz each). Driver state is
-    O(groups x buckets) bounds/offsets — fine for realistic group
-    cardinalities; for millions of groups use the plain window form,
-    which is already parallel at that cardinality.
+    count as a plan literal — rank arithmetic like exact ntile needs it
+    (:func:`ntile_expr`) and pass 2 already has it for free.
 
     Value-based three-pass global indexing (never trusts physical
     partition ids, which are not stable across jobs):
@@ -152,7 +133,6 @@ def with_global_row_scalable(
         F.col(order_col).desc() if descending else F.col(order_col)
     ] + ([F.col(tiebreak_col)] if tiebreak_col else [])
     parts = num_buckets or spark.sparkContext.defaultParallelism
-    gcols = [group_col] if group_col else []
 
     def _bucket_for(bounds: list) -> F.Column:
         if not bounds:
@@ -180,100 +160,37 @@ def with_global_row_scalable(
             + F.coalesce((F.col(order_col) >= b).cast("int"), F.lit(0)),
         )
 
-    # NULL-safe group key for dict/map lookups (a corrupt group value is
-    # its own group, same as the window form's PARTITION BY semantics)
-    _NULL = "\x00null"
-    gkey_expr = (
-        F.coalesce(F.col(group_col).cast("string"), F.lit(_NULL))
-        if group_col
-        else None
-    )
-
-    # Pass 1: boundary literals (deterministic once collected), per group
-    # when grouped. With a single bucket there are no boundaries — skip
-    # the pass (percentile_approx rejects an empty percentage array).
+    # Pass 1: boundary literals (deterministic once collected). With a
+    # single bucket there are no boundaries — skip the pass
+    # (percentile_approx rejects an empty percentage array).
     if parts < 2:
-        bounds_by_g: dict = {None: []}
-    elif group_col:
-        qs = [i / parts for i in range(1, parts)]
-        rows = (
-            df.groupBy(group_col)
-            .agg(F.percentile_approx(order_col, qs, 10000).alias("b"))
-            .collect()
-        )
-        bounds_by_g = {
-            (_NULL if r[group_col] is None else str(r[group_col])): sorted(
-                set(r["b"] or [])
-            )
-            for r in rows
-        }
+        bounds: list = []
     else:
         qs = [i / parts for i in range(1, parts)]
-        b = (
+        bounds = sorted(set(
             df.select(
                 F.percentile_approx(order_col, qs, 10000).alias("b")
             ).collect()[0]["b"]
             or []
-        )
-        bounds_by_g = {None: sorted(set(b))}
+        ))
+    bucketed = df.withColumn("_bkt", _bucket_for(bounds))
 
-    if group_col:
-        bucket = F.lit(0)
-        for g, bs in bounds_by_g.items():
-            bucket = F.when(gkey_expr == F.lit(g), _bucket_for(bs)).otherwise(
-                bucket
-            )
-    else:
-        bucket = _bucket_for(bounds_by_g[None])
-    bucketed = df.withColumn("_bkt", bucket)
+    # Pass 2: per-bucket counts -> cumulative offsets (tiny).
+    offsets: dict[int, int] = {}
+    running = 0
+    for row in sorted(
+        bucketed.groupBy("_bkt").count().collect(), key=lambda r: r["_bkt"]
+    ):
+        offsets[row["_bkt"]] = running
+        running += row["count"]
+    offset_col = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
 
-    # Pass 2: per-(group, bucket) counts -> cumulative offsets (tiny).
-    counts = bucketed.groupBy(*gcols, "_bkt").count().collect()
-    if group_col:
-        by_group: dict[str, list] = {}
-        for row in counts:
-            g = _NULL if row[group_col] is None else str(row[group_col])
-            by_group.setdefault(g, []).append((row["_bkt"], row["count"]))
-        offset_entries: list = []
-        total_by_g: dict[str, int] = {}
-        for g, items in by_group.items():
-            running = 0
-            for bkt, n in sorted(items):
-                offset_entries += [f"{g}\x1f{bkt}", running]
-                running += n
-            total_by_g[g] = running
-        if len(offset_entries) > 2 * MAX_OFFSET_ENTRIES:
-            raise ValueError(
-                f"with_global_row_scalable grouped mode builds a "
-                f"plan-literal offset map of {len(offset_entries) // 2} "
-                f"(group, bucket) entries — over the {MAX_OFFSET_ENTRIES} "
-                f"driver-plan bound. For high-cardinality groups use the "
-                f"plain per-group window (with_pack_id window form): it "
-                f"needs no driver state at all."
-            )
-        offset_col = F.create_map(*[F.lit(x) for x in offset_entries])
-        okey = F.concat_ws("\x1f", gkey_expr, F.col("_bkt").cast("string"))
-        total_expr = F.create_map(
-            *[F.lit(x) for kv in total_by_g.items() for x in kv]
-        )[gkey_expr]
-    else:
-        offsets: dict[int, int] = {}
-        running = 0
-        for row in sorted(counts, key=lambda r: r["_bkt"]):
-            offsets[row["_bkt"]] = running
-            running += row["count"]
-        offset_col = F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        )
-        okey = F.col("_bkt")
-        total_expr = F.lit(running)
-
-    # Pass 3: local row number within the (group, bucket) + frozen offset.
-    w_local = W.partitionBy(*gcols, "_bkt").orderBy(*order_exprs)
-    global_row = offset_col[okey] + F.row_number().over(w_local) - 1
+    # Pass 3: local row number within the bucket + frozen offset.
+    w_local = W.partitionBy("_bkt").orderBy(*order_exprs)
+    global_row = offset_col[F.col("_bkt")] + F.row_number().over(w_local) - 1
     out = bucketed.withColumn(index_col, global_row.cast("long")).drop("_bkt")
     if total_col is not None:
-        out = out.withColumn(total_col, total_expr.cast("long"))
+        out = out.withColumn(total_col, F.lit(running).cast("long"))
     return out
 
 
@@ -284,19 +201,17 @@ def with_pack_id_scalable(
     tiebreak_col: str | None = None,
     num_buckets: int | None = None,
     reuse: str = "checkpoint",
-    group_col: str | None = None,
 ) -> DataFrame:
     """Pack assignment without a single-partition window — the pack-shaped
     view of :func:`with_global_row_scalable` (identical output to
     :func:`with_pack_id`, partition-parallel; see that primitive for the
-    three-pass mechanics, grouped mode, and the *reuse* trade)."""
+    three-pass mechanics and the *reuse* trade)."""
     indexed = with_global_row_scalable(
         df,
         order_col,
         tiebreak_col=tiebreak_col,
         num_buckets=num_buckets,
         reuse=reuse,
-        group_col=group_col,
         index_col="_grow",
     )
     return (

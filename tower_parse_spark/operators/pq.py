@@ -32,8 +32,6 @@ BOTH engines; argmin tie-break is first-minimum on both
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -44,7 +42,6 @@ from tower_parse_spark.operators.similarity import (
     IVF_NPROBE,
     _cosine_rank,
     _explode_probe_cells,
-    _repartition_cells,
     _with_centroid_scores,
     assign_cells,
     lattice_centroids,
@@ -297,14 +294,14 @@ def with_residual(
     """Attach the cell-relative residual ``out[i] = v[i] - mean_v[i]``
     via a broadcast join on the (tiny) per-cell mean table. LEFT join
     with a ZERO-MEAN fallback: a row whose cell has no mean entry keeps
-    its RAW vector as the residual. Matters on both sides of the frozen-
-    means append path — an appended vector landing in a cell that was
-    empty at build time would otherwise be written with all-NULL codes,
-    and a probe of that cell would carry a NULL ADC table whose NULL
-    distances rank FIRST (ascending) and displace real neighbors.
-    Encode and probe fall back identically, so ADC on such cells is
-    plain (non-residual) PQ — consistent, deterministic, and reported by
-    :func:`append_ivfpq_index` as ``n_zero_mean_rows``."""
+    its RAW vector as the residual. Matters whenever the means come
+    from another corpus than the rows (frozen *means* passed to
+    :func:`encode_ivfpq`, or a probe of a cell no corpus row fell in):
+    a vector in a cell without a mean would otherwise be written with
+    all-NULL codes, and a probe of that cell would carry a NULL ADC
+    table whose NULL distances rank FIRST (ascending) and displace real
+    neighbors. Encode and probe fall back identically, so ADC on such
+    cells is plain (non-residual) PQ — consistent and deterministic."""
     return (
         df.join(F.broadcast(means), cell_col, "left")
         .withColumn(
@@ -345,15 +342,15 @@ def encode_ivfpq(
     residual: bool = True,
     means: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """The IVF-PQ corpus side, shared by the inline query, the index
-    builder and the incremental append: (normalize ->) assign cells ->
+    """The IVF-PQ corpus side of :func:`ivfpq_topk`: (normalize ->)
+    assign cells ->
     (residual vs cell means ->) PQ-encode. Returns ``(encoded, means)``
     where encoded = (id, cell, codes) behind a materialization barrier
     and means is the per-cell mean table (None when residual=False).
 
-    Pass *means* to encode against FROZEN reproduction values — the
-    append path, where new vectors must use the means the existing codes
-    were built with, never recomputed ones."""
+    Pass *means* to encode against FROZEN reproduction values — new
+    vectors that must share the means existing codes were built with,
+    never recomputed ones."""
     c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("cv"))
     if normalize:
         c = _normed(c, "cv")
@@ -375,8 +372,7 @@ def encode_ivfpq(
     # codegen defers streamed-side column evaluation into the per-match
     # loop, so without the barrier the whole encode expression ran once
     # per PAIR instead of per row (measured 8-16x: 31 s -> 4 s on the
-    # 256-probe 100k smoke). The prebuilt-index deployment gets the same
-    # barrier from parquet.
+    # 256-probe 100k smoke).
     c = (
         with_pq_codes(c, enc_col, dim, codebooks=codebooks)
         .select(id_col, "cell", "codes")
@@ -397,8 +393,8 @@ def probe_adc_tables(
     residual: bool = True,
     means: DataFrame | None = None,
 ) -> DataFrame:
-    """The IVF-PQ probe side, shared by the inline query and the
-    prebuilt-index probe: (normalize ->) score cells -> explode to
+    """The IVF-PQ probe side of :func:`ivfpq_topk`: (normalize ->)
+    score cells -> explode to
     probed cells -> stage the ADC table (per probe, or per (probe,
     probed cell) in residual mode). Returns (probe_id, cell, pt, qsq)."""
     p = probes.select(
@@ -427,7 +423,7 @@ def _adc_rank(
     id_col: str,
     probe_id_col: str,
 ) -> DataFrame:
-    """Shared ADC scoring + rank tail (inline and prebuilt paths)."""
+    """ADC scoring + rank tail of :func:`ivfpq_topk`."""
     scored = enc.join(F.broadcast(p), "cell").select(
         probe_id_col,
         id_col,
@@ -470,8 +466,7 @@ def ivfpq_topk(
     raw vectors. The corpus side carries (id, cell, M codes) ONLY — the
     raw vector is dropped after encoding, so the join/shuffle payload is
     the compressed representation (at 10^9 vectors: the inverted lists
-    store M bytes + id per entry; cell id is the partition key exactly
-    as in similarity.build_ivf_index).
+    store M bytes + id per entry, keyed by cell id).
 
     Returns (probe_id, id, adc_dist, rank) — rank ascending by the
     approximate squared L2 (deterministic id tie-break).
@@ -550,226 +545,6 @@ def ivfpq_topk(
     # probe_id attaches pv/pn per pair, then the shared rank tail scores
     # exactly and cuts to k
     return _cosine_rank(cv, pv, k, id_col, probe_id_col, on=probe_id_col)
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
-    residual: bool = True,
-    files_per_cell: int = 1,
-) -> None:
-    """Materialize the IVF-PQ index: ``{path}/codes`` = (id, M codes)
-    parquet partitioned by cell — the compressed inverted lists, M
-    bytes + id per vector instead of 4·dim raw bytes — plus
-    ``{path}/means`` = the per-cell reproduction values the residual
-    codes were built against (tiny sidecar; probes MUST use these, so
-    they ship with the index). At 10^9 vectors this is the deployment:
-    the raw corpus is scanned once at build, every probe batch reads
-    only probed-cell code files (partition pruning), and the index is
-    ~dim·4/M× smaller than a raw-vector IVF index."""
-    cents = centroids if centroids is not None else lattice_centroids(dim, IVF_K)
-    books = codebooks if codebooks is not None else lattice_codebooks(dim)
-    enc, means = encode_ivfpq(
-        corpus, dim, cents, books,
-        id_col=id_col, vec_col=vec_col,
-        normalize=normalize, residual=residual,
-    )
-    enc = _repartition_cells(enc, id_col, files_per_cell)
-    enc.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(path, "codes")
-    )
-    if means is not None:
-        # one file: IVF_K rows of (cell, dim doubles)
-        means.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "means")
-        )
-    # self-describing index: build flags + quantizer fingerprints ride
-    # with the data so a mismatched probe/append fails loudly
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [_index_meta(dim, cents, books, normalize, residual)]
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "meta"))
-
-
-def _read_means(spark, path: str, residual: bool) -> DataFrame | None:
-    return (
-        spark.read.parquet(os.path.join(path, "means")) if residual else None
-    )
-
-
-def _index_meta(
-    dim: int,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    normalize: bool,
-    residual: bool,
-) -> dict:
-    """The build-time parameters an IVF-PQ index is only valid under.
-    Centroids/codebooks are fingerprinted (md5 of the 9-dp-rounded JSON)
-    rather than stored: equality is all a probe needs to check."""
-    import hashlib
-    import json
-
-    def fp(obj) -> str:
-        return hashlib.md5(
-            json.dumps(obj, separators=(",", ":")).encode()
-        ).hexdigest()
-
-    return {
-        "dim": dim,
-        "normalize": normalize,
-        "residual": residual,
-        "m_sub": len(codebooks),
-        "k_codes": len(codebooks[0]),
-        "centroid_fp": fp([[round(x, 9) for x in c] for c in centroids]),
-        "codebook_fp": fp(
-            [[[round(x, 9) for x in c] for c in b] for b in codebooks]
-        ),
-    }
-
-
-def _validate_index_meta(spark, path: str, expected: dict, op: str) -> None:
-    """Raise when the caller's flags/quantizer disagree with the meta
-    sidecar the index was built with (ADVICE r6): e.g. a residual=False
-    probe of a residual-built index would silently return
-    plausible-but-wrong neighbors. Pre-meta indexes (NO sidecar at all)
-    skip validation for back-compat — rebuild to opt in; but a sidecar
-    that EXISTS with expected keys absent is a foreign/older writer and
-    fails like a value mismatch (r11, the classifier-loader ADVICE
-    applied here too — present-but-incomplete meta must not load as
-    compatible)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.parquet(os.path.join(path, "meta")).first()
-    except AnalysisException:
-        return  # index predates the meta sidecar (no meta dir)
-    if row is None:
-        return
-    mismatches = {
-        k: ((row[k] if k in row.__fields__ else "<absent>"), expected[k])
-        for k in expected
-        if k not in row.__fields__ or row[k] != expected[k]
-    }
-    if mismatches:
-        detail = ", ".join(
-            f"{k}: index={a!r} caller={b!r}" for k, (a, b) in mismatches.items()
-        )
-        raise ValueError(
-            f"{op}: parameters disagree with the index's meta sidecar "
-            f"({detail}) — pass the flags/centroids/codebooks the index "
-            "was built with, or rebuild it"
-        )
-
-
-def ivfpq_topk_prebuilt(
-    spark,
-    path: str,
-    probes: DataFrame,
-    dim: int,
-    k: int = 5,
-    nprobe: int = IVF_NPROBE,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    normalize: bool = True,
-    residual: bool = True,
-) -> DataFrame:
-    """Pure-ADC top-k against a :func:`build_ivfpq_index` index: only
-    the probe side is computed; the code scan reads just the probed
-    cells (collected driver-side into a partition-pruning predicate —
-    bounded state, |probes| × nprobe ints, same posture as
-    ivf_topk_prebuilt). *centroids*/*codebooks* must be the set the
-    index was built with; the residual means come from the index's own
-    sidecar. Bit-identical to inline ``ivfpq_topk`` with rerank=None
-    (tests/test_pq.py locks the parity)."""
-    cents = centroids if centroids is not None else lattice_centroids(dim, IVF_K)
-    books = codebooks if codebooks is not None else lattice_codebooks(dim)
-    _validate_index_meta(
-        spark,
-        path,
-        _index_meta(dim, cents, books, normalize, residual),
-        "ivfpq_topk_prebuilt",
-    )
-    nprobe = min(nprobe, len(cents))
-    means = _read_means(spark, path, residual)
-    p = probe_adc_tables(
-        probes, dim, cents, codebooks, nprobe,
-        probe_id_col=probe_id_col, vec_col=vec_col,
-        normalize=normalize, residual=residual, means=means,
-    ).localCheckpoint(eager=True)
-    # NULL cells come from degenerate probes (NULL/empty/zero vectors —
-    # normalization yields NULL, so cell scoring does too): skip them in
-    # the pruning predicate instead of crashing int(None); the probes
-    # themselves drop at the equi-join exactly as in the inline path
-    cells = [
-        int(r["cell"])
-        for r in p.select("cell").distinct().collect()
-        if r["cell"] is not None
-    ]
-    enc = spark.read.parquet(os.path.join(path, "codes")).filter(
-        F.col("cell").isin(cells)
-    )
-    return _adc_rank(enc, p, k, books, id_col, probe_id_col)
-
-
-def append_ivfpq_index(
-    new_corpus: DataFrame,
-    path: str,
-    dim: int,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
-    residual: bool = True,
-    files_per_cell: int = 1,
-) -> dict:
-    """Incrementally append NEW vectors to an IVF-PQ index: encode with
-    the FROZEN quantizer, codebooks AND the index's own mean sidecar
-    (recomputing means would silently disagree with every existing
-    code), write additional part files into the ``cell=N`` layout.
-    Existing lists are never rewritten. Returns ``{"n_appended"}``;
-    quantizer-drift monitoring is the same rule as
-    :func:`similarity.append_ivf_index` — run that report on the raw
-    batch when a retrain policy is attached."""
-    spark = new_corpus.sparkSession
-    cents = centroids if centroids is not None else lattice_centroids(dim, IVF_K)
-    books = codebooks if codebooks is not None else lattice_codebooks(dim)
-    _validate_index_meta(
-        spark,
-        path,
-        _index_meta(dim, cents, books, normalize, residual),
-        "append_ivfpq_index",
-    )
-    means = _read_means(spark, path, residual)
-    enc, _ = encode_ivfpq(
-        new_corpus, dim, cents, books,
-        id_col=id_col, vec_col=vec_col,
-        normalize=normalize, residual=residual, means=means,
-    )
-    out = _repartition_cells(enc, id_col, files_per_cell)
-    out.write.mode("append").partitionBy("cell").parquet(
-        os.path.join(path, "codes")
-    )
-    # drift signal: appended rows landing in cells the build-time means
-    # sidecar has never seen were encoded with the zero-mean fallback
-    # (plain PQ, see with_residual) — a growing fraction here means the
-    # data moved into regions empty at build time; fold it into the same
-    # retrain policy as append_ivf_index's cosine drift report
-    n_zero_mean = 0
-    if residual and means is not None:
-        known = [r["cell"] for r in means.select("cell").collect()]
-        n_zero_mean = enc.filter(~F.col("cell").isin(known)).count()
-    return {"n_appended": enc.count(), "n_zero_mean_rows": n_zero_mean}
 
 
 def pq_train_codebooks(

@@ -240,7 +240,7 @@ def assign_cells(
     """Assign each row its nearest-centroid cell id (1-based).
 
     The one cell-assignment implementation in the tree — ivf_topk's
-    corpus side, kmeans assignment checks, and the prebuilt index all go
+    corpus side, IVF-PQ's encode and kmeans assignment checks all go
     through the same staged single-fold scoring
     (:func:`_with_centroid_scores`), so there is exactly one code path
     to keep the bit-parity tests over (VERDICT r4 item 7; the older
@@ -363,8 +363,8 @@ def _cosine_rank(
     bucket / IVF cell) or a full nested loop for the exact baseline —
     score each pair with one dot fold + two staged norm reads, and rank
     with a per-probe window (WindowGroupLimit pushes the k cut below
-    the sort). One implementation keeps the four public paths (brute,
-    LSH, IVF, and their prebuilt-index twins) bit-identical."""
+    the sort). One implementation keeps the three public paths (brute,
+    LSH, IVF) bit-identical."""
     joined = (
         c.join(F.broadcast(p), on) if on is not None else c.join(F.broadcast(p))
     )
@@ -452,229 +452,3 @@ def hyperplane_lsh_topk(
     )
     p = _explode_multiprobe(p, planes, multiprobe)
     return _cosine_rank(c, p, k, id_col, probe_id_col, on="bucket")
-
-
-# ---- build-once / probe-many indexes --------------------------------------
-#
-# The inline ivf_topk / hyperplane_lsh_topk re-derive the corpus-side
-# cell/bucket + norm on every invocation — correct, but at 10^9 vectors
-# the index is built ONCE and probed many times (VERDICT r4 item 3; the
-# deployment the ivf_topk docstring promises). build_* materializes the
-# corpus side as parquet PARTITIONED BY the cell/bucket id;
-# *_topk_prebuilt computes only the probe side and reads just the probed
-# partitions — the partition-pruning path a 1000-executor cluster needs,
-# exercised for real on local[32] (the scan's PartitionFilters carries
-# cell IN (...)).
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    centroids: list[list[float]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    files_per_cell: int = 1,
-) -> None:
-    """Materialize the IVF inverted lists: (id, vector, norm) parquet,
-    partitioned by 1-based cell id. One distributed pass (the same
-    staged single-fold scoring as the inline path — bit-identical cell
-    assignments and norms), written with the file-sink commit protocol,
-    so a probe never sees a half-built index."""
-    cents = centroids if centroids is not None else lattice_centroids(dim, IVF_K)
-    c = assign_cells(
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("cv")),
-        "cv",
-        cents,
-        out="cell",
-        out_norm="cn",
-    )
-    c = _repartition_cells(c, id_col, files_per_cell)
-    c.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def append_ivf_index(
-    new_corpus: DataFrame,
-    path: str,
-    dim: int,
-    centroids: list[list[float]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    files_per_cell: int = 1,
-    drift_floor: float = 0.3,
-    retrain_frac: float = 0.1,
-) -> dict:
-    """Incrementally append NEW vectors to a :func:`build_ivf_index`
-    index (VERDICT r5 item 4): assign with the FROZEN quantizer (the
-    centroids the index was built with — never retrained here, or the
-    existing inverted lists would silently disagree), write additional
-    part files into the same ``cell=N`` partition directories
-    (``mode("append")`` — yesterday's lists are never rewritten or
-    re-read), and report quantizer drift.
-
-    Drift check: a vector whose best-cell cosine falls below
-    *drift_floor* is poorly represented by every centroid — the
-    quantizer predates its distribution. Returns ``{"n_appended",
-    "drift_frac", "advise_retrain"}`` with ``advise_retrain=True`` when
-    more than *retrain_frac* of the batch is below the floor; the caller
-    then schedules a rebuild with retrained centroids. Calibrate
-    *drift_floor* to the quantizer: a low percentile (e.g. p5) of the
-    BUILD corpus's best-cell cosine — trained kmeans cells align well
-    with their members (default 0.3 fits), while weakly-aligned
-    quantizers need a lower floor or every batch reads as drifted. The stats ride
-    the SAME assignment pass as the write (localCheckpoint barrier), so
-    the batch is scanned once."""
-    cents = centroids if centroids is not None else lattice_centroids(dim, IVF_K)
-    df = _with_centroid_scores(
-        new_corpus.select(
-            F.col(id_col), as_double(F.col(vec_col)).alias("cv")
-        ),
-        "cv",
-        cents,
-        out="_asc",
-        out_norm="cn",
-    )
-    assigned = df.withColumns(
-        {
-            "cell": F.coalesce(
-                F.array_position(F.col("_asc"), F.array_max(F.col("_asc"))),
-                F.lit(0).cast("long"),
-            ),
-            "_best": F.array_max(F.col("_asc")),
-        }
-    ).drop("_asc").localCheckpoint(eager=False)
-    out = _repartition_cells(assigned.drop("_best"), id_col, files_per_cell)
-    out.write.mode("append").partitionBy("cell").parquet(path)
-    stats = assigned.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(
-                F.col("_best").isNull() | (F.col("_best") < drift_floor), 1
-            ).otherwise(0)
-        ).alias("n_drift"),
-    ).collect()[0]
-    n, n_drift = stats["n"], stats["n_drift"] or 0
-    frac = (n_drift / n) if n else 0.0
-    return {
-        "n_appended": n,
-        "drift_frac": round(frac, 4),
-        "advise_retrain": frac > retrain_frac,
-    }
-
-
-def ivf_topk_prebuilt(
-    spark,
-    path: str,
-    probes: DataFrame,
-    dim: int,
-    k: int = 5,
-    nprobe: int = IVF_NPROBE,
-    centroids: list[list[float]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """ivf_topk against a :func:`build_ivf_index` index: only the probe
-    side is computed; the corpus scan reads just the probed cells.
-
-    *centroids* must be the set the index was built with. The probed
-    cell ids are collected driver-side to form the pruning predicate —
-    bounded driver state (|probes| x nprobe ints, same posture as pack
-    offsets), and the price of turning the cell filter into parquet
-    PartitionFilters instead of a full-index scan. Results are
-    bit-identical to the inline ivf_topk (same staged scoring, same
-    rank tail — tests/test_similarity.py locks the parity)."""
-    cents = centroids if centroids is not None else lattice_centroids(dim, IVF_K)
-    nprobe = min(nprobe, len(cents))
-    p = _with_centroid_scores(
-        probes.select(
-            F.col(probe_id_col), as_double(F.col(vec_col)).alias("pv")
-        ),
-        "pv",
-        cents,
-        out="sc0",
-        out_norm="pn",
-    )
-    p = _explode_probe_cells(p, nprobe).localCheckpoint(eager=True)
-    # degenerate probes (NULL/empty/zero vectors) carry NULL cells:
-    # exclude them from the pruning predicate (int(None) would raise) —
-    # they drop at the cell equi-join exactly as in the inline path
-    cells = [
-        int(r["cell"])
-        for r in p.select("cell").distinct().collect()
-        if r["cell"] is not None
-    ]
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    return _cosine_rank(idx, p, k, id_col, probe_id_col, on="cell")
-
-
-def _repartition_cells(
-    df: DataFrame, id_col: str, files_per_cell: int
-) -> DataFrame:
-    """One shuffle on the cell key so each cell is one file, not
-    input-partitions x cells fragments; at 10^9+ vectors raise
-    *files_per_cell* so a cell spans several parallel-readable files.
-    SHARED by build and append on both the IVF and IVF-PQ layouts — the
-    bucketing scheme must be identical or the two write paths silently
-    diverge within one index."""
-    if files_per_cell > 1:
-        return df.repartition(
-            F.col("cell"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_cell)),
-        )
-    return df.repartition(F.col("cell"))
-
-
-def build_lsh_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    planes: int = LSH_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the LSH-bucketed corpus: (id, vector, norm) parquet,
-    partitioned by bucket id (2^planes partitions — keep planes <= ~12
-    for a file-per-bucket layout; beyond that, bucket the table
-    instead)."""
-    c = (
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("cv"))
-        .withColumn("bucket", bucket_expr(F.col("cv"), dim, planes))
-        .withColumn("cn", norm(F.col("cv")))
-    )
-    c = c.repartition(F.col("bucket"))
-    c.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def lsh_topk_prebuilt(
-    spark,
-    path: str,
-    probes: DataFrame,
-    dim: int,
-    k: int = 5,
-    planes: int = LSH_PLANES,
-    multiprobe: bool | int = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """hyperplane_lsh_topk against a :func:`build_lsh_index` index:
-    probe buckets (plus the multiprobe Hamming ball) become a
-    partition-pruning IN predicate; only those buckets are read.
-    Bit-identical to the inline path (same bucket expr, same rank
-    tail)."""
-    p = (
-        probes.select(
-            F.col(probe_id_col), as_double(F.col(vec_col)).alias("pv")
-        )
-        .withColumn("bucket", bucket_expr(F.col("pv"), dim, planes))
-        .withColumn("pn", norm(F.col("pv")))
-    )
-    p = _explode_multiprobe(p, planes, multiprobe).localCheckpoint(
-        eager=True
-    )
-    buckets = [r["bucket"] for r in p.select("bucket").distinct().collect()]
-    idx = spark.read.parquet(path).filter(
-        F.col("bucket").isin([int(b) for b in buckets])
-    )
-    return _cosine_rank(idx, p, k, id_col, probe_id_col, on="bucket")

@@ -47,8 +47,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tower_parse_spark.functions import text as T
-
 #: Pinned piece vocabulary — a miniature BPE-style merge table over the
 #: fixture's closed 31-word vocabulary plus common English fragments,
 #: ordered here alphabetically (the fold sorts by length internally).
@@ -72,8 +70,8 @@ def _pieces_desc(vocab: tuple[str, ...]) -> list[str]:
     semantic no-op for longest-match, but the r9 per-length probe maps
     are built with F.create_map, which throws DUPLICATED_MAP_KEY at
     runtime under Spark's default mapKeyDedupPolicy=EXCEPTION for a
-    caller-supplied vocab with repeats (ADVICE r9; SUBWORD_VOCAB and
-    merges_to_vocab output were already unique)."""
+    caller-supplied vocab with repeats (ADVICE r9; SUBWORD_VOCAB is
+    already unique)."""
     if any(p == "" for p in vocab):
         raise ValueError("subword vocabulary must not contain ''")
     return sorted(set(vocab), key=lambda s: (-len(s), s))
@@ -181,10 +179,9 @@ def subword_counts_relational(
     piece table is ~763 KB at 32k (≈24 B/piece, orders of magnitude
     under the 10 MB autoBroadcastJoinThreshold).
 
-    Expects the DISTINCT-word relation (its natural caller —
-    doc_subword_counts dedups before counting; duplicate word rows
-    would collapse to one output row through the per-word reassembly
-    groupBy). Returns (*word_col*, n_sub), one row per distinct word
+    Expects the DISTINCT-word relation (callers dedup before
+    counting; duplicate word rows would collapse to one output row
+    through the per-word reassembly groupBy). Returns (*word_col*, n_sub), one row per distinct word
     (NULL/empty words count 0, matching the fold)."""
     spark = words.sparkSession
     by_len = [p for p in _pieces_desc(vocab) if len(p) > 1]
@@ -263,71 +260,6 @@ def subword_counts_relational(
     return walked.unionByName(zeros)
 
 
-def doc_subword_counts(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab: tuple[str, ...] = SUBWORD_VOCAB,
-    strategy: str = "fold",
-) -> DataFrame:
-    """Per-document subword accounting: whitespace words, subword
-    pieces, and the pieces-per-word expansion ratio.
-
-    The count runs once per DISTINCT word (see module docstring); the
-    join-back is AQE-decided. Zero-token and NULL-text documents keep a
-    row (all-zero counts) via explode_outer. *strategy* picks the
-    distinct-word counting plan: ``"fold"`` (default — the expression
-    fold, right up to ~4k pieces) or ``"join"``
-    (:func:`subword_counts_relational`, the 32k-vocabulary hash-join
-    path); counts are identical (pytest-pinned)."""
-    from tower_parse_spark.functions.rounding import pround
-
-    if strategy not in ("fold", "join"):
-        raise ValueError(f"strategy must be fold|join, got {strategy!r}")
-    # No single-split guard (r11, reversing r10's uniform rule): the
-    # expensive fold runs per DISTINCT word — after the distinct
-    # shuffle, which already redistributes it across cores — so a
-    # guard here parallelizes only tokenize+explode at the cost of
-    # round-robin-shuffling full text first. Same plan shape as the
-    # passage fronts, where the guard measured neutral-to-1.24x SLOWER
-    # (SCALE.md, r11 start); this site is bench-invisible (the
-    # driver query builds its plan inline), so the decision follows
-    # that measurement's plan-shape rule.
-    exploded = df.select(
-        F.col(id_col),
-        F.explode_outer(T.tokens(F.col(text_col))).alias("_tok"),
-    )
-    distinct = exploded.filter(F.col("_tok").isNotNull()).select("_tok").distinct()
-    if strategy == "fold":
-        words = distinct.select(
-            "_tok", subword_count(F.col("_tok"), vocab).alias("_n_sub")
-        )
-    else:
-        words = subword_counts_relational(distinct, vocab).select(
-            "_tok", F.col("n_sub").alias("_n_sub")
-        )
-    return (
-        exploded.join(words, "_tok", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.col("_tok")).alias("n_words"),
-            F.coalesce(F.sum("_n_sub"), F.lit(0)).alias("n_subwords"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("n_words"),
-            F.col("n_subwords").cast("long").alias("n_subwords"),
-            pround(
-                F.when(
-                    F.col("n_words") > 0,
-                    F.col("n_subwords") / F.col("n_words"),
-                ).otherwise(F.lit(0.0)),
-                4,
-            ).alias("subwords_per_word"),
-        )
-    )
-
-
 def token_subword_arrays(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -341,7 +273,7 @@ def token_subword_arrays(
     slice-and-sum arithmetic, no per-span shuffle.
 
     Plan: posexplode the token array, fold once per DISTINCT token
-    (dedup-before-expensive-compute — the doc_subword_counts rule),
+    (dedup-before-expensive-compute),
     join the counts back (AQE-decided, unbounded crawl vocabulary), and
     reassemble each document's array ordered by position (one
     map-side-combinable groupBy on the id; exploded tokens co-locate
@@ -416,109 +348,3 @@ def sql_subword_walk(
 ), subcnt AS (
   SELECT tok, max(cnt) AS n_sub FROM walk GROUP BY tok
 )"""
-
-
-# --------------------------------------------------------------------------
-# BPE merge training (Sennrich et al. 2016)
-# --------------------------------------------------------------------------
-
-
-def word_frequencies(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """The (word, count) relation BPE trains on: one corpus pass, one
-    map-side-combinable aggregate collapsing to the vocabulary — the
-    same shape every public BPE trainer uses (training never touches
-    the corpus again)."""
-    return (
-        df.select(F.explode_outer(T.tokens(F.col(text_col))).alias("word"))
-        .filter(F.col("word").isNotNull())
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-
-
-def bpe_train_merges(
-    words: DataFrame, n_merges: int
-) -> list[tuple[str, str]]:
-    """Learn *n_merges* BPE merge rules from a (word, count) relation.
-
-    The textbook algorithm (Sennrich et al. 2016 §3.2), re-expressed
-    relationally: words start as character-symbol arrays; each round
-    counts adjacent symbol pairs weighted by word frequency (ONE
-    aggregation over the vocabulary-sized relation), picks the most
-    frequent pair (deterministic tie-break: count desc, then pair
-    lexicographic — a one-row driver read, the components.py
-    convergence-check pattern), and applies the merge to every word by
-    a row-local greedy left-to-right fold. Rounds touch only the
-    vocabulary relation — corpus-sized work ended at
-    :func:`word_frequencies` — and the symbol relation is
-    localCheckpointed per round to truncate the iterative lineage
-    (the pointer-jumping precedent).
-
-    Returns the merge list in learned order; feed
-    ``merges_to_vocab(merges)`` into :func:`subword_count` for
-    longest-match inference over the learned pieces (the
-    WordPiece-style inference discipline; exact merge-ORDER replay is a
-    trainer-side concern, and the greedy fold here IS the exact
-    per-round application)."""
-    # char split via regexp_extract_all: F.split(w, "(?!^)") keeps a
-    # trailing '' element (split's limit=-1 semantics), which would
-    # poison pair counts with ('x', '') rows
-    syms = words.select(
-        "count",
-        F.regexp_extract_all(F.col("word"), F.lit("."), 0).alias("syms"),
-    ).localCheckpoint(eager=True)
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        n = F.size(F.col("syms"))
-        pairs = syms.filter(n >= 2).select(
-            "count",
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("syms"), 1, n - 1),
-                    F.slice(F.col("syms"), 2, n - 1),
-                    lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                )
-            ).alias("pair"),
-        )
-        top = (
-            pairs.groupBy("pair.a", "pair.b")
-            .agg(F.sum("count").alias("freq"))
-            .orderBy(F.desc("freq"), "a", "b")
-            .first()
-        )
-        if top is None:
-            break
-        a, b = top["a"], top["b"]
-        merges.append((a, b))
-        merged = F.concat(F.lit(a), F.lit(b))
-
-        def apply_merge(arr: Column) -> Column:
-            # greedy left-to-right: append, or replace the tail when it
-            # closes the (a, b) pair — merged symbols have a different
-            # string value than `a`, so a fresh merge can never chain
-            return F.aggregate(
-                arr,
-                F.array().cast("array<string>"),
-                lambda acc, s: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == a)
-                    & (s == b),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
-                    ),
-                ).otherwise(F.concat(acc, F.array(s))),
-            )
-
-        syms = syms.select(
-            "count", apply_merge(F.col("syms")).alias("syms")
-        ).localCheckpoint(eager=True)
-    return merges
-
-
-def merges_to_vocab(merges: list[tuple[str, str]]) -> tuple[str, ...]:
-    """The learned piece vocabulary: every merge's product (single
-    characters need no entry — the fold's 1-char fallback covers them).
-    Deduplicated, deterministic order."""
-    return tuple(sorted({a + b for a, b in merges}))

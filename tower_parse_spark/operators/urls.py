@@ -89,81 +89,10 @@ def canonical_url(url: Column) -> Column:
 
 def url_domain(url: Column) -> Column:
     """Registrable-domain approximation: the canonical host with a
-    leading ``www.`` stripped. (The production pipeline consults the
-    public-suffix list via :func:`registrable_domain` — a broadcast
-    join that does not change the plan shape; this cheap form is what
-    the oracle-checked query mirrors.)"""
+    leading ``www.`` stripped. (A public-suffix-aware eTLD+1 would be a
+    broadcast join that does not change the plan shape; this cheap form
+    is what the oracle-checked query mirrors.)"""
     return F.regexp_replace(_host(url), r"^www\.", "")
-
-
-def registrable_domain(
-    df: DataFrame,
-    suffixes: DataFrame,
-    host_col: str = "host",
-    out: str = "reg_domain",
-) -> DataFrame:
-    """Public-suffix-aware registrable domain (the eTLD+1 of
-    publicsuffix.org methodology): for each host, find the LONGEST
-    suffix present in *suffixes* (one ``suffix`` string column — e.g.
-    ``com``, ``co.uk``) and return the label immediately left of it
-    plus the suffix (``shop.example.co.uk`` + {co.uk} ->
-    ``example.co.uk``).
-
-    Plan shape for 100 TB: hosts have a handful of labels, so each row
-    explodes to its <= ~8 candidate suffixes; the candidate relation
-    equi-joins the (tiny, broadcast) suffix table; one max-length
-    aggregate per row picks the winner. No UDF, no shuffle of the host
-    table beyond the per-row group-back — and with AQE the suffix join
-    is a broadcast hash join. Hosts matching NO suffix (intranet names,
-    IPs) yield NULL — route them like malformed URLs.
-
-    The relation fans out to the explode leg and the join-back, so the
-    labeled base is localCheckpointed (the curate_urls rule)."""
-    labels = F.split(F.col(host_col), r"\.")
-    base = (
-        df.withColumn("_labels", labels)
-        .withColumn("_nlab", F.size(F.col("_labels")))
-        .localCheckpoint(eager=False)
-    )
-    cand = base.select(
-        host_col,
-        "_labels",
-        "_nlab",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("_nlab")),
-                lambda i: F.struct(
-                    F.concat_ws(
-                        ".", F.slice(F.col("_labels"), i, F.col("_nlab"))
-                    ).alias("suffix"),
-                    i.alias("_start"),
-                ),
-            )
-        ).alias("_c"),
-    ).select(
-        host_col, "_labels", "_nlab", F.col("_c.suffix"), F.col("_c._start")
-    )
-    matched = (
-        cand.join(F.broadcast(suffixes.select("suffix").distinct()), "suffix")
-        # longest matching suffix = smallest start index, taken over ALL
-        # matches BEFORE any gating: a host that IS a bare public suffix
-        # (start 1) must yield NULL, not fall through to a shorter match
-        .groupBy(host_col)
-        .agg(F.min(F.col("_start")).alias("_s"))
-    )
-    reg = F.concat_ws(
-        ".",
-        F.element_at(F.col("_labels"), (F.col("_s") - 1).cast("int")),
-        F.concat_ws(
-            ".", F.slice(F.col("_labels"), F.col("_s"), F.col("_nlab"))
-        ),
-    )
-    return (
-        base.join(matched, host_col, "left")
-        # _s == 1: the host IS a public suffix — no registrable domain
-        .withColumn(out, F.when(F.col("_s") > 1, reg))
-        .drop("_labels", "_nlab", "_s")
-    )
 
 
 def curate_urls(

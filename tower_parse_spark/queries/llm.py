@@ -853,23 +853,14 @@ def _lid_marked_text():
     )
 
 
-def text_langid(
-    spark: SparkSession, sf_dir: str, model_path: str | None = None
-) -> DataFrame:
+def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID, both ways side-by-side (merged r9 to respect the
     100-entry ceiling): the stopword-heuristic verdict over the raw
     text (``pred_lang``) and the TRAINED char-n-gram Naive Bayes
     verdict (``nb_pred`` / ``nb_margin_q`` — classifier.py::
     classify_lang's argmin + runner-up-margin path) over the
     marker-planted corpus, trained in closed form on the marker-planted
-    ``doc_id % LID_TRAIN_MOD == LID_TRAIN_RES`` slice.
-
-    *model_path* (r10, VERDICT r9 Next #4 — the ann_ivfpq prebuilt-
-    index pattern): score against a :func:`save_langid_model` artifact
-    instead of training in-query — the deployment shape (train once,
-    score many; in-query training is the slowest non-streaming sweep
-    entry). The oracle stays on the train-in-query form; the prebuilt
-    path is pytest-pinned verdict-identical."""
+    ``doc_id % LID_TRAIN_MOD == LID_TRAIN_RES`` slice."""
     from tower_parse_spark.session import ensure_parallelism
 
     # both halves are compute-bound row-local projections (five
@@ -887,36 +878,19 @@ def text_langid(
         T.predicted_lang(F.col("_toks")).alias("pred_lang"),
     )
     marked = docs.select("doc_id", "lang", _lid_marked_text().alias("text"))
-    if model_path is not None:
-        model = CL.load_langid_model(spark, model_path)
-    else:
-        model = CL.train_langid_nb(
-            marked.filter(
-                (F.col("doc_id") % LID_TRAIN_MOD == LID_TRAIN_RES)
-                # a NULL lang cannot be a class (degenerate fixture rows)
-                & F.col("lang").isNotNull()
-            ).select("lang", "text")
-        )
+    model = CL.train_langid_nb(
+        marked.filter(
+            (F.col("doc_id") % LID_TRAIN_MOD == LID_TRAIN_RES)
+            # a NULL lang cannot be a class (degenerate fixture rows)
+            & F.col("lang").isNotNull()
+        ).select("lang", "text")
+    )
     nb = CL.classify_lang(marked.select("doc_id", "text"), model).select(
         "doc_id",
         F.col("lang_pred").alias("nb_pred"),
         F.col("nll_margin_q").alias("nb_margin_q"),
     )
     return heur.join(nb, "doc_id").orderBy("doc_id")
-
-
-def langid_model_for(spark: SparkSession, sf_dir: str) -> "CL.MulticlassNB":
-    """The exact model text_langid trains in-query, as a standalone
-    build step — what a deployment saves once via save_langid_model and
-    then passes back through ``model_path``."""
-    docs = load_table(spark, sf_dir, "documents")
-    marked = docs.select("doc_id", "lang", _lid_marked_text().alias("text"))
-    return CL.train_langid_nb(
-        marked.filter(
-            (F.col("doc_id") % LID_TRAIN_MOD == LID_TRAIN_RES)
-            & F.col("lang").isNotNull()
-        ).select("lang", "text")
-    )
 
 
 def _langid_sql() -> str:

@@ -418,15 +418,3 @@ def _table_fingerprint(sf_dir: str, name: str, deep: bool | None = None):
         return result
     except OSError:
         return None
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read every test table and register each as a temp view."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            df = load_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

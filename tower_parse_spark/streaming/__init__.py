@@ -15,7 +15,6 @@ re-expresses that dataflow on Structured Streaming:
 - packstore.py   — read side and maintenance of the pack layout
                    (read_packs, compaction)
 - metrics.py     — StreamingQueryListener heartbeat (A24)
-- dedup.py       — watermark-bounded exact dedup
 - neardup.py     — incremental MinHash near-dup against a banded
                    signature index (exactly-once foreachBatch)
 - phash_index.py — the perceptual-hash twin of neardup.py

@@ -2,8 +2,8 @@
 incremental MinHash path.
 
 Batch near-dup dedup against a banded-signature index exists in
-operators/dedup.py (build_minhash_index / incremental_minhash_dedup /
-append_minhash_index); this module runs that exact machinery inside a
+operators/dedup.py (banded_signatures / incremental_minhash_dedup);
+this module runs that exact machinery inside a
 Structured Streaming ``foreachBatch`` loop, so a document stream is
 deduplicated against ALL previously-seen survivors without ever
 re-reading history documents:

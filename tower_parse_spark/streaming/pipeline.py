@@ -239,37 +239,6 @@ def run_ingest(
     )
 
 
-def event_time_stats(
-    parsed: DataFrame,
-    time_col: str = "time",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    value_cols: list[str] | None = None,
-):
-    """Watermarked tumbling event-time aggregation on a parsed stream —
-    the event-time/late-data capability the reference lacks entirely
-    (processing-time only, SURVEY.md §2.B): rows later than *watermark*
-    behind the max seen event time are dropped; windows finalize (append
-    mode) once the watermark passes their end, so downstream sinks see
-    each window exactly once.
-
-    ``time`` is epoch-seconds double in the parse schema (reference
-    parity); it converts to a proper timestamp here for watermarking.
-    """
-    vals = value_cols or []
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.round(F.sum(c), 4).alias(f"sum_{c}") for c in vals
-    ]
-    return (
-        parsed.withColumn("_evt", F.timestamp_seconds(F.col(time_col)))
-        .withWatermark("_evt", watermark)
-        .groupBy(F.window("_evt", window).alias("w"))
-        .agg(*aggs)
-        .select(F.col("w.start").alias("window_start"), "*")
-        .drop("w")
-    )
-
-
 def is_idle(query, timeout_s: float, now_ms: float | None = None) -> bool:
     """A3 read-timeout parity (readport.py:102, 139-144): the reference
     reconnects when no message arrives within ``timeout`` seconds. The
