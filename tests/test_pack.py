@@ -2,7 +2,8 @@
 
 Mirrors the reference's Buffer tests (tests/test_parser.py:124-177): exact
 pack sizes, per-group independence, remainder behavior; plus equivalence of
-the scalable (bucketed two-pass) form with the window form.
+the ungrouped (bucketed three-pass) path with a window over one constant
+group column, the single-partition reference.
 """
 
 from __future__ import annotations
@@ -12,9 +13,17 @@ from pyspark.sql import functions as F
 
 from tower_parse_spark.operators.pack import (
     pack_stats,
+    with_global_row_scalable,
     with_pack_id,
-    with_pack_id_scalable,
 )
+
+
+def one_window(df, pack_length, order_cols):
+    """The single-partition reference: ``with_pack_id``'s window over one
+    constant group column."""
+    return with_pack_id(
+        df.withColumn("_k", F.lit(0)), pack_length, "_k", order_cols
+    ).drop("_k")
 
 
 @pytest.fixture()
@@ -63,18 +72,18 @@ def test_scalable_matches_window_form(spark):
     single-window form on an ungrouped stream."""
     rows = [(i, float(i % 97) + i * 0.001) for i in range(500)]
     df = spark.createDataFrame(rows, "event_id long, time double").repartition(7)
-    a = with_pack_id(
-        df, 37, None, ["time", "event_id"], ungrouped="window"
-    ).select("event_id", "pack_id", "pack_seq")
-    b = with_pack_id_scalable(
-        df, 37, order_col="time", tiebreak_col="event_id", num_buckets=5
-    ).select("event_id", "pack_id", "pack_seq")
+    a = one_window(df, 37, ["time", "event_id"]).select(
+        "event_id", "pack_id", "pack_seq"
+    )
+    b = with_pack_id(df, 37, None, ["time", "event_id"]).select(
+        "event_id", "pack_id", "pack_seq"
+    )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_scalable_single_bucket_degenerate(spark):
     df = spark.createDataFrame([(1, 5.0), (2, 5.0), (3, 5.0)], "event_id long, time double")
-    out = with_pack_id_scalable(df, 2, order_col="time", tiebreak_col="event_id")
+    out = with_pack_id(df, 2, None, ["time", "event_id"])
     got = {r["event_id"]: (r["pack_id"], r["pack_seq"]) for r in out.collect()}
     assert got == {1: (0, 0), 2: (0, 1), 3: (1, 0)}
 
@@ -82,19 +91,13 @@ def test_scalable_single_bucket_degenerate(spark):
 def test_scalable_explicit_num_buckets_1(spark):
     """num_buckets=1 must skip the quantile pass (empty percentage array
     fails analysis), not crash — ADVICE r1."""
-    rows = [(i, float(i)) for i in range(7)]
+    rows = [(i, float(6 - i)) for i in range(7)]
     df = spark.createDataFrame(rows, "event_id long, time double")
-    out = with_pack_id_scalable(
-        df, 3, order_col="time", tiebreak_col="event_id", num_buckets=1
+    out = with_global_row_scalable(
+        df, "time", tiebreak_col="event_id", num_buckets=1, index_col="r"
     )
-    got = sorted(
-        (r["event_id"], r["pack_id"], r["pack_seq"]) for r in out.collect()
-    )
-    assert got == [
-        (0, 0, 0), (1, 0, 1), (2, 0, 2),
-        (3, 1, 0), (4, 1, 1), (5, 1, 2),
-        (6, 2, 0),
-    ]
+    got = sorted((r["event_id"], r["r"]) for r in out.collect())
+    assert got == [(i, 6 - i) for i in range(7)]
 
 
 def test_ungrouped_auto_dispatch_no_single_partition_window(spark):
@@ -104,7 +107,7 @@ def test_ungrouped_auto_dispatch_no_single_partition_window(spark):
     rows = [(i, float(500 - i)) for i in range(100)]
     df = spark.createDataFrame(rows, "event_id long, time double").repartition(5)
     out = with_pack_id(df, 7, None, ["time", "event_id"])
-    ref = with_pack_id(df, 7, None, ["time", "event_id"], ungrouped="window")
+    ref = one_window(df, 7, ["time", "event_id"])
     assert sorted(
         (r["event_id"], r["pack_id"], r["pack_seq"]) for r in out.collect()
     ) == sorted(
@@ -121,8 +124,6 @@ def test_global_row_matches_window_rank_asc_and_desc(spark):
     both directions (desc: NULLS LAST + asc tiebreak, the ORDER BY
     price DESC, id shape), with ties and NULL order values present."""
     from pyspark.sql import Window as W
-
-    from tower_parse_spark.operators.pack import with_global_row_scalable
 
     rows = [
         (i, None if i % 17 == 0 else float((i * 7) % 23)) for i in range(200)
@@ -147,8 +148,6 @@ def test_global_row_matches_window_rank_asc_and_desc(spark):
 def test_global_row_total_col(spark):
     """total_col attaches the total row count as a plan literal — what
     exact ntile arithmetic needs."""
-    from tower_parse_spark.operators.pack import with_global_row_scalable
-
     rows = [(i, float(i % 11)) for i in range(90)]
     df = spark.createDataFrame(rows, "event_id long, v double")
     got = with_global_row_scalable(
@@ -164,10 +163,7 @@ def test_ntile_expr_matches_builtin(spark, n_rows, k):
     single-partition window, across remainder shapes incl. N < k."""
     from pyspark.sql import Window as W
 
-    from tower_parse_spark.operators.pack import (
-        ntile_expr,
-        with_global_row_scalable,
-    )
+    from tower_parse_spark.operators.pack import ntile_expr
 
     rows = [(i, float((i * 13) % 37)) for i in range(n_rows)]
     df = spark.createDataFrame(rows, "event_id long, v double")

@@ -1,7 +1,8 @@
-"""The writing form of the packer, driven directly (no stream): the pack
+"""The pack writer, driven directly (no stream): the pack
 files it writes have the columns and Parquet types of a Spark partitioned
 write of the same packs, sit in directories named as Spark names
-partitions, and a failed write leaves no visible file behind."""
+partitions, and a failed write leaves no visible file behind; rows are cut
+in ``with_pack_id``'s order, nulls first."""
 
 from __future__ import annotations
 
@@ -35,12 +36,12 @@ class FakeState:
         self.value = value
 
 
-def run_writer(df, group_col, out, key, pack_length=2):
+def run_writer(df, group_col, out, key, pack_length=2, order_cols=("time",)):
     """Feed *df*'s rows (converted by Spark, as the stateful operator
     hands them over) to the writing packer under *key*; return its
     summary rows."""
     writer = make_pack_writer(
-        pack_length, ["time"], df.columns, group_col, str(out),
+        pack_length, list(order_cols), df.columns, group_col, str(out),
         pack_file_schema(df, group_col),
     )
     return [
@@ -129,3 +130,17 @@ def test_failed_write_leaves_no_file_behind(spark, tmp_path):
         run_writer(df, "level", tmp_path / "packs", (1,))
     assert os.listdir(pack_dir) == [PACK_FILE]
     assert (pack_dir / PACK_FILE).is_dir()
+
+
+def test_null_tiebreak_cut_before_time_tied_peers(spark, tmp_path):
+    """Within one epoch, a row whose tie-break is null sorts before the
+    rows that share its time, as ``with_pack_id``'s window puts it
+    (ascending, nulls first), so it is cut into the earlier pack."""
+    df = spark.createDataFrame(
+        [(2.0, 5, 1), (1.0, 2, 1), (1.0, None, 1), (1.0, 1, 1)],
+        "time double, tb long, level int",
+    )
+    run_writer(df, "level", tmp_path / "packs", (1,), 2, ("time", "tb"))
+    back = spark.read.parquet(str(tmp_path / "packs"))
+    got = sorted((r["pack_id"], r["pack_seq"], r["tb"]) for r in back.collect())
+    assert got == [(0, 0, None), (0, 1, 1), (1, 0, 2), (1, 1, 5)]

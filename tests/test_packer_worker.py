@@ -105,7 +105,7 @@ def test_pickled_packer_names_no_package_module():
 
 
 def test_pickled_pack_writer_names_no_package_module():
-    """The writing form's closure (its file and partition-name helpers
+    """The pack writer's closure (its file and partition-name helpers
     and the packer it wraps) ships by value too."""
     import pyarrow as pa
 

@@ -211,10 +211,12 @@ def test_ivfpq_drops_degenerate_probes(spark):
 
 
 def test_append_into_build_time_empty_cell(spark):
-    """Encoding vectors against FROZEN means from a build in which their
-    cell was EMPTY must write real (zero-mean-fallback) codes and rank
-    them by real ADC distances — the all-NULL-codes / NULLS-FIRST
-    regression."""
+    """Probing cells that no corpus row fell in (the build left them
+    empty) goes through ``with_residual``'s zero-mean fallback: the
+    corpus is one cell's rows and every probe is exploded over every
+    cell, yet no code is NULL, every probe's ADC table is real, and
+    ``ivfpq_topk`` ranks by NULL-free distances — the all-NULL-codes /
+    NULLS-FIRST regression."""
     emb = load_table(spark, SF, "embeddings")
     cents = S.lattice_centroids(DIM)
     enc_all, _ = PQ.encode_ivfpq(emb, DIM, cents)
@@ -224,25 +226,28 @@ def test_append_into_build_time_empty_cell(spark):
         r["vec_id"]
         for r in enc_all.filter(F.col("cell") == top_cell).collect()
     }
-    build_half = emb.filter(F.col("vec_id").isin(list(in_top)))
-    append_half = emb.filter(~F.col("vec_id").isin(list(in_top)))
-    _, means = PQ.encode_ivfpq(build_half, DIM, cents)
-    got, _ = PQ.encode_ivfpq(append_half, DIM, cents, means=means)
-    assert got.count() == append_half.count()
+    corpus = emb.filter(F.col("vec_id").isin(list(in_top)))
+    enc, means = PQ.encode_ivfpq(corpus, DIM, cents)
     # no NULL codes anywhere
     assert (
-        got.filter(
+        enc.filter(
             F.exists(F.col("codes"), lambda c: c.isNull())
             | F.col("codes").isNull()
         ).count()
         == 0
     )
-    # probing the frozen means returns real, NULL-free distances
+    # probes of the empty cells get real tables, not NULL ones
     probes = PQ.probe_adc_tables(
         _probes(emb), DIM, cents, nprobe=len(cents), means=means
     )
-    res = PQ._adc_rank(
-        got, probes, 5, PQ.lattice_codebooks(DIM), "vec_id", "probe_id"
-    )
-    out = res.collect()
+    tables = probes.select(
+        "cell",
+        (F.col("pt").isNull() | F.exists(F.col("pt"), lambda x: x.isNull()))
+        .alias("null_pt"),
+    ).collect()
+    assert {r["cell"] for r in tables} - {r["cell"] for r in means.collect()}
+    assert not any(r["null_pt"] for r in tables)
+    out = PQ.ivfpq_topk(
+        corpus, _probes(emb), DIM, k=5, nprobe=len(cents), centroids=cents
+    ).collect()
     assert out and all(r["adc_dist"] is not None for r in out)

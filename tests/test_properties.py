@@ -4,20 +4,28 @@ The reference's tests are example-based (parametrize matrices); these
 upgrade the same invariants to randomized coverage:
 - packing: every pack except the last is exactly N; pack_seq is a
   0..N-1 ramp; assignment is a permutation-invariant function of
-  (order key, N);
+  (order key, N); at every commit, the streaming pack writer's files
+  hold exactly the batch's full packs over the input read so far, and
+  the rows it holds back are the batch's trailing short pack;
 - tokenizer/shingles: count algebra and idempotence.
 """
 
 from __future__ import annotations
 
+import glob
 import json
+import os
+import tempfile
+from collections import Counter
 
+import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tower_parse_spark.functions import text as T
 from tower_parse_spark.operators.pack import with_pack_id
+from tower_parse_spark.plans.profile import SINGLE_GROUP
 
 SETTINGS = dict(
     max_examples=15,
@@ -49,6 +57,98 @@ def test_pack_sizes_invariant(spark, n_rows, pack_n, n_groups):
             else:
                 assert sorted(seqs) == list(range(len(seqs)))
                 assert len(seqs) <= pack_n
+
+
+@st.composite
+def pack_epochs(draw):
+    """(key, pack length, epochs): rows ``(g, time, tb, v)`` with few
+    distinct times, so ties are common, and a unique tie-break ``tb``;
+    the epochs are contiguous slices of the (time, tb) order, each one
+    shuffled. Key ``_g`` is the ungrouped stream."""
+    key = draw(st.sampled_from([SINGLE_GROUP, "g"]))
+    n_groups = 1 if key == SINGLE_GROUP else draw(st.integers(1, 4))
+    n = draw(st.integers(1, 30))
+    tbs = draw(st.permutations(range(n)))
+    rows = sorted(
+        (
+            (draw(st.integers(0, n_groups - 1)), float(draw(st.integers(0, 4))),
+             tb, float(tb % 7))
+            for tb in tbs
+        ),
+        key=lambda r: (r[1], r[2]),
+    )
+    cuts = sorted(draw(st.lists(st.integers(0, n), min_size=0, max_size=3)))
+    bounds = [0, *cuts, n]
+    epochs = [
+        draw(st.permutations(rows[a:b])) for a, b in zip(bounds, bounds[1:])
+    ]
+    return key, draw(st.integers(1, 5)), epochs
+
+
+@given(case=pack_epochs())
+@settings(**SETTINGS)
+def test_stream_packs_equal_batch_packs_at_every_commit(spark, tmp_path, case):
+    """Prefix consistency of the one pack semantics: after each epoch's
+    commit, the pack files ``write_packs`` has written are exactly
+    ``with_pack_id``'s full packs (rows, ``pack_id``, ``pack_seq``) over
+    the epochs landed so far, and the rows not yet written are exactly
+    its trailing short pack per group."""
+    from tower_parse_spark.streaming import pipeline as P
+
+    key, pack_n, epochs = case
+
+    def group_of(row):
+        return 0 if key == SINGLE_GROUP else row[key]
+
+    work = tempfile.mkdtemp(dir=tmp_path)
+    spool, out = os.path.join(work, "spool"), os.path.join(work, "packs")
+    os.makedirs(spool)
+    schema = "g int, time double, tb long, v double"
+    src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(spool)
+    if key == SINGLE_GROUP:
+        src = src.withColumn(key, F.lit(0))
+    q = P.write_packs(
+        P.PackedStream(src, pack_n, key, ("time", "tb")),
+        out, os.path.join(work, "ckpt"), key,
+    )
+    landed = []
+    try:
+        for i, epoch in enumerate(epochs):
+            tmp = os.path.join(spool, f".e{i}.json")
+            with open(tmp, "w") as fh:
+                for g, t, tb, v in epoch:
+                    fh.write(json.dumps({"g": g, "time": t, "tb": tb, "v": v}) + "\n")
+            os.rename(tmp, os.path.join(spool, f"e{i}.json"))
+            landed += epoch
+            q.processAllAvailable()
+
+            written = []
+            for path in glob.glob(f"{out}/{key}=*/pack_id=*/part-0.parquet"):
+                gdir, pdir = path.split(os.sep)[-3:-1]
+                pack_id = int(pdir.split("=")[1])
+                k = 0 if key == SINGLE_GROUP else int(gdir.split("=")[1])
+                written += [
+                    (k, pack_id, r["pack_seq"], r["time"], r["tb"], r["v"])
+                    for r in pq.read_table(path).to_pylist()
+                ]
+            batch = with_pack_id(
+                spark.createDataFrame(landed, schema), pack_n,
+                None if key == SINGLE_GROUP else key, ["time", "tb"],
+            ).collect()
+            count = Counter(map(group_of, batch))
+            full = [
+                (group_of(r), r["pack_id"], r["pack_seq"], r["time"], r["tb"], r["v"])
+                for r in batch if r["pack_id"] < count[group_of(r)] // pack_n
+            ]
+            tail = {
+                r["tb"] for r in batch
+                if r["pack_id"] == count[group_of(r)] // pack_n
+            }
+            assert sorted(written) == sorted(full), f"epoch {i}"
+            held = {tb for _, _, tb, _ in landed} - {w[4] for w in written}
+            assert held == tail, f"epoch {i}"
+    finally:
+        q.stop()
 
 
 @given(text=st.text(max_size=120))

@@ -7,7 +7,10 @@ tables, module constants; ``from ... import`` re-exports in
 excepted), ``bench.py`` and ``__spark_entry__.py``, plus KEPT. A
 reference is a Name, an Attribute, an ImportFrom name or an identifier
 string constant; reach is transitive through the reached definitions'
-bodies. Name-based, so a same-named definition anywhere is reached too.
+bodies. A module-level ``from m import n`` in a package module other
+than ``__init__.py`` counts only when that module uses ``n``, so a
+stale import keeps nothing alive. Name-based, so a same-named
+definition anywhere is reached too.
 """
 
 import ast
@@ -61,10 +64,16 @@ def _scan():
     """(definitions as {name: [(path, node)]}, reached names)."""
     defs, todo = {}, set(KEPT)
     for path in _files("tower_parse_spark"):
-        for st in _tree(path).body:
+        body = _tree(path).body
+        imports = [st for st in body if isinstance(st, ast.ImportFrom)]
+        used = set().union(*(_refs(st) for st in body if st not in imports))
+        for st in body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs.setdefault(st.name, []).append((path, st))
-            elif not (path.endswith("__init__.py") and isinstance(st, ast.ImportFrom)):
+            elif isinstance(st, ast.ImportFrom):
+                if not path.endswith("__init__.py"):
+                    todo |= _refs(st) & used
+            else:
                 todo |= _refs(st)
     roots = [*_files("tools"), *_files("perfbench")]
     for path in roots + [os.path.join(REPO, f) for f in ("bench.py", "__spark_entry__.py")]:

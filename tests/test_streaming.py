@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from tower_parse_spark.plans.profile import DeviceProfile, GroupSpec
 from tower_parse_spark.streaming import pipeline as P
 from tower_parse_spark.streaming import sources as SRC
-from tower_parse_spark.streaming.packs import stream_pack
 
 PROBE = DeviceProfile(
     name="probe",
@@ -43,6 +42,22 @@ def write_line_files(tmp_path, batches):
     return str(d)
 
 
+def write_packs_of(spark, tmp_path, src, pack_length, order_cols):
+    """Run ``write_packs`` over the spool *src*, one file per trigger,
+    until it is drained, and read back the pack files it wrote."""
+    lines = SRC.file_lines(spark, src, max_files_per_trigger=1)
+    packed = P.PackedStream(
+        P.parse_stream(lines, PROBE), pack_length, "level", order_cols
+    )
+    out = str(tmp_path / "packs")
+    q = P.write_packs(packed, out, str(tmp_path / "ckpt"), "level")
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.read.parquet(out).collect()
+
+
 def test_stream_pack_remainder_carry(spark, tmp_path):
     """Exactly-N packs across micro-batches: 3 triggers x 3 rows at N=4
     must yield packs [0,1] (8 rows) and keep 1 row buffered in state."""
@@ -52,20 +67,7 @@ def test_stream_pack_remainder_carry(spark, tmp_path):
         [probe_line(1, float(i), i) for i in range(6, 9)],
     ]
     src = write_line_files(tmp_path, batches)
-    lines = SRC.file_lines(spark, src, max_files_per_trigger=1)
-    packed = stream_pack(P.parse_stream(lines, PROBE), 4, "level", ["id"])
-    q = (
-        packed.writeStream.format("memory")
-        .queryName("packs_mem")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM packs_mem").collect()
+    rows = write_packs_of(spark, tmp_path, src, 4, ("id",))
     # 9 rows in, 8 emitted (two full packs), 1 carried in state
     assert len(rows) == 8
     by_pack = {}
@@ -84,20 +86,7 @@ def test_stream_pack_multi_group(spark, tmp_path):
         [probe_line(1, 4.0, 4), probe_line(1, 5.0, 5), probe_line(2, 6.0, 6)],
     ]
     src = write_line_files(tmp_path, batches)
-    lines = SRC.file_lines(spark, src, max_files_per_trigger=1)
-    packed = stream_pack(P.parse_stream(lines, PROBE), 2, "level", ["id"])
-    q = (
-        packed.writeStream.format("memory")
-        .queryName("packs_mg")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT level, pack_id, id FROM packs_mg").collect()
+    rows = write_packs_of(spark, tmp_path, src, 2, ("id",))
     g1 = sorted(r["id"] for r in rows if r["level"] == 1)
     g2 = sorted(r["id"] for r in rows if r["level"] == 2)
     assert g1 == [1.0, 3.0, 4.0, 5.0]  # two full packs of 2
@@ -355,7 +344,8 @@ def test_single_group_restart_keeps_checkpoint_partitions(spark, tmp_path):
     with scoped_shuffle_partitions(spark, 4):
         q = (
             stream_pack_files(
-                packed.parsed, packed.pack_length, P.SINGLE_GROUP, data_dir
+                packed.parsed, packed.pack_length, P.SINGLE_GROUP, data_dir,
+                packed.order_cols,
             )
             .writeStream.foreachBatch(
                 P.make_epoch_writer(data_dir, P.SINGLE_GROUP)

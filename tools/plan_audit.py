@@ -240,9 +240,10 @@ def audit_streaming(spark) -> tuple[list, list]:
     - ``pack_epoch_writer``: the foreachBatch pack sink body over the
       packer's one-row-per-pack-written output (the packer writes the
       files itself; the body only materializes those rows);
-    - ``pack_stateful``: the applyInPandasWithState pack operator's own
-      streaming plan (explainInternal after a real run — the one family
-      whose plan legitimately carries Arrow)."""
+    - ``pack_stateful``: the ingest's pack-writing query
+      (``pipeline.write_packs``), its applyInPandasWithState plan
+      (explainInternal after a real run — the one family whose plan
+      legitimately carries Arrow)."""
     import shutil
     import tempfile
 
@@ -342,10 +343,9 @@ def audit_streaming(spark) -> tuple[list, list]:
         P.make_epoch_writer(f"{work}/packs", "level")(written, 0)
     rows.append(_scan_plans("pack_epoch_writer", cap.plans, bad))
 
-    # --- stateful pack operator's streaming plan ---
+    # --- the ingest's pack-writing query (the stateful packer) ---
     from tower_parse_spark.plans.profile import DeviceProfile, GroupSpec
     from tower_parse_spark.streaming import sources as SRC
-    from tower_parse_spark.streaming.packs import stream_pack
 
     profile = DeviceProfile(
         name="audit",
@@ -361,13 +361,9 @@ def audit_streaming(spark) -> tuple[list, list]:
         for i in range(6):
             f.write(f"01 V= {float(i)}\n")
     lines = SRC.file_lines(spark, spool)
-    pk = stream_pack(P.parse_stream(lines, profile), 2, "level", ["v"])
-    q = (
-        pk.writeStream.format("memory")
-        .queryName("plan_audit_packs")
-        .outputMode("append")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .start()
+    q = P.write_packs(
+        P.packed_stream(lines, profile), f"{work}/pack_files", f"{work}/ckpt",
+        "level", query_name="plan_audit_packs",
     )
     try:
         q.processAllAvailable()

@@ -38,12 +38,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    # try_divide: zero-norm input yields NULL (DuckDB x/0 parity), not
-    # an ANSI DIVIDE_BY_ZERO
-    return F.try_divide(dot(a, b), norm(a) * norm(b))
-
-
 # ---- single-fold multi-accumulator variants -------------------------------
 #
 # HOF folds are interpreted per element, so k separate dot() calls cost k

@@ -23,7 +23,6 @@ from tower_parse_spark.operators.pack import (  # noqa: F401
     pack_stats,
     with_global_row_scalable,
     with_pack_id,
-    with_pack_id_scalable,
 )
 from tower_parse_spark.operators.rangejoin import range_join  # noqa: F401
 from tower_parse_spark.operators.sampling import (  # noqa: F401

@@ -3,24 +3,23 @@
 The reference flushes a group's buffer every exactly-``pack_length`` rows
 (``Buffer.full``, readport.py:277-289): 12000 rows ≈ 10 min of 20 Hz sonic
 data per file (configs/readport_4001.conf:24-25). Spark has no native
-"every N rows per key" window (SURVEY.md §4.3), so the engine provides:
+"every N rows per key" window (SURVEY.md §4.3), so the engine has one
+pack semantics in two forms:
 
-- :func:`with_pack_id` — batch form, deterministic and oracle-checkable:
-  ``pack_id = floor((row_number() OVER (PARTITION BY group
-  ORDER BY time, tiebreak) - 1) / N)``. Tie-break on a unique id because
-  processing timestamps are monotone per connection but not unique
-  (tests/test_socket.py:219-220).
-- :func:`with_pack_id_scalable` — the 100 TB path for *ungrouped* packs,
-  where a single-partition global window would serialize the job: range-
-  partition by the ordering key, compute per-partition local row numbers
-  and combine with broadcast per-partition offsets (two-pass zip-index).
-  Identical output, no single-task bottleneck.
-- the streaming form with remainder carry lives in
-  ``tower_parse_spark.streaming`` (applyInPandasWithState).
+- :func:`with_pack_id` — the one batch entry point, deterministic and
+  oracle-checkable: ``pack_id = floor((row_number() OVER (PARTITION BY
+  group ORDER BY order_cols) - 1) / N)``. Ungrouped, it runs the same
+  numbering through :func:`with_global_row_scalable` (no single-task
+  window).
+- the one streaming form, the stateful packer that writes each pack's
+  file (``tower_parse_spark.streaming.packs``), cuts the same packs
+  epoch by epoch and keeps the trailing short run in state.
 
-Grouped packs scale fine through the window form as long as group
-cardinality ≫ 1 (partition-parallel); the scalable variant exists for the
-degenerate single-group case the reference's sonic configs actually use.
+Order, for both forms: rows sort by ``order_cols`` ascending, nulls
+first (Spark's ascending default; the packer's pandas sort passes
+``na_position="first"``). The last column is the tie-break: processing
+timestamps are monotone per connection but not unique
+(tests/test_socket.py:219-220).
 """
 
 from __future__ import annotations
@@ -35,47 +34,44 @@ def with_pack_id(
     pack_length: int,
     group_col: str | None = None,
     order_cols: list[str] | None = None,
-    ungrouped: str = "scalable",
 ) -> DataFrame:
     """Assign ``pack_id`` (0-based) and ``pack_seq`` (position in pack).
 
     Batch semantics of readport.py:277-289: consecutive runs of exactly
-    *pack_length* rows per group, ordered by *order_cols* (default:
-    ``time``). The trailing remainder (< pack_length rows) keeps the last
-    pack_id — callers that need only-full packs filter on pack row counts
+    *pack_length* rows per group, in the module's order over
+    *order_cols* (default: ``time``). The trailing short run (fewer than
+    *pack_length* rows) gets its own ``pack_id``, ``n_full``, the number
+    of full packs before it; it is exactly what the stream keeps in
+    state. Callers that need only full packs filter on pack row counts
     (the reference never flushes partial packs except at shutdown loss,
     readport.py:409-419).
 
     With ``group_col=None`` — the reference's actual deployment shape
     (ungrouped sonic streams, configs/readport_4001.conf:24-25) — a bare
-    global window would funnel every row through ONE task, the one latent
-    scale-killer of this operator. The ungrouped case therefore
-    auto-dispatches to :func:`with_pack_id_scalable` (identical output,
-    partition-parallel). Pass ``ungrouped="window"`` to force the
-    single-partition window form (tests / tiny inputs only).
+    global window would funnel every row through ONE task, so the
+    numbering comes from :func:`with_global_row_scalable` (identical
+    output, partition-parallel), which takes at most (order, tie-break).
     """
     order = order_cols or ["time"]
-    if group_col is None and ungrouped == "scalable":
-        if len(order) > 2:
-            raise ValueError(
-                "scalable ungrouped packs support at most (order, tiebreak)"
-                f" ordering columns, got {order!r}"
-            )
-        return with_pack_id_scalable(
-            df,
-            pack_length,
-            order_col=order[0],
-            tiebreak_col=order[1] if len(order) > 1 else None,
+    if group_col is not None:
+        row = F.row_number().over(W.partitionBy(group_col).orderBy(*order)) - 1
+    elif len(order) > 2:
+        raise ValueError(
+            "ungrouped packs support at most (order, tiebreak)"
+            f" ordering columns, got {order!r}"
         )
-    w = (
-        W.partitionBy(group_col).orderBy(*order)
-        if group_col is not None
-        else W.partitionBy().orderBy(*order)
+    else:
+        df = with_global_row_scalable(
+            df,
+            order[0],
+            tiebreak_col=order[1] if len(order) > 1 else None,
+            index_col="_grow",
+        )
+        row = F.col("_grow")
+    out = df.withColumn("pack_id", F.floor(row / pack_length)).withColumn(
+        "pack_seq", row % pack_length
     )
-    rn = F.row_number().over(w) - 1
-    return df.withColumn("pack_id", F.floor(rn / pack_length)).withColumn(
-        "pack_seq", rn % pack_length
-    )
+    return out if group_col is not None else out.drop("_grow")
 
 
 def with_global_row_scalable(
@@ -183,7 +179,11 @@ def with_global_row_scalable(
     ):
         offsets[row["_bkt"]] = running
         running += row["count"]
-    offset_col = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+    # an empty input has no buckets; an empty map literal is map<void,void>
+    # and would not accept the int bucket key
+    offset_col = F.create_map(
+        *[F.lit(x) for kv in (offsets or {0: 0}).items() for x in kv]
+    )
 
     # Pass 3: local row number within the bucket + frozen offset.
     w_local = W.partitionBy("_bkt").orderBy(*order_exprs)
@@ -192,33 +192,6 @@ def with_global_row_scalable(
     if total_col is not None:
         out = out.withColumn(total_col, F.lit(running).cast("long"))
     return out
-
-
-def with_pack_id_scalable(
-    df: DataFrame,
-    pack_length: int,
-    order_col: str = "time",
-    tiebreak_col: str | None = None,
-    num_buckets: int | None = None,
-    reuse: str = "checkpoint",
-) -> DataFrame:
-    """Pack assignment without a single-partition window — the pack-shaped
-    view of :func:`with_global_row_scalable` (identical output to
-    :func:`with_pack_id`, partition-parallel; see that primitive for the
-    three-pass mechanics and the *reuse* trade)."""
-    indexed = with_global_row_scalable(
-        df,
-        order_col,
-        tiebreak_col=tiebreak_col,
-        num_buckets=num_buckets,
-        reuse=reuse,
-        index_col="_grow",
-    )
-    return (
-        indexed.withColumn("pack_id", F.floor(F.col("_grow") / pack_length))
-        .withColumn("pack_seq", F.col("_grow") % pack_length)
-        .drop("_grow")
-    )
 
 
 def ntile_expr(row_1based: F.Column, total: F.Column, n: int) -> F.Column:

@@ -294,14 +294,12 @@ def with_residual(
     """Attach the cell-relative residual ``out[i] = v[i] - mean_v[i]``
     via a broadcast join on the (tiny) per-cell mean table. LEFT join
     with a ZERO-MEAN fallback: a row whose cell has no mean entry keeps
-    its RAW vector as the residual. Matters whenever the means come
-    from another corpus than the rows (frozen *means* passed to
-    :func:`encode_ivfpq`, or a probe of a cell no corpus row fell in):
-    a vector in a cell without a mean would otherwise be written with
-    all-NULL codes, and a probe of that cell would carry a NULL ADC
-    table whose NULL distances rank FIRST (ascending) and displace real
-    neighbors. Encode and probe fall back identically, so ADC on such
-    cells is plain (non-residual) PQ — consistent and deterministic."""
+    its RAW vector as the residual. Matters for a probe of a cell no
+    corpus row fell in (each probe is exploded over its nprobe best
+    cells, occupied or not): its ADC table would otherwise be NULL, and
+    NULL distances rank FIRST (ascending) and displace real neighbors.
+    ADC on such cells is plain (non-residual) PQ — consistent and
+    deterministic."""
     return (
         df.join(F.broadcast(means), cell_col, "left")
         .withColumn(
@@ -340,21 +338,17 @@ def encode_ivfpq(
     vec_col: str = "embedding",
     normalize: bool = True,
     residual: bool = True,
-    means: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The IVF-PQ corpus side of :func:`ivfpq_topk`: (normalize ->)
     assign cells ->
     (residual vs cell means ->) PQ-encode. Returns ``(encoded, means)``
     where encoded = (id, cell, codes) behind a materialization barrier
-    and means is the per-cell mean table (None when residual=False).
-
-    Pass *means* to encode against FROZEN reproduction values — new
-    vectors that must share the means existing codes were built with,
-    never recomputed ones."""
+    and means is the per-cell mean table (None when residual=False)."""
     c = corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("cv"))
     if normalize:
         c = _normed(c, "cv")
     c = assign_cells(c, "cv", centroids, out="cell")
+    means = None
     if residual:
         # barrier BEFORE the means agg: the assigned corpus feeds two
         # consumers (the per-cell mean aggregation and the residual
@@ -363,8 +357,7 @@ def encode_ivfpq(
         # on the 256-probe 100k smoke. The means relation itself is also
         # checkpointed (~IVF_K rows) since both join sides reference it.
         c = c.localCheckpoint(eager=False)
-        if means is None:
-            means = with_cell_means(c, "cv", dim).localCheckpoint(eager=False)
+        means = with_cell_means(c, "cv", dim).localCheckpoint(eager=False)
         c = with_residual(c, "cv", means)
     enc_col = "rv" if residual else "cv"
     # materialize the encoded corpus (id, cell, M codes — the compressed

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from tower_parse_spark.functions.vectors import (
     as_double,
-    cosine,
     dot,
     lit_norm,
     multi_dot_lit,
@@ -200,7 +199,8 @@ def _with_centroid_scores(
     scores derived from cheap slot reads. Replaces 2k interpreted
     traversals per row (k dot folds + k vector-norm folds) with one.
     *out_norm* optionally also materializes the vector norm from the
-    same fold. Values are bit-identical to the cosine() form: each
+    same fold. Values are bit-identical to a per-centroid
+    ``dot(v, c) / (norm(v) * norm(c))``: each
     accumulator keeps the 0.0-seeded index-ascending summation, the
     constant centroid norms fold driver-side (lit_norm), and the
     division keeps the d / (vnorm * cnorm) grouping."""
@@ -402,7 +402,8 @@ def brute_force_topk(
     Norms are projected per ROW before the join: scoring a pair is then
     one dot-product fold + two scalar reads, not three array traversals
     — the same fold per row gives bit-identical values to an inline
-    cosine(), but the O(pairs) stage stops re-deriving O(rows) work.
+    ``dot / (norm * norm)``, but the O(pairs) stage stops re-deriving
+    O(rows) work.
     """
     c = corpus.select(
         F.col(id_col), as_double(F.col(vec_col)).alias("cv")

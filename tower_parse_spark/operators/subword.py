@@ -284,7 +284,8 @@ def token_subword_arrays(
     post-shuffle, already parallel — so the guard would shuffle the
     full token arrays just to parallelize posexplode; same
     shuffle-dominant shape the passage-front A/B measured as
-    neutral-to-1.24x slower (SCALE.md, r11 start)."""
+    neutral-to-1.24x slower (``git show e880839:SCALE.md``, "r11
+    start"; see HISTORY.md)."""
     exploded = df.select(
         F.col(id_col),
         F.posexplode_outer(F.col(toks_col)).alias("_pos", "_tok"),

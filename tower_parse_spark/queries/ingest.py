@@ -22,11 +22,7 @@ from pyspark.sql import functions as F
 
 from tower_parse_spark.functions.extraction import extract_lines
 from tower_parse_spark.functions.rounding import pround
-from tower_parse_spark.operators.pack import (
-    pack_stats,
-    with_pack_id,
-    with_pack_id_scalable,
-)
+from tower_parse_spark.operators.pack import pack_stats, with_pack_id
 from tower_parse_spark.plans.profile import DeviceProfile, GroupSpec
 from tower_parse_spark.queries import Query
 from tower_parse_spark.session import ensure_parallelism, load_table
@@ -197,14 +193,12 @@ ORDER BY level, pack_id
 
 
 def ingest_pack_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A17 at scale: ungrouped global packing via range-partition +
-    two-pass indexing (no single-partition window). Same oracle shape."""
+    """A17 at scale: ungrouped packs, which :func:`with_pack_id` numbers
+    partition-parallel (no single-partition window). Same oracle shape."""
     ext = extract_lines(
         _probe_lines(spark, sf_dir), PROBE_PROFILE, extra_cols=["event_id"]
     )
-    packed = with_pack_id_scalable(
-        ext, 100, order_col="time", tiebreak_col="event_id"
-    )
+    packed = with_pack_id(ext, 100, None, ["time", "event_id"])
     return pack_stats(packed).orderBy("pack_id")
 
 

@@ -29,8 +29,8 @@ from tower_parse_spark.functions.rounding import pround, sql_pround
 from tower_parse_spark.queries import Query
 from tower_parse_spark.queries.ingest import PROBE_PROFILE, _probe_lines
 from tower_parse_spark.session import scoped_shuffle_partitions
+from tower_parse_spark.streaming import pipeline as P
 from tower_parse_spark.streaming import sources as SRC
-from tower_parse_spark.streaming.packs import stream_pack
 
 PACK_N = 100
 N_SPOOL_FILES = 4
@@ -45,8 +45,9 @@ N_STREAM_STATE_PARTS = 4
 
 
 def streaming_pack_carry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the real applyInPandasWithState pack operator over a replayed
-    line stream (4 micro-batches) and return per-pack stats."""
+    """Run the ingest's pack writer (``pipeline.write_packs``) over a
+    replayed line stream (4 micro-batches) and return per-pack stats of
+    the pack files it wrote."""
     lines = _probe_lines(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="tps_stream_")
     spool = os.path.join(tmp, "in")
@@ -96,24 +97,21 @@ def streaming_pack_carry(spark: SparkSession, sf_dir: str) -> DataFrame:
         from tower_parse_spark.functions.extraction import extract_lines
 
         parsed = extract_lines(lines_stream, PROBE_PROFILE, extra_cols=["event_id"])
-        packed = stream_pack(
-            parsed, PACK_N, "level", order_cols=["time", "event_id"]
-        )
-        sink = f"stream_packs_{uuid.uuid4().hex[:8]}"
+        packed = P.PackedStream(parsed, PACK_N, "level", ("time", "event_id"))
+        sink = os.path.join(tmp, "packs")
         with scoped_shuffle_partitions(spark, N_STREAM_STATE_PARTS):
-            q = (
-                packed.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
+            q = P.write_packs(
+                packed, sink, os.path.join(tmp, "ckpt"), "level",
+                query_name=f"stream_packs_{uuid.uuid4().hex[:8]}",
             )
             try:
                 q.processAllAvailable()
             finally:
                 q.stop()
+        # partition discovery reads pack_id back as int
         out = (
-            spark.table(sink)
+            spark.read.parquet(sink)
+            .withColumn("pack_id", F.col("pack_id").cast("long"))
             .groupBy("level", "pack_id")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),

@@ -70,7 +70,8 @@ def get_spark(app_name: str = "tower_parse_spark", cpus: str | None = None) -> S
         # images = 10 GB per batch per task at real payloads). 1024
         # bounds that at ~1 GB while leaving numeric Pandas paths flat
         # (A/B at sf0.1: multimodal decode/near-dup and the stateful
-        # pack all within noise — SCALE.md r12). Deployments with
+        # pack all within noise — `git show e880839:SCALE.md`, "r12
+        # close"; see HISTORY.md). Deployments with
         # larger payloads scale this down with payload size.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # events.parquet has shipped as TIMESTAMP(NANOS), which the

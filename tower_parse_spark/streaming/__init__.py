@@ -7,9 +7,9 @@ re-expresses that dataflow on Structured Streaming:
 - sources.py     — socket / rate-generator / file / kafka line sources
                    (A1-A5)
 - packs.py       — exact-count packs with remainder carry across
-                   micro-batches (A17 streaming form,
-                   applyInPandasWithState); its writing form writes
-                   each pack's parquet file as it is cut
+                   micro-batches (A17's one streaming form,
+                   applyInPandasWithState), each pack's parquet file
+                   written as it is cut
 - pipeline.py    — parse plan on a stream + the checkpointed pack
                    sink + graceful stop (A18-A22)
 - packstore.py   — read side and maintenance of the pack layout

@@ -13,9 +13,12 @@ invariant for any stateless operator, so this is ``applyInPandasWithState``:
   intentional upgrade over the reference's crash behavior (buffer lost,
   readport.py:409-419 acknowledges the loss).
 
-The one packer body (:func:`make_packer`) has two forms. The rows form,
-:func:`stream_pack`, emits the packs' rows (memory sinks, the registry's
-``streaming_pack_carry``). The writing form, :func:`stream_pack_files`,
+This is the one streaming form of the pack semantics whose batch entry
+is ``operators.pack.with_pack_id`` (order: ``order_cols`` ascending,
+nulls first, stated there): after every commit, the packs written equal
+the batch's full packs over the input read so far, and the state holds
+the batch's trailing short pack (tests/test_properties.py).
+:func:`stream_pack_files` runs the packer body (:func:`make_packer`) and
 writes each completed pack in the task that cut it, as the reference
 writes one ``.npz`` per pack when its buffer flushes (readport.py:392-405):
 ``<out>/<group>=<g>/pack_id=<n>/part-0.parquet`` (:data:`PACK_FILE`),
@@ -63,18 +66,8 @@ from pyspark.sql.types import (
 )
 
 
-def packed_schema(df: DataFrame) -> StructType:
-    return StructType(
-        list(df.schema.fields)
-        + [
-            StructField("pack_id", LongType()),
-            StructField("pack_seq", LongType()),
-        ]
-    )
-
-
 def written_schema(df: DataFrame, group_col: str) -> StructType:
-    """The writing form's output: one row per pack file written."""
+    """The packer's output: one row per pack file written."""
     return StructType(
         [
             df.schema[group_col],
@@ -99,7 +92,7 @@ def pack_file_schema(df: DataFrame, group_col: str):
     )
 
 
-#: the one data file of a pack directory written by the writing form
+#: the one data file of a pack directory the packer writes
 PACK_FILE = "part-0.parquet"
 
 STATE_SCHEMA = StructType(
@@ -113,9 +106,10 @@ STATE_SCHEMA = StructType(
 def make_packer(pack_length: int, order_cols: list[str], columns: list[str]):
     """Build the per-group stateful function.
 
-    Ordering note: rows are sorted by *order_cols* within each trigger
-    (deterministic tests); across triggers the semantics are arrival
-    order, exactly like the reference's FIFO buffer (readport.py:271-275).
+    Ordering note: rows are sorted by *order_cols* within each trigger,
+    ascending with nulls first, as ``with_pack_id``'s window sorts them;
+    across triggers the semantics are arrival order, exactly like the
+    reference's FIFO buffer (readport.py:271-275).
     """
 
     def packer(
@@ -125,9 +119,9 @@ def make_packer(pack_length: int, order_cols: list[str], columns: list[str]):
     ) -> Iterator[pd.DataFrame]:
         batch = pd.concat(list(pdfs), ignore_index=True)
         if len(batch):
-            batch = batch.sort_values(order_cols, kind="mergesort").reset_index(
-                drop=True
-            )
+            batch = batch.sort_values(
+                order_cols, kind="mergesort", na_position="first"
+            ).reset_index(drop=True)
         if state.exists:
             next_pack_id, raw = state.get
             buffered = pickle.loads(raw)
@@ -156,8 +150,8 @@ def make_pack_writer(
     out_dir: str,
     file_schema,
 ):
-    """Build the per-group stateful function of the writing form: the
-    packs of :func:`make_packer`, each written to its own file
+    """Build the per-group stateful function :func:`stream_pack_files`
+    runs: the packs of :func:`make_packer`, each written to its own file
     (module docstring), and one ``(group, pack_id, rows, bytes)`` row per
     pack instead of its rows.
 
@@ -270,47 +264,20 @@ def make_pack_writer(
     return pack_writer
 
 
-def _stateful(
-    df: DataFrame, group_col: str, fn, output: StructType
-) -> DataFrame:
-    return df.groupBy(group_col).applyInPandasWithState(
-        fn,
-        outputStructType=output,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_pack(
-    df: DataFrame,
-    pack_length: int,
-    group_col: str,
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    """Exact-N packs per group on a streaming DataFrame.
-
-    Emits only rows of *completed* packs (append semantics — a pack is
-    immutable once emitted, which is what makes the downstream file sink
-    atomic per pack, A18/A20); the in-progress tail rides in state.
-    """
-    order = order_cols or ["time"]
-    packer = make_packer(pack_length, order, df.columns)
-    return _stateful(df, group_col, packer, packed_schema(df))
-
-
 def stream_pack_files(
     df: DataFrame,
     pack_length: int,
     group_col: str,
     out_dir: str,
+    order_cols: tuple[str, ...],
 ) -> DataFrame:
-    """The writing form of :func:`stream_pack` (rows ordered by ``time``
-    within a trigger): every completed pack is
+    """Exact-N packs per group on a streaming DataFrame, rows ordered by
+    *order_cols* within a trigger: every completed pack is
     written under *out_dir* by the task that cuts it (module docstring),
     and the stream carries one ``(group, pack_id, rows, bytes)`` row per
-    pack file written. Nothing is written until the stream's rows are
-    materialized, so a sink must consume every row.
+    pack file written; the in-progress tail rides in state. Nothing is
+    written until the stream's rows are materialized, so a sink must
+    consume every row.
 
     *out_dir* is resolved here, in the process that builds the stream (a
     plain path against its cwd), because the closure that writes is
@@ -318,7 +285,13 @@ def stream_pack_files(
     if "://" not in out_dir:
         out_dir = os.path.abspath(out_dir.removeprefix("file:"))
     writer = make_pack_writer(
-        pack_length, ["time"], df.columns, group_col, out_dir,
+        pack_length, list(order_cols), df.columns, group_col, out_dir,
         pack_file_schema(df, group_col),
     )
-    return _stateful(df, group_col, writer, written_schema(df, group_col))
+    return df.groupBy(group_col).applyInPandasWithState(
+        writer,
+        outputStructType=written_schema(df, group_col),
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )

@@ -44,7 +44,9 @@ def group_column(profile: DeviceProfile) -> str:
 @dataclass(frozen=True)
 class PackedStream:
     """What :func:`write_packs` needs to build the pack-writing operator:
-    the parsed stream with its key column, the pack length and the key.
+    the parsed stream with its key column, the pack length, the key and
+    the columns rows are packed in order of (the last one breaks ties;
+    see ``operators/pack.py``).
 
     The operator's closure carries the output directory and is pickled
     when the operator is built, so ``write_packs``, which knows the
@@ -53,6 +55,7 @@ class PackedStream:
     parsed: DataFrame
     pack_length: int
     group_col: str
+    order_cols: tuple[str, ...] = ("time",)
 
 
 def packed_stream(lines: DataFrame, profile: DeviceProfile) -> PackedStream:
@@ -137,7 +140,8 @@ def write_packs(
             f"group_col {group_col!r} is not the stream's key {packed.group_col!r}"
         )
     written = stream_pack_files(
-        packed.parsed, packed.pack_length, group_col, out_dir
+        packed.parsed, packed.pack_length, group_col, out_dir,
+        packed.order_cols,
     ).observe(
         "sink",
         F.count(F.lit(1)).alias("files"),
