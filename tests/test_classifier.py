@@ -193,49 +193,6 @@ def test_langid_weight_table_bounded(spark):
     assert len(row.nlls) == 3
 
 
-def test_quality_model_roundtrip(spark, tmp_path):
-    model = CL.train_quality_nb(_labeled(spark))
-    path = str(tmp_path / "qc_model")
-    CL.save_quality_model(model, path)
-    loaded = CL.load_quality_model(spark, path)
-    corpus = spark.createDataFrame(
-        [(1, CLEAN), (2, SPAM)], "doc_id long, text string"
-    )
-    fresh = {(r.doc_id, r.score_q) for r in CL.score_quality(corpus, model).collect()}
-    again = {(r.doc_id, r.score_q) for r in CL.score_quality(corpus, loaded).collect()}
-    assert fresh == again
-
-
-def test_quality_model_meta_mismatch_raises(spark, tmp_path):
-    import pytest
-
-    model = CL.train_quality_nb(_labeled(spark))
-    path = str(tmp_path / "qc_model")
-    CL.save_quality_model(model, path)
-    orig = CL.FEATURE_SALT
-    try:
-        CL.FEATURE_SALT = "other"  # a different hash family
-        with pytest.raises(ValueError, match="incompatible"):
-            CL.load_quality_model(spark, path)
-    finally:
-        CL.FEATURE_SALT = orig
-
-
-def test_quality_model_nondefault_feature_space_roundtrip(spark, tmp_path):
-    # n_features is MODEL DATA: a 4096-bucket model saves, loads, and
-    # scores identically regardless of the module default
-    model = CL.train_quality_nb(_labeled(spark), n_features=4096)
-    assert model.n_features == 4096
-    path = str(tmp_path / "qc4096")
-    CL.save_quality_model(model, path)
-    loaded = CL.load_quality_model(spark, path)
-    assert loaded.n_features == 4096
-    corpus = spark.createDataFrame([(1, SPAM)], "doc_id long, text string")
-    a = CL.score_quality(corpus, model).collect()[0].score_q
-    b = CL.score_quality(corpus, loaded).collect()[0].score_q
-    assert a == b < 0
-
-
 def test_training_invariant_under_partitioning(spark):
     """The quantize-then-sum exactness claim, pinned mechanically: the
     model's integer weights must be bit-identical no matter how the
@@ -256,18 +213,3 @@ def test_training_invariant_under_partitioning(spark):
     one = fingerprint(base.coalesce(1))
     many = fingerprint(base.repartition(17))
     assert one == many
-
-
-def test_quality_model_meta_missing_key_raises(spark, tmp_path):
-    import pytest
-
-    model = CL.train_quality_nb(_labeled(spark))
-    path = str(tmp_path / "qc_model")
-    CL.save_quality_model(model, path)
-    row = spark.read.parquet(f"{path}/meta").first()
-    spark.createDataFrame(
-        [(row["kind"], row["n_features"], row["w_scale"])],
-        "kind string, n_features int, w_scale long",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    with pytest.raises(ValueError, match="feature_salt.*<absent>"):
-        CL.load_quality_model(spark, path)

@@ -67,186 +67,3 @@ def test_query_mode_unknown_name_exits():
 
     with pytest.raises(SystemExit, match="unknown query"):
         main(["--query", "nope_not_a_query"])
-
-
-def test_curate_mode_end_to_end(spark, tmp_path):
-    """--curate: jsonl spool -> quality gate -> near-dup gate -> sinks,
-    driven through the CLI's start_curate seam."""
-    import json as _json
-
-    from tower_parse_spark.__main__ import start_curate
-    from tower_parse_spark.operators.classifier import (
-        save_quality_model,
-        train_quality_nb,
-    )
-
-    clean = "the committee published the annual report with detailed findings"
-    spam = "zzclicka zzbuyb zzfreec zzcasinod zzwinnere zzbonusf"
-    model = train_quality_nb(
-        spark.createDataFrame(
-            [(True, clean), (True, clean + " twice"), (False, spam),
-             (False, spam + " more")],
-            "label boolean, text string",
-        )
-    )
-    model_path = str(tmp_path / "model")
-    save_quality_model(model, model_path)
-
-    spool = tmp_path / "spool"
-    spool.mkdir()
-    rows = [
-        {"doc_id": 1, "text": clean},
-        {"doc_id": 2, "text": spam + " offer"},
-        {"doc_id": 3, "text": clean + " indeed"},  # near-dup of 1
-    ]
-    (spool / "docs.jsonl").write_text(
-        "\n".join(_json.dumps(r) for r in rows) + "\n"
-    )
-    out = str(tmp_path / "out")
-    q = start_curate(spark, str(spool), model_path, out)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    accepted = {r.doc_id for r in spark.read.parquet(f"{out}/accepted").collect()}
-    rejected = {r.doc_id for r in spark.read.parquet(f"{out}/rejected").collect()}
-    assert accepted == {1}
-    assert rejected == {2}
-
-
-def test_curate_requires_model(spark, tmp_path):
-    import pytest
-
-    from tower_parse_spark.__main__ import start_curate
-
-    with pytest.raises(SystemExit, match="--model"):
-        start_curate(spark, str(tmp_path), None, str(tmp_path / "o"))
-
-
-def test_compact_index_mode_end_to_end(spark, tmp_path, capsys):
-    """--compact-index (r13): folds the signature index's batch
-    partitions AND the partitioned-gate sidecar in one maintenance
-    call. Default through-batch is the highest batch present MINUS ONE
-    (ADVICE r13): a non-graceful stop replays the max epoch on
-    restart, and that replay must not find its own rows already folded
-    into batch=0 (self-flagging). The compacted index still answers
-    probes and the gate still covers."""
-    import json as _json
-    import os as _os
-
-    from tower_parse_spark.__main__ import run_compact_index
-    from tower_parse_spark.operators import bloom as B
-    from tower_parse_spark.streaming import neardup as ND
-
-    idx = str(tmp_path / "idx")
-    ver = str(tmp_path / "ver")
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64  # force the partitioned gate so both compact
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        texts = [
-            "the quick brown fox jumps over the lazy dog today",
-            "pack my box with five dozen liquor jugs right now",
-            "sphinx of black quartz judge my vow and more words",
-        ]
-        for i, t in enumerate(texts):
-            b = spark.createDataFrame([(i + 1, t)], "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        assert run_compact_index(spark, idx, None) == 0
-        out = [
-            _json.loads(line)
-            for line in capsys.readouterr().out.strip().splitlines()
-        ]
-        assert out[0]["through_batch"] == 1  # max=2, default = max-1
-        assert out[0]["index"]["n_partitions_removed"] == 2
-        assert out[1]["part_gate"]["n_partitions_removed"] == 2
-        assert sorted(
-            d
-            for d in _os.listdir(idx)
-            if d.startswith("batch=")
-        ) == ["batch=0", "batch=2"]  # the replayable max epoch survives
-        # the loop continues on the compacted layout: a near-dup of a
-        # pre-compaction doc still flags through the still-live gate
-        assert ND.read_part_gate(spark, idx, 3) is not None
-        # a REPLAY of the max epoch is still safe: its probe reads
-        # batch < 2, which no longer contains its own rows
-        b_replay = spark.createDataFrame(
-            [(3, texts[2])], "doc_id long, text string"
-        )
-        ND.process_epoch(b_replay, 2, idx, ver, band_gate=True)
-        replay_rows = (
-            spark.read.option("basePath", ver)
-            .parquet(ver)
-            .filter("doc_id = 3")
-            .collect()
-        )
-        assert replay_rows and not replay_rows[0]["is_dup"]  # no self-flag
-        # explicit --through-batch=max remains available for a stream
-        # known committed through max
-        assert run_compact_index(spark, idx, 2) == 0
-        capsys.readouterr()
-        b3 = spark.createDataFrame(
-            [(30, texts[0] + " once more")], "doc_id long, text string"
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        rows = spark.read.option("basePath", ver).parquet(ver)
-        r30 = rows.filter("doc_id = 30").collect()
-        assert r30 and r30[0]["is_dup"]
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_phash_dedup_mode_end_to_end(spark, tmp_path):
-    """--phash-dedup: jsonl hash spool -> Hamming-banded near-dup
-    sinks, driven through the CLI's start_phash_dedup seam; the second
-    file carries an exact repeat of the first file's hash and must
-    come back is_dup."""
-    import json as _json
-    import os as _os
-    import time as _time
-
-    from tower_parse_spark.__main__ import start_phash_dedup
-
-    spool = tmp_path / "hash_spool"
-    spool.mkdir()
-    out = str(tmp_path / "phout")
-    t0 = _time.time() - 10
-    f0 = spool / "b0.jsonl"
-    f0.write_text(
-        "\n".join(_json.dumps(r) for r in
-                  [{"doc_id": 1, "phash": 0x12345678},
-                   {"doc_id": 2, "phash": 0x0F0F0F0F}]) + "\n"
-    )
-    _os.utime(f0, (t0, t0))
-    f1 = spool / "b1.jsonl"
-    f1.write_text(_json.dumps({"doc_id": 10, "phash": 0x12345678})
-                  + "\n")
-    _os.utime(f1, (t0 + 1, t0 + 1))
-    q = start_phash_dedup(spark, str(spool), out)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = {
-        r["doc_id"]: r
-        for r in spark.read.option("basePath", f"{out}/verdicts")
-        .parquet(f"{out}/verdicts").collect()
-    }
-    assert not rows[1]["is_dup"] and not rows[1]["in_batch_dup"]
-    assert not rows[2]["is_dup"] and not rows[2]["in_batch_dup"]
-    # the file source may deliver both files in ONE micro-batch (no
-    # maxFilesPerTrigger on the CLI reader): the repeat is then an
-    # in-batch dup of the lower id instead of a history dup —
-    # suppressed either way
-    assert rows[10]["is_dup"] or rows[10]["in_batch_dup"]
-
-
-def test_phash_dedup_cli_arg_parses():
-    from tower_parse_spark.__main__ import build_parser
-
-    args = build_parser().parse_args(
-        ["--phash-dedup", "/tmp/spool", "--out", "/tmp/o",
-         "--compact-every", "5"]
-    )
-    assert args.phash_dedup == "/tmp/spool"
-    assert args.compact_every == 5

@@ -9,10 +9,13 @@ the profile/config validation that gates the source selection.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tower_parse_spark.plans.profile import ConfigurationError, DeviceProfile
 from tower_parse_spark.streaming import sources as SRC
+from tests.test_reference_configs import REF as REFERENCE
 
 REGEX = [r"(?P<level>\d+) V=(?P<v>\S+)"]
 
@@ -89,6 +92,9 @@ def test_profile_kafka_requires_servers_and_topic():
         DeviceProfile(name="x", regex=REGEX, source="file")
 
 
+@pytest.mark.skipif(
+    not os.path.isdir(REFERENCE), reason="reference tree not available"
+)
 def test_reference_configs_keep_socket_default():
     """Reference .conf files carry no 'source' key — they must keep the
     socket source (additive option, zero behavior change)."""

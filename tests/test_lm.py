@@ -165,49 +165,3 @@ def test_reference_slice_scores_lower_than_average(spark):
     }
     assert avg[True] < avg[False]
 
-
-# --------------------------------------------------------------------------
-# Model persistence (save_bigram_lm / load_bigram_lm)
-# --------------------------------------------------------------------------
-
-
-def test_lm_save_load_score_identity(spark, tmp_path):
-    """train -> save -> load -> score is verdict-identical to scoring
-    with the in-memory model (the save_quality_model discipline)."""
-    model = _model(spark)
-    docs = docs_table(
-        spark, [(1, "the cat sat"), (2, "the dog sat"), (3, "zz qq")]
-    )
-    direct = sorted(
-        map(tuple, LM.score_perplexity(docs, model).collect())
-    )
-    path = str(tmp_path / "lm_artifact")
-    LM.save_bigram_lm(model, path)
-    loaded = LM.load_bigram_lm(spark, path)
-    via_disk = sorted(
-        map(tuple, LM.score_perplexity(docs, loaded).collect())
-    )
-    assert via_disk == direct
-
-
-def test_lm_load_rejects_mismatched_meta(spark, tmp_path):
-    """A sidecar trained under a different quantization scale or
-    tokenizer must refuse to load — not score garbage."""
-    import pytest
-
-    model = _model(spark)
-    path = str(tmp_path / "lm_bad")
-    LM.save_bigram_lm(model, path)
-    bad = dict(LM._lm_meta())
-    bad["nll_scale"] = 1000
-    spark.createDataFrame([bad]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/meta")
-    with pytest.raises(ValueError, match="incompatible"):
-        LM.load_bigram_lm(spark, path)
-    # a sidecar missing a required key (older artifact) also refuses
-    spark.createDataFrame([{"kind": "bigram_lm"}]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/meta")
-    with pytest.raises(ValueError, match="incompatible"):
-        LM.load_bigram_lm(spark, path)

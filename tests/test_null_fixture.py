@@ -13,18 +13,13 @@ beat DuckDB's NULLS LAST (fixed with asc_nulls_last).
 from __future__ import annotations
 
 import shutil
-import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
-from check_oracle import value_hash  # noqa: E402
-
-from tower_parse_spark.queries import registry  # noqa: E402
-from tower_parse_spark.session import TABLES, table_path  # noqa: E402
+from tools.check_oracle import value_hash
+from tower_parse_spark.queries import registry
+from tower_parse_spark.session import TABLES, table_path
 
 SRC = "/root/testdata/sf0.001"
 

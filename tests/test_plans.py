@@ -247,8 +247,6 @@ def test_streaming_epoch_audit_families_clean(spark):
     assert set(by_name) == {
         "stream:neardup_epoch",
         "stream:neardup_epoch_part_gated",
-        "stream:phash_epoch",  # r15: the image/audio near-dup twin
-        "stream:curation_epoch",
         "stream:pack_epoch_writer",
         "stream:pack_stateful",
     }

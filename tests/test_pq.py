@@ -141,9 +141,7 @@ def test_residual_adc_recall_floor(spark):
     as M=8/K=256); the raw-vector path with the SAME books measures
     0.65, so the floor also asserts residual > raw."""
     import random
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from tools.ann_recall import SEED, make_corpus_rows, recall_at_k
 
     n, dim, k = 2000, 16, 10

@@ -1,10 +1,12 @@
 """Every top-level package definition is reached from a query, the CLI,
 a tool or the benchmark — or is on the kept list with its reason.
 
-Roots: every package statement outside a top-level def/class (registry
-tables, module constants; ``from ... import`` re-exports in
-``__init__.py`` excepted), all of ``tools/``, ``perfbench/`` (its tests
-excepted), ``bench.py`` and ``__spark_entry__.py``, plus KEPT. A
+Definitions: top-level defs and classes, and, outside ``__init__.py``,
+top-level ``NAME = ...`` / ``NAME: T = ...`` constants (dunders
+excepted). Roots: every other package statement outside a top-level
+def/class (``from ... import`` re-exports in ``__init__.py``
+excepted), all of ``tools/``, ``perfbench/`` (its tests excepted),
+``bench.py`` and ``__spark_entry__.py``, plus KEPT. A
 reference is a Name, an Attribute, an ImportFrom name or an identifier
 string constant; reach is transitive through the reached definitions'
 bodies. A module-level ``from m import n`` in a package module other
@@ -19,12 +21,8 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 KEPT = {
-    "save_quality_model": "the only producer of the --curate --model artifact",
-    "save_bigram_lm": "the only producer of the --curate --lm-model artifact",
-    "decode_real": "produces the --phash-dedup input the CLI help names",
-    "phash_real": "produces the --phash-dedup input the CLI help names",
     "compact_packs": "pack compaction, an open ROADMAP item (6)",
-    "read_gate_bloom": "its tests inspect the --curate near-dup gate's state",
+    "read_gate_bloom": "its tests inspect the near-dup band gate's state; leaves with the gate (ROADMAP item 13)",
     "connected_components": "its tests cover _components_with_size, which dedup_clusters reaches",
     "dead_letter_stream": "retired with malformed-line routing (ROADMAP item 10)",
     "write_dead_letters": "retired with malformed-line routing (ROADMAP item 10)",
@@ -60,6 +58,23 @@ def _refs(node):
     return out
 
 
+def _constant_names(st, path):
+    """The names a top-level constant assignment defines, or () when the
+    statement is a root (``__init__.py``, dunders, non-name targets)."""
+    if path.endswith("__init__.py"):
+        return ()
+    if isinstance(st, ast.Assign):
+        targets = st.targets
+    elif isinstance(st, ast.AnnAssign) and st.value is not None:
+        targets = [st.target]
+    else:
+        return ()
+    if not all(isinstance(t, ast.Name) for t in targets):
+        return ()
+    names = [t.id for t in targets]
+    return () if any(n.startswith("__") for n in names) else names
+
+
 def _scan():
     """(definitions as {name: [(path, node)]}, reached names)."""
     defs, todo = {}, set(KEPT)
@@ -70,6 +85,9 @@ def _scan():
         for st in body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs.setdefault(st.name, []).append((path, st))
+            elif _constant_names(st, path):
+                for name in _constant_names(st, path):
+                    defs.setdefault(name, []).append((path, st))
             elif isinstance(st, ast.ImportFrom):
                 if not path.endswith("__init__.py"):
                     todo |= _refs(st) & used

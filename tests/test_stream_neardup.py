@@ -144,86 +144,6 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     assert len(r10) == 1 and r10[0].is_dup and r10[0].n_hist_matches == 1
 
 
-def test_compact_minhash_index_preserves_probes(spark, tmp_path):
-    """Compaction rearranges rows among partitions <= through_batch
-    without changing any later epoch's view: probe verdicts are
-    identical, partition count shrinks, and the loop (including a
-    replayed epoch) keeps working on the compacted index."""
-    idx, ver, _ = _paths(tmp_path)
-    b = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    ND.process_epoch(b([(1, T_A)]), 0, idx, ver)
-    ND.process_epoch(b([(2, T_B)]), 1, idx, ver)
-    ND.process_epoch(b([(3, T_C)]), 2, idx, ver)
-
-    def probe():
-        out = ND._read_index(spark, idx, before_batch=3)
-        from tower_parse_spark.operators.dedup import (
-            incremental_minhash_dedup,
-        )
-
-        probe_df = b([(10, T_A), (11, T_B), (12, "novel words only here")])
-        return sorted(
-            (r.doc_id, r.is_dup, r.n_hist_matches)
-            for r in incremental_minhash_dedup(probe_df, out).collect()
-        )
-
-    before = probe()
-    report = ND.compact_minhash_index(spark, idx, through_batch=1)
-    assert report["n_partitions_removed"] == 2
-    import glob
-
-    parts = sorted(
-        p.rsplit("=", 1)[-1] for p in glob.glob(f"{idx}/batch=*")
-    )
-    assert parts == ["0", "2"]
-    assert probe() == before
-    # the loop continues: epoch 3 indexes a survivor, replay still clean
-    ND.process_epoch(b([(4, "entirely different text four")]), 3, idx, ver)
-    ND.process_epoch(b([(4, "entirely different text four")]), 3, idx, ver)
-    idx_df = spark.read.option("basePath", idx).parquet(idx)
-    assert (
-        idx_df.groupBy("doc_id", "band_key").count().filter("count > 1").count()
-        == 0
-    )
-
-
-def test_compact_minhash_index_via_file_uri(spark, tmp_path):
-    """The maintenance path runs on the Hadoop FileSystem resolved from
-    the index path's own scheme (VERDICT r7: glob/shutil silently no-op
-    on non-POSIX stores) — drive the whole compaction through an
-    explicit file:// URI and check the physical layout with it."""
-    idx = f"file://{tmp_path}/idx"
-    ver = f"file://{tmp_path}/ver"
-    b = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    ND.process_epoch(b([(1, T_A)]), 0, idx, ver)
-    ND.process_epoch(b([(2, T_B)]), 1, idx, ver)
-    ND.process_epoch(b([(3, T_C)]), 2, idx, ver)
-
-    report = ND.compact_minhash_index(spark, idx, through_batch=1)
-    assert report["n_partitions_removed"] == 2
-    assert report["n_rows"] > 0
-
-    import os
-
-    parts = sorted(
-        d.split("=", 1)[1]
-        for d in os.listdir(f"{tmp_path}/idx")
-        if d.startswith("batch=")
-    )
-    assert parts == ["0", "2"]
-    # no stranded staging dir
-    assert not os.path.exists(f"{tmp_path}/idx/_compact_staging")
-    # the compacted index still answers probes: T_A is a known survivor
-    out = ND._read_index(spark, idx, before_batch=3)
-    from tower_parse_spark.operators.dedup import incremental_minhash_dedup
-
-    verd = {
-        r.doc_id: r.is_dup
-        for r in incremental_minhash_dedup(b([(10, T_A)]), out).collect()
-    }
-    assert verd == {10: True}
-
-
 def _verdict_rows(spark, ver):
     return sorted(
         tuple(r)
@@ -675,194 +595,6 @@ def test_write_gate_bloom_recovers_missing_n_keys(spark, tmp_path):
         B.MAX_GATE_BITS = orig
 
 
-def test_compact_part_gate_preserves_probes(spark, tmp_path):
-    """Gate compaction (r13): merging the delta partitions per word
-    must leave every later probe's gate decision identical — same
-    maybe-present set over the full indexed key population — while
-    collapsing the sidecar to one partition. Replaying a merged epoch
-    afterwards stays harmless (its rewritten batch delta is a subset
-    of the merged row)."""
-    from tower_parse_spark.operators import bloom as B
-    from tower_parse_spark.operators.bloom import part_gate_filter
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        batches = [
-            [(1, T_A), (2, T_B)],
-            [(11, T_C)],
-            [(12, "a wholly different set of words for epoch two")],
-        ]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        gate_before = ND.read_part_gate(spark, idx, 3)
-        assert gate_before is not None
-        indexed = spark.read.option("basePath", idx).parquet(idx).select(
-            "band_key", "doc_id"
-        )
-        probe = indexed.unionByName(
-            spark.createDataFrame(
-                [(f"novel:{i}:xx", 900 + i) for i in range(50)],
-                "band_key string, doc_id long",
-            )
-        ).localCheckpoint(eager=True)
-
-        def maybe_set(gate):
-            words, nb, nh = gate
-            return {
-                r["band_key"]
-                for r in part_gate_filter(
-                    probe, "band_key", words, nb, nh
-                ).collect()
-            }
-
-        before = maybe_set(gate_before)
-        res = ND.compact_part_gate(spark, idx, 2)
-        assert res["n_partitions_removed"] == 3
-        part_dirs = [
-            d
-            for d in os.listdir(ND._part_path(idx))
-            if d.startswith("batch=")
-        ]
-        assert part_dirs == ["batch=0"]  # one consolidated partition
-        gate_after = ND.read_part_gate(spark, idx, 3)
-        assert gate_after is not None
-        assert maybe_set(gate_after) == before
-        # every indexed key still maybe-present (no false negatives)
-        assert {r["band_key"] for r in indexed.collect()} <= before
-        # meta untouched; a replayed merged epoch keeps coverage
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["covered_through"]) == 2
-        b1 = spark.createDataFrame(batches[1], "doc_id long, text string")
-        ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        assert maybe_set(ND.read_part_gate(spark, idx, 3)) == before
-        # and a near-dup of a PRE-compaction doc still flags
-        b3 = spark.createDataFrame(
-            [(30, T_A + " once more")], "doc_id long, text string"
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        r30 = [r for r in _verdict_rows(spark, ver) if r[0] == 30]
-        assert r30 and r30[0][3] is True
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_compact_part_gate_noop_below_since(spark, tmp_path):
-    """ADVICE r13: through_batch < since_batch is an explicit no-op —
-    no merge, no deletes, no rename (Hadoop rename into an existing
-    batch=since dir would nest the staging dir INSIDE it) — and the
-    gate keeps covering."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        for i, rows in enumerate([[(1, T_A)], [(2, T_B)]]):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # manufacture since_batch=1 by forcing the rebuild path at 1
-        ND._write_part_meta(spark, idx, since_batch=1, covered_through=1)
-        before = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        res = ND.compact_part_gate(spark, idx, through_batch=0)
-        assert res == {"n_words": 0, "n_partitions_removed": 0}
-        after = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        assert after == before and "_compact_staging" not in os.listdir(
-            ND._part_path(idx)
-        )
-        meta = ND._read_part_meta(spark, idx)
-        assert (int(meta["since_batch"]), int(meta["covered_through"])) == (1, 1)
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_compact_part_gate_crash_degrades_to_gate_off(spark, tmp_path, monkeypatch):
-    """ADVICE r13 (medium): a crash inside compaction's destructive
-    window must read as GATE OFF (ungated probes — exact, unpruned),
-    never as a live meta row vouching for deleted delta rows (silent
-    false negatives). The meta row is deleted before the first
-    destructive step and rewritten only after the rename; simulate the
-    worst crash point by failing the final meta rewrite, then verify
-    the next epoch's rebuild path restores coverage."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        batches = [[(1, T_A)], [(2, T_B)], [(3, T_C)]]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        assert ND.read_part_gate(spark, idx, 3) is not None
-
-        real_writer = ND._write_part_meta
-
-        def crash_writer(*a, **k):
-            raise RuntimeError("simulated crash before meta rewrite")
-
-        monkeypatch.setattr(ND, "_write_part_meta", crash_writer)
-        try:
-            ND.compact_part_gate(spark, idx, 2)
-        except RuntimeError:
-            pass
-        monkeypatch.setattr(ND, "_write_part_meta", real_writer)
-
-        # the window state: merged partition in place, meta GONE
-        assert ND._read_part_meta(spark, idx) is None
-        assert ND.read_part_gate(spark, idx, 3) is None  # gate off, not wrong
-        # the loop keeps running correctly ungated, and the rebuild
-        # path restores a covering gate for later epochs
-        b3 = spark.createDataFrame(
-            [(30, T_A + " once more")], "doc_id long, text string"
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        r30 = [r for r in _verdict_rows(spark, ver) if r[0] == 30]
-        assert r30 and r30[0][3] is True  # still exact during gate-off
-        meta = ND._read_part_meta(spark, idx)
-        assert meta is not None and int(meta["covered_through"]) == 3
-        assert ND.read_part_gate(spark, idx, 4) is not None
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_compact_part_gate_preserves_recorded_geometry(spark, tmp_path):
-    """The post-rename meta rewrite must carry the sidecar's RECORDED
-    geometry, not the current constants: rewriting a drifted sidecar's
-    meta with new constants would vouch old-geometry rows past
-    read_part_gate's drift check (false negatives)."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig_cap, orig_bits = B.MAX_GATE_BITS, B.PART_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        for i, rows in enumerate([[(1, T_A)], [(2, T_B)], [(3, T_C)]]):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # constants drift AFTER the sidecar was written
-        B.PART_GATE_BITS = orig_bits * 2
-        assert ND.read_part_gate(spark, idx, 3) is None  # drift: gate off
-        ND.compact_part_gate(spark, idx, 2)
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["n_bits"]) == orig_bits  # recorded, not current
-        # reverting the constants revalidates the compacted sidecar
-        B.PART_GATE_BITS = orig_bits
-        assert ND.read_part_gate(spark, idx, 3) is not None
-    finally:
-        B.MAX_GATE_BITS, B.PART_GATE_BITS = orig_cap, orig_bits
-
-
 def test_part_gate_floor_pinned_to_measured_crossover():
     """The shipped floor is a MEASURED constant, not a guess: 10M keys
     is a quiet-machine loss (0.89x), 15M a quiet-machine win (1.08x /
@@ -924,219 +656,6 @@ def test_part_gate_engagement_floor(spark, tmp_path):
         assert {r["band_key"] for r in indexed.collect()} <= passed
     finally:
         B.MAX_GATE_BITS = orig
-
-
-def test_rebit_part_gate_migrates_geometry(spark, tmp_path):
-    """r14 (VERDICT r13 #3b): raising PART_GATE_BITS geometry-drifts
-    the live sidecar (gate correctly disables); rebit_part_gate is the
-    offline handover — rebuild from the full index at the new geometry,
-    gate comes back ACTIVE and verdict-identical (no false negatives
-    over the indexed keys, near-dups still flag, replays stay safe)."""
-    from tower_parse_spark.operators import bloom as B
-    from tower_parse_spark.operators.bloom import part_gate_filter
-
-    idx, ver, _ = _paths(tmp_path)
-    orig_cap, orig_bits = B.MAX_GATE_BITS, B.PART_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        batches = [[(1, T_A)], [(2, T_B)], [(3, T_C)]]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # deployment raises the geometry -> drift -> gate off
-        B.PART_GATE_BITS = orig_bits * 2
-        assert ND.read_part_gate(spark, idx, 3) is None
-        report = ND.rebit_part_gate(spark, idx)
-        assert report["n_bits"] == orig_bits * 2
-        assert report["since_batch"] == 2
-        # active at the new geometry, one consolidated partition
-        gate = ND.read_part_gate(spark, idx, 3)
-        assert gate is not None and gate[1] == orig_bits * 2
-        part_dirs = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        assert part_dirs == ["batch=2"]
-        # no false negatives over every indexed key
-        indexed = spark.read.option("basePath", idx).parquet(idx).select(
-            "band_key", "doc_id"
-        )
-        words, nb, nh = gate
-        passed = {
-            r["band_key"]
-            for r in part_gate_filter(
-                indexed, "band_key", words, nb, nh
-            ).collect()
-        }
-        assert {r["band_key"] for r in indexed.collect()} <= passed
-        # the loop continues at the new geometry: near-dup still flags,
-        # novel doc still passes
-        b3 = spark.createDataFrame(
-            [(30, T_A + " once more"), (31, "wholly novel words here yes")],
-            "doc_id long, text string",
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        rows = {r[0]: r for r in _verdict_rows(spark, ver)}
-        assert rows[30][3] is True and rows[31][3] is False
-        # empty/missing index: explicit no-op
-        empty = str(tmp_path / "empty_idx")
-        assert ND.rebit_part_gate(spark, empty)["since_batch"] is None
-    finally:
-        B.MAX_GATE_BITS, B.PART_GATE_BITS = orig_cap, orig_bits
-
-
-def test_auto_compaction_cadence_bounded_and_verdict_identical(spark, tmp_path):
-    """r15 (VERDICT r14 #5): compact_every=K folds the index, the
-    partitioned-gate deltas and the literal-gate history every K epochs
-    from inside the epoch body — after 3K epochs the partition counts
-    are bounded (~K+1) instead of one-per-epoch, every verdict is
-    identical to an uncompacted run, the gate stays ACTIVE, and a
-    replay of the compaction epoch itself is idempotent."""
-    from tower_parse_spark.operators import bloom as B
-
-    orig_cap = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        k = 3
-        epochs = []  # 3K epochs: one novel doc each + one exact dup of T_A
-        for i in range(3 * k):
-            novel = " ".join(f"w{i}x{j}" for j in range(10))
-            rows = [(10 * i + 1, novel)]
-            rows.append((10 * i + 2, T_A) if i else (2, T_A))
-            epochs.append(
-                spark.createDataFrame(rows, "doc_id long, text string")
-            )
-
-        def run(idx, ver, compact_every):
-            for i, batch in enumerate(epochs):
-                ND.process_epoch(
-                    batch, i, idx, ver, band_gate=True,
-                    compact_every=compact_every,
-                )
-
-        idx_a, ver_a = str(tmp_path / "idxA"), str(tmp_path / "verA")
-        idx_b, ver_b = str(tmp_path / "idxB"), str(tmp_path / "verB")
-        run(idx_a, ver_a, None)
-        run(idx_b, ver_b, k)
-
-        def verdicts(ver):
-            return {
-                r.doc_id: (r.is_dup, r.in_batch_dup, r.n_hist_matches,
-                           r.max_est_jaccard, r.batch)
-                for r in spark.read.option("basePath", ver)
-                .parquet(ver).collect()
-            }
-
-        def index_rows(idx):
-            return {
-                (r.band_key, r.doc_id)
-                for r in spark.read.option("basePath", idx)
-                .parquet(idx).select("band_key", "doc_id").collect()
-            }
-
-        def batch_dirs(path):
-            if not os.path.isdir(path):
-                return []
-            return sorted(
-                d for d in os.listdir(path) if d.startswith("batch=")
-            )
-
-        assert verdicts(ver_b) == verdicts(ver_a)
-        assert index_rows(idx_b) == index_rows(idx_a)
-        # compactions fired at epochs 3 and 6 (through 2 and 5): the
-        # cadenced run is bounded at k+1 dirs, the plain run grew 1/epoch
-        assert len(batch_dirs(idx_a)) == 3 * k
-        assert batch_dirs(idx_b) == ["batch=0", "batch=6", "batch=7",
-                                     "batch=8"]
-        assert len(batch_dirs(ND._part_path(idx_b))) <= k + 1
-        assert len(batch_dirs(ND._part_path(idx_a))) == 3 * k
-        # literal-gate history pruned to rows >= 5; row 8 covers epoch 9
-        assert batch_dirs(ND._bloom_path(idx_b)) == [
-            "batch=5", "batch=6", "batch=7", "batch=8"
-        ]
-        assert ND.read_part_gate(spark, idx_b, 3 * k) is not None
-        # replay the compaction epoch (6): overwrites its own partitions,
-        # re-runs the (idempotent) compaction, changes nothing
-        ND.process_epoch(
-            epochs[6], 6, idx_b, ver_b, band_gate=True, compact_every=k
-        )
-        assert verdicts(ver_b) == verdicts(ver_a)
-        assert index_rows(idx_b) == index_rows(idx_a)
-        assert ND.read_part_gate(spark, idx_b, 3 * k) is not None
-    finally:
-        B.MAX_GATE_BITS = orig_cap
-
-
-def test_auto_compaction_through_stream(spark, tmp_path):
-    """The compact_every knob threads through stream_minhash_dedup's
-    foreachBatch: a real stream over 4 spool files with compact_every=2
-    ends with a bounded index layout and the same verdicts as ever."""
-    batches = [
-        [(1, T_A), (2, T_B)],
-        [(10, T_A)],
-        [(20, T_C)],
-        [(30, T_A), (31, T_C)],
-    ]
-    spool = _spool(tmp_path, batches)
-    idx, ver, ckpt = _paths(tmp_path)
-    q = ND.stream_minhash_dedup(
-        _stream(spark, spool), idx, ver, ckpt, compact_every=2
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = {
-        r.doc_id: r
-        for r in spark.read.option("basePath", ver).parquet(ver).collect()
-    }
-    assert out[10].is_dup and out[30].is_dup and out[31].is_dup
-    assert not out[20].is_dup
-    # compaction at epoch 2 folded 0..1; epochs 2,3 keep their partitions
-    dirs = sorted(
-        d for d in os.listdir(idx) if d.startswith("batch=")
-    )
-    assert dirs[0] == "batch=0" and len(dirs) <= 3
-    idx_df = spark.read.option("basePath", idx).parquet(idx)
-    assert sorted(
-        r.doc_id for r in idx_df.select("doc_id").distinct().collect()
-    ) == [1, 2, 20]
-
-
-def test_rebit_cli_end_to_end(spark, tmp_path, capsys):
-    """--compact-index --rebit BITS: index compaction runs, the sidecar
-    is rebuilt at BITS (replacing, not merging, the old-geometry
-    deltas), and the report line carries the new geometry."""
-    import json as _json
-
-    from tower_parse_spark.__main__ import run_compact_index
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig_cap, orig_bits = B.MAX_GATE_BITS, B.PART_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        for i, t in enumerate([T_A, T_B, T_C]):
-            b = spark.createDataFrame([(i + 1, t)], "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # the documented workflow: raise the deployed constant FIRST,
-        # then migrate — a --rebit that disagrees with the constants is
-        # rejected (ADVICE r14: read_part_gate could never engage it)
-        with pytest.raises(ValueError, match="deployed bloom.PART_GATE"):
-            run_compact_index(spark, idx, None, rebit=orig_bits * 2)
-        capsys.readouterr()  # drop the pre-failure compaction report
-        B.PART_GATE_BITS = orig_bits * 2
-        assert run_compact_index(spark, idx, None, rebit=orig_bits * 2) == 0
-        out = [
-            _json.loads(line)
-            for line in capsys.readouterr().out.strip().splitlines()
-        ]
-        assert out[1]["part_gate_rebit"]["n_bits"] == orig_bits * 2
-        assert ND.read_part_gate(spark, idx, 3) is not None
-    finally:
-        B.MAX_GATE_BITS, B.PART_GATE_BITS = orig_cap, orig_bits
 
 
 def test_stream_start_validates_index_family_once(spark, tmp_path):

@@ -16,6 +16,7 @@ SCALE.md records the measured curve.
 from __future__ import annotations
 
 import json
+import os
 import random
 import sys
 
@@ -185,7 +186,7 @@ def measure(
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tower_parse_spark.session import get_spark
 
     spark = get_spark("ann-recall", cpus="8")

@@ -26,6 +26,7 @@ hash will match.  Usage::
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -34,7 +35,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tower_parse_spark.session import TABLES, get_spark, table_path  # noqa: E402
 

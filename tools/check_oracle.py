@@ -17,13 +17,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tower_parse_spark.session import TABLES, get_spark, table_path  # noqa: E402
 

@@ -233,10 +233,6 @@ def audit_streaming(spark) -> tuple[list, list]:
     - ``neardup_epoch_part_gated``: the same loop with MAX_GATE_BITS
       forced tiny, so the handover epoch and a PARTITIONED-gate probe
       epoch both execute (the r13 plan shape);
-    - ``phash_epoch``: two process_phash_epoch calls (r15 — the
-      image/audio near-dup twin), the second probing a live banded
-      index;
-    - ``curation_epoch``: quality gate -> near-dup gate -> three sinks;
     - ``pack_epoch_writer``: the foreachBatch pack sink body over the
       packer's one-row-per-pack-written output (the packer writes the
       files itself; the body only materializes those rows);
@@ -247,11 +243,7 @@ def audit_streaming(spark) -> tuple[list, list]:
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from tower_parse_spark.operators import bloom as B
-    from tower_parse_spark.operators.classifier import train_quality_nb
-    from tower_parse_spark.streaming import curation as CU
     from tower_parse_spark.streaming import neardup as ND
     from tower_parse_spark.streaming import pipeline as P
 
@@ -301,38 +293,6 @@ def audit_streaming(spark) -> tuple[list, list]:
     finally:
         B.MAX_GATE_BITS = orig
     rows.append(_scan_plans("neardup_epoch_part_gated", cap.plans, bad))
-
-    # --- perceptual-hash near-dup epochs (r15: the image/audio twin;
-    # two epochs so the second probes a live banded index) ---
-    from tower_parse_spark.streaming import phash_index as PH
-
-    hashes = spark.createDataFrame(
-        [(1, 0x12345678), (2, 0x0FF00FF0)], "doc_id long, phash long"
-    )
-    hashes2 = spark.createDataFrame(
-        [(10, 0x12345679), (11, 0x7654321)], "doc_id long, phash long"
-    )
-    with _EpochPlanCapture() as cap:
-        PH.process_phash_epoch(hashes, 0, f"{work}/ph_idx",
-                               f"{work}/ph_ver")
-        PH.process_phash_epoch(hashes2, 1, f"{work}/ph_idx",
-                               f"{work}/ph_ver")
-    rows.append(_scan_plans("phash_epoch", cap.plans, bad))
-
-    # --- curation epoch (quality -> near-dup -> sinks) ---
-    model = train_quality_nb(
-        spark.createDataFrame(
-            [(True, d[1]) for d in docs]
-            + [(False, f"zzspama zzspamb zzspamc {i}") for i in range(3)],
-            "label boolean, text string",
-        )
-    )
-    with _EpochPlanCapture() as cap:
-        CU.curate_epoch(
-            batch(docs, [1, 2, 3]), 0, model, f"{work}/c_idx",
-            f"{work}/c_acc", f"{work}/c_rej", f"{work}/c_ver",
-        )
-    rows.append(_scan_plans("curation_epoch", cap.plans, bad))
 
     # --- foreachBatch pack sink body (over the packer's per-pack rows) ---
     written = spark.createDataFrame(

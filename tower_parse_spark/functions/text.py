@@ -228,9 +228,6 @@ SQL_TOKENS = (
     "ELSE string_split(trim(regexp_replace(lower({x}), '[^a-z0-9]+', ' ', 'g')), ' ') END"
 )
 
-SQL_TOKEN_HASH = "CAST('0x' || substr(md5({t}), 1, 15) AS BIGINT)"
-
-
 def sql_wordlist_hits(toks_expr: str, words) -> str:
     quoted = ", ".join(f"'{w}'" for w in words)
     return f"len(list_intersect(list_distinct({toks_expr}), [{quoted}]))"

@@ -189,5 +189,3 @@ def sql_cosine(a: str, b: str) -> str:
         f"(({SQL_NORM.format(a=a)}) * ({SQL_NORM.format(a=b)}))"
     )
 
-
-SQL_AS_DOUBLE = "list_transform({v}, x -> CAST(x AS DOUBLE))"

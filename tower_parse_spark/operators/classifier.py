@@ -479,66 +479,3 @@ def classify_lang(
             - F.element_at(F.col("_sorted"), 1)
         ).alias("nll_margin_q"),
     )
-
-
-# --------------------------------------------------------------------------
-# Model persistence — train once, score many
-# --------------------------------------------------------------------------
-
-
-def _model_meta(kind: str, n_features: int) -> dict:
-    """The hash-machinery parameters a saved model is only valid under:
-    a different quantization scale or salt would silently produce
-    plausible-but-wrong verdicts. n_features is MODEL DATA — restored
-    on load, not validated against the module constant."""
-    return {
-        "kind": kind,
-        "n_features": n_features,
-        "w_scale": W_SCALE,
-        "feature_salt": FEATURE_SALT,
-    }
-
-
-def save_quality_model(model: NBModel, path: str) -> None:
-    """Persist the trained quality model as a parquet artifact:
-    ``weights/`` + ``consts/`` + a one-row ``meta/`` sidecar. Production
-    trains once (offline, on the labeled slice) and scores every
-    ingest batch against the artifact."""
-    model.weights.write.mode("overwrite").parquet(f"{path}/weights")
-    model.consts.write.mode("overwrite").parquet(f"{path}/consts")
-    spark = model.weights.sparkSession
-    spark.createDataFrame(
-        [_model_meta("quality_nb", model.n_features)]
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def _check_model_meta(row, expected: dict, kind: str, path: str) -> None:
-    """Raise unless every expected meta key is present AND equal on the
-    saved row. A key ABSENT from the row is a mismatch too (ADVICE r10:
-    an older or foreign writer's artifact must fail loudly, not load as
-    if compatible), reported with an '<absent>' sentinel."""
-    mismatches = {
-        k: ((row[k] if k in row.__fields__ else "<absent>"), v)
-        for k, v in expected.items()
-        if k not in row.__fields__ or row[k] != v
-    }
-    if mismatches:
-        detail = ", ".join(
-            f"{k}: saved={a!r} expected={b!r}"
-            for k, (a, b) in sorted(mismatches.items())
-        )
-        raise ValueError(f"{kind} model at {path!r} is incompatible: {detail}")
-
-
-def load_quality_model(spark, path: str) -> NBModel:
-    """Load a :func:`save_quality_model` artifact, validating the meta
-    sidecar against this build's hash machinery — a mismatch OR an
-    absent expected key raises instead of scoring garbage."""
-    row = spark.read.parquet(f"{path}/meta").first()
-    expected = _model_meta("quality_nb", row["n_features"])
-    _check_model_meta(row, expected, "quality", path)
-    return NBModel(
-        weights=spark.read.parquet(f"{path}/weights"),
-        consts=spark.read.parquet(f"{path}/consts"),
-        n_features=row["n_features"],
-    )

@@ -16,8 +16,6 @@ re-expresses that dataflow on Structured Streaming:
                    (read_packs, compaction)
 - metrics.py     — StreamingQueryListener heartbeat (A24)
 - neardup.py     — incremental MinHash near-dup against a banded
-                   signature index (exactly-once foreachBatch)
-- phash_index.py — the perceptual-hash twin of neardup.py
-- curation.py    — composed curation: quality gate -> optional
-                   perplexity gate -> near-dup gate -> accept/quarantine
+                   signature index (exactly-once foreachBatch); the
+                   registry's streaming_minhash_dedup runs it
 """

@@ -55,8 +55,7 @@ _INDEX_SCHEMA = StructType(
 )
 
 #: Bloom sidecar dir under the index root. Underscore-prefixed, so the
-#: index's own partition discovery never sees it (the compaction
-#: staging-dir rule).
+#: index's own partition discovery never sees it.
 BLOOM_SUBDIR = "_bloom"
 
 #: headroom factor when (re)sizing the gate filter: sizing for 2x the
@@ -106,23 +105,12 @@ def _write_part_meta(
     index_path: str,
     since_batch: int,
     covered_through: int,
-    n_bits: int | None = None,
-    n_hashes: int | None = None,
 ) -> None:
-    """Geometry defaults to the CURRENT constants (the epoch write
-    path); compaction passes the sidecar's RECORDED geometry through
-    explicitly — rewriting a drifted-geometry sidecar's meta with the
-    new constants would vouch old-geometry rows past read_part_gate's
-    drift check (false negatives)."""
+    """The meta row at the CURRENT PART_GATE_* geometry."""
     from tower_parse_spark.operators import bloom as B
 
     spark.createDataFrame(
-        [(
-            B.PART_GATE_BITS if n_bits is None else int(n_bits),
-            B.PART_GATE_HASHES if n_hashes is None else int(n_hashes),
-            since_batch,
-            covered_through,
-        )],
+        [(B.PART_GATE_BITS, B.PART_GATE_HASHES, since_batch, covered_through)],
         "n_bits long, n_hashes long, since_batch long, covered_through long",
     ).coalesce(1).write.mode("overwrite").parquet(_part_meta_path(index_path))
 
@@ -213,11 +201,9 @@ def _part_gate_update(spark, index_path: str, batch_id: int, new_keys) -> None:
         )
         delta = B.bloom_delta_words(all_keys, "band_key")
         since = batch_id
-        # deliberately NOT max(covered_through, batch_id) here: this
-        # write OVERWRITES batch=since — after a compaction merged later
-        # epochs' deltas INTO that partition, claiming the old witness
-        # would vouch for rows this rebuild just destroyed (false
-        # negatives). Conservative batch_id means a contract-violating
+        # deliberately NOT max(covered_through, batch_id) here: the
+        # rebuild vouches only for the keys it just wrote through
+        # batch_id. Conservative batch_id means a contract-violating
         # manual replay leaves the gate safely DISABLED for later
         # probes until coverage rebuilds forward, never wrong.
         covered = batch_id
@@ -453,7 +439,6 @@ def stream_minhash_dedup(
     threshold: float = 0.5,
     hash_fn: str = "fast",
     band_gate: bool = False,
-    compact_every: int | None = None,
 ):
     """Start the streaming near-dup query over *docs_stream* (columns
     *id_col*, *text_col*). Per epoch: probe the index, write verdict
@@ -462,10 +447,8 @@ def stream_minhash_dedup(
     ``{index_path}/batch=N`` — both OVERWRITE per epoch, so replays are
     idempotent (:func:`process_epoch`, exposed for direct replay
     testing). *band_gate* threads through to :func:`process_epoch`
-    (default OFF, keeping this query's benched plan). *compact_every*
-    (r15, VERDICT r14 #5) turns on the every-K-epochs auto-compaction —
-    see :func:`process_epoch`. Returns the StreamingQuery (caller
-    stops it).
+    (default OFF, keeping this query's benched plan). Returns the
+    StreamingQuery (caller stops it).
 
     The index's hash family is validated ONCE here, against whatever
     rows a pre-existing index carries (the restart-with-a-different-
@@ -490,7 +473,6 @@ def stream_minhash_dedup(
             threshold=threshold,
             hash_fn=hash_fn,
             band_gate=band_gate,
-            compact_every=compact_every,
             validate_family=False,
         )
 
@@ -499,315 +481,6 @@ def stream_minhash_dedup(
         .option("checkpointLocation", checkpoint)
         .start()
     )
-
-
-def compact_minhash_index(
-    spark,
-    index_path: str,
-    through_batch: int,
-    files: int = 1,
-) -> dict:
-    """Coalesce the ``batch=0..through_batch`` partitions into a single
-    consolidated ``batch=0`` partition — the small-file maintenance a
-    long-running ingest needs: one partition per epoch is exactly-once
-    gold but after months of micro-batches the index is thousands of
-    tiny files (the packstore compaction rationale applied to the
-    signature index).
-
-    Correctness under the streaming loop's replay rule: an in-flight
-    epoch N reads partitions ``batch < N``; compaction only REARRANGES
-    rows among partitions numbered <= *through_batch*, so any probe
-    with N > through_batch sees identical content. Run it between
-    epochs (or from a maintenance job) with through_batch strictly
-    below the next epoch id; compacting the CURRENT epoch's partition
-    while it may still replay would merge rows the replay is about to
-    overwrite.
-
-    Crash safety: the consolidated rows are fully written to an
-    underscore-prefixed staging dir (invisible to partition discovery)
-    BEFORE any source partition is deleted; a crash mid-compaction
-    leaves either the original partitions or the staging dir on disk,
-    never neither (recovery: rename staging to ``batch=0``).
-
-    The list/delete/rename maintenance runs through the Hadoop
-    FileSystem API resolved from *index_path*'s own scheme (VERDICT r7
-    item 3: the earlier glob/shutil/os.replace version silently no-oped
-    on HDFS/S3, where a 100 TB deployment's index actually lives) —
-    ``file://``, bare local paths, ``hdfs://`` and ``s3a://`` all take
-    the same code path, and a path whose scheme has no registered
-    Hadoop FileSystem fails loudly at resolution instead of
-    half-compacting.
-
-    Returns {"n_rows", "n_partitions_removed"}.
-    """
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(index_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    staging = HPath(root, "_compact_staging")
-    src = (
-        spark.read.option("basePath", index_path)
-        .parquet(index_path)
-        .filter(F.col("batch").cast("long") <= through_batch)
-        .drop("batch")
-    )
-    src.coalesce(files).write.mode("overwrite").parquet(str(staging))
-    n_rows = spark.read.parquet(str(staging)).count()
-    removed = 0
-    for status in fs.listStatus(root):
-        if not status.isDirectory():
-            continue
-        name = status.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        b = name.split("=", 1)[1]
-        if b.isdigit() and int(b) <= through_batch:
-            fs.delete(status.getPath(), True)
-            removed += 1
-    target = HPath(root, "batch=0")
-    if not fs.rename(staging, target):
-        # Hadoop rename reports failure as a boolean (e.g. the target
-        # reappeared); surface it — a silent False would strand the
-        # compacted rows in the staging dir
-        raise IOError(
-            f"compact_minhash_index: rename {staging} -> {target} failed"
-        )
-    return {"n_rows": n_rows, "n_partitions_removed": removed}
-
-
-def prune_gate_history(spark, index_path: str, before_batch: int) -> int:
-    """Delete the literal band-gate sidecar's ``_bloom/batch=b`` rows
-    for b < *before_batch* (r15, VERDICT r14 #5). Each epoch writes one
-    CUMULATIVE row — at the MAX_GATE_BITS cap that is ~8 MB per epoch —
-    and only two rows are ever read back: the covering row at
-    ``probe_epoch - 1`` (read_gate_bloom / the n_keys bookkeeping) and
-    "any row" for the gapped-id existence probe. History below the
-    oldest epoch that can still replay is pure dead weight.
-
-    Replay contract: a replayed epoch N reads row N - 1, so callers
-    pass the same max-committed-1 arithmetic the other compaction paths
-    use (the auto-cadence passes ``batch_id - 1`` from inside epoch
-    *batch_id*: row batch_id-1 survives for batch_id's own replay, row
-    batch_id for the next epoch). Deletion is destruction-only on rows
-    nothing reads — no staging or meta dance needed; a crash mid-prune
-    leaves extra history, never missing coverage. Returns the number of
-    rows deleted."""
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(_bloom_path(index_path))
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return 0
-    removed = 0
-    for status in fs.listStatus(root):
-        if not status.isDirectory():
-            continue
-        name = status.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        b = name.split("=", 1)[1]
-        if b.isdigit() and int(b) < before_batch:
-            fs.delete(status.getPath(), True)
-            removed += 1
-    return removed
-
-
-def compact_part_gate(
-    spark,
-    index_path: str,
-    through_batch: int,
-    files: int = 1,
-) -> dict:
-    """Small-file maintenance for the partitioned gate: merge the
-    ``_bloom_part`` delta partitions ``since_batch..through_batch`` into
-    ONE consolidated delta at ``batch=since_batch`` — per word, the
-    bit_or of every merged row. This is the ONLY place the filter-sized
-    ``groupBy(word_idx)`` shuffle belongs: paying it once per
-    maintenance window caps the probe's per-epoch delta scan at
-    ~m/64 rows forever, where the un-compacted sidecar grows by
-    k x batch keys per epoch unboundedly (the compact_minhash_index
-    rationale applied to the gate).
-
-    Probe-identity: a probe bit is set iff ANY delta row sets it, and
-    bit_or preserves exactly the union of set bits over the merged
-    range, so every probe at epoch N > through_batch sees an identical
-    gate. Partitions BELOW since_batch (pre-geometry-drift leftovers
-    the probe already excludes) are deleted, not merged. Run between
-    epochs with *through_batch* strictly below the next epoch id, same
-    contract as compact_minhash_index; a replayed epoch in the merged
-    range simply rewrites its (now redundant — the merged row is a
-    superset, false-positive-only) batch delta. No-op when no
-    partitioned gate exists or *through_batch* < since_batch (nothing
-    in range; proceeding would also trip Hadoop rename-into-existing
-    semantics, moving staging INSIDE batch=since — ADVICE r13).
-
-    Crash safety (ADVICE r13): the destructive window here is WORSE
-    than compact_minhash_index's — staging is underscore-prefixed and
-    invisible to discovery, so a crash between deleting the source
-    partitions and renaming staging into place would leave the meta
-    row vouching (covered_through) for delta rows that no longer
-    exist: probes would gate with missing bits, i.e. silent FALSE
-    NEGATIVES, the one failure class the gate must never have. So the
-    meta row is DELETED before the first destructive step and
-    rewritten (same recorded geometry, same since/covered_through)
-    only after the rename succeeds: a crash anywhere in the window
-    degrades to gate-off — read_part_gate returns None, probes run
-    ungated (exact, just unpruned) — and the next epoch's
-    _part_gate_update rebuild path restores coverage from the full
-    index. Recovery from a crashed compaction is therefore automatic;
-    the leftover _compact_staging dir is invisible to probes and is
-    overwritten by the next compaction run.
-
-    Returns {"n_words", "n_partitions_removed"}."""
-    meta = _read_part_meta(spark, index_path)
-    if meta is None:
-        return {"n_words": 0, "n_partitions_removed": 0}
-    since = int(meta["since_batch"])
-    if through_batch < since:
-        return {"n_words": 0, "n_partitions_removed": 0}
-    covered = int(meta["covered_through"])
-    n_bits, n_hashes = int(meta["n_bits"]), int(meta["n_hashes"])
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(_part_path(index_path))
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    staging = HPath(root, "_compact_staging")
-    merged = (
-        spark.read.option("basePath", _part_path(index_path))
-        .parquet(_part_path(index_path))
-        .filter(
-            (F.col("batch").cast("long") >= since)
-            & (F.col("batch").cast("long") <= through_batch)
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
-    merged.coalesce(files).write.mode("overwrite").parquet(str(staging))
-    n_words = spark.read.parquet(str(staging)).count()
-    # disable the gate BEFORE any destructive step (see docstring): a
-    # crash from here until the final meta rewrite reads as "no gate"
-    fs.delete(HPath(_part_meta_path(index_path)), True)
-    removed = 0
-    for status in fs.listStatus(root):
-        if not status.isDirectory():
-            continue
-        name = status.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        b = name.split("=", 1)[1]
-        if b.isdigit() and int(b) <= through_batch:
-            fs.delete(status.getPath(), True)
-            removed += 1
-    target = HPath(root, f"batch={since}")
-    if not fs.rename(staging, target):
-        raise IOError(
-            f"compact_part_gate: rename {staging} -> {target} failed "
-            "(gate left disabled; next epoch rebuilds it)"
-        )
-    _write_part_meta(
-        spark, index_path, since, covered, n_bits=n_bits, n_hashes=n_hashes
-    )
-    return {"n_words": n_words, "n_partitions_removed": removed}
-
-
-def rebit_part_gate(
-    spark,
-    index_path: str,
-    n_bits: int | None = None,
-    n_hashes: int | None = None,
-    files: int = 1,
-) -> dict:
-    """Offline geometry migration for the partitioned gate (r14,
-    VERDICT r13 #3b — the ``--compact-index --rebit BITS`` CLI path):
-    rebuild the ``_bloom_part`` sidecar from the FULL signature index
-    at a NEW geometry (*n_bits*/*n_hashes*, default the current
-    ``bloom.PART_GATE_*`` constants).
-
-    Why this exists: the fixed 2^30 geometry saturates toward ~50% FP
-    near 10^9 keys (SCALE.md), and the deployment fix is raising
-    PART_GATE_BITS (2^34 headroom pytest-pinned, test_bloom.py). But
-    raising the constant alone GEOMETRY-DRIFTS the live sidecar —
-    read_part_gate correctly refuses to mix positions from different
-    geometries, so the gate silently disables until some future rebuild
-    epoch. This routine is the planned handover: run it with the
-    stream stopped (the compaction contract) after raising the
-    constants, and the gate comes back ACTIVE at the new geometry with
-    no coverage gap — the next probe gates immediately
-    (verdict-identical; the filter contents are rebuilt from the index
-    itself, the source of truth).
-
-    Crash safety mirrors compact_part_gate: the new delta is fully
-    staged before anything is destroyed, the meta row is deleted
-    before the destructive window, and the new-geometry meta is
-    written only after the rename — a crash anywhere degrades to
-    gate-off and the next epoch's rebuild path recovers (at whatever
-    geometry the constants then hold).
-
-    Returns {"n_words", "n_bits", "n_hashes", "since_batch"}; no-op
-    dict when the index has no batch partitions yet."""
-    from tower_parse_spark.operators import bloom as B
-
-    n_bits = B.PART_GATE_BITS if n_bits is None else int(n_bits)
-    n_hashes = B.PART_GATE_HASHES if n_hashes is None else int(n_hashes)
-    if n_bits % 64:
-        raise ValueError("n_bits must be a multiple of 64")
-    if n_bits != B.PART_GATE_BITS or n_hashes != B.PART_GATE_HASHES:
-        # ADVICE r14: read_part_gate engages a sidecar only when its
-        # recorded geometry EQUALS the deployed constants — migrating to
-        # any other geometry "succeeds" but leaves the gate permanently
-        # disabled with no signal. The workflow is: raise
-        # bloom.PART_GATE_BITS/_HASHES in the deployment first, then run
-        # --rebit (bare, or with the matching value).
-        raise ValueError(
-            f"rebit geometry ({n_bits} bits / {n_hashes} hashes) differs "
-            f"from the deployed bloom.PART_GATE_* constants "
-            f"({B.PART_GATE_BITS} / {B.PART_GATE_HASHES}); read_part_gate "
-            "can never engage such a sidecar — raise the constants first, "
-            "then re-run --rebit"
-        )
-    try:
-        idx = spark.read.option("basePath", index_path).parquet(index_path)
-    except AnalysisException:
-        return {"n_words": 0, "n_bits": n_bits, "n_hashes": n_hashes,
-                "since_batch": None}
-    row = idx.select(F.max(F.col("batch").cast("long")).alias("m")).collect()
-    if not row or row[0]["m"] is None:
-        return {"n_words": 0, "n_bits": n_bits, "n_hashes": n_hashes,
-                "since_batch": None}
-    max_batch = int(row[0]["m"])
-    keys = _read_index(spark, index_path, max_batch + 1).select("band_key")
-    delta = B.bloom_delta_words(keys, "band_key", n_bits, n_hashes)
-
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(_part_path(index_path))
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    staging = HPath(root, "_compact_staging")
-    delta.coalesce(files).write.mode("overwrite").parquet(str(staging))
-    n_words = spark.read.parquet(str(staging)).count()
-    # gate OFF before the destructive window (compact_part_gate rule)
-    fs.delete(HPath(_part_meta_path(index_path)), True)
-    if fs.exists(root):
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if status.isDirectory() and name.startswith("batch="):
-                fs.delete(status.getPath(), True)
-    target = HPath(root, f"batch={max_batch}")
-    if not fs.rename(staging, target):
-        raise IOError(
-            f"rebit_part_gate: rename {staging} -> {target} failed "
-            "(gate left disabled; next epoch rebuilds it)"
-        )
-    # rebuilt-from-full-index semantics: since = covered = max_batch,
-    # the same conservative witness _part_gate_update's rebuild writes
-    _write_part_meta(
-        spark, index_path, max_batch, max_batch,
-        n_bits=n_bits, n_hashes=n_hashes,
-    )
-    return {"n_words": n_words, "n_bits": n_bits, "n_hashes": n_hashes,
-            "since_batch": max_batch}
 
 
 def process_epoch(
@@ -820,7 +493,6 @@ def process_epoch(
     threshold: float = 0.5,
     hash_fn: str = "fast",
     band_gate: bool = False,
-    compact_every: int | None = None,
     validate_family: bool = True,
 ) -> None:
     """One epoch of the streaming near-dup loop (the foreachBatch body):
@@ -834,10 +506,8 @@ def process_epoch(
     (verdict-identical: the Bloom has no false negatives and pruned
     docs keep their 0-match verdict rows). Every sink this adds (the
     one-row cumulative bloom per epoch) follows the same OVERWRITE
-    ``batch=N`` replay rule. The streaming curation pipeline
-    (streaming/curation.py) turns this on; the standalone near-dup
-    loop's default stays off so its oracle-checked query is
-    byte-for-byte the r9 plan.
+    ``batch=N`` replay rule. The default stays off, so the
+    oracle-checked query runs the ungated plan.
 
     Batch-id contract (r11, ADVICE r10): the gate covers the probe only
     when a sidecar row exists at exactly ``batch_id - 1`` — batch ids
@@ -846,29 +516,6 @@ def process_epoch(
     date-numbered epochs) stay CORRECT but the probe runs ungated and
     the gate write takes the full-index rebuild every epoch; that
     condition now warns instead of silently eating the rebuild.
-
-    Auto-compaction cadence (r15, VERDICT r14 #5): with *compact_every*
-    = K, every Kth epoch folds the index's per-epoch partitions (and,
-    under *band_gate*, the ``_bloom_part`` delta sidecar) through
-    ``batch_id - 1`` after this epoch's writes commit — partition
-    counts stay bounded at ~K+1 forever instead of growing until an
-    operator remembers the ``--compact-index`` CLI. Why running this
-    IN-STREAM is safe, against the CLI paths' stream-stopped rule: the
-    CLI rule exists because an EXTERNAL process cannot know epoch
-    boundaries, but the foreachBatch body IS the epoch — bodies are
-    serialized per query, so "after this epoch's writes, before the
-    next epoch starts" is exactly the between-epochs window the
-    compaction contract requires. Replay of the compaction epoch
-    itself is covered by the same arithmetic the CLI default uses
-    (through max-committed-1): a replayed epoch N probes ``batch < N``,
-    and compaction through N-1 only REARRANGES those rows (index) /
-    bit_or-merges them (gate, probe-identical by the union-of-set-bits
-    property); the replayed epoch then overwrites its own ``batch=N``
-    partitions, which the compaction never touched. Re-running the
-    compaction on replay is idempotent (re-merging a merged partition
-    is a no-op rearrangement). The gate's crash rule is inherited from
-    compact_part_gate: meta off before the destructive window, so a
-    crash mid-compaction degrades to gate-off, never false negatives.
 
     *validate_family* (r16): the probe's hash-family guard is a one-row
     driver job per epoch; :func:`stream_minhash_dedup` validates the
@@ -975,12 +622,3 @@ def process_epoch(
         write_gate_bloom(
             spark, index_path, batch_id, written, gate, gate_n_keys
         )
-    if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        # every-K-epochs maintenance (safety argument in the docstring):
-        # runs AFTER this epoch's writes so a crash during compaction
-        # replays the whole epoch, whose probe reads batch < batch_id —
-        # untouched content-wise by a compaction through batch_id - 1
-        compact_minhash_index(spark, index_path, batch_id - 1)
-        if band_gate:
-            compact_part_gate(spark, index_path, batch_id - 1)
-            prune_gate_history(spark, index_path, batch_id - 1)
