@@ -18,28 +18,6 @@ def spark():
     yield s
 
 
-@pytest.fixture(autouse=True)
-def _restore_bloom_gate_constants():
-    """Gate tests force toy geometry by setting module constants
-    (MAX_GATE_BITS = 64, PART_GATE_MIN_KEYS = 0, ...); snapshot and
-    restore them around EVERY test so a forgotten finally (or an
-    assertion failing before it) can't leak toy constants into later
-    tests."""
-    from tower_parse_spark.operators import bloom as B
-
-    names = (
-        "MAX_GATE_BITS",
-        "PART_GATE_BITS",
-        "PART_GATE_HASHES",
-        "PART_GATE_MAX_FP",
-        "PART_GATE_MIN_KEYS",
-    )
-    saved = {n: getattr(B, n) for n in names}
-    yield
-    for n, v in saved.items():
-        setattr(B, n, v)
-
-
 @pytest.fixture()
 def lines_df(spark):
     """A tiny raw-line table in the probe wire format

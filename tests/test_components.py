@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from tower_parse_spark.operators import components
 from tower_parse_spark.operators.components import (
     connected_components,
     dedup_clusters,
@@ -20,7 +21,7 @@ def edges(spark):
 
 def test_components_chain(spark, edges):
     comp = {
-        r["node"]: r["component"] for r in connected_components(edges).collect()
+        r["node"]: r["component"] for r in connected_components(edges)[0].collect()
     }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
@@ -46,7 +47,7 @@ def test_components_long_chain_converges(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id1 long, id2 long"
     )
-    comp = connected_components(edges, max_iter=20).collect()
+    comp = connected_components(edges, max_iter=20)[0].collect()
     assert {r["component"] for r in comp} == {0}
 
 
@@ -68,7 +69,7 @@ def test_components_deep_chain_log_rounds(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id1 long, id2 long"
     )
-    comp = connected_components(edges, max_iter=12).collect()
+    comp = connected_components(edges, max_iter=12)[0].collect()
     assert len(comp) == n + 1
     assert {r["component"] for r in comp} == {0}
 
@@ -80,49 +81,47 @@ def test_components_shuffled_path_matches_broadcast_path(spark, edges):
     persisted, pre-partitioned edge cache — results must be identical to
     the default (broadcast) path."""
     default = {
-        r["node"]: r["component"] for r in connected_components(edges).collect()
+        r["node"]: r["component"] for r in connected_components(edges)[0].collect()
     }
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         shuffled = {
             r["node"]: r["component"]
-            for r in connected_components(edges).collect()
+            for r in connected_components(edges)[0].collect()
         }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert shuffled == default == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_components_persist_edges_path_matches(spark, edges):
-    """r17: spark.tower_parse.cc.persistEdges gates the edge layout
-    (persisted hash(b)-partitioned cache vs localCheckpoint). Local
-    sessions default to the localCheckpoint layout; forcing the persist
-    layout (the non-local default) must give identical results, with
-    and without the labels broadcast (autoBroadcastJoinThreshold -1
-    forces the per-round shuffled join over the cached layout)."""
+def test_components_persist_edges_path_matches(spark, edges, monkeypatch):
+    """r17: the master picks the edge layout (persisted
+    hash(b)-partitioned cache on a cluster, localCheckpoint on local[n]).
+    The cluster layout must give identical results, with and without the
+    labels broadcast (autoBroadcastJoinThreshold -1 forces the per-round
+    shuffled join over the cached layout)."""
     expect = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-    spark.conf.set("spark.tower_parse.cc.persistEdges", "true")
+    monkeypatch.setattr(components, "_persist_edges", lambda spark: True)
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         got = {
             r["node"]: r["component"]
-            for r in connected_components(edges).collect()
+            for r in connected_components(edges)[0].collect()
         }
         assert got == expect
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         got = {
             r["node"]: r["component"]
-            for r in connected_components(edges).collect()
+            for r in connected_components(edges)[0].collect()
         }
         assert got == expect
     finally:
-        spark.conf.unset("spark.tower_parse.cc.persistEdges")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
 
 
-def test_components_edge_cache_released(spark, edges):
-    """r17: under persistEdges the symmetric edge list is persist()-ed
+def test_components_edge_cache_released(spark, edges, monkeypatch):
+    """r17: on the cluster layout the symmetric edge list is persist()-ed
     for the loop (its partitioning must survive across rounds —
     localCheckpoint erases it) and must be unpersisted before return,
     on BOTH the success and the non-convergence paths: a leaked cache
@@ -130,15 +129,12 @@ def test_components_edge_cache_released(spark, edges):
     session."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     cm.clearCache()
-    spark.conf.set("spark.tower_parse.cc.persistEdges", "true")
-    try:
-        connected_components(edges).collect()
-        assert cm.isEmpty(), "edge cache leaked on the success path"
-        deep = spark.createDataFrame(
-            [(i, i + 1) for i in range(40)], "id1 long, id2 long"
-        )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(deep, max_iter=3)
-        assert cm.isEmpty(), "edge cache leaked on the non-convergence path"
-    finally:
-        spark.conf.unset("spark.tower_parse.cc.persistEdges")
+    monkeypatch.setattr(components, "_persist_edges", lambda spark: True)
+    connected_components(edges)[0].collect()
+    assert cm.isEmpty(), "edge cache leaked on the success path"
+    deep = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id1 long, id2 long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(deep, max_iter=3)
+    assert cm.isEmpty(), "edge cache leaked on the non-convergence path"

@@ -496,78 +496,3 @@ def test_subword_count_matches_reference_greedy(spark, words, vocab):
         # count algebra: between ceil(len/maxpiece) and len
         if w:
             assert 1 <= got[i] <= len(w)
-
-
-# --------------------------------------------------------------------------
-# Bloom filter (r8) — no-false-negative invariant over random key sets
-# --------------------------------------------------------------------------
-
-
-@given(
-    keys=st.sets(st.text(alphabet="xyz01", min_size=1, max_size=10), min_size=1, max_size=40),
-)
-@settings(**SETTINGS)
-def test_bloom_never_forgets_an_inserted_key(spark, keys):
-    from tower_parse_spark.operators import bloom as B
-
-    bits, k = 1 << 12, 4
-    df = spark.createDataFrame([(w,) for w in sorted(keys)], "h string")
-    bloom = F.from_json(
-        F.lit(json.dumps(B.bloom_build_words(df, "h", bits, k))), "array<long>"
-    )
-    misses = df.filter(~B.might_contain(F.col("h"), bloom, bits, k)).count()
-    assert misses == 0
-
-
-@given(
-    indexed=st.sets(st.text(min_size=1, max_size=12), max_size=20),
-    probed=st.lists(st.text(min_size=1, max_size=12), max_size=20),
-)
-@settings(**SETTINGS)
-def test_part_gate_join_form_matches_literal_form(spark, indexed, probed):
-    """r13 partitioned gate: over random indexed/probe key sets, the
-    join form (part_gate_filter on raw, possibly-duplicated delta rows)
-    must keep EXACTLY the keys the literal form (might_contain on the
-    dense words) keeps — including the no-false-negative half: every
-    probed key that was indexed survives both."""
-    from tower_parse_spark.operators import bloom as B
-
-    bits, k = 1 << 12, 4
-    idx = spark.createDataFrame(
-        [(w,) for w in sorted(indexed)] or [(None,)], "h string"
-    )
-    dense = B.bloom_build_words(idx, "h", bits, k)
-    # deltas deliberately split into two overlapping halves, un-merged:
-    # duplicate word_idx rows are the shape read_part_gate hands over
-    half = len(indexed) // 2
-    ordered = sorted(indexed)
-    parts = [ordered[:half] or ordered, ordered[half:] or ordered]
-    deltas = None
-    for p in parts:
-        d = B.bloom_delta_words(
-            spark.createDataFrame([(w,) for w in p] or [(None,)], "h string"),
-            "h", bits, k,
-        )
-        deltas = d if deltas is None else deltas.unionByName(d)
-    batch = spark.createDataFrame(
-        [(w, i) for i, w in enumerate(probed)] or [(None, 0)],
-        "h string, doc_id long",
-    )
-    joined = sorted(
-        (r["h"], r["doc_id"])
-        for r in B.part_gate_filter(batch, "h", deltas, bits, k).collect()
-    )
-    literal = sorted(
-        (r["h"], r["doc_id"])
-        for r in batch.filter(
-            B.might_contain(
-                F.col("h"),
-                F.from_json(F.lit(json.dumps(dense)), "array<long>"),
-                bits,
-                k,
-            )
-        ).collect()
-    )
-    assert joined == literal
-    kept = {h for h, _ in joined}
-    assert (set(probed) & indexed) <= kept

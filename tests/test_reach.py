@@ -22,8 +22,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 KEPT = {
     "compact_packs": "pack compaction, an open ROADMAP item (6)",
-    "read_gate_bloom": "its tests inspect the near-dup band gate's state; leaves with the gate (ROADMAP item 13)",
-    "connected_components": "its tests cover _components_with_size, which dedup_clusters reaches",
     "dead_letter_stream": "retired with malformed-line routing (ROADMAP item 10)",
     "write_dead_letters": "retired with malformed-line routing (ROADMAP item 10)",
     "run_supervised": "retired with the replayable TCP ingest (ROADMAP item 11)",

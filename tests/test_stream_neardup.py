@@ -144,520 +144,6 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     assert len(r10) == 1 and r10[0].is_dup and r10[0].n_hist_matches == 1
 
 
-def _verdict_rows(spark, ver):
-    return sorted(
-        tuple(r)
-        for r in spark.read.option("basePath", ver).parquet(ver).collect()
-    )
-
-
-def test_band_gate_is_verdict_identical(spark, tmp_path):
-    """r10 (VERDICT r9 Next #5): the band-key Bloom gate prunes the
-    history probe without changing ANY verdict — near-dups of indexed
-    docs still flag, novel docs still pass, across epochs with mixed
-    novel/dup content. Gated and ungated runs over identical batches
-    produce identical verdict rows."""
-    batches = [
-        [(1, T_A), (2, T_B)],
-        [(10, T_A + " indeed"), (11, T_C)],           # 10 = hist near-dup
-        [(20, T_C + " also"), (21, "totally novel words appear here")],
-    ]
-    gated, ungated = {}, {}
-    for flag, store in ((True, gated), (False, ungated)):
-        sub = tmp_path / ("g" if flag else "u")
-        idx, ver = str(sub / "idx"), str(sub / "ver")
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=flag)
-        store["rows"] = _verdict_rows(spark, ver)
-        store["idx"] = sorted(
-            (r.doc_id, r.band_key)
-            for r in spark.read.option("basePath", idx).parquet(idx).collect()
-        )
-    assert gated["rows"] == ungated["rows"]
-    assert gated["idx"] == ungated["idx"]
-    # sanity: the near-dup actually flagged (the test isn't vacuous)
-    flagged = [r for r in gated["rows"] if r[0] == 10]
-    assert flagged and any(r[3] for r in gated["rows"])
-
-
-def test_band_gate_replay_is_idempotent(spark, tmp_path):
-    """The bloom sidecar follows the OVERWRITE batch=N replay rule: a
-    replayed epoch rewrites the same cumulative row (same n_keys, same
-    bits) and verdicts are unchanged."""
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-    b1 = spark.createDataFrame([(10, T_A), (12, T_C)], "doc_id long, text string")
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-    bloom_dir = ND._bloom_path(idx)
-    first = sorted(
-        tuple(r)
-        for r in spark.read.option("basePath", bloom_dir)
-        .parquet(bloom_dir)
-        .collect()
-    )
-    before = _verdict_rows(spark, ver)
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)  # replay
-    again = sorted(
-        tuple(r)
-        for r in spark.read.option("basePath", bloom_dir)
-        .parquet(bloom_dir)
-        .collect()
-    )
-    assert again == first
-    assert _verdict_rows(spark, ver) == before
-    # still flags the cross-epoch dup
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10[0][3] is True
-
-
-def test_band_gate_catches_up_on_existing_index(spark, tmp_path):
-    """Turning the gate on over an index built WITHOUT it must never
-    produce false negatives: the stale/missing sidecar disables the
-    gate for that epoch (read_gate_bloom -> None) and the write path
-    rebuilds the cumulative row from the full index, so the NEXT epoch
-    is gated with full coverage."""
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    ND.process_epoch(b0, 0, idx, ver)  # ungated history
-    assert ND.read_gate_bloom(spark, idx, 1) is None
-    # first gated epoch: probe ungated (no covering row), sidecar rebuilt
-    b1 = spark.createDataFrame([(10, T_A)], "doc_id long, text string")
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10[0][3] is True  # the dup was caught despite the stale sidecar
-    gate = ND.read_gate_bloom(spark, idx, 2)
-    assert gate is not None
-    # second gated epoch: a near-dup of batch-0 content must STILL flag
-    # through the rebuilt bloom (coverage includes pre-gate history)
-    b2 = spark.createDataFrame([(20, T_B + " too")], "doc_id long, text string")
-    ND.process_epoch(b2, 2, idx, ver, band_gate=True)
-    r20 = [r for r in _verdict_rows(spark, ver) if r[0] == 20]
-    assert r20[0][3] is True
-
-
-def test_band_gate_sizing_invariant_across_growth(spark, tmp_path):
-    """The cumulative row's geometry always satisfies the target-FP
-    capacity for its recorded key count (fast-path ORs until capacity,
-    then rebuild at headroom x keys)."""
-    from tower_parse_spark.operators.bloom import bloom_size_for
-
-    idx, ver, _ = _paths(tmp_path)
-    texts = [T_A, T_B, T_C]
-    for i in range(4):
-        rows = [
-            (100 * i + j, f"{texts[j % 3]} variation {i} {j} unique")
-            for j in range(6)
-        ]
-        b = spark.createDataFrame(rows, "doc_id long, text string")
-        ND.process_epoch(b, i, idx, ver, band_gate=True)
-        bloom_dir = ND._bloom_path(idx)
-        row = (
-            spark.read.option("basePath", bloom_dir)
-            .parquet(bloom_dir)
-            .filter(F.col("batch").cast("long") == i)
-            .first()
-        )
-        assert row["n_bits"] >= bloom_size_for(
-            max(int(row["n_keys"]), 1), ND.BLOOM_TARGET_FP
-        )
-        assert row["n_bits"] == 64 * len(row["bloom"])
-
-
-def test_band_gate_cap_disables_gate_not_correctness(spark, tmp_path):
-    """VERDICT r10 #3 + ADVICE r11: when the rebuild sizing exceeds
-    MAX_GATE_BITS the epoch warns ONCE and writes an n_bits=0 TOMBSTONE
-    row; later epochs see a covering row (no misattributed gapped-id
-    warning, no per-epoch full-index rebuild), probe ungated, roll
-    n_keys forward on a fresh tombstone, and verdicts stay correct."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64  # any real corpus sizes over this
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        assert any("MAX_GATE_BITS" in str(x.message) for x in w)
-        # a tombstone landed: covering row, zero geometry, keys recorded
-        row0 = ND._read_gate_row(spark, idx, 0)
-        assert row0 is not None and int(row0["n_bits"]) == 0
-        assert list(row0["bloom"]) == [] and int(row0["n_keys"]) > 0
-        assert ND.read_gate_bloom(spark, idx, 1) is None  # gate off
-        # next epoch: NO warning of either kind (the disable is recorded,
-        # not re-diagnosed), dup still flags, tombstone rolls forward
-        b1 = spark.createDataFrame([(10, T_A)], "doc_id long, text string")
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        assert not any("MAX_GATE_BITS" in str(x.message) for x in w)
-        assert not any("no covering row" in str(x.message) for x in w)
-        row1 = ND._read_gate_row(spark, idx, 1)
-        assert row1 is not None and int(row1["n_bits"]) == 0
-        assert int(row1["n_keys"]) >= int(row0["n_keys"])
-    finally:
-        B.MAX_GATE_BITS = orig
-    rows = _verdict_rows(spark, ver)
-    r10 = [r for r in rows if r[0] == 10]
-    assert r10 and r10[0][3] is True  # cross-epoch near-dup still caught
-
-
-def test_band_gate_cap_disables_through_streaming_path(spark, tmp_path):
-    """VERDICT r11 #6: the cap must also disable the gate when epochs
-    arrive through the real Structured Streaming path (foreachBatch ->
-    process_epoch), not only via direct process_epoch calls: the run
-    completes, every sidecar row is a tombstone, the probe stays
-    ungated, and the cross-batch near-dup is still caught."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, ckpt = _paths(tmp_path)
-    spool = _spool(
-        tmp_path,
-        [[(1, T_A), (2, T_B)], [(10, T_A)], [(20, T_C)]],
-    )
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            q = ND.stream_minhash_dedup(
-                _stream(spark, spool), idx, ver, ckpt, band_gate=True
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-    finally:
-        B.MAX_GATE_BITS = orig
-    bloom_dir = ND._bloom_path(idx)
-    rows = (
-        spark.read.option("basePath", bloom_dir).parquet(bloom_dir).collect()
-    )
-    assert rows and all(int(r["n_bits"]) == 0 for r in rows)
-    assert ND.read_gate_bloom(spark, idx, len(rows)) is None
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10 and r10[0][3] is True
-
-
-def test_band_gate_gapped_batch_ids_warn(spark, tmp_path):
-    """ADVICE r10: non-contiguous batch ids leave the gate without a
-    covering row — correct but gate-defeating, so the epoch warns."""
-    import warnings
-
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A)], "doc_id long, text string")
-    ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-    b5 = spark.createDataFrame([(5, T_C)], "doc_id long, text string")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        ND.process_epoch(b5, 5, idx, ver, band_gate=True)  # gap: 0 -> 5
-    assert any("no covering row" in str(x.message) for x in w)
-    # contiguous ids stay silent
-    b1 = spark.createDataFrame([(6, T_B)], "doc_id long, text string")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        ND.process_epoch(b1, 6, idx, ver, band_gate=True)
-    assert not any("no covering row" in str(x.message) for x in w)
-
-
-def test_band_gate_tombstone_self_heals_on_raised_cap(spark, tmp_path):
-    """A tombstoned gate re-enables itself when MAX_GATE_BITS is raised
-    between runs (keys never shrink, so that is the only way a
-    tombstone's projected geometry starts fitting): the next epoch
-    rebuilds a real filter from the full index instead of rolling the
-    tombstone forward."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        assert int(ND._read_gate_row(spark, idx, 0)["n_bits"]) == 0
-    finally:
-        B.MAX_GATE_BITS = orig
-    # cap back at the real value: epoch 1 must rebuild a live gate
-    b1 = spark.createDataFrame([(10, T_C)], "doc_id long, text string")
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-    row1 = ND._read_gate_row(spark, idx, 1)
-    assert row1 is not None and int(row1["n_bits"]) > 0
-    assert ND.read_gate_bloom(spark, idx, 2) is not None
-    # and the re-enabled gate still catches a cross-epoch dup
-    b2 = spark.createDataFrame([(20, T_A)], "doc_id long, text string")
-    ND.process_epoch(b2, 2, idx, ver, band_gate=True)
-    r20 = [r for r in _verdict_rows(spark, ver) if r[0] == 20]
-    assert r20 and r20[0][3] is True
-
-
-def test_part_gate_stays_active_past_cap_verdict_identical(spark, tmp_path):
-    """VERDICT r12 #3 done-condition: past MAX_GATE_BITS the gate stays
-    ON as the partitioned (_bloom_part) relation — driven through the
-    REAL streaming path — with verdict- and index-identical output vs
-    an ungated run over the same batches. The cap-transition epoch
-    rebuilds the partitioned filter from the full index; later epochs
-    append batch deltas only; read_part_gate covers every next epoch."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    batches = [
-        [(1, T_A), (2, T_B)],
-        [(10, T_A + " indeed"), (11, T_C)],           # 10 = hist near-dup
-        [(20, T_C + " also"), (21, "totally novel words appear here")],
-    ]
-    # reference: ungated run, real cap
-    u_idx, u_ver = str(tmp_path / "u_idx"), str(tmp_path / "u_ver")
-    for i, rows in enumerate(batches):
-        b = spark.createDataFrame(rows, "doc_id long, text string")
-        ND.process_epoch(b, i, u_idx, u_ver, band_gate=False)
-
-    idx, ver, ckpt = _paths(tmp_path)
-    spool = _spool(tmp_path, batches)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64  # any real corpus sizes over this
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            q = ND.stream_minhash_dedup(
-                _stream(spark, spool), idx, ver, ckpt, band_gate=True
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        # handover warned ONCE, at the transition epoch
-        caps = [x for x in w if "MAX_GATE_BITS" in str(x.message)]
-        assert len(caps) == 1
-        # the partitioned gate is LIVE for the next epoch: meta covers,
-        # geometry matches, and the literal gate is off
-        assert ND.read_gate_bloom(spark, idx, len(batches)) is None
-        pg = ND.read_part_gate(spark, idx, len(batches))
-        assert pg is not None
-        words, n_bits, n_hashes = pg
-        assert n_bits == B.PART_GATE_BITS and n_hashes == B.PART_GATE_HASHES
-        assert words.count() > 0
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["covered_through"]) == len(batches) - 1
-        # coverage is real: every indexed band key tests maybe-present
-        from tower_parse_spark.operators.bloom import part_gate_filter
-
-        indexed = spark.read.option("basePath", idx).parquet(idx)
-        kept = part_gate_filter(indexed, "band_key", words, n_bits, n_hashes)
-        assert kept.count() == indexed.count()  # no false negatives
-    finally:
-        B.MAX_GATE_BITS = orig
-    assert _verdict_rows(spark, ver) == _verdict_rows(spark, u_ver)
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10 and r10[0][3] is True  # the near-dup still flags, gated
-
-
-def test_part_gate_rebuild_epoch_replay_keeps_coverage(spark, tmp_path):
-    """Replaying the cap-transition epoch (whose delta was rebuilt from
-    the FULL index) must re-run the full rebuild, not shrink the delta
-    to batch-only rows — otherwise pre-cap keys silently leave the
-    filter and later probes get false negatives."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    try:
-        # epoch 0 under the REAL cap: literal gate, keys of T_A/T_B
-        b0 = spark.createDataFrame(
-            [(1, T_A), (2, T_B)], "doc_id long, text string"
-        )
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        row0 = ND._read_gate_row(spark, idx, 0)
-        assert int(row0["n_bits"]) > 0  # literal gate live pre-cap
-        # cap pinned to epoch 0's geometry: epoch 1 brings MORE keys
-        # than epoch 0 held, so the resize must exceed the cap and the
-        # handover happens at epoch 1 — with epoch 0's keys PRE-dating
-        # the partitioned gate (the coverage case under test)
-        B.MAX_GATE_BITS = int(row0["n_bits"])
-        b1 = spark.createDataFrame(
-            [
-                (11, T_C),
-                (12, "completely different sentence number twelve here"),
-                (13, "another unrelated line of text for thirteen okay"),
-                (14, "fresh words keep arriving in epoch one fourteen"),
-                (15, "the last novel document of this bigger batch yes"),
-            ],
-            "doc_id long, text string",
-        )
-        ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        meta = ND._read_part_meta(spark, idx)
-        assert meta is not None and int(meta["since_batch"]) == 1
-        # REPLAY epoch 1 (crash-recovery path): coverage must survive
-        ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        words, n_bits, n_hashes = ND.read_part_gate(spark, idx, 2)
-        from tower_parse_spark.operators.bloom import part_gate_filter
-
-        indexed = spark.read.option("basePath", idx).parquet(idx)
-        kept = part_gate_filter(indexed, "band_key", words, n_bits, n_hashes)
-        assert kept.count() == indexed.count()
-        # and a near-dup of the PRE-cap epoch-0 doc still flags
-        b2 = spark.createDataFrame(
-            [(20, T_A + " again")], "doc_id long, text string"
-        )
-        ND.process_epoch(b2, 2, idx, ver, band_gate=True)
-        r20 = [r for r in _verdict_rows(spark, ver) if r[0] == 20]
-        assert r20 and r20[0][3] is True
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_part_gate_declines_on_fp_saturation_and_geometry_drift(spark, tmp_path):
-    """read_part_gate must hand back None — probe runs ungated, still
-    exact — when the estimated FP is past PART_GATE_MAX_FP (gating
-    would pass nearly everything) or when the PART_GATE_* constants
-    drifted from the geometry the deltas were written at (OR-ing
-    incompatible positions would create false negatives)."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        b0 = spark.createDataFrame([(1, T_A)], "doc_id long, text string")
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        assert ND.read_part_gate(spark, idx, 1) is not None
-        # FP saturation: claimed key count far past the fixed geometry
-        assert ND.read_part_gate(spark, idx, 1, n_keys=10**12) is None
-        # geometry drift: constants changed since the deltas were cut
-        g_orig = B.PART_GATE_BITS
-        B.PART_GATE_BITS = g_orig * 2
-        try:
-            assert ND.read_part_gate(spark, idx, 1) is None
-        finally:
-            B.PART_GATE_BITS = g_orig
-        # under-coverage: probing two epochs ahead of covered_through
-        assert ND.read_part_gate(spark, idx, 3) is None
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_write_gate_bloom_recovers_missing_n_keys(spark, tmp_path):
-    """ADVICE r12 #3: a manual caller passing a cap tombstone WITHOUT
-    prev_n_keys must still take the tombstone roll-forward path —
-    n_keys recovered from the sidecar row — not fall through to the
-    full-index rebuild and re-fire the cap warning every epoch."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        b0 = spark.createDataFrame(
-            [(1, T_A), (2, T_B)], "doc_id long, text string"
-        )
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)  # tombstone at 0
-        row0 = ND._read_gate_row(spark, idx, 0)
-        assert int(row0["n_bits"]) == 0
-        # manual epoch-1 gate write: tombstone tuple, NO n_keys
-        b1 = spark.createDataFrame([(10, T_C)], "doc_id long, text string")
-        from tower_parse_spark.operators.dedup import (
-            incremental_minhash_dedup_with_banded,
-        )
-
-        verdicts, banded = incremental_minhash_dedup_with_banded(
-            b1, ND._read_index(spark, idx, 1)
-        )
-        banded.write.mode("overwrite").parquet(f"{idx}/batch=1")
-        written = spark.read.parquet(f"{idx}/batch=1")
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ND.write_gate_bloom(
-                spark, idx, 1, written,
-                (list(row0["bloom"]), 0, 0),  # tombstone, n_keys omitted
-                None,
-            )
-        assert not any("MAX_GATE_BITS" in str(x.message) for x in w)
-        row1 = ND._read_gate_row(spark, idx, 1)
-        assert row1 is not None and int(row1["n_bits"]) == 0
-        # n_keys rolled forward: previous count + this epoch's rows
-        assert int(row1["n_keys"]) == int(row0["n_keys"]) + written.count()
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_part_gate_floor_pinned_to_measured_crossover():
-    """The shipped floor is a MEASURED constant, not a guess: 10M keys
-    is a quiet-machine loss (0.89x), 15M a quiet-machine win (1.08x /
-    1.24x, SCALE.md r15) — moving it again requires a fresh A/B row
-    (the conftest snapshot keeps per-test patches from leaking here)."""
-    from tower_parse_spark.operators import bloom as B
-
-    assert B.PART_GATE_MIN_KEYS == 15_000_000
-
-
-def test_part_gate_engagement_floor(spark, tmp_path):
-    """r14 (VERDICT r13 #3a): below PART_GATE_MIN_KEYS the tombstoned
-    probe runs UNGATED (the gate's fixed join overhead beats the
-    pruning under the measured crossover) while the sidecar keeps
-    accumulating per-epoch deltas — so the epoch that crosses the floor
-    engages an already-covering gate with NO rebuild, and verdicts are
-    exact throughout."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 1_000  # floor far above this toy corpus
-    try:
-        batches = [[(1, T_A)], [(2, T_B)], [(30, T_A + " once more")]]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # verdicts stayed exact through the ungated phase
-        r30 = [r for r in _verdict_rows(spark, ver) if r[0] == 30]
-        assert r30 and r30[0][3] is True
-        # the probe path (n_keys from the tombstone) refused the gate...
-        row = ND._read_gate_row(spark, idx, 2)
-        n_keys = int(row["n_keys"])
-        assert 0 < n_keys < 1_000
-        assert ND.read_part_gate(spark, idx, 3, n_keys=n_keys) is None
-        # ...but the sidecar kept covering: every epoch wrote its delta
-        part_dirs = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        assert part_dirs == ["batch=0", "batch=1", "batch=2"]
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["covered_through"]) == 2
-        # crossing the floor engages WITHOUT any rebuild or new write
-        B.PART_GATE_MIN_KEYS = n_keys
-        gate = ND.read_part_gate(spark, idx, 3, n_keys=n_keys)
-        assert gate is not None
-        # and the engaged gate has no false negatives over the index
-        from tower_parse_spark.operators.bloom import part_gate_filter
-
-        indexed = spark.read.option("basePath", idx).parquet(idx).select(
-            "band_key"
-        )
-        words, nb, nh = gate
-        passed = {
-            r["band_key"]
-            for r in part_gate_filter(indexed, "band_key", words, nb, nh).collect()
-        }
-        assert {r["band_key"] for r in indexed.collect()} <= passed
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
 def test_stream_start_validates_index_family_once(spark, tmp_path):
     """r16: the per-epoch hash-family guard moved to stream START (the
     epochs only probe rows this loop wrote itself, so the one-row guard

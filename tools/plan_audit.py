@@ -153,7 +153,9 @@ class _EpochPlanCapture:
             pass
 
     def __enter__(self):
-        from pyspark.sql import DataFrame as _DF
+        # the classic DataFrame overrides localCheckpoint, so a shim on
+        # pyspark.sql.DataFrame would never run
+        from pyspark.sql.classic.dataframe import DataFrame as _DF
         from pyspark.sql.readwriter import DataFrameWriter as _W
 
         cap = self
@@ -177,7 +179,7 @@ class _EpochPlanCapture:
         return self
 
     def __exit__(self, *exc):
-        from pyspark.sql import DataFrame as _DF
+        from pyspark.sql.classic.dataframe import DataFrame as _DF
         from pyspark.sql.readwriter import DataFrameWriter as _W
 
         _DF.localCheckpoint, _W.save, _W.parquet = self._orig
@@ -228,11 +230,8 @@ def audit_streaming(spark) -> tuple[list, list]:
     captured at the epoch's own materialization sites and scanned with
     the same rules as the batch registry:
 
-    - ``neardup_epoch``: two process_epoch calls, band_gate on — the
-      second probes through the live literal gate;
-    - ``neardup_epoch_part_gated``: the same loop with MAX_GATE_BITS
-      forced tiny, so the handover epoch and a PARTITIONED-gate probe
-      epoch both execute (the r13 plan shape);
+    - ``neardup_epoch``: two process_epoch calls, the second probing
+      the index the first wrote (the form stream_minhash_dedup runs);
     - ``pack_epoch_writer``: the foreachBatch pack sink body over the
       packer's one-row-per-pack-written output (the packer writes the
       files itself; the body only materializes those rows);
@@ -243,7 +242,6 @@ def audit_streaming(spark) -> tuple[list, list]:
     import shutil
     import tempfile
 
-    from tower_parse_spark.operators import bloom as B
     from tower_parse_spark.streaming import neardup as ND
     from tower_parse_spark.streaming import pipeline as P
 
@@ -261,38 +259,15 @@ def audit_streaming(spark) -> tuple[list, list]:
             "doc_id long, text string",
         )
 
-    # --- near-dup epochs, literal gate ---
+    # --- near-dup epochs ---
     with _EpochPlanCapture() as cap:
         ND.process_epoch(
-            batch(docs, [1, 2]), 0, f"{work}/n_idx", f"{work}/n_ver",
-            band_gate=True,
+            batch(docs, [1, 2]), 0, f"{work}/n_idx", f"{work}/n_ver"
         )
         ND.process_epoch(
-            batch(docs, [10, 11]), 1, f"{work}/n_idx", f"{work}/n_ver",
-            band_gate=True,
+            batch(docs, [10, 11]), 1, f"{work}/n_idx", f"{work}/n_ver"
         )
     rows.append(_scan_plans("neardup_epoch", cap.plans, bad))
-
-    # --- near-dup epochs, partitioned gate (forced over the cap) ---
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    try:
-        import warnings
-
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")  # the expected handover warning
-            with _EpochPlanCapture() as cap:
-                ND.process_epoch(
-                    batch(docs, [1, 2]), 0, f"{work}/p_idx", f"{work}/p_ver",
-                    band_gate=True,
-                )
-                ND.process_epoch(
-                    batch(docs, [10, 11]), 1, f"{work}/p_idx", f"{work}/p_ver",
-                    band_gate=True,
-                )
-    finally:
-        B.MAX_GATE_BITS = orig
-    rows.append(_scan_plans("neardup_epoch_part_gated", cap.plans, bad))
 
     # --- foreachBatch pack sink body (over the packer's per-pack rows) ---
     written = spark.createDataFrame(

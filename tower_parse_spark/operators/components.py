@@ -38,27 +38,24 @@ Physical shape (r17, guide §2.4/§3.1 — VERDICT r16 #1):
 - When the labels side does NOT fit, every round's probe join must
   shuffle — and the symmetric edge list, rebuilt from a
   ``localCheckpoint`` (which scans back as ``ExistingRDD
-  UnknownPartitioning(0)``, verified in-plan r16), would be
-  re-exchanged AND re-sorted every round. Under
-  ``spark.tower_parse.cc.persistEdges`` the edge list is instead
-  hash-partitioned on the probe key ``b`` once, sorted within
+  UnknownPartitioning(0)``, verified in-plan r16), would be re-exchanged
+  AND re-sorted every round. On a non-local master the edge list is
+  instead hash-partitioned on the probe key ``b`` once, sorted within
   partitions, and ``persist()``-ed: the cached relation's hash(b)
   partitioning and [b ASC] ordering satisfy the join's edge-side
   requirements, so each round exchanges only the labels relation
   (verified in the r17 plan: no Exchange, no Sort above the
-  InMemoryTableScan). The dedup of the symmetrized list
-  clusters on hash(b) alone (legal: b is a subset of the (a, b)
-  grouping key) and the fused round-0 aggregation groups by ``b`` —
-  by symmetry of the edge set literally the same relation as
-  groupBy(a).min(b) — so both run exchange-free on the cached layout.
-  Default ``auto`` = on for non-local masters only: on local[n] a
-  shuffle is a memory/page-cache copy while the columnar cache costs
-  real encode+decode CPU (measured: a 600k-edge densified graph ran
-  7.17 s localCheckpointed vs 8.50 s persisted, and the sf0.1 query
-  2.16 s vs 2.80 s), but on a cluster the per-round exchange is
+  InMemoryTableScan). The dedup of the symmetrized list clusters on
+  hash(b) alone (legal: b is a subset of the (a, b) grouping key) and
+  the fused round-0 aggregation groups by ``b`` — by symmetry of the
+  edge set literally the same relation as groupBy(a).min(b) — so both
+  run exchange-free on the cached layout. Non-local masters only: on
+  local[n] a shuffle is a memory/page-cache copy while the columnar
+  cache costs real encode+decode CPU (measured: a 600k-edge densified
+  graph ran 7.17 s localCheckpointed vs 8.50 s persisted, and the sf0.1
+  query 2.16 s vs 2.80 s), but on a cluster the per-round exchange is
   network+disk for every edge byte and the decode is local CPU — the
-  exact §2.4 "remove shuffles outright" trade. Deployments can force
-  either path with true/false.
+  exact §2.4 "remove shuffles outright" trade.
 
 At 100 TB the pair list is orders of magnitude smaller than the corpus
 (only same-bucket collisions), so the propagation runs on the small edge
@@ -78,11 +75,6 @@ from pyspark.sql import functions as F
 #: accurate statistics on the same relation.
 _LABEL_ROW_BYTES = 24
 
-#: edge-layout strategy conf (module docstring): "auto" (default) uses
-#: the persisted hash(b) layout on non-local masters only; "true" /
-#: "false" force it.
-_PERSIST_EDGES_CONF = "spark.tower_parse.cc.persistEdges"
-
 
 def _broadcast_fits(spark, n_rows: int) -> bool:
     """Would a (long, long) relation of *n_rows* fall under the
@@ -99,22 +91,30 @@ def _broadcast_fits(spark, n_rows: int) -> bool:
 
 
 def _persist_edges(spark) -> bool:
-    """Resolve the edge-layout strategy (module docstring)."""
-    mode = str(spark.conf.get(_PERSIST_EDGES_CONF, "auto")).strip().lower()
-    if mode in ("true", "false"):
-        return mode == "true"
+    """Use the persisted hash(b) edge layout: on non-local masters only
+    (module docstring)."""
     return not spark.sparkContext.master.startswith("local")
 
 
-def _components_with_size(
+def connected_components(
     edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
+    src: str = "id1",
+    dst: str = "id2",
+    max_iter: int = 20,
 ) -> tuple[DataFrame, int]:
-    """:func:`connected_components` plus the exact node count (known for
-    free from the convergence-witness aggregation), so callers can make
-    the same broadcast-or-shuffle decision for their survivor join."""
+    """Resolve components of the undirected pair graph.
+
+    Returns ``(components, n_nodes)``: components is (node, component)
+    where component = min node id reachable; isolated nodes don't appear
+    (callers union non-candidates back in). n_nodes is the exact node
+    count (free from the convergence-witness aggregation), so callers
+    can make the same broadcast-or-shuffle decision for their survivor
+    join.
+
+    Raises ``RuntimeError`` if the fixpoint is not reached within
+    *max_iter* rounds (a chain longer than max_iter hops would otherwise
+    silently split one cluster into several) — raise *max_iter* for
+    pathologically deep graphs."""
     spark = edges.sparkSession
     sym_raw = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
@@ -143,8 +143,8 @@ def _components_with_size(
         # Grouped by b (not a): the symmetric edge set makes
         # groupBy(b).min(a) literally the same relation as
         # groupBy(a).min(b), and b is the persisted layout's
-        # partitioning key, so under persistEdges this aggregation
-        # plans WITHOUT an exchange (either grouping costs one on the
+        # partitioning key, so on that layout this aggregation plans
+        # WITHOUT an exchange (either grouping costs one on the
         # localCheckpoint layout).
         labels = (
             sym.groupBy(F.col("b").alias("node"))
@@ -177,10 +177,10 @@ def _components_with_size(
             # left-join-back shape costs a second join for the same
             # result). The labels side broadcasts when the node count
             # says it fits — neither side is exchanged then; otherwise
-            # it alone is exchanged under persistEdges (the cached edge
-            # layout already satisfies the b-side distribution and
+            # it alone is exchanged on the persisted layout (the cached
+            # edge layout already satisfies the b-side distribution and
             # ordering), and both sides are on the localCheckpoint
-            # layout, as before.
+            # layout.
             lab_side = (
                 F.broadcast(labels) if labels_fit_broadcast else labels
             )
@@ -245,26 +245,6 @@ def _components_with_size(
     return labels.select("node", F.col("label").alias("component")), n_nodes
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Resolve components of the undirected pair graph.
-
-    Returns (node, component) where component = min node id reachable.
-    Isolated nodes don't appear (callers union non-candidates back in).
-
-    Raises ``RuntimeError`` if the fixpoint is not reached within
-    *max_iter* rounds (a chain longer than max_iter hops would otherwise
-    silently split one cluster into several) — raise *max_iter* for
-    pathologically deep graphs.
-    """
-    comp, _n = _components_with_size(edges, src, dst, max_iter)
-    return comp
-
-
 def dedup_clusters(
     pairs: DataFrame,
     docs: DataFrame,
@@ -282,7 +262,7 @@ def dedup_clusters(
     corpus side is then NEVER shuffled, the 100 TB posture the module
     docstring promises; an over-threshold component relation keeps the
     shuffled join, which spills gracefully."""
-    comp, n_nodes = _components_with_size(pairs, "id1", "id2", 20)
+    comp, n_nodes = connected_components(pairs)
     if _broadcast_fits(docs.sparkSession, n_nodes):
         comp = F.broadcast(comp)
     out = docs.join(

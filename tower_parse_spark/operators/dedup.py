@@ -327,8 +327,6 @@ def incremental_minhash_dedup_with_banded(
     text_col: str = "text",
     threshold: float = 0.5,
     hash_fn: str = "fast",
-    band_gate: "tuple[DataFrame, int, int] | None" = None,
-    part_gate: "tuple[DataFrame, int, int] | None" = None,
     validate_family: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`incremental_minhash_dedup` plus the batch's own banded
@@ -337,41 +335,6 @@ def incremental_minhash_dedup_with_banded(
     that must immediately index the surviving rows — the streaming
     loop's every epoch — filters THIS relation to survivor ids instead
     of re-shingling the documents a second time.
-
-    *band_gate* (r10, VERDICT r9 Next #5): an optional Bloom filter
-    over the INDEX's band keys as ``(bloom words as a Python list of
-    longs, n_bits, n_hashes)`` — a persisted cache of the index (see
-    streaming/neardup.py's ``_bloom`` sidecar). Batch banded rows whose
-    band key fails the filter CANNOT join any history row (Bloom has no
-    false negatives), so they skip the history probe; the filter must
-    COVER every index row passed in, or missed keys would silently
-    suppress true matches — coverage is the caller's contract. Verdict
-    rows are unchanged for pruned docs (they land at 0 matches through
-    the same left join), and on a fully-novel batch AQE's
-    empty-relation propagation skips the index scan outright. The
-    in-batch stage always sees the full banded relation.
-
-    The filter enters the plan as one array LITERAL (evaluated by
-    reference), deliberately NOT as a crossJoined one-row column: an
-    UnsafeRow materializes joined columns per row, so a ~1 MB bloom
-    array column would be COPIED into every banded row — measured as a
-    many-GB copy storm on the first smoke of this gate (r10). The
-    literal is spelled ``from_json(lit(json))``, which Catalyst
-    constant-folds to ONE ArrayData Literal — ``F.lit(python_list)``
-    builds a CreateArray tree with one expression node per element
-    (118 s to construct at 200k words, measured), and ``F.lit(numpy)``
-    still pays per-element Py4J conversion (38 s).
-
-    *part_gate* (r13, VERDICT r12 #3): the same no-false-negatives
-    pruning contract with the filter as a DISTRIBUTED ``(word_idx,
-    word)`` relation instead of a literal — ``(words DataFrame, n_bits,
-    n_hashes)``, applied by :func:`~tower_parse_spark.operators.bloom.
-    part_gate_filter` (batch keys x k positions BROADCAST against the
-    words scan, so the filter never enters the plan or the driver).
-    This is the gate's scale form past ``MAX_GATE_BITS``; coverage is
-    again the caller's contract (streaming/neardup.py's ``_bloom_part``
-    sidecar). When both gates are given, both prune — each alone is
-    verdict-identical, so their composition is too.
 
     *validate_family* (r16): the hash-family guard is a one-row driver
     job against the index per call — right for a manual probe of a
@@ -389,27 +352,7 @@ def incremental_minhash_dedup_with_banded(
     batch_banded = banded_signatures(
         new_df, id_col, text_col, hash_fn=hash_fn
     )
-    probe_banded = batch_banded
-    if band_gate is not None:
-        import json
-
-        from tower_parse_spark.operators.bloom import might_contain
-
-        gate_words, g_bits, g_hashes = band_gate
-        gate_lit = F.from_json(
-            F.lit(json.dumps(list(gate_words))), "array<long>"
-        )
-        probe_banded = batch_banded.filter(
-            might_contain(F.col("band_key"), gate_lit, g_bits, g_hashes)
-        )
-    if part_gate is not None:
-        from tower_parse_spark.operators.bloom import part_gate_filter
-
-        p_words, p_bits, p_hashes = part_gate
-        probe_banded = part_gate_filter(
-            probe_banded, "band_key", p_words, p_bits, p_hashes
-        )
-    batch = probe_banded.withColumnsRenamed({id_col: "_nid", "mh": "mh1"})
+    batch = batch_banded.withColumnsRenamed({id_col: "_nid", "mh": "mh1"})
     hist = index.withColumnsRenamed({id_col: "_hid", "mh": "mh2"})
     est = est_jaccard(F.col("mh1"), F.col("mh2"))
     # est is scored and thresholded BEFORE the pair dedup (r16, guide

@@ -161,26 +161,25 @@ PHASH_BAND_BITS = PHASH_BITS // PHASH_BANDS
 PHASH_MAX_HAMMING = 3
 
 
-def _phash_stub_vectorized(lens, bits: int = PHASH_BITS) -> list:
+def _phash_stub_vectorized(lens) -> list:
     """Deterministic fake perceptual hash over a WHOLE Arrow batch of
     byte lengths in one numpy expression: bit j is set where
     ``(len * (2j + 3)) % 97`` is odd (stands in for dHash over the
     decoded, 32x32-resized grayscale). Identical payloads hash
     identically (Hamming 0), so exact image copies are found, and the
     arithmetic gives the whole pipeline an exact SQL oracle, the
-    same contract as :func:`decode_stub`. int64 shifts wrap bit 63
-    into the sign, as a Spark long carries it. None lengths (NULL
-    payloads) pass through as None."""
+    same contract as :func:`decode_stub`. None lengths (NULL payloads)
+    pass through as None."""
     import numpy as np
 
     ln = np.array([0 if v is None else v for v in lens], dtype=np.int64)
-    j = np.arange(bits, dtype=np.int64)
+    j = np.arange(PHASH_BITS, dtype=np.int64)
     with np.errstate(over="ignore"):
         h = ((((ln[:, None] * (2 * j + 3)) % 97) % 2) << j).sum(axis=1)
     return [None if v is None else int(x) for v, x in zip(lens, h)]
 
 
-def with_phash(df_with_payload: DataFrame, bits: int = PHASH_BITS) -> DataFrame:
+def with_phash(df_with_payload: DataFrame) -> DataFrame:
     """Distributed perceptual hashing: the stub hash per payload inside
     ONE Arrow-batched mapInPandas stage, vectorized across the batch.
     Output: (doc_id, n_bytes, phash)."""
@@ -198,7 +197,7 @@ def with_phash(df_with_payload: DataFrame, bits: int = PHASH_BITS) -> DataFrame:
                 {
                     "doc_id": pdf["doc_id"].values,
                     "n_bytes": lens,
-                    "phash": _phash_stub_vectorized(lens, bits),
+                    "phash": _phash_stub_vectorized(lens),
                 }
             )
 

@@ -54,346 +54,6 @@ _INDEX_SCHEMA = StructType(
     ]
 )
 
-#: Bloom sidecar dir under the index root. Underscore-prefixed, so the
-#: index's own partition discovery never sees it.
-BLOOM_SUBDIR = "_bloom"
-
-#: headroom factor when (re)sizing the gate filter: sizing for 2x the
-#: current key count keeps rebuild-from-index events O(log growth)
-BLOOM_HEADROOM = 2
-
-#: the gate's false-positive target (bloom.py::bloom_size_for)
-BLOOM_TARGET_FP = 0.01
-
-#: Partitioned-gate sidecar dir (r13, VERDICT r12 #3): the gate past
-#: MAX_GATE_BITS. Same underscore-prefix invisibility rule as _bloom.
-#: Layout: ``batch=N`` delta partitions of (word_idx, word) rows —
-#: the filter words TOUCHED by epoch N's newly indexed band keys at
-#: the FIXED bloom.PART_GATE_* geometry — plus a ``_meta`` one-row
-#: parquet (n_bits, n_hashes, since_batch, covered_through): the delta
-#: at ``since_batch`` was rebuilt from the FULL index through that
-#: epoch, and every epoch in (since_batch, covered_through] contributed
-#: its batch delta, so the union of deltas with batch >= since_batch
-#: covers every index key through covered_through. A probe at epoch N
-#: may gate iff covered_through >= N - 1 (over-coverage — deltas from
-#: the probe's own or later epochs — only adds false positives, never
-#: false negatives, so replayed epochs stay verdict-identical).
-PART_SUBDIR = "_bloom_part"
-
-
-def _part_path(index_path: str) -> str:
-    return f"{index_path}/{PART_SUBDIR}"
-
-
-def _part_meta_path(index_path: str) -> str:
-    # underscore-prefixed, so the delta partition discovery skips it
-    return f"{_part_path(index_path)}/_meta"
-
-
-def _read_part_meta(spark, index_path: str):
-    """The partitioned-gate meta row, or None when no partitioned gate
-    exists (pre-r13 index, or the gate never went over the cap)."""
-    try:
-        rows = spark.read.parquet(_part_meta_path(index_path)).limit(1).collect()
-    except AnalysisException:
-        return None
-    return rows[0] if rows else None
-
-
-def _write_part_meta(
-    spark,
-    index_path: str,
-    since_batch: int,
-    covered_through: int,
-) -> None:
-    """The meta row at the CURRENT PART_GATE_* geometry."""
-    from tower_parse_spark.operators import bloom as B
-
-    spark.createDataFrame(
-        [(B.PART_GATE_BITS, B.PART_GATE_HASHES, since_batch, covered_through)],
-        "n_bits long, n_hashes long, since_batch long, covered_through long",
-    ).coalesce(1).write.mode("overwrite").parquet(_part_meta_path(index_path))
-
-
-def read_part_gate(
-    spark, index_path: str, before_batch: int, n_keys: int | None = None
-) -> "tuple[DataFrame, int, int] | None":
-    """The partitioned band-key gate valid for a probe at epoch
-    *before_batch*, as ``(words DataFrame (word_idx, word), n_bits,
-    n_hashes)`` for :func:`~tower_parse_spark.operators.bloom.
-    part_gate_filter` — or None when the gate cannot safely cover the
-    probe: no meta row, a geometry drift (PART_GATE_* constants changed
-    since the deltas were written — OR-ing incompatible positions would
-    create false negatives), under-coverage (covered_through <
-    before_batch - 1: keys indexed since would be missing), an
-    estimated FP past PART_GATE_MAX_FP (*n_keys* given — gating would
-    pass nearly everything, so the join is wasted work), or *n_keys*
-    below PART_GATE_MIN_KEYS (r14, VERDICT r13 #3a: under the measured
-    crossover the gate's fixed join overhead costs more than the
-    pruning saves — run ungated until the index grows into it; the
-    sidecar keeps accumulating either way, so engagement at the floor
-    needs no rebuild). The words
-    relation is the RAW union of delta partitions with batch >=
-    since_batch — deliberately NOT pre-merged per word_idx:
-    part_gate_filter's bit test is EXISTS-over-rows, and the merge was
-    a full filter-sized shuffle per epoch (A/B'd slower than running
-    ungated at 10M keys). Never collected."""
-    from tower_parse_spark.operators import bloom as B
-
-    meta = _read_part_meta(spark, index_path)
-    if meta is None:
-        return None
-    if (
-        int(meta["n_bits"]) != B.PART_GATE_BITS
-        or int(meta["n_hashes"]) != B.PART_GATE_HASHES
-    ):
-        return None
-    if int(meta["covered_through"]) < before_batch - 1:
-        return None
-    if n_keys is not None and n_keys < B.PART_GATE_MIN_KEYS:
-        return None
-    if n_keys is not None and (
-        B.bloom_fp_rate(n_keys, B.PART_GATE_BITS, B.PART_GATE_HASHES)
-        > B.PART_GATE_MAX_FP
-    ):
-        return None
-    try:
-        deltas = spark.read.option("basePath", _part_path(index_path)).parquet(
-            _part_path(index_path)
-        )
-    except AnalysisException:
-        return None
-    words = deltas.filter(
-        F.col("batch").cast("long") >= int(meta["since_batch"])
-    ).select("word_idx", "word")
-    return words, B.PART_GATE_BITS, B.PART_GATE_HASHES
-
-
-def _part_gate_update(spark, index_path: str, batch_id: int, new_keys) -> None:
-    """Maintain the partitioned gate for epoch *batch_id*: the fast path
-    writes only this epoch's batch delta (*new_keys* — the just-indexed
-    band keys); the rebuild path (no meta, geometry drift, or a coverage
-    gap — including a REPLAY of the original rebuild epoch, where a
-    batch-only delta would silently drop pre-rebuild keys) derives the
-    delta from the FULL index through *batch_id*. Write order is delta
-    partition, then meta: the meta row's covered_through is the
-    coverage witness, so it must never precede the rows it vouches
-    for. Both writes OVERWRITE — replays are idempotent."""
-    from tower_parse_spark.operators import bloom as B
-
-    meta = _read_part_meta(spark, index_path)
-    fast = (
-        meta is not None
-        and int(meta["n_bits"]) == B.PART_GATE_BITS
-        and int(meta["n_hashes"]) == B.PART_GATE_HASHES
-        and int(meta["covered_through"]) >= batch_id - 1
-        and int(meta["since_batch"]) < batch_id
-    )
-    if fast:
-        delta = B.bloom_delta_words(new_keys, "band_key")
-        since = int(meta["since_batch"])
-        # a REPLAYED epoch must not regress the coverage witness: later
-        # epochs' deltas are already on disk and stay valid
-        covered = max(int(meta["covered_through"]), batch_id)
-    else:
-        all_keys = _read_index(spark, index_path, batch_id + 1).select(
-            "band_key"
-        )
-        delta = B.bloom_delta_words(all_keys, "band_key")
-        since = batch_id
-        # deliberately NOT max(covered_through, batch_id) here: the
-        # rebuild vouches only for the keys it just wrote through
-        # batch_id. Conservative batch_id means a contract-violating
-        # manual replay leaves the gate safely DISABLED for later
-        # probes until coverage rebuilds forward, never wrong.
-        covered = batch_id
-    delta.write.mode("overwrite").parquet(
-        f"{_part_path(index_path)}/batch={batch_id}"
-    )
-    _write_part_meta(spark, index_path, since, covered)
-
-
-def _bloom_path(index_path: str) -> str:
-    return f"{index_path}/{BLOOM_SUBDIR}"
-
-
-def read_gate_bloom(
-    spark, index_path: str, before_batch: int
-) -> "tuple[list[int], int, int] | None":
-    """The band-key Bloom gate valid for a probe at epoch
-    *before_batch*: the CUMULATIVE sidecar row written at epoch
-    ``before_batch - 1`` (each row ORs every indexed band key through
-    its own epoch, so that row covers exactly the ``batch <
-    before_batch`` index partitions the probe reads). Returns
-    ``(bloom words as a Python list, n_bits, n_hashes)`` — driver-side
-    on purpose: the probe embeds it as ONE plan literal, and the
-    per-epoch OR is plain Python (see dedup.py's band_gate note on why
-    a one-row column would be copied into every row). None when no
-    covering row exists — a gate whose latest row is OLDER than the
-    previous epoch would miss keys indexed since (false negatives), so
-    under-coverage disables the gate for this epoch instead;
-    :func:`write_gate_bloom`'s rebuild path catches the sidecar up."""
-    row = _read_gate_row(spark, index_path, before_batch - 1)
-    if row is None or int(row["n_bits"]) == 0:
-        # n_bits=0 is the cap tombstone (write_gate_bloom): the gate is
-        # deliberately disabled past MAX_GATE_BITS — probe ungated.
-        return None
-    return list(row["bloom"]), int(row["n_bits"]), int(row["n_hashes"])
-
-
-def _read_gate_row(spark, index_path: str, batch_id: int, latest_any: bool = False):
-    """The sidecar row at exactly ``batch=batch_id``; with *latest_any*,
-    ANY sidecar row (existence probe for the gapped-batch-id warning —
-    distinguishes "no gate yet" from "gate present but not covering")."""
-    try:
-        rows = spark.read.option("basePath", _bloom_path(index_path)).parquet(
-            _bloom_path(index_path)
-        )
-    except AnalysisException:
-        return None
-    if not latest_any:
-        rows = rows.filter(F.col("batch").cast("long") == batch_id)
-    latest = rows.limit(1).collect()
-    return latest[0] if latest else None
-
-
-def write_gate_bloom(
-    spark,
-    index_path: str,
-    batch_id: int,
-    batch_banded: DataFrame,
-    prev_gate: "tuple[list[int], int, int] | None",
-    prev_n_keys: int | None = None,
-) -> None:
-    """Write the cumulative gate row for epoch *batch_id* (OVERWRITE
-    ``batch=N`` — replays rewrite the same row from the same inputs, so
-    the sidecar is exactly-once like every other epoch sink).
-
-    Fast path: build a filter over THIS epoch's newly indexed band keys
-    (*batch_banded*, already filtered to survivors — one small
-    aggregation, no index scan) and OR it with the previous row in
-    PYTHON (both are driver-local word lists; the filter is KiB-sized).
-    Rebuild path (first gated epoch on an existing index, a
-    missing/stale sidecar, or the key count outgrowing the current
-    geometry's target-FP capacity): build from the FULL index through
-    *batch_id* at ``bloom_size_for(BLOOM_HEADROOM * n_keys)`` — the
-    documented discipline that the filter is a cache of the index, not
-    state. ``n_keys`` rides the row (row-count upper bound on distinct
-    band keys; replay-safe because it derives from the UNtouched
-    previous row plus this batch's count)."""
-    from tower_parse_spark.operators import bloom as B
-
-    new_rows = batch_banded.select("band_key")
-    n_new = new_rows.count()
-    if prev_gate is not None and prev_gate[1] == 0 and prev_n_keys is None:
-        # ADVICE r12 #3: a manual caller passing a cap tombstone without
-        # its n_keys would otherwise fall through to the full-index
-        # rebuild and re-fire the cap warning EVERY epoch — the exact
-        # repeated-rebuild behavior the tombstone exists to prevent
-        # (process_epoch always supplies both, so the streaming path
-        # never lands here). Recover n_keys from the sidecar row the
-        # tombstone came from, or count the index ONCE as a last resort.
-        prev_n_keys = _read_gate_n_keys(spark, index_path, batch_id - 1)
-        if prev_n_keys is None:
-            prev_n_keys = (
-                _read_index(spark, index_path, batch_id)
-                .select("band_key")
-                .count()
-            )
-    if prev_gate is not None and prev_n_keys is not None:
-        prev_words, n_bits, n_hashes = prev_gate
-        n_keys = prev_n_keys + n_new
-        if n_bits == 0:
-            # CAP TOMBSTONE from an earlier epoch: the gate is disabled
-            # and keys only grow, so don't re-count the full index or
-            # re-warn — roll n_keys forward on a fresh tombstone so the
-            # next epoch still finds a covering row (ADVICE r11: the
-            # un-tombstoned disable re-fired the rebuild + two warnings
-            # every subsequent epoch). One exception: if the projected
-            # geometry now FITS (MAX_GATE_BITS was raised between runs
-            # — keys never shrink, so that is the only way), fall
-            # through to the rebuild and the gate self-heals.
-            if (
-                B.bloom_size_for(max(BLOOM_HEADROOM * n_keys, 1), BLOOM_TARGET_FP)
-                > B.MAX_GATE_BITS
-            ):
-                # keep the PARTITIONED gate covering: this epoch's batch
-                # delta only (no index scan), then the tombstone row —
-                # delta before row, the coverage-induction write order
-                _part_gate_update(spark, index_path, batch_id, new_rows)
-                _write_gate_row(spark, [], index_path, batch_id, 0, 0, n_keys)
-                return
-        if n_bits >= B.bloom_size_for(max(n_keys, 1), BLOOM_TARGET_FP):
-            batch_words = B.bloom_build_words(
-                new_rows, "band_key", n_bits, n_hashes
-            )
-            merged = [a | b for a, b in zip(prev_words, batch_words)]
-            _write_gate_row(
-                spark, merged, index_path, batch_id, n_bits, n_hashes, n_keys
-            )
-            return
-    # rebuild from the index: every indexed key through this epoch
-    all_keys = _read_index(spark, index_path, batch_id + 1).select("band_key")
-    n_keys = all_keys.count()
-    n_bits = B.bloom_size_for(
-        max(BLOOM_HEADROOM * n_keys, 1), BLOOM_TARGET_FP
-    )
-    if n_bits > B.MAX_GATE_BITS:
-        # Driver bound (r11, VERDICT r10 #3): the gate row is a dense
-        # DRIVER-side word list — past MAX_GATE_BITS (~7M keys at the
-        # 1% FP target) building it risks driver memory, so a TOMBSTONE
-        # row (n_bits=0, empty words) is written instead (r12, ADVICE
-        # r11) and the gate HANDS OVER to the partitioned sidecar (r13,
-        # VERDICT r12 #3): the filter continues as (word_idx, word)
-        # ROWS at the fixed PART_GATE_* geometry, joined by the probe —
-        # bounded driver memory at any key count. Future epochs see a
-        # covering tombstone row — no misattributed gapped-id warning,
-        # no per-epoch full-index rebuild/count — and read_gate_bloom
-        # still returns None for it (the LITERAL gate stays off);
-        # process_epoch routes tombstoned probes through read_part_gate
-        # instead. The warning fires ONCE, at this transition. Only
-        # when even the partitioned form is mis-sized (estimated FP
-        # past PART_GATE_MAX_FP) does the probe actually run ungated.
-        import warnings
-
-        warnings.warn(
-            f"near-dup band gate over MAX_GATE_BITS={B.MAX_GATE_BITS} at "
-            f"batch={batch_id}: {n_keys} indexed band keys need {n_bits} "
-            "literal filter bits; handing over to the partitioned gate "
-            f"({PART_SUBDIR}, fixed {B.PART_GATE_BITS}-bit geometry)",
-            stacklevel=2,
-        )
-        _part_gate_update(spark, index_path, batch_id, new_rows)
-        _write_gate_row(spark, [], index_path, batch_id, 0, 0, n_keys)
-        return
-    rebuilt = B.bloom_build_words(all_keys, "band_key", n_bits, B.N_HASHES)
-    _write_gate_row(
-        spark, rebuilt, index_path, batch_id, n_bits, B.N_HASHES, n_keys
-    )
-
-
-def _write_gate_row(
-    spark,
-    words: "list[int]",
-    index_path: str,
-    batch_id: int,
-    n_bits: int,
-    n_hashes: int,
-    n_keys: int,
-) -> None:
-    spark.createDataFrame(
-        [(words, n_bits, n_hashes, n_keys)],
-        "bloom array<long>, n_bits long, n_hashes long, n_keys long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{_bloom_path(index_path)}/batch={batch_id}"
-    )
-
-
-def _read_gate_n_keys(spark, index_path: str, batch_id: int) -> int | None:
-    """The n_keys recorded on the epoch-*batch_id* sidecar row."""
-    row = _read_gate_row(spark, index_path, batch_id)
-    return int(row["n_keys"]) if row is not None else None
-
 
 def _read_index(
     spark, index_path: str, before_batch: int, schema=None
@@ -406,8 +66,8 @@ def _read_index(
     exact on-disk schema (INCLUDING the ``batch`` partition column),
     which it knows from its own writes — the reader then skips parquet
     footer schema inference, a per-epoch driver-side job the old path
-    paid on every probe. Maintenance and validation callers leave it
-    None and keep the inferred read (they accept indexes written with
+    paid on every probe. Stream start's family validation leaves it
+    None and keeps the inferred read (it accepts an index written with
     any id column name). Corruption surfaces at scan time in the probe
     job either way — inference only moved that failure earlier."""
     reader = spark.read.option("basePath", index_path)
@@ -438,7 +98,6 @@ def stream_minhash_dedup(
     text_col: str = "text",
     threshold: float = 0.5,
     hash_fn: str = "fast",
-    band_gate: bool = False,
 ):
     """Start the streaming near-dup query over *docs_stream* (columns
     *id_col*, *text_col*). Per epoch: probe the index, write verdict
@@ -446,9 +105,7 @@ def stream_minhash_dedup(
     batch) to ``{verdict_path}/batch=N``, and index the survivors under
     ``{index_path}/batch=N`` — both OVERWRITE per epoch, so replays are
     idempotent (:func:`process_epoch`, exposed for direct replay
-    testing). *band_gate* threads through to :func:`process_epoch`
-    (default OFF, keeping this query's benched plan). Returns the
-    StreamingQuery (caller stops it).
+    testing). Returns the StreamingQuery (caller stops it).
 
     The index's hash family is validated ONCE here, against whatever
     rows a pre-existing index carries (the restart-with-a-different-
@@ -472,7 +129,6 @@ def stream_minhash_dedup(
             text_col=text_col,
             threshold=threshold,
             hash_fn=hash_fn,
-            band_gate=band_gate,
             validate_family=False,
         )
 
@@ -492,7 +148,6 @@ def process_epoch(
     text_col: str = "text",
     threshold: float = 0.5,
     hash_fn: str = "fast",
-    band_gate: bool = False,
     validate_family: bool = True,
 ) -> None:
     """One epoch of the streaming near-dup loop (the foreachBatch body):
@@ -500,22 +155,6 @@ def process_epoch(
     index partitions. Re-invoking with the same *batch_id* (a replayed
     epoch after a crash) rewrites the same partitions byte-for-byte —
     the idempotency the kill/restart test pins.
-
-    *band_gate* (r10): maintain and use the ``_bloom`` band-key sidecar
-    — batch docs with no band key in history skip the index probe
-    (verdict-identical: the Bloom has no false negatives and pruned
-    docs keep their 0-match verdict rows). Every sink this adds (the
-    one-row cumulative bloom per epoch) follows the same OVERWRITE
-    ``batch=N`` replay rule. The default stays off, so the
-    oracle-checked query runs the ungated plan.
-
-    Batch-id contract (r11, ADVICE r10): the gate covers the probe only
-    when a sidecar row exists at exactly ``batch_id - 1`` — batch ids
-    must be CONTIGUOUS (0, 1, 2, ...), which Structured Streaming's
-    foreachBatch guarantees. Manual callers with gapped ids (e.g.
-    date-numbered epochs) stay CORRECT but the probe runs ungated and
-    the gate write takes the full-index rebuild every epoch; that
-    condition now warns instead of silently eating the rebuild.
 
     *validate_family* (r16): the probe's hash-family guard is a one-row
     driver job per epoch; :func:`stream_minhash_dedup` validates the
@@ -541,43 +180,6 @@ def process_epoch(
         ]
     )
     index = _read_index(spark, index_path, batch_id, schema=index_schema)
-    gate, gate_n_keys, part_gate = None, None, None
-    if band_gate:
-        # one sidecar read serves both the probe gate and the sizing
-        # bookkeeping (n_keys) — not two separate parquet jobs
-        row = _read_gate_row(spark, index_path, batch_id - 1)
-        if row is not None:
-            # an n_bits=0 CAP TOMBSTONE still counts as a covering row
-            # (no gapped-id warning, no full-index rebuild) but provides
-            # no probe gate; write_gate_bloom sees the tombstone via the
-            # zero-bits tuple and just rolls n_keys forward.
-            gate = (
-                list(row["bloom"]), int(row["n_bits"]), int(row["n_hashes"])
-            )
-            gate_n_keys = int(row["n_keys"])
-            if gate[1] == 0:
-                # cap tombstone: the literal gate is off, but the
-                # PARTITIONED sidecar keeps the probe gated (r13,
-                # VERDICT r12 #3) — None when coverage/geometry/FP says
-                # gating would be unsafe or useless (probe runs ungated)
-                part_gate = read_part_gate(
-                    spark, index_path, batch_id, n_keys=gate_n_keys
-                )
-        elif batch_id > 0 and _read_gate_row(
-            spark, index_path, batch_id - 1, latest_any=True
-        ) is not None:
-            # SOME row exists but none covering batch_id-1: gapped ids
-            # or a stale sidecar — correct (probe ungated, gate write
-            # rebuilds) but the gate is buying nothing; say so.
-            import warnings
-
-            warnings.warn(
-                f"near-dup band gate has no covering row for "
-                f"batch={batch_id - 1} (non-contiguous batch ids or a "
-                "stale sidecar): this epoch probes ungated and rebuilds "
-                "the gate from the full index",
-                stacklevel=2,
-            )
     verdicts, batch_banded = incremental_minhash_dedup_with_banded(
         batch,
         index,
@@ -585,10 +187,6 @@ def process_epoch(
         text_col=text_col,
         threshold=threshold,
         hash_fn=hash_fn,
-        # a tombstone (n_bits=0) covers the epoch but cannot gate it
-        # as a literal; the partitioned relation takes over instead
-        band_gate=gate if gate is not None and gate[1] > 0 else None,
-        part_gate=part_gate,
         validate_family=validate_family,
     )
     # NOTE (r17, measured): fusing this localCheckpoint into the verdict
@@ -613,12 +211,3 @@ def process_epoch(
     survivor_banded.write.mode("overwrite").parquet(
         f"{index_path}/batch={batch_id}"
     )
-    if band_gate:
-        # feed the JUST-WRITTEN partition back instead of survivor_banded:
-        # the parquet file is the already-materialized result, so the
-        # count + hash jobs in the gate write don't recompute the
-        # verdict-filter join twice
-        written = spark.read.parquet(f"{index_path}/batch={batch_id}")
-        write_gate_bloom(
-            spark, index_path, batch_id, written, gate, gate_n_keys
-        )
